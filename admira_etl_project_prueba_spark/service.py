@@ -84,7 +84,14 @@ class MetricsService:
         store_mode: str = "upsert",
         request_id: str | None = None,
     ) -> dict:
-        """Extract (concurrent) → decode → consolidate → filter → store."""
+        """Extract (concurrent) → decode → consolidate → filter → store.
+
+        The consolidated batch is materialized once: it is cached, counted
+        (``metrics_processed``), then stored from the cache, so the JSON
+        decode and the consolidation shuffle run a single time and the
+        reported count and the stored rows come from the same evaluation
+        (one ``current_timestamp()`` fallback stamp).  The cache is
+        released whether or not the store succeeds."""
         since = _require_date(since, "since") if since else DEFAULT_SINCE
         cfg = self.config
         ads_raw, crm_raw = fetch_many(
@@ -97,9 +104,12 @@ class MetricsService:
             ads_from_payload(self.spark, ads_raw),
             crm_from_payload(self.spark, crm_raw),
             since=since,
-        )
-        self.store.store(metrics, mode=store_mode)
-        processed = metrics.count()
+        ).cache()
+        try:
+            processed = metrics.count()
+            self.store.store(metrics, mode=store_mode)
+        finally:
+            metrics.unpersist()
         return {
             "message": "ingestion completed",
             "metrics_processed": processed,

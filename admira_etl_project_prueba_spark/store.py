@@ -51,6 +51,17 @@ def _resum_aggs():
     ]
 
 
+def _rebalanced(batch: DataFrame) -> DataFrame:
+    """``batch`` rebalanced by ``date``, for writes that land it verbatim
+    (an append, an upsert into an empty store): AQE then sizes the write
+    tasks, coalescing small days and splitting skewed ones.  Without it
+    the write inherits the caller's partitioning, and a cached batch
+    keeps every ``spark.sql.shuffle.partitions`` partition (AQE does not
+    coalesce a cached plan's output), each writing one file per day it
+    holds."""
+    return batch.hint("rebalance", "date")
+
+
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -79,16 +90,18 @@ class MetricsStore:
 
     ``versioned=True`` opts the store into the immutable-snapshot layout
     (``functions/fs.commit_version``): every write — upsert, append,
-    replace, compact — copies the untouched date partitions forward
-    (byte copy, no decode) into ``__building.*`` scratch, applies the
-    change there, and commits the whole payload as the next
-    ``vNNNNNNNN`` with one rename.  Readers resolve the newest version
-    once at scan start, so a report mid-read can never lose partitions
-    to a concurrent upsert — the reader-isolation gap the flat layout's
-    dynamic partition overwrite cannot close.  The write-amplification
-    trade (a full byte-copy per write vs the flat layout's
-    touched-partitions-only) is the documented price of snapshots; batch
-    deployments that upsert once per ingest cycle pay it once per cycle.
+    replace, compact — commits the FULL payload as the next
+    ``vNNNNNNNN``.  The untouched date partitions are re-read from the
+    current version and re-written through Spark together with the
+    changed days (``_upsert_frames`` builds that frame, ``_commit_full``
+    writes it to ``__building.*`` scratch), then one rename commits it.
+    Readers resolve the newest version once at scan start, so a report
+    mid-read can never lose partitions to a concurrent upsert — the
+    reader-isolation gap the flat layout's dynamic partition overwrite
+    cannot close.  The write-amplification trade (a full decode and
+    re-write per write vs the flat layout's touched-partitions-only) is
+    the documented price of snapshots; batch deployments that upsert
+    once per ingest cycle pay it once per cycle.
     A flat store stays readable by the same instance (versioned only
     changes how NEW writes land)."""
 
@@ -144,14 +157,13 @@ class MetricsStore:
         """All stored facts; empty frame when nothing stored yet.
         Versioned stores resolve the newest snapshot once here — the
         whole downstream plan reads that version even if a writer
-        commits mid-scan."""
+        commits mid-scan.  The scan takes the declared fact schema, so no
+        Spark job runs here to infer it from parquet footers."""
         if not self.exists():
             return self.spark.createDataFrame([], METRICS_SCHEMA)
-        df = self.spark.read.parquet(self._root())
-        # partition column comes back typed; restore fact column order/types
-        return df.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in METRICS_SCHEMA.fields]
-        )
+        df = self.spark.read.schema(METRICS_SCHEMA).parquet(self._root())
+        # the partition column lands last; restore the fact column order
+        return df.select(*METRICS_SCHEMA.fieldNames())
 
     # -- versioned-write plumbing -------------------------------------------
     #: hidden subdir inside each committed version holding the stream-fold
@@ -282,6 +294,7 @@ class MetricsStore:
           re-ingest, kept for byte-level compat experiments.
         """
         if mode == "append":
+            batch = _rebalanced(batch)
             # leased like every other writer: an append landing inside a
             # LIVE compact()'s swap window (path absent mid-renames) would
             # CREATE a batch-only directory that the swap's second rename
@@ -323,7 +336,7 @@ class MetricsStore:
         the stored rows for those days (what the flat layout's dynamic
         overwrite writes); ``full``: merged + untouched days (what the
         versioned layout commits)."""
-        merged = batch
+        merged = _rebalanced(batch)
         untouched = None
         if fs.dir_nonempty(self.spark, self._root()):
             existing = self.read()

@@ -349,6 +349,9 @@ def main():
     )
     final = dict(headline, detail_file="BENCH_DETAIL.json", queries={})
     final["queries"] = {n: round(timings[n], 3) for n in pinned}
+    # the pinned set alone must fit: an overflow fails here instead of
+    # truncating the line the harness parses
+    assert len(json.dumps(final)) <= 1800, "pinned report exceeds 1800 chars"
     for name, secs in rest:
         candidate = dict(final)
         candidate["queries"] = dict(final["queries"], **{name: round(secs, 3)})

@@ -82,6 +82,38 @@ def test_reingest_upsert_is_idempotent_in_rowcount(service):
     assert t1 == t2
 
 
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_ingest_run_releases_its_batch_cache(service, spark):
+    """ingest_run materializes the consolidated batch once (cache, count,
+    upsert) and leaves no persisted RDD behind.  On a fresh store the
+    reported count is exactly the number of rows stored."""
+    before = _persisted_rdd_ids(spark)
+    res = service.ingest_run(since="2024-01-01")
+    assert _persisted_rdd_ids(spark) == before
+    assert res["metrics_processed"] == service.store.read().count() == 3
+
+
+def test_ingest_run_releases_its_batch_cache_when_store_fails(
+    service, spark, monkeypatch
+):
+    before = _persisted_rdd_ids(spark)
+    seen = {}
+
+    def failing_store(batch, mode="upsert"):
+        # the batch is cached and already counted when the upsert starts
+        seen["persisted"] = _persisted_rdd_ids(spark) - before
+        raise IOError("store unavailable")
+
+    monkeypatch.setattr(service.store, "store", failing_store)
+    with pytest.raises(IOError, match="store unavailable"):
+        service.ingest_run(since="2024-01-01")
+    assert seen["persisted"]
+    assert _persisted_rdd_ids(spark) == before
+
+
 def test_reingest_replace_mode_keeps_values(service):
     service.ingest_run(store_mode="upsert")
     v1 = service.metrics_channel("google_ads", "2024-02-01", "2024-02-28")["data"]
@@ -275,6 +307,41 @@ def test_store_merges_increments_across_batches(spark, tmp_path):
     r = rows[0]
     assert r["clicks"] == 40 and r["cost"] == 20.0
     assert r["cpc"] == pytest.approx(0.5)  # re-derived after merge
+
+
+def test_verbatim_store_of_a_cached_batch_writes_one_file_per_day(spark, tmp_path):
+    """A cached batch keeps every shuffle partition (AQE does not coalesce
+    a cached plan's output).  Landing it verbatim — upsert into an empty
+    store, or append — must still write one file per day, not one per
+    partition and day."""
+    import os
+
+    from admira_etl_project_prueba_spark.schemas import METRICS_SCHEMA
+
+    rows = [
+        (day, "google_ads", f"C-{i}", "c", "google", "cpc",
+         i, 0, 1.0, 0, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+        for day in ("2024-03-01", "2024-03-02")
+        for i in range(8)
+    ]
+    batch = (
+        spark.createDataFrame(rows, METRICS_SCHEMA)
+        .repartition(4, "campaign_id")
+        .cache()
+    )
+    try:
+        assert batch.count() == 16
+        for mode in ("upsert", "append"):
+            path = tmp_path / f"facts_{mode}"
+            MetricsStore(spark, str(path)).store(batch, mode=mode)
+            files_per_day = {
+                d: sum(f.endswith(".parquet") for f in os.listdir(path / d))
+                for d in os.listdir(path)
+                if d.startswith("date=")
+            }
+            assert files_per_day == {"date=2024-03-01": 1, "date=2024-03-02": 1}
+    finally:
+        batch.unpersist()
 
 
 def test_store_compaction_preserves_data_one_file_per_day(spark, tmp_path):

@@ -7,6 +7,8 @@ snapshot, byte-for-byte."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -115,6 +117,61 @@ def test_metrics_store_flat_migrates_on_first_versioned_write(spark, tmp_path):
     assert fs.latest_version(spark, path) == "v00000002"
     assert plain.read().count() == ver.read().count()
     assert want_after  # silence the unused-var lint; migration kept rows
+
+
+def _jobs_started(spark, fn):
+    """(result of ``fn()``, ids of the Spark jobs it started)."""
+    sc = spark.sparkContext
+    group = f"jobs-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_metrics_store_read_starts_no_job(spark, tmp_path):
+    """read() scans with the declared fact schema: building the frame
+    starts no Spark job, yet it returns the same rows and dtypes as a
+    read that infers the schema from the parquet footers.  Checked on a
+    flat store and on a versioned store whose current version carries
+    the hidden stream-fold ledger."""
+    from admira_etl_project_prueba_spark.schemas import METRICS_SCHEMA
+
+    flat = MetricsStore(spark, str(tmp_path / "flat"))
+    flat.store(_batch(spark, ["2024-01-01", "2024-01-02"]))
+
+    ver = MetricsStore(spark, str(tmp_path / "ver"), versioned=True)
+    ver.store(_batch(spark, ["2024-01-02", "2024-01-03"]))
+    log = str(tmp_path / "log")
+    (
+        _batch(spark, ["2024-01-03"], base=7)
+        .withColumn("stream_id", F.lit("s1"))
+        .withColumn("batch_id", F.lit(0).cast("long"))
+        .write.partitionBy("stream_id", "batch_id")
+        .parquet(log)
+    )
+    assert ver.fold_stream_log(log) == 1
+    assert fs.dir_nonempty(spark, f"{ver._root()}/{ver._LEDGER}")
+
+    for store in (flat, ver):
+        df, jobs = _jobs_started(spark, store.read)
+        assert jobs == []
+        inferred, inferred_jobs = _jobs_started(
+            spark,
+            lambda: spark.read.parquet(store._root()).select(
+                *[
+                    F.col(f.name).cast(f.dataType).alias(f.name)
+                    for f in METRICS_SCHEMA.fields
+                ]
+            ),
+        )
+        assert inferred_jobs  # the probe does see a schema-inference job
+        assert df.dtypes == inferred.dtypes
+        assert _rows(df) == _rows(inferred)
 
 
 # ---------------------------------------------------------------------------

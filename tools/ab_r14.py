@@ -24,6 +24,7 @@ import importlib.util
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -85,7 +86,9 @@ def load_old(relpath: str, rev: str):
          "show", f"{rev}:{relpath}"],
         check=True, capture_output=True, text=True,
     ).stdout
-    tmp = f"/tmp/ab_old_{os.path.basename(relpath)}"
+    # a private directory per call: concurrent A/Bs must not overwrite
+    # each other's copy of the old module
+    tmp = os.path.join(tempfile.mkdtemp(prefix="ab_old_"), os.path.basename(relpath))
     with open(tmp, "w") as f:
         f.write(src)
     name = "ab_old_" + os.path.basename(relpath).replace(".py", "")
