@@ -6,104 +6,26 @@ choosing one survivor per duplicate *group* requires the transitive
 closure: if A~B and B~C, then {A,B,C} is one cluster even when A~C was
 never emitted.  That closure is a connected-components computation.
 
-Implementation: iterative min-label propagation as plain DataFrame ops —
-each node repeatedly adopts the smallest label among itself and its
-neighbors until a fixed point.  Convergence takes O(graph diameter)
-iterations; near-dup graphs are overwhelmingly tiny star/clique clusters
-(diameter ≤ ~3), so 5–10 rounds close real corpora.  Each round is one
-shuffled aggregation; results are localCheckpoint-ed to truncate the
-growing lineage (iterative algorithms otherwise replay every prior round
-on each action).
-
-Two interchangeable inner loops are provided:
-
-- :func:`connected_components` — min-label propagation; O(diameter)
-  rounds.  The default: near-dup graphs are overwhelmingly tiny
-  star/clique clusters (diameter ≤ ~3), so 5–10 rounds close real
-  corpora and each round is a single shuffled aggregation.
-- :func:`connected_components_star` — the alternating large-star /
-  small-star algorithm (Kiveris et al., "Connected Components in
-  MapReduce and Beyond", SoCC'14); O(log² n) rounds regardless of
-  diameter, the extreme-scale choice when clusters can be long chains
-  (e.g. drift chains of successive page revisions).  GraphFrames offers
-  this packaged; this module keeps the engine dependency-free.
+Implementation: :func:`connected_components_star`, the alternating
+large-star / small-star algorithm (Kiveris et al., "Connected Components
+in MapReduce and Beyond", SoCC'14), as plain DataFrame ops.  It needs
+O(log² n) rounds regardless of graph diameter, so long chains (e.g. drift
+chains of successive page revisions) close as fast as the tiny
+star/clique clusters near-dup graphs mostly contain.  Each round is a few
+shuffled aggregations and joins; results are localCheckpoint-ed to
+truncate the growing lineage (iterative algorithms otherwise replay every
+prior round on each action).  When the deduplicated edge set is small it
+is collected once and closed with a driver union-find instead
+(:func:`._driver.collect_if_small`).  GraphFrames offers this packaged;
+this module keeps the engine dependency-free.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Bounded in-process components (the BPE-trainer pattern): when the
-#: DEDUPLICATED canonical edge set fits under this row bound, collect it
-#: once and close the components with a driver union-find instead of
-#: paying one Spark job per large-star/small-star round.  Near-dup edge
-#: sets are pair-table-sized (tiny vs the corpus); 65 536 2-long rows is
-#: ~1 MB on the driver.  Above the bound the distributed loop runs
-#: unchanged, so the 100 TB posture is intact.  Env-tunable.
-_CC_DRIVER_EDGE_MAX = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGE_MAX", "65536"))
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """(node, component) for every node appearing in ``edges``; component =
-    the smallest node id reachable through the undirected edge set.
-
-    Raises if the fixed point is not reached within ``max_iter`` rounds
-    (an unconverged labeling silently merges nothing — fail loudly).
-    """
-    sym = (
-        edges.selectExpr(f"{src} AS a", f"{dst} AS b")
-        .unionByName(edges.selectExpr(f"{dst} AS a", f"{src} AS b"))
-        .distinct()
-        # materialize ONCE: every iteration joins against sym, and without
-        # the checkpoint each round would recompute the whole upstream
-        # edge-producing subtree (for LSH edges, the full shingle→minhash→
-        # band→verify pipeline — measured as the dominant cost).  Lazy:
-        # the first round's convergence count materializes it.
-        .localCheckpoint(eager=False)
-    )
-    # round 0 fused into initialization: label = min(self, direct neighbors)
-    # — one aggregation instead of distinct + a full propagation round
-    labels = (
-        sym.select(F.col("a").alias("node"), F.col("b").alias("label"))
-        .unionByName(sym.select(F.col("a").alias("node"), F.col("a").alias("label")))
-        .groupBy("node")
-        .agg(F.min("label").alias("label"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["b"] == labels["node"])
-            .groupBy(F.col("a").alias("node2"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # carry the old label through the checkpoint so the convergence
-        # check is a filter over materialized rows, not another join+job
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == F.col("node2"), "left")
-            .select(
-                "node",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-            # lazy: the convergence count right below is the materializing
-            # action — one job per round instead of two
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter("label <> old_label").count()
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            return labels.select("node", F.col("label").alias("component"))
-    raise RuntimeError(f"connected_components: no fixed point in {max_iter} rounds")
+from admira_etl_project_prueba_spark.operators._driver import collect_if_small
 
 
 def connected_components_star(
@@ -113,11 +35,10 @@ def connected_components_star(
     max_iter: int = 30,
 ) -> DataFrame:
     """(node, component) via alternating large-star / small-star rounds
-    (Kiveris et al., SoCC'14) — identical output contract to
-    :func:`connected_components` (component = smallest reachable id), but
-    convergence is O(log² n) rounds independent of graph DIAMETER, so a
-    million-node chain closes in ~10 rounds where label propagation needs
-    a million.
+    (Kiveris et al., SoCC'14); component = the smallest node id reachable
+    through the undirected edge set.  Convergence is O(log² n) rounds
+    independent of graph DIAMETER, so a million-node chain closes in ~10
+    rounds where min-label propagation would need a million.
 
     One round is two map-reduce steps over the current edge set:
 
@@ -132,6 +53,9 @@ def connected_components_star(
     component's hub node is just a hot key).  Fixed point: the edge set
     stabilizes as a star forest (u > center for every edge), read out
     directly as the labeling.
+
+    Raises if the fixed point is not reached within ``max_iter`` rounds
+    (an unconverged labeling silently merges nothing — fail loudly).
     """
     # canonicalize (u > v) and dedup ONCE: every round's symmetric view is
     # then canon ∪ swap(canon), disjoint by construction — no per-round
@@ -141,10 +65,11 @@ def connected_components_star(
             f"greatest({src}, {dst}) AS u", f"least({src}, {dst}) AS v"
         )
         .distinct()
-        # same rationale as connected_components: the upstream edge
-        # producer must not replay every round.  Lazy — the first round's
-        # count materializes it (one job fewer; shared-RDD reuse is
-        # identical either way)
+        # materialize ONCE: without the checkpoint every round would
+        # recompute the whole upstream edge-producing subtree (for LSH
+        # edges, the full shingle→minhash→band→verify pipeline).  Lazy —
+        # the bound probe's count materializes it (one job fewer;
+        # shared-RDD reuse is identical either way)
         .localCheckpoint(eager=False)
     )
     # Bounded driver fast path: the canonical DEDUPLICATED edge set is
@@ -156,8 +81,8 @@ def connected_components_star(
     # Output contract identical: component = smallest reachable id, every
     # node labeled (self-loop-only nodes label themselves); pinned
     # fast-vs-distributed by pytest and by the recursive-CTE oracle.
-    n_canon = canon.count()
-    if n_canon <= _CC_DRIVER_EDGE_MAX:
+    rows = collect_if_small(canon)
+    if rows is not None:
         parent: dict = {}
 
         def find(x):
@@ -169,7 +94,7 @@ def connected_components_star(
             return r
 
         seen = set()
-        for row in canon.collect():
+        for row in rows:
             u, v = row[0], row[1]
             seen.add(u)
             seen.add(v)
@@ -195,7 +120,7 @@ def connected_components_star(
             [(n, find(n)) for n in sorted(seen)], schema
         )
     # nodes BEFORE the self-loop filter: a node appearing only as (x, x)
-    # must still be labeled (as its own center) to match label propagation
+    # must still be labeled (as its own center)
     nodes = (
         canon.selectExpr("u AS node")
         .unionByName(canon.selectExpr("v AS node"))
@@ -264,28 +189,20 @@ def dedup_clusters(
     documents: DataFrame,
     pairs: DataFrame,
     threshold: float = 0.5,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Cluster near-dup pairs (jaccard > threshold) into duplicate groups
     and elect the smallest doc_id as each group's survivor.
 
-    ``algorithm``: ``"star"`` (large-star/small-star, the default — its
-    round count is O(log² n) regardless of component SHAPE, so chain-like
-    components an unbounded input can contain cannot stall it) or
-    ``"label"`` (min-label propagation — one aggregation per round but
-    O(diameter) rounds, a fine choice when the caller knows the clusters
-    are the shallow star/clique shapes near-dup detection typically
-    emits).  Identical output either way.
+    Components come from :func:`connected_components_star`, whose round
+    count is O(log² n) regardless of component SHAPE, so chain-like
+    components an unbounded input can contain cannot stall it.
 
     Returns every document with its ``component`` (its own id when it has
     no near-dups) and a ``keep`` verdict — the corpus-shrinking decision,
     auditable per document like :func:`quality_filter`.
     """
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
-    cc_fn = connected_components if algorithm == "label" else connected_components_star
     strong = pairs.filter(F.col("jaccard") > threshold)
-    cc = cc_fn(strong, "doc_a", "doc_b")
+    cc = connected_components_star(strong, "doc_a", "doc_b")
     out = documents.select("doc_id").join(
         cc, F.col("doc_id") == F.col("node"), "left"
     )
@@ -371,27 +288,17 @@ def pagerank(
     # contribution join exchange-free on the edge side — but measured
     # 35% SLOWER end-to-end at sf0.1 (interleaved A/B best-3 6.9 s vs
     # 5.1 s): the deserialized-cache scan + extra setup repartition cost
-    # more than the three tiny exchanges they remove at this scale.
-    # At cluster scale the edge list is the dominant per-round shuffle,
-    # so the exchange-free shape likely inverts — it stays available
-    # behind SPARK_GRAFT_PAGERANK_COPART=1 (default OFF: the local
-    # measurement above is the recorded A/B), so a cluster run can flip
-    # it without a code change.  The persisted invariant is NOT
-    # unpersisted here — it must survive until the caller's action runs
-    # (the returned frame is lazy); executors evict it LRU.
+    # more than the three tiny exchanges they remove at this scale
+    # (docs/SCALE.md rule 9).
     # LAZY checkpoints: a checkpointed frame is one shared RDD, so its
     # consumers reuse a single computation either way — but eager=True
     # forces a separate job per checkpoint (3 setup + 1 per round), while
     # lazy ones all materialize inside the caller's single action
     # (measured −6–9% end-to-end at sf0.1, bit-identical).
-    import os as _os
-
-    _copart = _os.environ.get("SPARK_GRAFT_PAGERANK_COPART", "0") == "1"
-    e = edges.selectExpr(f"{src} AS src", f"{dst} AS dst").distinct()
     e = (
-        e.repartition("src").persist()
-        if _copart
-        else e.localCheckpoint(eager=False)
+        edges.selectExpr(f"{src} AS src", f"{dst} AS dst")
+        .distinct()
+        .localCheckpoint(eager=False)
     )
     nodes = (
         e.select(F.col("src").alias("node"))

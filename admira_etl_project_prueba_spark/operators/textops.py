@@ -21,8 +21,6 @@ Design rules:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -37,6 +35,7 @@ from admira_etl_project_prueba_spark.functions.fs import (
     swap_into_place,
     version_scratch,
 )
+from admira_etl_project_prueba_spark.operators._driver import collect_if_small
 
 # ---------------------------------------------------------------------------
 # portable primitives
@@ -49,25 +48,10 @@ def hex60(x: str) -> str:
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, the minhash modulus
 
-# BPE trainer AQE toggle bookkeeping (see _bpe_train_frontier): the conf
-# is session-wide, so concurrent trainings must share one save/restore.
-import threading as _threading
-
-_AQE_TOGGLE_LOCK = _threading.Lock()
-_AQE_TOGGLE_STATE = {"depth": 0, "prev": "true"}
 _DEC = "decimal(25,6)"  # exact, order-independent cross-row sums
 
 #: whitespace tokenization, lowercased — portable to regexp_split_to_array
 TOKENS = "split(lower(trim(text)), '\\\\s+')"
-
-#: BPE frontier trainer: vocabularies at or below this row count run the
-#: greedy merge loop in-process (one collect of the already-materialized
-#: (cnt, seq) table) instead of paying one distributed aggregate job per
-#: merge round.  Above it, the per-round distributed loop is unchanged.
-#: Env-tunable so a cluster operator can size it to driver memory.
-_BPE_DRIVER_VOCAB_MAX = int(
-    os.environ.get("SPARK_GRAFT_BPE_DRIVER_VOCAB_MAX", "65536")
-)
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 
@@ -3542,10 +3526,11 @@ def _bpe_train_frontier(
     greedy BPE is inherently sequential, so the distributed loop pays
     n_merges round-trips of pure job latency (~0.15 s/round on
     local[32]) to aggregate a frame that is usually tiny.  When the
-    materialized vocabulary fits a deliberate bound, pull (word, cnt,
-    seq) once and run the rounds in-process — the same decision real
-    tokenizer trainers make (HF/sentencepiece train single-node over the
-    word-count table).  Above the bound the distributed loop below is
+    materialized vocabulary fits the driver bound
+    (``_driver.DRIVER_ROWS_MAX``), pull (word, cnt, seq) once and run
+    the rounds in-process — the same decision real tokenizer trainers
+    make (HF/sentencepiece train single-node over the word-count
+    table).  Above the bound the distributed loop below is
     unchanged, so the 100 TB posture (vocab too big for one process →
     per-round distributed aggregate) is intact.  Each step is an exact
     integer/string twin of the SQL (UTF-8 binary string order == Python
@@ -3556,10 +3541,9 @@ def _bpe_train_frontier(
     # lazy: the vocabulary-size probe right below materializes it
     seqs = _bpe_vocab_seqs(documents).localCheckpoint(eager=False)
     learned: list[tuple] = []
-    if seqs.count() <= _BPE_DRIVER_VOCAB_MAX:
-        vocab = [
-            (row["word"], int(row["cnt"]), row["seq"]) for row in seqs.collect()
-        ]
+    rows = collect_if_small(seqs)
+    if rows is not None:
+        vocab = [(row["word"], int(row["cnt"]), row["seq"]) for row in rows]
         for r in range(1, int(n_merges) + 1):
             counts: dict[tuple[str, str], int] = {}
             for _w, cnt, seq in vocab:
@@ -3589,54 +3573,31 @@ def _bpe_train_frontier(
             vocab, "word string, cnt bigint, seq string"
         )
         return learned, out_seqs
-    # The round loop runs n_merges VOCABULARY-sized micro-aggregates in
-    # sequence; AQE's per-query replanning (each exchange becomes its own
-    # job + re-optimization) is pure per-round latency here — there is
-    # nothing to coalesce or skew-split in a pair-count argmax over the
-    # materialized vocabulary.  Toggle it off for the loop only and
-    # restore after (measured: ~25% off the 64-round deep trainer;
-    # results are plan-independent and stay oracle-gated).  The
-    # corpus-sized vocab build above keeps AQE.
-    # Re-entrant, thread-safe toggle: the conf is SESSION-wide, so two
-    # concurrent trainings (threaded callers overlapping independent
-    # jobs) would otherwise race the save/restore and could leave AQE
-    # off for the whole session.  A depth counter under a lock restores
-    # the pre-toggle value only when the LAST training exits.
-    conf = spark.conf
-    with _AQE_TOGGLE_LOCK:
-        if _AQE_TOGGLE_STATE["depth"] == 0:
-            _AQE_TOGGLE_STATE["prev"] = conf.get(
-                "spark.sql.adaptive.enabled", "true"
-            )
-            conf.set("spark.sql.adaptive.enabled", "false")
-        _AQE_TOGGLE_STATE["depth"] += 1
-    try:
-        for r in range(1, int(n_merges) + 1):
-            # ONE job per round: collect the TakeOrdered(1) argmax
-            # directly — the collected row IS the trainer state, so
-            # materializing it as a checkpointed frame first (a second
-            # job per round) bought nothing, and inlining (l, r) as
-            # literals turns the merge application into a pure projection
-            # instead of a 1-row broadcast join (output pytest-pinned
-            # identical to the unrolled mode).
-            got = _bpe_best_pair(seqs).collect()
-            if not got:
-                break
-            b = got[0]
-            learned.append(
-                (r, b["l"], b["r"], b["l"] + b["r"], b["pair_count"])
-            )
-            seqs = _bpe_apply_literal(seqs, b["l"], b["r"])
-            if r % every == 0:
-                # lazy: the next round's argmax collect materializes it
-                seqs = seqs.localCheckpoint(eager=False)
-    finally:
-        with _AQE_TOGGLE_LOCK:
-            _AQE_TOGGLE_STATE["depth"] -= 1
-            if _AQE_TOGGLE_STATE["depth"] == 0:
-                conf.set(
-                    "spark.sql.adaptive.enabled", _AQE_TOGGLE_STATE["prev"]
-                )
+    # The round loop runs with the session's AQE setting.  Turning AQE off
+    # for the loop does not pay: on an open-vocabulary corpus
+    # (tools/bpe_deep_measure.py: 20,000 docs, 56,135 word types, 64
+    # merges, checkpoint_every=16, local[4] on 4 cores, bound 0), 10
+    # interleaved pairs ran the loop with AQE ON faster in 8, median
+    # 35.9 s vs 37.9 s, identical merge lists in every pair.  AQE is
+    # session-wide, so toggling it here would also change the plans of
+    # every query running beside the trainer.
+    for r in range(1, int(n_merges) + 1):
+        # ONE job per round: collect the TakeOrdered(1) argmax
+        # directly — the collected row IS the trainer state, so
+        # materializing it as a checkpointed frame first (a second
+        # job per round) bought nothing, and inlining (l, r) as
+        # literals turns the merge application into a pure projection
+        # instead of a 1-row broadcast join (output pytest-pinned
+        # identical to the unrolled mode).
+        got = _bpe_best_pair(seqs).collect()
+        if not got:
+            break
+        b = got[0]
+        learned.append((r, b["l"], b["r"], b["l"] + b["r"], b["pair_count"]))
+        seqs = _bpe_apply_literal(seqs, b["l"], b["r"])
+        if r % every == 0:
+            # lazy: the next round's argmax collect materializes it
+            seqs = seqs.localCheckpoint(eager=False)
     return learned, seqs
 
 

@@ -2182,29 +2182,15 @@ FROM documents d LEFT JOIN cc ON d.doc_id = cc.node"""
 
 @_entry(
     "dedup_clusters",
-    "Transitive closure of near-dup pairs (iterative min-label propagation "
-    "= connected components) electing one survivor per duplicate group — "
-    "oracle is a DuckDB recursive CTE over the same LSH edges.",
+    "Transitive closure of near-dup pairs (large-star/small-star connected "
+    "components, Kiveris et al. SoCC'14: O(log^2 n) rounds independent of "
+    "cluster diameter) electing one survivor per duplicate group — oracle "
+    "is a DuckDB recursive CTE over the same LSH edges.",
     _DEDUP_CLUSTERS_SQL,
 )
 def _q_dedup_clusters(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return _graph.dedup_clusters(docs, _tx.lsh_candidate_pairs(docs))
-
-
-@_entry(
-    "dedup_clusters_star",
-    "Identical clustering via the alternating large-star/small-star "
-    "algorithm (Kiveris et al., SoCC'14): O(log^2 n) rounds independent "
-    "of cluster diameter — the extreme-scale inner loop.  Shares the "
-    "recursive-CTE oracle (same output contract).",
-    _DEDUP_CLUSTERS_SQL,
-)
-def _q_dedup_clusters_star(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return _graph.dedup_clusters(
-        docs, _tx.lsh_candidate_pairs(docs), algorithm="star"
-    )
 
 
 @_entry(

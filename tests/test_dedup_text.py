@@ -1979,10 +1979,11 @@ def test_bpe_frontier_driver_fast_path_equals_distributed(
     spark, sf_dir, monkeypatch
 ):
     """The bounded in-process merge loop (vocabulary ≤
-    _BPE_DRIVER_VOCAB_MAX collected once, rounds run in Python) learns
+    DRIVER_ROWS_MAX collected once, rounds run in Python) learns
     EXACTLY the merge list of the distributed per-round aggregate loop —
     same argmax tie-breaks (UTF-8 binary vs code-point order), same
     doubled-separator rewrite scan semantics, same early stop."""
+    from admira_etl_project_prueba_spark.operators import _driver
     from admira_etl_project_prueba_spark.operators import textops as T
 
     from admira_etl_project_prueba_spark.sources.tables import load_table
@@ -1994,7 +1995,7 @@ def test_bpe_frontier_driver_fast_path_equals_distributed(
             docs, n_merges=16, checkpoint_every=4
         ).collect()
     ]
-    monkeypatch.setattr(T, "_BPE_DRIVER_VOCAB_MAX", 0)
+    monkeypatch.setattr(_driver, "DRIVER_ROWS_MAX", 0)
     slow = [
         tuple(r)
         for r in T.bpe_learn_merges(
@@ -2005,7 +2006,7 @@ def test_bpe_frontier_driver_fast_path_equals_distributed(
 
     # exhaustion parity on the fast path too
     tiny = spark.createDataFrame([(1, "ab ab ab")], "doc_id long, text string")
-    monkeypatch.setattr(T, "_BPE_DRIVER_VOCAB_MAX", 10**9)
+    monkeypatch.setattr(_driver, "DRIVER_ROWS_MAX", 10**9)
     got = [
         tuple(r)
         for r in T.bpe_learn_merges(tiny, 5, checkpoint_every=2).collect()

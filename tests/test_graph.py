@@ -6,8 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from admira_etl_project_prueba_spark.operators import _driver
 from admira_etl_project_prueba_spark.operators.graph import (
-    connected_components,
+    connected_components_star,
     dedup_clusters,
 )
 
@@ -16,42 +17,86 @@ def edges(spark, rows):
     return spark.createDataFrame(rows, "src long, dst long")
 
 
-def test_components_on_planted_shapes(spark):
+def union_find_components(rows):
+    """Plain-Python reference: node -> smallest id reachable through the
+    undirected edge list (self-loop-only nodes label themselves)."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def distributed_components(monkeypatch, e, **kw):
+    """connected_components_star with the driver bound at 0, so the
+    large-star/small-star round loop is what runs."""
+    monkeypatch.setattr(_driver, "DRIVER_ROWS_MAX", 0)
+    try:
+        return {
+            r["node"]: r["component"]
+            for r in connected_components_star(e, **kw).collect()
+        }
+    finally:
+        monkeypatch.undo()
+
+
+def test_components_on_planted_shapes(spark, monkeypatch):
     # chain 1-2-3-4 (diameter 3), clique {10,11,12}, isolated pair {20,21}
     e = edges(
         spark,
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
     )
-    got = {r["node"]: r["component"] for r in connected_components(e).collect()}
+    got = distributed_components(monkeypatch, e)
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_components_long_chain_converges(spark):
+def test_components_long_chain_converges(spark, monkeypatch):
     n = 12  # diameter > a couple of naive rounds
     e = edges(spark, [(i, i + 1) for i in range(n)])
-    got = {r["node"]: r["component"] for r in connected_components(e).collect()}
+    got = distributed_components(monkeypatch, e)
     assert set(got.values()) == {0} and len(got) == n + 1
 
 
-def test_components_unconverged_raises(spark):
+def test_components_unconverged_raises(spark, monkeypatch):
     e = edges(spark, [(i, i + 1) for i in range(8)])
     with pytest.raises(RuntimeError):
-        connected_components(e, max_iter=1)
+        distributed_components(monkeypatch, e, max_iter=1)
+
+
+def test_collect_if_small_reads_the_bound_per_call(spark, monkeypatch):
+    """Rows at or under DRIVER_ROWS_MAX come back collected, one over it
+    gives None — and a bound set after import takes effect on the next
+    call (callers never cache it)."""
+    from admira_etl_project_prueba_spark.operators._driver import collect_if_small
+
+    assert _driver.DRIVER_ROWS_MAX == 65_536
+    df = spark.range(5)
+    assert sorted(r["id"] for r in collect_if_small(df)) == [0, 1, 2, 3, 4]
+    monkeypatch.setattr(_driver, "DRIVER_ROWS_MAX", 5)
+    assert len(collect_if_small(df)) == 5
+    monkeypatch.setattr(_driver, "DRIVER_ROWS_MAX", 4)
+    assert collect_if_small(df) is None
 
 
 def test_star_driver_fast_path_equals_distributed(spark, monkeypatch):
-    """The bounded in-process union-find (edge set ≤ _CC_DRIVER_EDGE_MAX
+    """The bounded in-process union-find (edge set ≤ DRIVER_ROWS_MAX
     collected once, components closed on the driver) labels EXACTLY like
     the distributed large-star/small-star loop — same smallest-reachable-
     id contract, self-loop-only nodes labeled, string-typed ids intact —
-    and the distributed loop still closes the 64-node chain within its
-    logarithmic round budget (the coverage the fast path would otherwise
-    absorb)."""
-    from admira_etl_project_prueba_spark.operators import graph as G
-
+    and the distributed loop closes the 65-node chain (diameter 64)
+    within a logarithmic round budget (12 rounds), where min-label
+    propagation would need 64."""
+    chain = [(i, i + 1) for i in range(64)]
     shapes = [
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
-        [(i, i + 1) for i in range(64)],                    # deep chain
+        chain,                                              # deep chain
         [(0, i) for i in range(1, 9)],                      # star, hub=min
         [(5, 5), (1, 2)],                                   # self-loop noise
     ]
@@ -59,15 +104,12 @@ def test_star_driver_fast_path_equals_distributed(spark, monkeypatch):
         e = edges(spark, rows)
         fast = {
             r["node"]: r["component"]
-            for r in G.connected_components_star(e, max_iter=12).collect()
+            for r in connected_components_star(e, max_iter=12).collect()
         }
-        monkeypatch.setattr(G, "_CC_DRIVER_EDGE_MAX", 0)
-        slow = {
-            r["node"]: r["component"]
-            for r in G.connected_components_star(e, max_iter=12).collect()
-        }
-        monkeypatch.undo()
+        slow = distributed_components(monkeypatch, e, max_iter=12)
         assert fast == slow, rows
+        if rows is chain:
+            assert set(slow.values()) == {0} and len(slow) == 65
 
     # non-numeric ids survive the driver path (string ordering == Spark's)
     se = spark.createDataFrame(
@@ -75,7 +117,7 @@ def test_star_driver_fast_path_equals_distributed(spark, monkeypatch):
     )
     got = {
         r["node"]: r["component"]
-        for r in G.connected_components_star(se).collect()
+        for r in connected_components_star(se).collect()
     }
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x"}
 
@@ -122,15 +164,11 @@ def test_best_survivor_prefers_longest(spark):
     assert not out[1]["keep"] and out[2]["keep"]   # longest wins despite id 2 > 1
     assert out[9]["keep"] and out[9]["component"] == 9
 
-def test_star_components_match_label_propagation(spark):
-    """large-star/small-star produces the identical labeling on planted
-    shapes and seeded random graphs — same contract, different round
-    complexity."""
+def test_star_components_match_union_find(spark, monkeypatch):
+    """Both arms of connected_components_star — the driver union-find and
+    the distributed large-star/small-star loop — produce the labeling of
+    a plain-Python union-find on planted shapes and seeded random graphs."""
     import random
-
-    from admira_etl_project_prueba_spark.operators.graph import (
-        connected_components_star,
-    )
 
     shapes = [
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
@@ -145,43 +183,31 @@ def test_star_components_match_label_propagation(spark):
         shapes.append(
             [(rng.randrange(n), rng.randrange(n)) for _ in range(50)]
         )
-    # shapes are independent graphs — run each shape's pair of CC jobs on
-    # its own thread (same graphs, same equality assertions; the iterative
-    # per-round jobs of different shapes overlap instead of serializing)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def check(rows):
-        # self-loops reach both implementations unstripped — (5, 5) must
-        # yield a self-labeled node from each, not get filtered here
+    # self-loops reach both arms unstripped — (5, 5) must yield a
+    # self-labeled node from each, not get filtered here
+    for rows in shapes:
         e = edges(spark, rows)
-        lp = {r["node"]: r["component"] for r in connected_components(e).collect()}
-        st = {
+        want = union_find_components(rows)
+        fast = {
             r["node"]: r["component"]
             for r in connected_components_star(e).collect()
         }
-        assert st == lp, rows
+        assert fast == want, rows
+    # the distributed arm's iterative per-round jobs of independent shapes
+    # overlap on threads instead of serializing; the bound is set once for
+    # all of them (monkeypatch is not thread-safe to toggle per shape)
+    from concurrent.futures import ThreadPoolExecutor
 
+    def check(rows):
+        slow = {
+            r["node"]: r["component"]
+            for r in connected_components_star(edges(spark, rows)).collect()
+        }
+        assert slow == union_find_components(rows), rows
+
+    monkeypatch.setattr(_driver, "DRIVER_ROWS_MAX", 0)
     with ThreadPoolExecutor(max_workers=8) as pool:
         list(pool.map(check, shapes))
-
-
-def test_star_components_converge_on_deep_chain(spark):
-    """The payoff: a 64-node chain (diameter 63) closes within the star
-    variant's logarithmic round budget, where min-label propagation at the
-    same max_iter provably cannot reach its fixed point."""
-    from admira_etl_project_prueba_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    n = 64
-    e = edges(spark, [(i, i + 1) for i in range(n - 1)])
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components_star(e, max_iter=12).collect()
-    }
-    assert set(got.values()) == {0} and len(got) == n
-    with pytest.raises(RuntimeError):
-        connected_components(e, max_iter=12)
 
 
 def test_pagerank_mass_conservation_and_structure(spark):
@@ -233,19 +259,17 @@ def test_triangle_counts_planted_graph(spark):
     assert sum(r["n_triangles"] for r in got.values()) == 3 * 4
 
 
-def test_no_stale_label_cc_overrides_in_source():
-    """dedup_clusters defaults to the O(log^2 n) star algorithm; no caller
-    in the package may silently pin the diameter-dependent label
-    propagation variant (round-3 advice: star is the 100 TB default)."""
+def test_no_conf_set_in_operators():
+    """Operators never change session conf: a session-wide setting flipped
+    inside one operator leaks into every query running beside it (the
+    only conf writer is session.py, which builds the session)."""
     import pathlib
 
-    import admira_etl_project_prueba_spark as pkg
+    from admira_etl_project_prueba_spark import operators
 
-    root = pathlib.Path(pkg.__file__).parent
+    root = pathlib.Path(operators.__file__).parent
     offenders = [
-        str(p)
-        for p in root.rglob("*.py")
-        if 'algorithm="label"' in p.read_text() or "algorithm='label'" in p.read_text()
+        p.name for p in sorted(root.rglob("*.py")) if "conf.set(" in p.read_text()
     ]
     assert offenders == []
 

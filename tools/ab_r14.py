@@ -72,10 +72,7 @@ FAMILIES = {
     "grf": (
         f"{PKG}/operators/graph.py",
         f"{PKG}.operators.graph",
-        [
-            "pagerank", "k_core", "label_propagation",
-            "connected_components", "connected_components_star",
-        ],
+        ["pagerank", "k_core", "label_propagation", "connected_components_star"],
     ),
 }
 

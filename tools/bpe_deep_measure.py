@@ -10,9 +10,13 @@ trainer to real depth, reporting wall time per depth bucket so
 per-round flatness is measured where it matters.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/bpe_deep_measure.py [n_docs] [n_merges]
+    python tools/bpe_deep_measure.py [--distributed] [n_docs] [n_merges]
 
 Defaults: 50_000 docs, 512 merges.  Deterministic (numpy seed 7).
+``--distributed`` sets the driver bound (``_driver.DRIVER_ROWS_MAX``) to
+0, so every training runs the per-round distributed loop instead of the
+in-process fast path; run it at two revisions to A/B that loop.  The
+Spark master is ``local[$SPARK_GRAFT_CPUS]`` (default 32).
 """
 
 from __future__ import annotations
@@ -66,15 +70,21 @@ def synth_corpus(n_docs: int, seed: int = 7):
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
-    n_merges = int(sys.argv[2]) if len(sys.argv) > 2 else 512
+    args = sys.argv[1:]
+    if "--distributed" in args:
+        args.remove("--distributed")
+        from admira_etl_project_prueba_spark.operators import _driver
+
+        _driver.DRIVER_ROWS_MAX = 0
+    n_docs = int(args[0]) if len(args) > 0 else 50_000
+    n_merges = int(args[1]) if len(args) > 1 else 512
 
     from admira_etl_project_prueba_spark.operators.textops import (
         bpe_learn_merges,
     )
     from admira_etl_project_prueba_spark.session import get_spark
 
-    spark = get_spark(master="local[32]", shuffle_partitions=32)
+    spark = get_spark(shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
 
     texts, n_types = synth_corpus(n_docs)
@@ -91,7 +101,7 @@ def main() -> None:
 
     prev_n, prev_t = 0, 0.0
     t0 = time.time()
-    for depth in (64, 128, 256, n_merges):
+    for depth in sorted({d for d in (64, 128, 256) if d < n_merges} | {n_merges}):
         t1 = time.time()
         rows = bpe_learn_merges(docs, depth, checkpoint_every=16).collect()
         dt = time.time() - t1

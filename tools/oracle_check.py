@@ -4,7 +4,11 @@ For every catalog query: run the Spark implementation AND the DuckDB oracle
 SQL on the same sf_dir, then compare row count, (sorted) column names, and
 an order-insensitive value hash.  Usage:
 
-    PYTHONPATH=/root/repo python tools/oracle_check.py [sf_dir] [name ...]
+    python tools/oracle_check.py [--distributed] [sf_dir] [name ...]
+
+``--distributed`` sets the driver bound (``_driver.DRIVER_ROWS_MAX``) to 0
+before any entry runs, so every bounded driver fast path falls through to
+its distributed loop and that loop is checked against the oracle too.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entry_mod
+from admira_etl_project_prueba_spark.operators import _driver
 from admira_etl_project_prueba_spark.plans.catalog import BOUNDED_ORACLES
 from admira_etl_project_prueba_spark.session import get_spark
 from admira_etl_project_prueba_spark.sources.tables import TABLE_NAMES
@@ -89,6 +94,9 @@ def _bounded_check(con, spec, scols, srows):
 
 def main():
     args = [a for a in sys.argv[1:]]
+    if "--distributed" in args:
+        args.remove("--distributed")
+        _driver.DRIVER_ROWS_MAX = 0
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
     only = set(args[1:]) if args and os.path.isdir(args[0]) else set(args)
 
