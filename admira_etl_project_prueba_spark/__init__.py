@@ -16,8 +16,9 @@ Design stance (see docs/SCALE.md):
 * Python UDFs appear only where built-ins genuinely cannot express the
   semantics (multimodal decode plumbing), and then as Arrow-batched
   ``mapInPandas``/``pandas_udf``.
-* The fact store is date-partitioned Parquet with idempotent overwrite-by-key
-  (dynamic partition overwrite), so re-ingest does not duplicate facts.
+* The fact store is date-partitioned Parquet with idempotent upsert-by-key,
+  so re-ingest does not duplicate facts; every write commits an immutable
+  version, so readers never see a half-written store.
 """
 
 __version__ = "0.1.0"

@@ -984,11 +984,11 @@ class CorpusService:
             )
 
             def _read(path: str) -> DataFrame:
-                # histogram stores fold via swap_into_place — heal a
-                # merge that crashed between its renames before deciding
-                # the snapshot is "not readable" (it is recoverable).
-                # Versioned stores have no window; resolve their current
-                # vNNNNNNNN once so the diff reads a consistent snapshot
+                # a legacy flat histogram store may hold a crashed
+                # two-rename swap — heal it before deciding the snapshot
+                # is "not readable" (it is recoverable).  Versioned
+                # stores have no window; resolve their current vNNNNNNNN
+                # once so the diff reads a consistent snapshot
                 self._heal_crashed_swap(path)
                 from admira_etl_project_prueba_spark.functions.fs import (
                     resolve_store_root,

@@ -308,13 +308,27 @@ def resolve_store_root(spark: SparkSession, path: str) -> str:
     return f"{path.rstrip('/')}/{v}" if v is not None else path
 
 
+def sweep_flat_remnants(spark: SparkSession, path: str) -> None:
+    """Delete a legacy flat store's pre-version children (``date=*``,
+    part files, ``_SUCCESS``) once its payload is committed as v1 — the
+    one-time flat→versioned migration.  Without it a reader of the bare
+    path sees stale data forever and the space is never reclaimed.
+    Version dirs and live ``__building.*`` scratch are not touched.
+    CALLER HOLDS the store lease."""
+    fs, _, jvm = _fs_and_path(spark, path)
+    for name in list_child_names(spark, path):
+        if _is_version_name(name) or name.startswith("__building."):
+            continue
+        fs.delete(
+            jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{name}"), True
+        )
+
+
 def fold_whole_store(
     spark: SparkSession,
     path: str,
     build_merged,
-    versioned: bool = False,
     coalesce1: bool = True,
-    partition_by: str | None = None,
 ) -> None:
     """Leased read-modify-write for a store whose fold REWRITES the whole
     payload (LM counts, histograms, LSH signatures — all model-sized):
@@ -322,68 +336,25 @@ def fold_whole_store(
     current store (None when confirmed absent) and returns the full next
     payload.
 
-    Flat layout (default, unchanged semantics): first write lands
-    directly; folds stage to a sibling dir and ``swap_into_place`` — the
-    store is the fold's input AND output, and an in-place overwrite
-    would delete the only copy before the write job finishes.
-
-    Versioned layout (``versioned=True``, or the store already holds
-    committed versions): the next payload is built under ``__building.*``
-    scratch and committed as the next ``vNNNNNNNN`` with ONE rename —
-    readers that resolved the previous version keep a complete snapshot
-    (no swap window at all), at zero extra cost for this store class
-    since the fold rewrites the payload anyway."""
+    Every fold — the first write included — builds the next payload
+    under ``__building.*`` scratch and commits it as the next
+    ``vNNNNNNNN`` with ONE rename: readers that resolved the previous
+    version keep a complete snapshot, at no extra cost for this store
+    class since the fold rewrites the payload anyway.  A legacy flat
+    store (payload directly under ``path``) is read as the fold's input
+    and migrated: its remnants are swept once v1 is committed."""
     with maintenance_lease(spark, path):
         recover_swap(spark, path)
         root = resolve_store_root(spark, path)
-        has_versions = root != path
-        prev = (
-            spark.read.parquet(root)
-            if dir_nonempty(spark, root)
-            else None
-        )
+        prev = spark.read.parquet(root) if dir_nonempty(spark, root) else None
         merged = build_merged(prev)
         out = merged.coalesce(1) if coalesce1 else merged
-        if versioned or has_versions:
-            was_flat = not has_versions and prev is not None
-            clean_version_scratch(spark, path)
-            tmp = version_scratch(path)
-            w = out.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(partition_by)
-            w.parquet(tmp)
-            commit_version(spark, path, tmp)
-            if was_flat:
-                # one-time flat→versioned transition: sweep the
-                # pre-migration flat files (mirrors MetricsStore.
-                # _commit_full) — a legacy reader of the bare path would
-                # otherwise see stale data forever and the space is
-                # never reclaimed.  Version dirs and live scratch are
-                # not touched.
-                jfs, _, jvm = _fs_and_path(spark, path)
-                for name in list_child_names(spark, path):
-                    if _is_version_name(name) or name.startswith(
-                        "__building."
-                    ):
-                        continue
-                    jfs.delete(
-                        jvm.org.apache.hadoop.fs.Path(
-                            f"{path.rstrip('/')}/{name}"
-                        ),
-                        True,
-                    )
-        elif prev is None:
-            w = out.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(partition_by)
-            w.parquet(path)
-        else:
-            tmp = path.rstrip("/") + "__merging"
-            w = out.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(partition_by)
-            w.parquet(tmp)
-            swap_into_place(spark, tmp, path)
+        clean_version_scratch(spark, path)
+        tmp = version_scratch(path)
+        out.write.mode("overwrite").parquet(tmp)
+        commit_version(spark, path, tmp)
+        if root == path and prev is not None:
+            sweep_flat_remnants(spark, path)
 
 
 def copy_tree(spark: SparkSession, src: str, dst: str) -> None:

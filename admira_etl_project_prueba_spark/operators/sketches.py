@@ -347,21 +347,19 @@ def write_histogram_store(
     lo: float = 0.0,
     hi: float = 512.0,
     n_bins: int = 256,
-    versioned: bool = False,
 ) -> None:
     """Persist the histogram sufficient statistic (one small file — the
-    frame is ≤ |types| × n_bins rows regardless of corpus size).
-    ``versioned=True`` commits it as an immutable ``vNNNNNNNN`` snapshot
-    (functions/fs.fold_whole_store) — every later merge then lands as
-    the NEXT version, giving readers snapshot isolation with no swap
-    window; the payload is model-sized, so versioning costs nothing."""
+    frame is ≤ |types| × n_bins rows regardless of corpus size) as an
+    immutable ``vNNNNNNNN`` snapshot (functions/fs.fold_whole_store) —
+    every later merge then lands as the NEXT version, giving readers
+    snapshot isolation; the payload is model-sized, so versioning costs
+    nothing."""
     from admira_etl_project_prueba_spark.functions.fs import fold_whole_store
 
     fold_whole_store(
         events.sparkSession,
         path,
         lambda prev: value_histogram(events, lo, hi, n_bins),
-        versioned=versioned,
     )
 
 
@@ -378,10 +376,9 @@ def merge_histogram_store(
     map-side to ≤ |types| × n_bins increments and merges by integer
     addition (bit-identical to a from-scratch rebuild over the union).
     The leased read-modify-write goes through
-    ``functions/fs.fold_whole_store``: flat stores keep the sibling-dir
-    + rename swap (the store is the fold's input AND output — an
-    in-place overwrite would delete the only copy mid-job), versioned
-    stores commit the merge as the next immutable snapshot."""
+    ``functions/fs.fold_whole_store``, which commits the merge as the
+    next immutable snapshot (the store is the fold's input AND output —
+    an in-place overwrite would delete the only copy mid-job)."""
     from admira_etl_project_prueba_spark.functions.fs import fold_whole_store
 
     def build(old):

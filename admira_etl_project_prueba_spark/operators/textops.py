@@ -1450,12 +1450,11 @@ def write_lsh_store(
     num_perm: int = 16,
     band_size: int = 2,
     k: int = 3,
-    versioned: bool = False,
 ) -> None:
     """Persist the :func:`lsh_signature_store` table — the path-managed
     form of the signature store, with the same lifecycle discipline as
-    every other store (single-writer lease; ``versioned=True`` commits
-    immutable ``vNNNNNNNN`` snapshots so a reader mid-scan is isolated
+    every other store (single-writer lease; each write commits an
+    immutable ``vNNNNNNNN`` snapshot, so a reader mid-scan is isolated
     from a concurrent merge's rewrite)."""
     from admira_etl_project_prueba_spark.functions.fs import fold_whole_store
 
@@ -1463,7 +1462,6 @@ def write_lsh_store(
         documents.sparkSession,
         path,
         lambda prev: lsh_signature_store(documents, num_perm, band_size, k),
-        versioned=versioned,
         coalesce1=False,
     )
 
@@ -1478,11 +1476,9 @@ def merge_lsh_store(
 ) -> None:
     """Fold a new batch into the PERSISTED signature store
     (:func:`lsh_store_merge` semantics: existing signatures never
-    recomputed, new-wins on doc_id collision).  On a flat store the
-    merged table swaps in by rename; on a versioned store it commits as
-    the next snapshot — the batch-vs-store anti-join is broadcast, so
-    the only store-sized cost is the rewrite itself (the price the
-    swap-managed form already paid)."""
+    recomputed, new-wins on doc_id collision).  The merged table commits
+    as the next snapshot — the batch-vs-store anti-join is broadcast, so
+    the only store-sized cost is the rewrite itself."""
     from admira_etl_project_prueba_spark.functions.fs import fold_whole_store
 
     def build(old):
@@ -2667,20 +2663,17 @@ def lm_dists_from_counts(counts: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def write_lm_counts(
-    reference: DataFrame, path: str, n_buckets: int = 8192,
-    versioned: bool = False,
+    reference: DataFrame, path: str, n_buckets: int = 8192
 ) -> None:
-    """Persist the mergeable LM statistics (see :func:`lm_counts`).
-    ``versioned=True`` commits an immutable snapshot; later merges land
-    as the next version (reader snapshot isolation, no swap window —
-    free for this model-sized payload)."""
+    """Persist the mergeable LM statistics (see :func:`lm_counts`) as
+    an immutable snapshot; later merges land as the next version
+    (reader snapshot isolation — free for this model-sized payload)."""
     from admira_etl_project_prueba_spark.functions.fs import fold_whole_store
 
     fold_whole_store(
         reference.sparkSession,
         path,
         lambda prev: lm_counts(reference, n_buckets),
-        versioned=versioned,
     )
 
 
@@ -2692,9 +2685,8 @@ def merge_lm_counts(
     store stays dense at exactly n_buckets rows, the batch reduces
     map-side to bucket increments and BROADCASTS into the fold.  The
     leased read-modify-write goes through
-    ``functions/fs.fold_whole_store``: flat stores keep the sibling-dir
-    rename swap (the store is the fold's input AND output), versioned
-    stores commit the merge as the next immutable snapshot.
+    ``functions/fs.fold_whole_store``, which commits the merge as the
+    next immutable snapshot.
     ``lm_dists_from_counts`` of the merged store equals a
     from-scratch model over the concatenated corpus exactly (integer
     count merge, smoothing applied after)."""

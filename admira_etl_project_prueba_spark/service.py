@@ -21,6 +21,7 @@ import re
 from pyspark.sql import SparkSession
 
 from admira_etl_project_prueba_spark.config import Config
+from admira_etl_project_prueba_spark.functions import fs
 from admira_etl_project_prueba_spark.operators.export import export_day
 from admira_etl_project_prueba_spark.operators.queries import (
     metrics_by_campaign,
@@ -285,7 +286,9 @@ class MetricsService:
         listing-only, and an unconfigured stream log reports null."""
         out: dict = {
             "store_path": self.config.store_path,
-            "versioned": self.store._is_versioned(),
+            "versioned": fs.latest_version(
+                self.spark, self.config.store_path
+            ) is not None,
             "stream_log": None,
             "request_id": new_request_id(request_id),
         }

@@ -7,20 +7,29 @@ the docs claim idempotency (README.md:350-354, SYSTEM_DESIGN.md:5-16).
 
 Engine decision (SURVEY.md §7 decision 4): the default mode makes the
 documented claim true — ``upsert`` merges the incoming batch with existing
-facts per MetricKey (re-summing measures, re-deriving ratios) and
-overwrites ONLY the partitions the batch touches (dynamic partition
-overwrite).  ``append`` mode replicates raw reference behavior.
+facts per MetricKey (re-summing measures, re-deriving ratios).  ``append``
+mode replicates raw reference behavior.
+
+Every write commits the next immutable ``path/vNNNNNNNN`` version
+(``functions/fs.commit_version``) holding the FULL payload: the stored
+rows of the days the batch does not touch, carried forward, plus the
+days it does.  A reader resolves the newest version once at scan start,
+so it never sees a half-written store — the guarantee the reference
+gets from its ``sync.RWMutex`` (memory.go:10,21-30).
 
 Scale design:
-* Partitioned by ``date`` — F5 exact-day reads and F3/F4 ranges prune
-  statically; a 100 TB fact table becomes per-day directories.
-* Dynamic partition overwrite limits each upsert's write amplification to
-  the days present in the batch, not the whole table.
+* Partitioned by ``date`` inside each version — F5 exact-day reads and
+  F3/F4 ranges prune statically; a 100 TB fact table becomes per-day
+  directories.
+* Each write re-writes the whole payload: the price of snapshot reads,
+  paid once per ingest cycle.
 * The merge is one grouped SUM over (existing days ∩ batch days) + batch —
   a single shuffle on the composite key, partial-agg'd map-side.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +43,11 @@ from admira_etl_project_prueba_spark.schemas import (
 )
 
 _MONEY_DECIMAL = "decimal(25,6)"
+
+#: the stream-fold ledger's columns, and the superset its reader declares:
+#: legacy ledgers hold only ``key`` (one ``stream_id:batch_id`` per row)
+_LEDGER_COLS = "stream_id string, hwm long, tail array<long>"
+_LEDGER_SCHEMA = _LEDGER_COLS + ", key string"
 
 
 def _resum_aggs():
@@ -88,39 +102,45 @@ def write_bucketed(
 class MetricsStore:
     """Parquet-backed fact store with reference-shaped read/write API.
 
-    ``versioned=True`` opts the store into the immutable-snapshot layout
-    (``functions/fs.commit_version``): every write — upsert, append,
-    replace, compact — commits the FULL payload as the next
-    ``vNNNNNNNN``.  The untouched date partitions are re-read from the
-    current version and re-written through Spark together with the
-    changed days (``_upsert_frames`` builds that frame, ``_commit_full``
-    writes it to ``__building.*`` scratch), then one rename commits it.
-    Readers resolve the newest version once at scan start, so a report
-    mid-read can never lose partitions to a concurrent upsert — the
-    reader-isolation gap the flat layout's dynamic partition overwrite
-    cannot close.  The write-amplification trade (a full decode and
-    re-write per write vs the flat layout's touched-partitions-only) is
-    the documented price of snapshots; batch deployments that upsert
-    once per ingest cycle pay it once per cycle.
-    A flat store stays readable by the same instance (versioned only
-    changes how NEW writes land)."""
+    Every write — upsert, append, replace, compact, stream fold —
+    commits the FULL payload as the next immutable ``vNNNNNNNN``
+    (``functions/fs.commit_version``).  The untouched date partitions
+    are re-read from the current version and re-written through Spark
+    together with the changed days (``_upsert_frames`` builds that
+    frame, ``_commit_full`` writes it to ``__building.*`` scratch), then
+    one rename commits it.  Readers resolve the newest version once at
+    scan start, so a report mid-read never loses partitions to a
+    concurrent upsert.
 
-    def __init__(self, spark: SparkSession, path: str, versioned: bool = False):
+    A store written before versions existed (``date=*`` directly under
+    ``path``) stays readable, and its first write migrates it to v1.
+
+    ``versioned`` accepts only ``True``: it remains so existing
+    ``MetricsStore(..., versioned=True)`` calls keep working."""
+
+    def __init__(self, spark: SparkSession, path: str, versioned: bool = True):
+        if not versioned:
+            raise ValueError(
+                "MetricsStore has one layout: every write commits a "
+                "version (versioned=False is not supported)"
+            )
         self.spark = spark
         self.path = path
-        self.versioned = bool(versioned)
 
     def _root(self) -> str:
-        """Current payload dir: newest committed version, or the flat
-        path (resolved per call — readers pin a snapshot by resolving
-        once at scan start, which ``read`` does implicitly)."""
+        """Current payload dir: newest committed version, or the legacy
+        flat path (resolved per call — readers pin a snapshot by
+        resolving once at scan start, which ``read`` does implicitly)."""
         return fs.resolve_store_root(self.spark, self.path)
 
-    def _is_versioned(self) -> bool:
-        """Versioned if asked for OR the store already holds committed
-        versions (a versioned store stays versioned even when the flag
-        is forgotten on a later instance)."""
-        return self.versioned or fs.latest_version(self.spark, self.path) is not None
+    @contextmanager
+    def _leased(self):
+        """The store's single-writer lease, with a legacy flat store's
+        crashed compaction swap healed first — every write is a
+        read-modify-write, and "absent" must not read as "empty"."""
+        with fs.maintenance_lease(self.spark, self.path):
+            fs.recover_swap(self.spark, self.path)
+            yield
 
     # -- read ---------------------------------------------------------------
     def exists(self) -> bool:
@@ -129,11 +149,11 @@ class MetricsStore:
         Goes through the session's Hadoop FS (functions/fs), NOT
         ``os.path`` — on an HDFS/S3A URI the local-FS form silently
         returns False for a populated store, so every read path would
-        treat real facts as "nothing stored yet".  Heals a crashed
-        compaction swap first: in the swap's one crash window the only
-        copy sits at ``path__old``, and "absent ⇒ empty frame" would
-        read an existing store as empty (same silent-loss mode the
-        index stores guard, docs/OPERATIONS.md).
+        treat real facts as "nothing stored yet".  On a legacy flat
+        store, heals a crashed compaction swap first: in the swap's one
+        crash window the only copy sits at ``path__old``, and "absent ⇒
+        empty frame" would read an existing store as empty (same
+        silent-loss mode the index stores guard, docs/OPERATIONS.md).
 
         If the window is open but healing declined (a LIVE writer in
         another process is mid-swap), this raises rather than answer:
@@ -155,7 +175,7 @@ class MetricsStore:
 
     def read(self) -> DataFrame:
         """All stored facts; empty frame when nothing stored yet.
-        Versioned stores resolve the newest snapshot once here — the
+        The newest snapshot is resolved once here — the
         whole downstream plan reads that version even if a writer
         commits mid-scan.  The scan takes the declared fact schema, so no
         Spark job runs here to infer it from parquet footers."""
@@ -165,7 +185,7 @@ class MetricsStore:
         # the partition column lands last; restore the fact column order
         return df.select(*METRICS_SCHEMA.fieldNames())
 
-    # -- versioned-write plumbing -------------------------------------------
+    # -- write plumbing ------------------------------------------------------
     #: hidden subdir inside each committed version holding the stream-fold
     #: ledger (underscore prefix ⇒ invisible to parquet partition
     #: discovery, so ``read()`` never sees it) — the stream batches
@@ -203,32 +223,25 @@ class MetricsStore:
     def stream_fold_ledger(self) -> dict[str, tuple[int, frozenset[int]]]:
         """Per-stream folded-batch memory of the CURRENT version:
         ``{stream_id: (hwm, tail)}`` — batch ``b`` of ``stream_id`` is
-        folded iff ``b <= hwm or b in tail``.  Empty for flat stores /
-        never-folded stores.  Legacy ledgers (one ``key`` row per
-        ``stream_id:batch_id``) are parsed and compacted on read."""
-        if fs.latest_version(self.spark, self.path) is None:
-            return {}
+        folded iff ``b <= hwm or b in tail``.  Empty for never-folded
+        stores.  Legacy ledgers (one ``key`` row per
+        ``stream_id:batch_id``) are parsed and compacted on read.  The
+        scan declares the superset of both formats' columns, so the
+        collect is the only Spark job."""
         p = f"{self._root()}/{self._LEDGER}"
         if not fs.dir_nonempty(self.spark, p):
             return {}
-        df = self.spark.read.parquet(p)
-        if "key" in df.columns:  # pre-round-13 unbounded format
-            acc: dict[str, set[int]] = {}
-            for r in df.collect():
+        folded: dict[str, tuple[int, set[int]]] = {}
+        for r in self.spark.read.schema(_LEDGER_SCHEMA).parquet(p).collect():
+            if r["key"] is not None:  # legacy: one row per folded batch
                 sid, _, b = str(r["key"]).rpartition(":")
-                acc.setdefault(sid, set()).add(int(b))
-            return self._compact_ledger(
-                {s: (-1, ids) for s, ids in acc.items()}
-            )
-        return self._compact_ledger(
-            {
-                str(r["stream_id"]): (
-                    int(r["hwm"]),
-                    set(int(b) for b in (r["tail"] or [])),
-                )
-                for r in df.collect()
-            }
-        )
+                hwm, ids = -1, {int(b)}
+            else:
+                sid, hwm = str(r["stream_id"]), int(r["hwm"])
+                ids = {int(b) for b in (r["tail"] or [])}
+            prev_hwm, prev_ids = folded.get(sid, (-1, set()))
+            folded[sid] = (max(prev_hwm, hwm), prev_ids | ids)
+        return self._compact_ledger(folded)
 
     def _commit_full(
         self,
@@ -236,10 +249,9 @@ class MetricsStore:
         ledger: dict[str, tuple[int, frozenset[int]]] | None = None,
     ) -> None:
         """Write ``full`` (the COMPLETE next payload) as the next
-        immutable version.  Caller holds the store lease.  A flat store
-        opting into versioning migrates here: its payload lands in v1
-        and the flat remnants are swept after the commit (one-time
-        transition; subsequent writes have no window at all).
+        immutable version.  Caller holds the store lease.  A legacy flat
+        store migrates here: its payload lands in v1 and the flat
+        remnants are swept after the commit.
 
         The stream-fold ledger rides along: ``ledger`` (when given)
         replaces it, otherwise the current version's ledger is carried
@@ -262,7 +274,7 @@ class MetricsStore:
                         (sid, int(hwm), sorted(int(b) for b in tail))
                         for sid, (hwm, tail) in sorted(ledger.items())
                     ],
-                    "stream_id string, hwm long, tail array<long>",
+                    _LEDGER_COLS,
                 )
                 .coalesce(1)
                 .write.mode("overwrite")
@@ -270,99 +282,68 @@ class MetricsStore:
             )
         fs.commit_version(self.spark, self.path, tmp)
         if was_flat:
-            # sweep pre-migration flat children (date=*/_SUCCESS); version
-            # dirs and live scratch are not touched
-            jfs, _, jvm = fs._fs_and_path(self.spark, self.path)
-            for name in fs.list_child_names(self.spark, self.path):
-                if fs._is_version_name(name) or name.startswith("__building."):
-                    continue
-                jfs.delete(
-                    jvm.org.apache.hadoop.fs.Path(
-                        f"{self.path.rstrip('/')}/{name}"
-                    ),
-                    True,
-                )
+            fs.sweep_flat_remnants(self.spark, self.path)
+
+    def _stored_days(self, batch: DataFrame):
+        """``(touched, untouched)``: the stored rows on the days ``batch``
+        holds, and on every other day — ``(None, None)`` when nothing is
+        stored.  Caller HOLDS the store lease."""
+        if not fs.dir_nonempty(self.spark, self._root()):
+            return None, None
+        existing = self.read()
+        days = F.broadcast(batch.select("date").distinct())
+        return (
+            existing.join(days, "date", "left_semi"),
+            existing.join(days, "date", "left_anti"),
+        )
 
     # -- write --------------------------------------------------------------
     def store(self, batch: DataFrame, mode: str = "upsert") -> None:
-        """Persist a consolidated batch.
+        """Persist a consolidated batch as the next version.
 
         * ``upsert`` (default): merge with existing rows per MetricKey,
-          re-sum measures, re-derive ratios; overwrite only touched date
-          partitions.
+          re-sum measures, re-derive ratios; the untouched days carry
+          forward unchanged.
         * ``append``: raw reference behavior (memory.go:24) — duplicates on
           re-ingest, kept for byte-level compat experiments.
+
+        Both are read-modify-writes of the whole payload, so the WHOLE
+        cycle holds the store's single-writer lease: two concurrent
+        upserts would otherwise both read the same version, and one
+        batch's increments would be silently lost.
         """
-        if mode == "append":
-            batch = _rebalanced(batch)
-            # leased like every other writer: an append landing inside a
-            # LIVE compact()'s swap window (path absent mid-renames) would
-            # CREATE a batch-only directory that the swap's second rename
-            # then nests the compacted layout into — and a crashed swap's
-            # window must heal before the append (round-8 convention).
-            with fs.maintenance_lease(self.spark, self.path):
-                if self._is_versioned():
-                    existing = self.read()
-                    self._commit_full(
-                        existing.unionByName(batch.select(existing.columns))
-                    )
-                    return
-                fs.recover_swap(self.spark, self.path)
-                (batch.write.mode("append").partitionBy("date").parquet(self.path))
-            return
-        if mode != "upsert":
+        if mode not in ("upsert", "append"):
             raise ValueError(f"unknown store mode: {mode}")
+        with self._leased():
+            if mode == "append":
+                existing = self.read()
+                full = existing.unionByName(
+                    _rebalanced(batch).select(existing.columns)
+                )
+            else:
+                full = self._upsert_frames(batch)
+            self._commit_full(full)
 
-        # the upsert is a read-modify-write (existing days fold into the
-        # batch): the WHOLE cycle — exists-decision, merge plan, dynamic
-        # overwrite — holds the store's single-writer lease, or two
-        # concurrent upserts interleave and one batch's increments are
-        # silently lost (same contract as every index-store fold)
-        with fs.maintenance_lease(self.spark, self.path):
-            fs.recover_swap(self.spark, self.path)
-            merged, full = self._upsert_frames(batch)
-            if self._is_versioned():
-                # snapshot layout: the next version carries untouched
-                # days + the merged days, committed with one rename
-                self._commit_full(full)
-                return
-            # dynamic partitionOverwriteMode (session.py) ⇒ only the date
-            # partitions present in `merged` are replaced.
-            merged.write.partitionBy("date").mode("overwrite").parquet(self.path)
-
-    def _upsert_frames(self, batch: DataFrame):
-        """(merged, full) for an upsert of ``batch`` — caller HOLDS the
-        store lease.  ``merged``: the batch's days after re-summing with
-        the stored rows for those days (what the flat layout's dynamic
-        overwrite writes); ``full``: merged + untouched days (what the
-        versioned layout commits)."""
-        merged = _rebalanced(batch)
-        untouched = None
-        if fs.dir_nonempty(self.spark, self._root()):
-            existing = self.read()
-            # Only days present in the batch can change; restrict the
-            # merge input so the shuffle is sized by the batch, not
-            # the table.
-            batch_dates = batch.select("date").distinct()
-            relevant = existing.join(
-                F.broadcast(batch_dates), "date", "left_semi"
-            )
-            untouched = existing.join(
-                F.broadcast(batch_dates), "date", "left_anti"
-            )
-            both = relevant.select(batch.columns).unionByName(batch)
-            resummed = both.groupBy(*METRIC_KEY_COLS).agg(*_resum_aggs())
-            merged = with_derived_metrics(resummed).select(batch.columns)
-        full = merged
-        if untouched is not None:
-            full = untouched.select(merged.columns).unionByName(merged)
-        return merged, full
+    def _upsert_frames(self, batch: DataFrame) -> DataFrame:
+        """The full next payload for an upsert of ``batch``: the batch's
+        days re-summed with the stored rows for those days, plus the
+        untouched days.  Caller HOLDS the store lease."""
+        touched, untouched = self._stored_days(batch)
+        if touched is None:
+            return _rebalanced(batch)
+        # Only days present in the batch can change; the merge input is
+        # restricted to them, so the shuffle is sized by the batch, not
+        # the table.
+        both = touched.select(batch.columns).unionByName(batch)
+        resummed = both.groupBy(*METRIC_KEY_COLS).agg(*_resum_aggs())
+        merged = with_derived_metrics(resummed).select(batch.columns)
+        return untouched.select(merged.columns).unionByName(merged)
 
     def fold_stream_log(self, log_path: str) -> int:
         """Exactly-once drain of a :func:`streaming.ingest.
         stream_metrics_ingest` batch log into the store — the leased
         maintenance fold that gives `/ingest/run` its streaming twin
-        (S1→A1→F1→S5 landing in the versioned fact store).
+        (S1→A1→F1→S5 landing in the fact store).
 
         Exactly-once without trusting the stream OR the fold to not
         replay: the log is batch_id-partitioned with dynamic overwrite
@@ -380,25 +361,17 @@ class MetricsStore:
         unlike vec_id-keyed code folds, a metrics replay is
         indistinguishable from a genuine second increment.
 
-        Requires the versioned layout (the flat layout has no atomic
-        payload+ledger commit).  Cleanup deletes only the batch
-        partitions this fold saw; all of them are in the ledger by then.
+        Cleanup deletes only the batch partitions this fold saw; all of
+        them are in the ledger by then.
         The stream writer holds no lease (by design — ingest must never
         contend with maintenance), so a replayed micro-batch's dynamic
         partition overwrite can delete a pinned file mid-scan; the fold
         RETRIES with a fresh pin (content is deterministic and the
         ledger skips already-committed batches, so the retry is safe)
         instead of failing.  Returns the number of batches folded."""
-        if not self._is_versioned():
-            raise ValueError(
-                "fold_stream_log requires a versioned MetricsStore "
-                "(the exactly-once ledger commits atomically with the "
-                "payload version)"
-            )
         if not fs.path_exists(self.spark, log_path):
             return 0
-        with fs.maintenance_lease(self.spark, self.path):
-            fs.recover_swap(self.spark, self.path)
+        with self._leased():
             last_exc: Exception | None = None
             for attempt in range(3):
                 try:
@@ -445,7 +418,7 @@ class MetricsStore:
                     for f in METRICS_SCHEMA.fields
                 ]
             )
-            _, full = self._upsert_frames(batch)
+            full = self._upsert_frames(batch)
             nxt = {s: (hwm, set(tail)) for s, (hwm, tail) in ledger.items()}
             for s, b in todo:
                 nxt.setdefault(s, (-1, set()))[1].add(b)
@@ -516,37 +489,18 @@ class MetricsStore:
         Streaming/incremental upserts accumulate small files per day; at
         object-store scale that means listing overhead and tiny reads.
         Compaction hash-colocates each day (``repartition("date")``) so
-        the rewrite emits one file per day, staged to a sibling directory
-        and installed with the same crash-safe two-rename swap every
-        index store uses (``functions/fs.swap_into_place`` — Hadoop-FS
-        API, so the identical code runs on HDFS/S3A where the old
-        ``os.rename``/``shutil`` form crashed).  Held under the store's
+        the rewrite emits one file per day, committed as the next
+        version like every other write.  Held under the store's
         single-writer maintenance lease, same as the index compactions.
         Returns (files_before, files_after).
         """
-        with fs.maintenance_lease(self.spark, self.path):
-            fs.recover_swap(self.spark, self.path)
+        with self._leased():
             root = self._root()
             if not fs.dir_nonempty(self.spark, root):
                 return (0, 0)
             before = fs.count_files(self.spark, root)
-            if self._is_versioned():
-                # compaction is a full rewrite anyway: it simply becomes
-                # the next committed version — no swap window at all
-                self._commit_full(
-                    self.spark.read.parquet(root).repartition("date")
-                )
-                return (before, fs.count_files(self.spark, self._root()))
-            tmp = self.path.rstrip("/") + "__compacting"
-            (
-                self.spark.read.parquet(self.path)
-                .repartition("date")
-                .write.partitionBy("date")
-                .mode("overwrite")
-                .parquet(tmp)
-            )
-            fs.swap_into_place(self.spark, tmp, self.path)
-            return (before, fs.count_files(self.spark, self.path))
+            self._commit_full(self.read().repartition("date"))
+            return (before, fs.count_files(self.spark, self._root()))
 
     def store_idempotent_replace(self, batch: DataFrame) -> None:
         """Replace-by-day: incoming batch is the new truth for its days.
@@ -554,21 +508,12 @@ class MetricsStore:
         The right mode when re-ingesting a corrected full day from sources
         (vs. `upsert`, which treats the batch as an increment).
         """
-        # leased + healed, same rationale as the append path above
-        with fs.maintenance_lease(self.spark, self.path):
-            if self._is_versioned():
-                full = batch
-                if fs.dir_nonempty(self.spark, self._root()):
-                    existing = self.read()
-                    batch_dates = batch.select("date").distinct()
-                    keep = existing.join(
-                        F.broadcast(batch_dates), "date", "left_anti"
-                    )
-                    full = keep.select(batch.columns).unionByName(batch)
-                self._commit_full(full)
-                return
-            fs.recover_swap(self.spark, self.path)
-            batch.write.partitionBy("date").mode("overwrite").parquet(self.path)
+        with self._leased():
+            _, untouched = self._stored_days(batch)
+            full = batch
+            if untouched is not None:
+                full = untouched.select(batch.columns).unionByName(batch)
+            self._commit_full(full)
 
 
 def backfill_missing_dates(

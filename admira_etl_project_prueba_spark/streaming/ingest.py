@@ -8,16 +8,16 @@ the evolution that doc asks for, built on Structured Streaming:
 * ``stream_envelopes``  — a file-source stream of envelope JSON (swap for
   ``readStream.format("kafka")`` in production: the value column contract
   is identical) decoded with the SAME ``from_json`` schemas as batch.
-* ``stream_consolidate`` — the batch ``transform()`` dataflow applied
-  incrementally via ``foreachBatch`` into the idempotent MetricsStore:
-  each micro-batch is consolidated and UPSERTED by MetricKey, so the
-  streaming path converges to exactly the batch result (tested).
+* ``stream_metrics_ingest`` — the batch ``transform()`` dataflow applied
+  to each micro-batch via ``foreachBatch``, its increments landed in a
+  ``batch_id``-partitioned log that ``MetricsStore.fold_stream_log``
+  folds into the fact store exactly once, so the streaming path
+  converges to exactly the batch result even under replay (tested).
 * ``windowed_event_counts`` — watermarked tumbling-window aggregation for
   late data, the canonical streaming-rollup shape.
 
-Scale posture: state is bounded by the watermark; the upsert writes only
-touched date partitions; `availableNow` triggers give reproducible tests
-and backfill runs.
+Scale posture: state is bounded by the watermark; `availableNow`
+triggers give reproducible tests and backfill runs.
 """
 
 from __future__ import annotations
@@ -43,7 +43,6 @@ from admira_etl_project_prueba_spark.schemas import (
     ADS_ENVELOPE_SCHEMA,
     CRM_ENVELOPE_SCHEMA,
 )
-from admira_etl_project_prueba_spark.store import MetricsStore
 
 
 def stream_envelopes(
@@ -77,48 +76,6 @@ def stream_envelopes(
     return flat.withColumn("ingested_at", F.current_timestamp())
 
 
-def stream_consolidate(
-    source_stream: DataFrame,
-    source: str,
-    store: MetricsStore,
-    checkpoint_dir: str,
-    ingested_at: dt.datetime | None = None,
-) -> StreamingQuery:
-    """Incrementally consolidate one envelope stream into the fact store.
-
-    foreachBatch runs the exact batch ``transform`` on each micro-batch and
-    upserts by MetricKey.  The merge is an associative SUM, so (a) ads and
-    CRM run as independent queries (one per source, the production shape —
-    separate Kafka topics, separate checkpoints) and still converge to the
-    fused batch result, and (b) re-delivered envelopes re-sum
-    deterministically: the end state equals a one-shot batch over the same
-    inputs regardless of micro-batch boundaries or source interleaving.
-    """
-    stream = source_stream
-    if ingested_at is not None:
-        stream = stream.withColumn(
-            "ingested_at", F.lit(ingested_at).cast("timestamp")
-        )
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        from admira_etl_project_prueba_spark.schemas import ADS_SCHEMA, CRM_PARSED_SCHEMA
-
-        if source == "ads":
-            ads, crm = batch_df, spark.createDataFrame([], CRM_PARSED_SCHEMA)
-        else:
-            ads, crm = spark.createDataFrame([], ADS_SCHEMA), batch_df
-        store.store(transform(ads, crm), mode="upsert")
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_metrics_ingest(
     source_stream: DataFrame,
     source: str,
@@ -129,13 +86,13 @@ def stream_metrics_ingest(
     stream_id: str | None = None,
 ) -> StreamingQuery:
     """EXACTLY-ONCE streaming `/ingest/run`: the encode half of the
-    log+fold pair that lands conformed increments in the VERSIONED fact
-    store (S1→A1→F1→S5 with snapshot isolation end to end).
+    log+fold pair that lands conformed increments in the fact store
+    (S1→A1→F1→S5 with snapshot isolation end to end).
 
-    :func:`stream_consolidate` upserts each micro-batch directly —
-    correct under Structured Streaming's normal once-per-batch contract,
-    but an at-least-once REPLAY (checkpoint loss, foreachBatch retry
-    after a partial failure) re-sums the same increments: additive
+    Upserting each micro-batch directly would be correct under
+    Structured Streaming's normal once-per-batch contract, but an
+    at-least-once REPLAY (checkpoint loss, foreachBatch retry after a
+    partial failure) would re-sum the same increments: additive
     measures cannot tell a replay from a genuine second batch.  This
     writer takes the CMS/PQ-encode-log recipe instead: each micro-batch
     is conformed and consolidated by the SAME batch operators
@@ -144,7 +101,7 @@ def stream_metrics_ingest(
     partition overwrite, so a replayed batch overwrites its own
     partition instead of duplicating.  The leased maintenance fold —
     :meth:`store.MetricsStore.fold_stream_log` — drains the log into the
-    versioned store, recording folded batch_ids in a ledger that commits
+    fact store, recording folded batch_ids in a ledger that commits
     ATOMICALLY with each payload version; the pair is exactly-once under
     arbitrary crash/replay on either side (pytest-pinned: replayed batch
     no-ops, stream-end state hash-equals a one-shot batch ingest).

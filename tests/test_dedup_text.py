@@ -1551,7 +1551,9 @@ def test_lm_count_store_merge_equals_rebuild(spark, tmp_path):
     assert incremental == rebuilt and len(incremental) == 3
 
     # the store stays dense and integer-exact across merges
-    store = spark.read.parquet(path)
+    from admira_etl_project_prueba_spark.functions.fs import resolve_store_root
+
+    store = spark.read.parquet(resolve_store_root(spark, path))
     assert store.count() == 8192
     total = store.agg({"cnt": "sum"}).collect()[0][0]
     assert total == 5 * 5 + 3 * 5

@@ -114,8 +114,8 @@ def test_append_merge_heals_compaction_crash_window(spark, sf_dir, tmp_path):
 def test_fact_store_exists_and_read_heal_compaction_crash_window(
     spark, sf_dir, tmp_path
 ):
-    """MetricsStore (round 9, ported to the Hadoop-FS layer): with only
-    path__old present — a compact() crashed between its two renames —
+    """MetricsStore on a legacy flat store: with only path__old present
+    — a flat-layout compaction crashed between its two renames —
     exists() must heal and report True, and read() must return the
     surviving facts.  The old os.path form would have read a populated
     store as EMPTY, and the next compaction's swap would then delete the
@@ -134,7 +134,8 @@ def test_fact_store_exists_and_read_heal_compaction_crash_window(
     batch = transform(synthetic_ads(ev), synthetic_crm(ev))
     path = str(tmp_path / "facts")
     store = MetricsStore(spark, path)
-    store.store(batch)
+    # a store in the legacy flat layout, the only one with a swap window
+    batch.write.partitionBy("date").parquet(path)
     n = store.read().count()
     assert n > 0
 
@@ -170,7 +171,8 @@ def test_fact_store_upsert_heals_crash_window_before_merging(
     batch = transform(synthetic_ads(ev), synthetic_crm(ev))
     path = str(tmp_path / "facts")
     store = MetricsStore(spark, path)
-    store.store(batch)
+    # a store in the legacy flat layout, the only one with a swap window
+    batch.write.partitionBy("date").parquet(path)
     dates = sorted(r["date"] for r in store.read().select("date").distinct().collect())
     assert len(dates) > 1
     one_day = batch.filter(F.col("date") == dates[0])

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from admira_etl_project_prueba_spark.functions.fs import resolve_store_root
 from admira_etl_project_prueba_spark.operators import sketches as sk
 from admira_etl_project_prueba_spark.sources.tables import load_events
 
@@ -26,7 +27,7 @@ def test_histogram_merge_equals_rebuild(spark, sf_dir, tmp_path):
     sk.merge_histogram_store(spark, path, c)
     merged = {
         (r["event_type"], r["bin"]): r["n"]
-        for r in spark.read.parquet(path).collect()
+        for r in spark.read.parquet(resolve_store_root(spark, path)).collect()
     }
     rebuilt = {
         (r["event_type"], r["bin"]): r["n"]
@@ -165,7 +166,9 @@ def test_psi_from_stores_matches_inline(spark, sf_dir, tmp_path):
     sk.write_histogram_store(b, pb, n_bins=16)
     from_store = sorted(
         map(tuple, sk.psi_from_histograms(
-            spark.read.parquet(pa), spark.read.parquet(pb), 16
+            spark.read.parquet(resolve_store_root(spark, pa)),
+            spark.read.parquet(resolve_store_root(spark, pb)),
+            16,
         ).collect())
     )
     inline = sorted(map(tuple, sk.value_psi(a, b).collect()))

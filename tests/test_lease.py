@@ -414,7 +414,8 @@ def test_fact_store_read_raises_during_foreign_swap(spark, sf_dir, tmp_path):
     batch = transform(synthetic_ads(ev), synthetic_crm(ev))
     path = str(tmp_path / "facts")
     store = MetricsStore(spark, path)
-    store.store(batch)
+    # a store in the legacy flat layout, the only one with a swap window
+    batch.write.partitionBy("date").parquet(path)
 
     # freeze a foreign compaction mid-swap: window open, lease held
     _os.rename(path, path + "__old")

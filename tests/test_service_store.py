@@ -332,11 +332,15 @@ def test_verbatim_store_of_a_cached_batch_writes_one_file_per_day(spark, tmp_pat
     try:
         assert batch.count() == 16
         for mode in ("upsert", "append"):
-            path = tmp_path / f"facts_{mode}"
-            MetricsStore(spark, str(path)).store(batch, mode=mode)
+            store = MetricsStore(spark, str(tmp_path / f"facts_{mode}"))
+            store.store(batch, mode=mode)
+            root = store._root()
             files_per_day = {
-                d: sum(f.endswith(".parquet") for f in os.listdir(path / d))
-                for d in os.listdir(path)
+                d: sum(
+                    f.endswith(".parquet")
+                    for f in os.listdir(os.path.join(root, d))
+                )
+                for d in os.listdir(root)
                 if d.startswith("date=")
             }
             assert files_per_day == {"date=2024-03-01": 1, "date=2024-03-02": 1}

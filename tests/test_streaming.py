@@ -16,7 +16,6 @@ from admira_etl_project_prueba_spark.sources.json_source import (
 )
 from admira_etl_project_prueba_spark.store import MetricsStore
 from admira_etl_project_prueba_spark.streaming.ingest import (
-    stream_consolidate,
     stream_envelopes,
     windowed_event_counts,
 )
@@ -57,44 +56,11 @@ def write_envelopes(path, key_path, rows, per_file=2):
             fh.write(json.dumps(env) + "\n")
 
 
-def test_stream_converges_to_batch_result(spark, dirs):
-    """End state of incremental micro-batch ingestion == one-shot batch
-    transform over the same envelopes (upsert-by-key idempotency)."""
-    write_envelopes(dirs["ads"], lambda r: {"ads": {"performance": r}}, ADS_ROWS)
-    write_envelopes(dirs["crm"], lambda r: {"crm": {"opportunities": r}}, CRM_ROWS)
-
-    store = MetricsStore(spark, dirs["store"])
-    # one query per source (production shape); sequential here so the
-    # availableNow triggers don't race on the store
-    q1 = stream_consolidate(
-        stream_envelopes(spark, dirs["ads"], "ads"), "ads", store,
-        dirs["ckpt"] + "_ads", ingested_at=STAMP,
-    )
-    q1.awaitTermination(120)
-    q2 = stream_consolidate(
-        stream_envelopes(spark, dirs["crm"], "crm"), "crm", store,
-        dirs["ckpt"] + "_crm", ingested_at=STAMP,
-    )
-    q2.awaitTermination(120)
-
-    # one-shot batch over identical payloads
-    ads_payload = json.dumps({"external": {"ads": {"performance": ADS_ROWS}}})
-    crm_payload = json.dumps({"external": {"crm": {"opportunities": CRM_ROWS}}})
-    expected = transform(
-        ads_from_payload(spark, ads_payload, ingested_at=STAMP),
-        crm_from_payload(spark, crm_payload, ingested_at=STAMP),
-    )
-
-    got = {tuple(r): None for r in store.read().collect()}
-    want = {tuple(r): None for r in expected.collect()}
-    assert got.keys() == want.keys()
-
-
 def test_stream_metrics_ingest_exactly_once(spark, dirs, tmp_path):
     """The exactly-once streaming `/ingest/run` twin: micro-batch
     envelope streams land conformed increments in a batch-id log;
-    MetricsStore.fold_stream_log drains them into the VERSIONED store
-    under the payload+ledger atomic commit.  Pinned: (a) stream-end
+    MetricsStore.fold_stream_log drains them into the store under the
+    payload+ledger atomic commit.  Pinned: (a) stream-end
     state row-equals a one-shot batch ingest, (b) a replayed/refolded
     log no-ops (the ledger survives the next version), (c) an unrelated
     upsert between folds carries the ledger forward."""
@@ -107,7 +73,7 @@ def test_stream_metrics_ingest_exactly_once(spark, dirs, tmp_path):
     write_envelopes(dirs["ads"], lambda r: {"ads": {"performance": r}}, ADS_ROWS)
     write_envelopes(dirs["crm"], lambda r: {"crm": {"opportunities": r}}, CRM_ROWS)
     log = str(tmp_path / "metrics_log")
-    store = MetricsStore(spark, dirs["store"], versioned=True)
+    store = MetricsStore(spark, dirs["store"])
 
     q1 = stream_metrics_ingest(
         stream_envelopes(spark, dirs["ads"], "ads"), "ads", log,
@@ -175,10 +141,6 @@ def test_stream_metrics_ingest_exactly_once(spark, dirs, tmp_path):
     q4.awaitTermination(120)
     assert store.fold_stream_log(log) == 0  # still ledgered
     assert extra.count() == 0
-    # flat stores refuse: exactly-once needs the atomic ledger commit
-    flat = MetricsStore(spark, str(tmp_path / "flat_store"))
-    with pytest.raises(ValueError, match="versioned"):
-        flat.fold_stream_log(log)
 
 
 def _write_log_batch(spark, log_path, stream_id, batch_id, clicks=1):
@@ -214,7 +176,7 @@ def test_stream_fold_ledger_bounded(spark, tmp_path):
     are absorbed when the gap closes, and a legacy one-key-per-batch
     ledger reads compatibly and compacts on its next commit."""
     log = str(tmp_path / "log")
-    store = MetricsStore(spark, str(tmp_path / "store"), versioned=True)
+    store = MetricsStore(spark, str(tmp_path / "store"))
 
     for b in (0, 1, 2):
         _write_log_batch(spark, log, "s1", b)
@@ -251,7 +213,7 @@ def test_stream_fold_ledger_bounded(spark, tmp_path):
     # legacy compat: a pre-round-13 one-key-per-batch ledger parses into
     # the same (hwm, tail) view and compacts on the next commit
     legacy = str(tmp_path / "legacy_store")
-    lstore = MetricsStore(spark, legacy, versioned=True)
+    lstore = MetricsStore(spark, legacy)
     _write_log_batch(spark, log, "s1", 0)
     lstore.fold_stream_log(log)
     spark.createDataFrame(
@@ -280,7 +242,7 @@ def test_stream_fold_retries_on_vanished_partition(
     signature — the ledger makes the retry exactly-once — while non-FNF
     errors still propagate.  Mirrors the PQ code fold's retry pin."""
     log = str(tmp_path / "log")
-    store = MetricsStore(spark, str(tmp_path / "store"), versioned=True)
+    store = MetricsStore(spark, str(tmp_path / "store"))
     _write_log_batch(spark, log, "s1", 0)
 
     real = MetricsStore._fold_stream_once
@@ -315,7 +277,7 @@ def test_stream_log_health_probe(spark, tmp_path):
     absent log, populated while batches wait, zeroed again after the
     fold drains them."""
     log = str(tmp_path / "log")
-    store = MetricsStore(spark, str(tmp_path / "store"), versioned=True)
+    store = MetricsStore(spark, str(tmp_path / "store"))
     h = store.stream_log_health(log)
     assert h == {
         "path": log, "pending_batches": 0, "streams": 0,

@@ -1,9 +1,10 @@
-"""Versioned-layout migration of the remaining swap-managed stores
-(round 11): the fact MetricsStore, the LSH signature store, and the
-histogram / LM-count model stores.  Each gets (a) lifecycle row-parity
-with its flat twin, and (b) the reader-vs-rewriter race pinned: a reader
-that resolved the previous version before a fold completes against its
-snapshot, byte-for-byte."""
+"""The versioned layout of the whole-payload stores: the fact
+MetricsStore, the LSH signature store, and the histogram / LM-count
+model stores.  Each gets (a) lifecycle parity with a from-scratch
+rebuild or a plain-Python per-key sum, (b) the reader-vs-rewriter race
+pinned: a reader that resolved the previous version before a fold
+completes against its snapshot, byte-for-byte, and (c) the legacy flat
+layout still read and migrated on the first write."""
 
 from __future__ import annotations
 
@@ -48,55 +49,83 @@ def _batch(spark, days, base=10):
     return with_derived_metrics(df.drop(*DERIVED_COLS))
 
 
+def _sums(*batches):
+    """Plain-Python per-MetricKey sums of the additive measures over
+    ``batches`` — the oracle for the store's re-summing writes."""
+    from admira_etl_project_prueba_spark.schemas import (
+        MEASURE_COLS,
+        METRIC_KEY_COLS,
+    )
+
+    acc: dict = {}
+    for b in batches:
+        for r in b.collect():
+            key = tuple(r[c] for c in METRIC_KEY_COLS)
+            prev = acc.get(key, (0,) * len(MEASURE_COLS))
+            acc[key] = tuple(p + r[m] for p, m in zip(prev, MEASURE_COLS))
+    return sorted(k + v for k, v in acc.items())
+
+
+def _stored_sums(store):
+    from admira_etl_project_prueba_spark.schemas import (
+        MEASURE_COLS,
+        METRIC_KEY_COLS,
+    )
+
+    return _rows(store.read().select(*METRIC_KEY_COLS, *MEASURE_COLS))
+
+
+def _legacy_flat_write(df, path):
+    """A store in the pre-version layout: ``date=*`` directly under
+    ``path`` — exactly what the fact store's writes used to produce."""
+    df.write.partitionBy("date").parquet(path)
+
+
 def test_metrics_store_versioned_lifecycle_parity(spark, tmp_path):
-    """upsert / append-day / replace / compact on a versioned store
-    produce row-identical facts to the flat store, each write commits a
-    new immutable version, and a reader pinned to the previous version
-    keeps its complete snapshot through the next upsert."""
-    flat = MetricsStore(spark, str(tmp_path / "flat"))
-    ver = MetricsStore(spark, str(tmp_path / "ver"), versioned=True)
+    """upsert / replace / compact produce the facts a plain-Python
+    per-key sum predicts, each write commits a new immutable version,
+    and a reader pinned to the previous version keeps its complete
+    snapshot through the next upsert."""
+    ver = MetricsStore(spark, str(tmp_path / "ver"))
 
     b1 = _batch(spark, ["2024-01-01", "2024-01-02"])
-    flat.store(b1)
     ver.store(b1)
     assert fs.latest_version(spark, ver.path) == "v00000001"
-    assert ver.exists() and _rows(ver.read()) == _rows(flat.read())
+    assert ver.exists() and _rows(ver.read()) == _rows(b1)
 
     # reader snapshot: pin v1's root, then upsert (which re-sums an
     # existing day AND adds a new one) — v1 must stay byte-complete
     v1_root = ver._root()
     v1_count = spark.read.parquet(v1_root).count()
     b2 = _batch(spark, ["2024-01-02", "2024-01-03"], base=100)
-    flat.store(b2)
     ver.store(b2)
     assert fs.latest_version(spark, ver.path) == "v00000002"
     assert spark.read.parquet(v1_root).count() == v1_count  # snapshot intact
-    assert _rows(ver.read()) == _rows(flat.read())
+    assert _stored_sums(ver) == _sums(b1, b2)
 
-    flat.store_idempotent_replace(b1)
+    # replace-by-day: b1's days are b1 again, b2's other day survives
     ver.store_idempotent_replace(b1)
     assert fs.latest_version(spark, ver.path) == "v00000003"
-    assert _rows(ver.read()) == _rows(flat.read())
+    want = _sums(b1, b2.filter("date = '2024-01-03'"))
+    assert _stored_sums(ver) == want
+    replaced = _rows(ver.read())
 
     before, after = ver.compact()
     assert fs.latest_version(spark, ver.path) == "v00000004"
     assert before >= after > 0
-    assert _rows(ver.read()) == _rows(flat.read())
-
-    # upsert idempotency carries over: re-upserting the same batch on a
-    # fresh pair stays equal (derived ratios re-derived identically)
-    assert _rows(ver.read()) == _rows(flat.read())
+    assert _rows(ver.read()) == replaced
 
 
 def test_metrics_store_flat_migrates_on_first_versioned_write(spark, tmp_path):
-    """Opting an existing FLAT store into versioning: the first write
-    commits the full payload as v1 (prior facts preserved), sweeps the
-    flat remnants, and later flag-less instances keep writing versions
-    (the layout, not the constructor, is authoritative)."""
+    """A store in the legacy flat layout: the first write commits the
+    full payload as v1 (prior facts preserved), sweeps the flat
+    remnants, and later instances keep writing versions."""
     path = str(tmp_path / "mig")
+    legacy = _batch(spark, ["2024-02-01"])
+    _legacy_flat_write(legacy, path)
     flat = MetricsStore(spark, path)
-    flat.store(_batch(spark, ["2024-02-01"]))
-    want_after = _rows(flat.read())
+    want_before = _rows(legacy)
+    assert _rows(flat.read()) == want_before  # the flat payload reads
 
     ver = MetricsStore(spark, path, versioned=True)
     ver.store(_batch(spark, ["2024-02-02"]))
@@ -110,13 +139,75 @@ def test_metrics_store_flat_migrates_on_first_versioned_write(spark, tmp_path):
     assert {r["date"] for r in ver.read().select("date").distinct().collect()} == {
         "2024-02-01", "2024-02-02"
     }
+    assert _rows(ver.read().filter("date = '2024-02-01'")) == want_before
 
-    # a flag-less instance on the now-versioned store still versions
+    # a second instance on the now-versioned store still versions
     plain = MetricsStore(spark, path)
     plain.store(_batch(spark, ["2024-02-03"]))
     assert fs.latest_version(spark, path) == "v00000002"
-    assert plain.read().count() == ver.read().count()
-    assert want_after  # silence the unused-var lint; migration kept rows
+    assert plain.read().count() == ver.read().count() == 3
+
+
+def test_metrics_store_rejects_unversioned_flag(spark, tmp_path):
+    """The layout is not a choice: ``versioned=False`` is refused."""
+    with pytest.raises(ValueError, match="versioned=False"):
+        MetricsStore(spark, str(tmp_path / "s"), versioned=False)
+
+
+def test_metrics_store_reader_keeps_its_snapshot_through_an_upsert(
+    spark, tmp_path
+):
+    """A frame built by read() before an upsert that rewrites some of
+    its days still collects the pre-upsert rows: the upsert commits a
+    new version instead of deleting the files the frame listed."""
+    store = MetricsStore(spark, str(tmp_path / "facts"))
+    store.store(_batch(spark, ["2024-03-01", "2024-03-02", "2024-03-03"]))
+    df = store.read()
+    want = _rows(store.read())
+
+    store.store(_batch(spark, ["2024-03-02", "2024-03-03"], base=50))
+    assert _rows(df) == want
+    assert _rows(store.read()) != want
+
+
+def test_every_metrics_store_write_commits_one_version(spark, tmp_path):
+    """upsert, append, replace, compact and fold_stream_log each advance
+    the store by exactly one committed version."""
+    store = MetricsStore(spark, str(tmp_path / "facts"))
+    log = str(tmp_path / "log")
+    (
+        _batch(spark, ["2024-04-03"], base=7)
+        .withColumn("stream_id", F.lit("s1"))
+        .withColumn("batch_id", F.lit(0).cast("long"))
+        .write.partitionBy("stream_id", "batch_id")
+        .parquet(log)
+    )
+
+    def version():
+        v = fs.latest_version(spark, store.path)
+        return 0 if v is None else int(v[1:])
+
+    writes = [
+        ("upsert", lambda: store.store(_batch(spark, ["2024-04-01"]))),
+        ("upsert", lambda: store.store(_batch(spark, ["2024-04-01"]))),
+        (
+            "append",
+            lambda: store.store(_batch(spark, ["2024-04-02"]), mode="append"),
+        ),
+        (
+            "replace",
+            lambda: store.store_idempotent_replace(
+                _batch(spark, ["2024-04-02"], base=3)
+            ),
+        ),
+        ("compact", store.compact),
+        ("fold_stream_log", lambda: store.fold_stream_log(log)),
+    ]
+    for name, write in writes:
+        before = version()
+        write()
+        assert version() == before + 1, name
+    assert version() == len(writes)
 
 
 def _jobs_started(spark, fn):
@@ -137,14 +228,14 @@ def test_metrics_store_read_starts_no_job(spark, tmp_path):
     """read() scans with the declared fact schema: building the frame
     starts no Spark job, yet it returns the same rows and dtypes as a
     read that infers the schema from the parquet footers.  Checked on a
-    flat store and on a versioned store whose current version carries
-    the hidden stream-fold ledger."""
+    legacy flat store and on a versioned store whose current version
+    carries the hidden stream-fold ledger."""
     from admira_etl_project_prueba_spark.schemas import METRICS_SCHEMA
 
     flat = MetricsStore(spark, str(tmp_path / "flat"))
-    flat.store(_batch(spark, ["2024-01-01", "2024-01-02"]))
+    _legacy_flat_write(_batch(spark, ["2024-01-01", "2024-01-02"]), flat.path)
 
-    ver = MetricsStore(spark, str(tmp_path / "ver"), versioned=True)
+    ver = MetricsStore(spark, str(tmp_path / "ver"))
     ver.store(_batch(spark, ["2024-01-02", "2024-01-03"]))
     log = str(tmp_path / "log")
     (
@@ -174,6 +265,39 @@ def test_metrics_store_read_starts_no_job(spark, tmp_path):
         assert _rows(df) == _rows(inferred)
 
 
+def test_stream_fold_ledger_read_starts_only_its_collect_job(spark, tmp_path):
+    """stream_fold_ledger scans with the declared superset of both
+    ledger formats, so reading it starts exactly one Spark job (the
+    collect) — for the bounded format and for a legacy one-``key``-per-
+    batch ledger alike."""
+    store = MetricsStore(spark, str(tmp_path / "ver"))
+    store.store(_batch(spark, ["2024-01-02"]))
+    log = str(tmp_path / "log")
+    for b in (0, 1, 3):
+        (
+            _batch(spark, ["2024-01-03"], base=b)
+            .withColumn("stream_id", F.lit("s1"))
+            .withColumn("batch_id", F.lit(b).cast("long"))
+            .write.mode("append")
+            .partitionBy("stream_id", "batch_id")
+            .parquet(log)
+        )
+    assert store.fold_stream_log(log) == 3
+
+    ledger, jobs = _jobs_started(spark, store.stream_fold_ledger)
+    assert ledger == {"s1": (1, frozenset({3}))}
+    assert len(jobs) == 1
+
+    spark.createDataFrame(
+        [("s1:0",), ("s1:1",), ("s2:0",)], "key string"
+    ).coalesce(1).write.mode("overwrite").parquet(
+        f"{store._root()}/{store._LEDGER}"
+    )
+    ledger, jobs = _jobs_started(spark, store.stream_fold_ledger)
+    assert ledger == {"s1": (1, frozenset()), "s2": (0, frozenset())}
+    assert len(jobs) == 1
+
+
 # ---------------------------------------------------------------------------
 # Histogram store
 # ---------------------------------------------------------------------------
@@ -187,15 +311,16 @@ def _events(spark, n, shift=0):
 
 
 def test_fold_whole_store_flat_migration_sweeps_remnants(spark, tmp_path):
-    """fold_whole_store with versioned=True on an EXISTING flat payload
-    (the opt-in migration) must sweep the old flat parquet files after
-    committing v1 — mirroring MetricsStore._commit_full — or a legacy
-    reader of the bare path sees stale data forever and the space is
-    never reclaimed.  The merged payload must still have SEEN the flat
-    rows (migration folds, it does not replace)."""
+    """fold_whole_store on an EXISTING legacy flat payload (the
+    migration) must sweep the old flat parquet files after committing
+    v1 — mirroring MetricsStore._commit_full — or a legacy reader of the
+    bare path sees stale data forever and the space is never reclaimed.
+    The merged payload must still have SEEN the flat rows (migration
+    folds, it does not replace)."""
     path = str(tmp_path / "mig_fold")
     a, b = _events(spark, 50), _events(spark, 30, shift=13)
-    sk.write_histogram_store(a, path)  # flat first write
+    # the legacy flat layout: the payload directly under the path
+    sk.value_histogram(a).coalesce(1).write.parquet(path)
     assert fs.latest_version(spark, path) is None
     flat_rows = _rows(spark.read.parquet(path))
 
@@ -209,7 +334,7 @@ def test_fold_whole_store_flat_migration_sweeps_remnants(spark, tmp_path):
             .agg(F.sum("n").cast("long").alias("n"))
         )
 
-    fs.fold_whole_store(spark, path, build, versioned=True)
+    fs.fold_whole_store(spark, path, build)
     assert seen["prev"] == flat_rows  # the fold consumed the flat payload
     assert fs.latest_version(spark, path) == "v00000001"
     leftover = [
@@ -225,31 +350,30 @@ def test_fold_whole_store_flat_migration_sweeps_remnants(spark, tmp_path):
     assert _rows(sk.quantiles_from_store(spark, path)) == _rows(
         sk.quantiles_from_store(spark, rebuilt)
     )
-    # a FIRST write with versioned=True (no flat payload) has nothing to
-    # sweep and commits v1 directly
+    # a FIRST write (no flat payload) has nothing to sweep and commits
+    # v1 directly
     fresh = str(tmp_path / "mig_fresh")
-    sk.write_histogram_store(a, fresh, versioned=True)
+    sk.write_histogram_store(a, fresh)
     assert fs.latest_version(spark, fresh) == "v00000001"
 
 
 def test_histogram_store_versioned_merge_parity(spark, tmp_path):
-    flat, ver = str(tmp_path / "hflat"), str(tmp_path / "hver")
+    ver = str(tmp_path / "hver")
     a, b = _events(spark, 200), _events(spark, 150, shift=13)
-    sk.write_histogram_store(a, flat)
-    sk.write_histogram_store(a, ver, versioned=True)
+    sk.write_histogram_store(a, ver)
     assert fs.latest_version(spark, ver) == "v00000001"
     v1_root = fs.resolve_store_root(spark, ver)
     v1 = _rows(spark.read.parquet(v1_root))
+    assert v1 == _rows(sk.value_histogram(a))
 
-    sk.merge_histogram_store(spark, flat, b)
     sk.merge_histogram_store(spark, ver, b)
     assert fs.latest_version(spark, ver) == "v00000002"
     # the pinned v1 snapshot is untouched by the merge
     assert _rows(spark.read.parquet(v1_root)) == v1
-    assert _rows(sk.quantiles_from_store(spark, ver)) == _rows(
-        sk.quantiles_from_store(spark, flat)
-    )
-    # merged store == from-scratch over the union (both layouts)
+    # merged store == from-scratch over the union, bin for bin
+    assert _rows(
+        spark.read.parquet(fs.resolve_store_root(spark, ver))
+    ) == _rows(sk.value_histogram(a.unionByName(b)))
     rebuilt = str(tmp_path / "hrebuilt")
     sk.write_histogram_store(a.unionByName(b), rebuilt)
     assert _rows(sk.quantiles_from_store(spark, ver)) == _rows(
@@ -270,20 +394,23 @@ def _docs(spark, n, tag=""):
 
 
 def test_lm_counts_versioned_merge_parity(spark, tmp_path):
-    flat, ver = str(tmp_path / "lmflat"), str(tmp_path / "lmver")
+    ver, rebuilt = str(tmp_path / "lmver"), str(tmp_path / "lmrebuilt")
     ref, batch, score_me = _docs(spark, 30), _docs(spark, 20, tag="x"), _docs(spark, 5)
-    tx.write_lm_counts(ref, flat)
-    tx.write_lm_counts(ref, ver, versioned=True)
+    tx.write_lm_counts(ref, ver)
     assert fs.latest_version(spark, ver) == "v00000001"
     v1_root = fs.resolve_store_root(spark, ver)
     n_v1 = spark.read.parquet(v1_root).count()
 
-    tx.merge_lm_counts(spark, flat, batch)
     tx.merge_lm_counts(spark, ver, batch)
     assert fs.latest_version(spark, ver) == "v00000002"
     assert spark.read.parquet(v1_root).count() == n_v1  # snapshot intact
+    # merged counts == a from-scratch build over the union
+    assert _rows(
+        spark.read.parquet(fs.resolve_store_root(spark, ver))
+    ) == _rows(tx.lm_counts(ref.unionByName(batch)))
+    tx.write_lm_counts(ref.unionByName(batch), rebuilt)
     assert _rows(tx.lm_scores_from_counts(spark, score_me, ver)) == _rows(
-        tx.lm_scores_from_counts(spark, score_me, flat)
+        tx.lm_scores_from_counts(spark, score_me, rebuilt)
     )
     with pytest.raises(ValueError, match="no LM count store"):
         tx.merge_lm_counts(spark, str(tmp_path / "absent"), batch)
@@ -295,31 +422,28 @@ def test_lm_counts_versioned_merge_parity(spark, tmp_path):
 
 
 def test_lsh_store_versioned_merge_parity(spark, sf_dir, tmp_path):
-    """Path-managed LSH store: write + merge in both layouts equal the
-    frame-level lsh_signature_store/lsh_store_merge pipeline, the
-    versioned merge commits a new snapshot (old one intact), and the
-    incremental-pairs serving wrapper matches the frame form."""
+    """Path-managed LSH store: write + merge equal the frame-level
+    lsh_signature_store/lsh_store_merge pipeline, the merge commits a
+    new snapshot (old one intact), and the incremental-pairs serving
+    wrapper matches the frame form."""
     from admira_etl_project_prueba_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     a = docs.filter("doc_id % 2 = 0")
     b = docs.filter("doc_id % 2 = 1")
-    flat, ver = str(tmp_path / "lshflat"), str(tmp_path / "lshver")
+    ver = str(tmp_path / "lshver")
 
-    tx.write_lsh_store(a, flat)
-    tx.write_lsh_store(a, ver, versioned=True)
+    tx.write_lsh_store(a, ver)
     assert fs.latest_version(spark, ver) == "v00000001"
     want_v1 = _rows(tx.lsh_signature_store(a))
     assert _rows(tx.read_lsh_store(spark, ver)) == want_v1
     v1_root = fs.resolve_store_root(spark, ver)
 
-    tx.merge_lsh_store(spark, flat, b)
     tx.merge_lsh_store(spark, ver, b)
     assert fs.latest_version(spark, ver) == "v00000002"
     assert _rows(spark.read.parquet(v1_root)) == want_v1  # snapshot intact
     want_merged = _rows(tx.lsh_store_merge(tx.lsh_signature_store(a), b))
     assert _rows(tx.read_lsh_store(spark, ver)) == want_merged
-    assert _rows(tx.read_lsh_store(spark, flat)) == want_merged
 
     probe = docs.filter("doc_id % 7 = 3")
     got = _rows(tx.lsh_incremental_pairs_from_store(spark, probe, ver))
@@ -348,18 +472,18 @@ def test_every_versioned_store_gc_and_resolve_sweep(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings").limit(120)
 
     def metrics(path, i):
-        MetricsStore(spark, path, versioned=True).store(
+        MetricsStore(spark, path).store(
             _batch(spark, [f"2024-03-{i + 1:02d}"])
         )
 
     def histogram(path, i):
-        sk.write_histogram_store(_events(spark, 40, shift=i), path, versioned=True)
+        sk.write_histogram_store(_events(spark, 40, shift=i), path)
 
     def lm_counts(path, i):
-        tx.write_lm_counts(_docs(spark, 10 + i), path, versioned=True)
+        tx.write_lm_counts(_docs(spark, 10 + i), path)
 
     def lsh(path, i):
-        tx.write_lsh_store(docs.filter(f"doc_id % 3 = {i % 3}"), path, versioned=True)
+        tx.write_lsh_store(docs.filter(f"doc_id % 3 = {i % 3}"), path)
 
     def ivf(path, i):
         sim.write_ivf_index(emb, path, n_centroids=8, versioned=True)
