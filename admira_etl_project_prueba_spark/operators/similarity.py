@@ -22,17 +22,26 @@ Scale posture:
 
 from __future__ import annotations
 
+import math
+import threading
+from collections import OrderedDict
+from typing import NamedTuple
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from admira_etl_project_prueba_spark.functions.fs import (
     commit_version,
     latest_version,
     maintenance_lease,
     path_exists,
+    path_mtime,
     recover_swap,
     swap_into_place,
 )
+from admira_etl_project_prueba_spark.operators import _driver
 
 DIM = 64  # embedding dimensionality in the testdata tables
 
@@ -134,6 +143,14 @@ def _as_double(df: DataFrame, out: str) -> DataFrame:
     )
 
 
+def _double_array(vals) -> str:
+    """SQL array literal of exact doubles (``None`` stays NULL)."""
+    return "array(" + ", ".join(
+        "CAST(NULL AS DOUBLE)" if v is None else f"CAST('{float(v)!r}' AS DOUBLE)"
+        for v in vals
+    ) + ")"
+
+
 def literal_query_frame(spark, query_vec: list[float]) -> DataFrame:
     """A 1-row embeddings-shaped frame for an EXTERNAL query vector —
     the retrieval-service reality: the caller arrives with an embedding,
@@ -143,13 +160,10 @@ def literal_query_frame(spark, query_vec: list[float]) -> DataFrame:
     (``vec_id != qid``) is a no-op against real corpus rows.  All
     query-side plans (probe, distance table, rerank) consume this frame
     exactly as they would a point-read of a stored vector."""
-    arr = "array(" + ", ".join(
-        f"CAST({float(x)!r} AS DOUBLE)" for x in query_vec
-    ) + ")"
     return spark.range(1).selectExpr(
         "CAST(-1 AS BIGINT) AS vec_id",
         "CAST(-1 AS INT) AS label",
-        f"{arr} AS embedding",
+        f"{_double_array(query_vec)} AS embedding",
     )
 
 
@@ -1606,6 +1620,15 @@ def pq_codes(
     )
 
 
+#: the ADC distance of one vector: its subspace lookups ``dt`` summed in
+#: SUBSPACE order (a left-to-right fold over the sorted struct list, never
+#: a shuffle-order double sum), so it is deterministic at any partitioning
+_ADC_SUM = (
+    "aggregate(transform(array_sort(collect_list(struct(subspace, dt))), "
+    "x -> x.dt), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+)
+
+
 def _pq_adc_scored(
     embeddings: DataFrame,
     query_vec_id: int,
@@ -1639,10 +1662,7 @@ def _pq_adc_scored(
         F.broadcast(dtable), ["subspace", "code"]
     )
     return looked.groupBy("vec_id", "label").agg(
-        F.expr(
-            "aggregate(transform(array_sort(collect_list(struct(subspace, dt))), "
-            "x -> x.dt), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-        ).alias("adc_dist2")
+        F.expr(_ADC_SUM).alias("adc_dist2")
     )
 
 
@@ -1989,6 +2009,214 @@ def write_serving_ivfpq_index(
     )
 
 
+class _PQModel(NamedTuple):
+    """One resolved IVF-PQ store's frozen model, held on the driver."""
+
+    codes_path: str
+    #: the codes' schema, inferred once, so a probe's scan starts no job
+    codes_schema: StructType
+    cent_path: str
+    m: int
+    ksub: int
+    normalized: bool
+    #: (m, ksub, DIM // m) codewords, NaN where the store has none
+    codebooks: np.ndarray
+    #: (m, ksub): True where the store has that codeword
+    has_code: np.ndarray
+    #: centroid ids, (n, dim) vectors and norms; None when the centroid
+    #: table was above ``_driver.DRIVER_ROWS_MAX`` rows at load
+    centroid_ids: np.ndarray | None
+    centroids: np.ndarray | None
+    centroid_norms: np.ndarray | None
+
+
+#: resolved-store key -> _PQModel, least recently used first.  serve.py
+#: answers on several threads, so lookups and fills hold the lock.
+_PQ_MODELS: OrderedDict = OrderedDict()
+_PQ_MODELS_MAX = 8
+_PQ_MODELS_LOCK = threading.Lock()
+
+
+def _fold(terms):
+    """Left-to-right sum from +0.0 — the order of ``aggregate(...,
+    CAST(0 AS DOUBLE), (acc, x) -> acc + x)``.  ``terms`` may be floats
+    or numpy arrays (one fold per element).  Never ``np.sum``/``np.dot``:
+    they sum pairwise and would not match Spark bit for bit."""
+    acc = 0.0
+    for t in terms:
+        acc = acc + t
+    return acc
+
+
+def _unit(q: list[float]) -> list[float]:
+    """:func:`normalize_embeddings` of one driver-side vector, bit for bit."""
+    n = math.sqrt(_fold(x * x for x in q))
+    return [x / n for x in q] if n > 0 else q
+
+
+def _load_pq_model(spark, codes_path, cb_path, cent_path, man_path) -> _PQModel:
+    man = spark.read.parquet(man_path).first()
+    m, ksub = int(man["m"]), int(man["ksub"])
+    codebooks = np.full((m, ksub, DIM // m), np.nan)
+    has_code = np.zeros((m, ksub), dtype=bool)
+    for r in spark.read.parquet(cb_path).select("subspace", "code_id", "c").collect():
+        codebooks[r["subspace"], r["code_id"]] = r["c"]
+        has_code[r["subspace"], r["code_id"]] = True
+    rows = _driver.collect_if_small(
+        spark.read.parquet(cent_path).select("centroid_id", "embedding")
+    )
+    ids = cents = norms = None
+    if rows is not None:
+        ids = np.array([int(r["centroid_id"]) for r in rows], dtype=np.int64)
+        cents = (
+            np.array([r["embedding"] for r in rows], dtype=float)
+            if rows
+            else np.zeros((0, DIM))
+        )
+        norms = np.sqrt(_fold(c * c for c in cents.T))
+    return _PQModel(
+        codes_path,
+        spark.read.parquet(codes_path).schema,
+        cent_path,
+        m,
+        ksub,
+        manifest_normalized(man),
+        codebooks,
+        has_code,
+        ids,
+        cents,
+        norms,
+    )
+
+
+def _pq_model(spark, index_path: str) -> _PQModel:
+    """The store's IVF-PQ model, read once per resolved store: manifest
+    (m, ksub, normalized), codebooks, codes schema, and the centroid
+    vectors when :func:`_driver.collect_if_small` takes them.
+
+    Keyed by the resolved (codes, codebooks, centroids, manifest) paths
+    plus the three model directories' ``path_mtime``: a new
+    ``vNNNNNNNN`` changes the paths and a flat overwrite the mtimes, so
+    either misses.  The mtimes are read before the tables, so a fill
+    that races a flat rewrite is cached under the old key and the next
+    request reloads.  At most ``_PQ_MODELS_MAX`` stores stay cached."""
+    paths = pq_resolved_paths(spark, index_path)
+    key = paths + tuple(path_mtime(spark, p) for p in paths[1:])
+    with _PQ_MODELS_LOCK:
+        model = _PQ_MODELS.get(key)
+        if model is None:
+            model = _PQ_MODELS[key] = _load_pq_model(spark, *paths)
+            while len(_PQ_MODELS) > _PQ_MODELS_MAX:
+                _PQ_MODELS.popitem(last=False)
+        else:
+            _PQ_MODELS.move_to_end(key)
+    return model
+
+
+def _pq_probe_lists(
+    spark, model: _PQModel, queries: list[list[float]], n_probe: int
+) -> list[list[int]]:
+    """Each query's ``n_probe`` nearest lists (cosine desc, centroid_id
+    asc), with the folds of :func:`with_cosine`.  On the driver when the
+    model holds the centroids within ``_driver.DRIVER_ROWS_MAX`` (read
+    at call time); otherwise the probe runs in Spark over the centroid
+    table and only its ``n_probe`` ids per query are collected."""
+    n_probe = max(int(n_probe), 0)
+    if (
+        model.centroids is not None
+        and len(model.centroids) <= _driver.DRIVER_ROWS_MAX
+    ):
+        cents, norms = model.centroids, model.centroid_norms
+        out = []
+        for q in queries:
+            nq = math.sqrt(_fold(x * x for x in q))
+            dot = _fold(q[j] * cents[:, j] for j in range(cents.shape[1]))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = np.where((nq > 0) & (norms > 0), dot / (nq * norms), 0.0)
+            order = np.lexsort((model.centroid_ids, -cos))[:n_probe]
+            out.append([int(model.centroid_ids[i]) for i in order])
+        return out
+    from pyspark.sql import Window
+
+    cents = with_norm(
+        spark.read.parquet(model.cent_path).selectExpr(
+            "centroid_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS c"
+        ),
+        "c",
+        "nc",
+    )
+    q = with_norm(
+        spark.range(1).selectExpr(
+            "inline(array("
+            + ", ".join(
+                f"struct(CAST({i} AS BIGINT) AS query_id, {_double_array(v)} AS q)"
+                for i, v in enumerate(queries)
+            )
+            + "))"
+        ),
+        "q",
+        "nq",
+    )
+    wp = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("centroid_id").asc()
+    )
+    rows = (
+        with_cosine(
+            cents.crossJoin(F.broadcast(q)), "q", "c", nq_col="nq", nv_col="nc"
+        )
+        .withColumn("_r", F.row_number().over(wp))
+        .filter(F.col("_r") <= n_probe)
+        .select("query_id", "centroid_id", "_r")
+        .collect()
+    )
+    out = [[] for _ in queries]
+    for r in sorted(rows, key=lambda r: (r["query_id"], r["_r"])):
+        out[r["query_id"]].append(int(r["centroid_id"]))
+    return out
+
+
+def _pq_distance_table(model: _PQModel, q: list[float]) -> list[float | None]:
+    """The query's ADC table flattened to ``subspace * ksub + code``:
+    :func:`_d2` of each query subvector and codeword, folded left to
+    right; ``None`` where the store has no codeword."""
+    sd = DIM // model.m
+    qs = np.asarray(q[: model.m * sd], dtype=float).reshape(model.m, sd)
+    acc = 0.0
+    for j in range(sd):
+        d = qs[:, j, None] - model.codebooks[:, :, j]
+        acc = acc + d * d
+    return [
+        float(v) if ok else None
+        for v, ok in zip(acc.ravel(), model.has_code.ravel())
+    ]
+
+
+def _pq_probed_codes(spark, model: _PQModel, probe) -> DataFrame:
+    """The code rows of the probed lists: one scan of the codes with the
+    declared schema, ``centroid_id IN (<probe>)`` a static partition
+    filter."""
+    return (
+        spark.read.schema(model.codes_schema)
+        .parquet(model.codes_path)
+        .filter(F.col("centroid_id").isin(sorted(set(probe))))
+    )
+
+
+def _with_table_entry(codes: DataFrame, model: _PQModel, dts: str) -> DataFrame:
+    """``codes`` plus ``dt``, each row's entry of the flattened ADC table
+    ``dts`` (an array column or literal).  Rows with no entry are
+    dropped, as an inner join on (subspace, code) with the table would."""
+    m, ksub = model.m, model.ksub
+    return codes.withColumn(
+        "dt",
+        F.expr(
+            f"CASE WHEN subspace >= 0 AND subspace < {m} "
+            f"AND code >= 0 AND code < {ksub} "
+            f"THEN element_at({dts}, subspace * {ksub} + code + 1) END"
+        ),
+    ).filter(F.col("dt").isNotNull())
+
+
 def ivfpq_topk_from_index(
     spark,
     embeddings: DataFrame,
@@ -1999,56 +2227,46 @@ def ivfpq_topk_from_index(
     query_vec: list[float] | None = None,
 ) -> DataFrame:
     """Serve IVF-PQ top-k from a persisted :func:`write_ivfpq_index`
-    store: the corpus parquet is touched only for ONE pushdown point-read
-    (the query vector — the centroids live in the store); candidates
-    come exclusively from the pruned code partitions and are ranked by
-    the broadcast ADC table — identical results to the self-computing
-    :func:`ivfpq_topk` (same training, encoding, probe, and fold), so it
-    shares that oracle.  With ``query_vec`` (an external embedding) even
-    that point-read disappears — the query folds into the plan as a
-    literal and the whole request is served from store bytes alone, the
-    true retrieval-service shape."""
-    codes_path, cb_path, cent_path, man_path = pq_resolved_paths(
-        spark, index_path
-    )
-    man = spark.read.parquet(man_path).first()
-    m = int(man["m"])
-    qf, qid = _query_source(embeddings, query_vec_id, query_vec)
-    if manifest_normalized(man):
-        # the store's codes/codebooks live on the unit sphere — the raw
-        # query vector must be projected there before its distance table
-        qf = normalize_embeddings(qf)
-    cents = spark.read.parquet(cent_path).selectExpr(
-        "centroid_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS c"
-    )
-    q = _as_double(qf, "q").select("q")
-    probe = (
-        with_cosine(cents.crossJoin(F.broadcast(q)), "q", "c")
-        .orderBy(F.col("cosine").desc(), F.col("centroid_id").asc())
-        .limit(n_probe)
-        .select("centroid_id")
-    )
-    codebooks = spark.read.parquet(cb_path)
-    qsub = _pq_subvectors(qf, m).selectExpr("subspace", "sv AS qv")
-    dtable = codebooks.join(F.broadcast(qsub), "subspace").select(
-        "subspace",
-        F.col("code_id").alias("code"),
-        F.expr(_d2("qv", "c")).alias("dt"),
-    )
-    cands = (
-        spark.read.parquet(codes_path)
-        .join(F.broadcast(probe), "centroid_id")
-        .filter(F.col("vec_id") != qid)
-    )
-    adc = (
-        cands.join(F.broadcast(dtable), ["subspace", "code"])
-        .groupBy("vec_id", "label", "centroid_id")
-        .agg(
-            F.expr(
-                "aggregate(transform(array_sort(collect_list(struct(subspace, dt))), "
-                "x -> x.dt), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-            ).alias("adc_dist2")
+    store.  The store's model (manifest, codebooks, centroids) is read
+    once per resolved store and kept on the driver (:func:`_pq_model`:
+    keyed by the resolved paths plus the model directories' mtimes).
+    Per request the driver ranks the centroids and builds the m·ksub
+    ADC table with the same left-to-right folds Spark would use, and
+    Spark runs ONE scan of the codes: ``centroid_id IN (<probe>)`` as a
+    static partition filter, each code's distance an ``element_at`` on
+    the literal table, then the subspace-ordered ADC sum.  The centroid
+    ranking moves to Spark when the centroid table is above
+    ``_driver.DRIVER_ROWS_MAX`` rows.  Identical results to the
+    self-computing :func:`ivfpq_topk` (same training, encoding, probe,
+    and fold), so it shares that oracle.  The corpus parquet is touched
+    only for ONE point-read collect of the query vector; with
+    ``query_vec`` (an external embedding) not even that, the true
+    retrieval-service shape."""
+    model = _pq_model(spark, index_path)
+    if query_vec is not None:
+        q, qid = [float(x) for x in query_vec], -1
+    else:
+        rows = (
+            embeddings.filter(F.col("vec_id") == query_vec_id)
+            .select("embedding")
+            .collect()
         )
+        q = [float(x) for x in rows[0]["embedding"]] if rows else None
+        qid = int(query_vec_id)
+    if q is None:  # unknown stored vec_id: an empty probe prunes every list
+        probe, table = [], [None] * (model.m * model.ksub)
+    else:
+        if model.normalized:
+            # the store's codes/codebooks live on the unit sphere — the raw
+            # query vector must be projected there before its distance table
+            q = _unit(q)
+        probe = _pq_probe_lists(spark, model, [q], n_probe)[0]
+        table = _pq_distance_table(model, q)
+    codes = _pq_probed_codes(spark, model, probe).filter(F.col("vec_id") != qid)
+    adc = (
+        _with_table_entry(codes, model, _double_array(table))
+        .groupBy("vec_id", "label", "centroid_id")
+        .agg(F.expr(_ADC_SUM).alias("adc_dist2"))
     )
     return (
         adc.select("vec_id", "label", "centroid_id", "adc_dist2")
@@ -2161,10 +2379,7 @@ def ivfpq_residual_topk(
     scored = cands.join(
         F.broadcast(dtable), ["centroid_id", "subspace", "code"]
     ).groupBy("vec_id", "label", "centroid_id").agg(
-        F.expr(
-            "aggregate(transform(array_sort(collect_list(struct(subspace, dt))), "
-            "x -> x.dt), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-        ).alias("adc_dist2")
+        F.expr(_ADC_SUM).alias("adc_dist2")
     )
     return (
         scored.select("vec_id", "label", "centroid_id", "adc_dist2")
@@ -2751,10 +2966,7 @@ def ivfpq_topk_batch(
         .join(F.broadcast(dtable), ["query_id", "subspace", "code"])
     )
     adc = looked.groupBy("query_id", "vec_id", "label", "centroid_id").agg(
-        F.expr(
-            "aggregate(transform(array_sort(collect_list(struct(subspace, dt))), "
-            "x -> x.dt), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-        ).alias("adc_dist2")
+        F.expr(_ADC_SUM).alias("adc_dist2")
     )
     wk = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist2").asc(), F.col("vec_id").asc()
@@ -2779,77 +2991,53 @@ def ivfpq_topk_batch_from_index(
     query_vecs: list[list[float]] | None = None,
 ) -> DataFrame:
     """Batched IVF-PQ serving from the PERSISTED store — the production
-    throughput shape: N queries amortize one scan of the pruned code
-    partitions (the union of every query's probe lists), with all
-    query-side state (distance tables, probe lists) model-sized
-    broadcasts.  Stored-vector queries point-read the corpus once for
-    the batch; an external ``query_vecs`` batch touches ONLY store
-    bytes.  Honors the store's ``normalized`` manifest flag.  Per-query
-    results identical to :func:`ivfpq_topk_from_index` /
-    :func:`ivfpq_topk_batch` (same models, probe, fold, ties).
-    Returns (query_id, vec_id, label, centroid_id, adc_dist2, rnk)."""
+    throughput shape: N queries amortize ONE scan of the code store,
+    pruned statically to the union of every query's probe lists.  The
+    model comes from :func:`_pq_model` and the per-query probe lists and
+    ADC tables are computed on the driver, exactly as in
+    :func:`ivfpq_topk_from_index`; they reach Spark as one local
+    (query_id, centroid_id, dts) frame of probe pairs, so building the
+    plan starts no job, and each code row is replicated only to the
+    queries probing its list.  Stored-vector queries point-read the
+    corpus once for the batch (one collect); an external ``query_vecs``
+    batch touches ONLY store bytes.  Honors the store's ``normalized``
+    manifest flag.  Per-query results identical to
+    :func:`ivfpq_topk_from_index` / :func:`ivfpq_topk_batch` (same
+    models, probe, fold, ties).  Returns (query_id, vec_id, label,
+    centroid_id, adc_dist2, rnk)."""
     from pyspark.sql import Window
 
-    codes_path, cb_path, cent_path, man_path = pq_resolved_paths(
-        spark, index_path
-    )
-    man = spark.read.parquet(man_path).first()
-    m = int(man["m"])
+    model = _pq_model(spark, index_path)
     if query_vecs is not None:
-        qframe = None
-        for i, vec in enumerate(query_vecs):
-            row = literal_query_frame(spark, vec).selectExpr(
-                f"CAST({-(i + 1)} AS BIGINT) AS vec_id", "label", "embedding"
-            )
-            qframe = row if qframe is None else qframe.unionByName(row)
+        queries = [
+            (-(i + 1), [float(x) for x in v]) for i, v in enumerate(query_vecs)
+        ]
     else:
-        qframe = embeddings.filter(F.col("vec_id") < n_queries)
-    if manifest_normalized(man):
-        qframe = normalize_embeddings(qframe)
-    qsub = _pq_subvectors(qframe, m).selectExpr(
-        "vec_id AS query_id", "subspace", "sv AS qv"
+        queries = [
+            (int(r["vec_id"]), [float(x) for x in r["embedding"]])
+            for r in embeddings.filter(F.col("vec_id") < n_queries)
+            .select("vec_id", "embedding")
+            .collect()
+        ]
+    if model.normalized:
+        queries = [(qid, _unit(q)) for qid, q in queries]
+    probes = _pq_probe_lists(spark, model, [q for _, q in queries], n_probe)
+    pairs = []
+    for (qid, q), probe in zip(queries, probes):
+        table = _pq_distance_table(model, q)
+        pairs.extend((qid, c, table) for c in probe)
+    pair_frame = spark.createDataFrame(
+        pairs, "query_id BIGINT, centroid_id INT, dts ARRAY<DOUBLE>"
     )
-    # norms per row below the join: n_q + k folds instead of 2·n_q·k
-    q = with_norm(
-        _as_double(qframe, "q").selectExpr("vec_id AS query_id", "q"), "q", "nq"
-    )
-    cents = with_norm(
-        spark.read.parquet(cent_path).selectExpr(
-            "centroid_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS c"
-        ),
-        "c",
-        "nc",
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("centroid_id").asc()
-    )
-    probe = (
-        with_cosine(
-            cents.crossJoin(F.broadcast(q)), "q", "c",
-            nq_col="nq", nv_col="nc",
-        )
-        .withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= n_probe)
-        .select("query_id", "centroid_id")
-    )
-    codebooks = spark.read.parquet(cb_path)
-    dtable = codebooks.join(F.broadcast(qsub), "subspace").select(
-        "query_id",
-        "subspace",
-        F.col("code_id").alias("code"),
-        F.expr(_d2("qv", "c")).alias("dt"),
-    )
-    looked = (
-        spark.read.parquet(codes_path)
-        .join(F.broadcast(probe), "centroid_id")
+    codes = (
+        _pq_probed_codes(spark, model, [c for _, c, _ in pairs])
+        .join(F.broadcast(pair_frame), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(dtable), ["query_id", "subspace", "code"])
     )
-    adc = looked.groupBy("query_id", "vec_id", "label", "centroid_id").agg(
-        F.expr(
-            "aggregate(transform(array_sort(collect_list(struct(subspace, dt))), "
-            "x -> x.dt), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-        ).alias("adc_dist2")
+    adc = (
+        _with_table_entry(codes, model, "dts")
+        .groupBy("query_id", "vec_id", "label", "centroid_id")
+        .agg(F.expr(_ADC_SUM).alias("adc_dist2"))
     )
     wk = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist2").asc(), F.col("vec_id").asc()
@@ -2877,8 +3065,8 @@ def knn_join(
     neighbors for EVERY row of an arbitrary query DataFrame (vec_id,
     embedding[, label]) — the curation-job shape (dedup-against-
     reference, retrieval labeling) that the request-path batch
-    (:func:`ivfpq_topk_batch_from_index`, N 1-row literal frames, capped
-    at 64) deliberately does not serve.
+    (:func:`ivfpq_topk_batch_from_index`, probe lists and tables built on
+    the driver, capped at 64) deliberately does not serve.
 
     Scale posture — the query side is UNBOUNDED, so nothing query-sized
     is ever broadcast or collected:
@@ -2977,10 +3165,7 @@ def knn_join(
         .join(dtable, ["query_id", "subspace", "code"])
     )
     adc = looked.groupBy("query_id", "vec_id", "label", "centroid_id").agg(
-        F.expr(
-            "aggregate(transform(array_sort(collect_list(struct(subspace, dt))), "
-            "x -> x.dt), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-        ).alias("adc_dist2")
+        F.expr(_ADC_SUM).alias("adc_dist2")
     )
     wk = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist2").asc(), F.col("vec_id").asc()

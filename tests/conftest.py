@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from collections import Counter
 
 import pytest
 
@@ -28,3 +30,61 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def _plan_operators(df) -> Counter:
+    """Operator class names of ``df``'s executed plan, each physical
+    operator counted once: the final plan of every AdaptiveSparkPlan
+    (main query and subqueries alike), query stages and reused exchanges
+    resolved to the plan they wrap.  Collect ``df`` first so AQE has
+    finalized.  AQE may place a shared broadcast in a subquery or in
+    the main plan and print only a ``ReusedExchange`` (without its
+    subtree) elsewhere, so counting the plan string depends on where it
+    landed; counting the operators does not."""
+    jvm = df.sparkSession._jvm
+    seen, ops = set(), Counter()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        key = jvm.System.identityHashCode(node)
+        if key in seen:
+            continue
+        seen.add(key)
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        if name.startswith("Reused"):
+            stack.append(node.child())
+            continue
+        ops[name] += 1
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return ops
+
+
+@pytest.fixture(scope="session")
+def plan_operators():
+    return _plan_operators
+
+
+def _jobs_started(spark, fn):
+    """(result of ``fn()``, ids of the Spark jobs it started)."""
+    sc = spark.sparkContext
+    group = f"jobs-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="session")
+def jobs_started():
+    return _jobs_started

@@ -229,7 +229,9 @@ def test_funnel_stages_are_monotone(spark, sf_dir):
     )
 
 
-def test_correlation_matches_numpy_and_is_single_agg(spark, sf_dir):
+def test_correlation_matches_numpy_and_is_single_agg(
+    spark, sf_dir, plan_operators
+):
     """The decimal cross-moment Pearson r must agree with numpy's corrcoef
     on the same pairs, and the plan must be one hash aggregate (no window,
     no second shuffle, no Python)."""
@@ -256,11 +258,12 @@ def test_correlation_matches_numpy_and_is_single_agg(spark, sf_dir):
         assert -1.0 <= g["pearson_r"] <= 1.0
         assert g["pearson_r"] == pytest.approx(want, rel=1e-9)
 
-    # collect() finalized AQE, whose toString repeats the initial plan —
-    # count shuffles in the final section only
-    plan = _plan(df).split("== Initial Plan ==")[0]
-    assert plan.count("Exchange") == 1  # one shuffle: the groupBy
-    assert "BatchEvalPython" not in plan and "Window" not in plan
+    # collect() finalized AQE; count exchanges in the final plans only
+    ops = plan_operators(df)
+    # one shuffle: the groupBy
+    assert ops["ShuffleExchangeExec"] + ops["BroadcastExchangeExec"] == 1
+    assert "BatchEvalPythonExec" not in ops
+    assert not any("Window" in op for op in ops)
 
 
 def test_q6_scan_prunes_columns_and_pushes_filters(spark, sf_dir, t):

@@ -118,8 +118,10 @@ def test_pq_frozen_codebook_encode_matches_inline(embeddings):
 def test_ivfpq_index_roundtrip_and_prunes(spark, embeddings, tmp_path):
     """A persisted write_ivfpq_index store serves the exact same top-k as
     the self-computing form, and the probe reaches the code scan as a
-    dynamic partition filter — query I/O is pruned 4-byte codes."""
+    static partition filter naming exactly the n_probe probed lists —
+    query I/O is pruned 4-byte codes."""
     import os
+    import re
 
     path = str(tmp_path / "ivfpq_index")
     similarity.write_ivfpq_index(embeddings, path, n_centroids=16)
@@ -133,12 +135,12 @@ def test_ivfpq_index_roundtrip_and_prunes(spark, embeddings, tmp_path):
         (r["vec_id"], r["adc_dist2"]) for r in inline
     ]
     plan = served_df._jdf.queryExecution().executedPlan().toString()
-    code_scans = [
-        seg.split("PushedFilters", 1)[0]
-        for seg in plan.split("FileScan")
-        if "centroid_id" in seg.split("Batched", 1)[0]
-    ]
-    assert code_scans and any("dynamicpruning" in s for s in code_scans)
+    filters = re.findall(
+        r"PartitionFilters: \[centroid_id#\d+ IN \(([\d,]+)\)\]", plan
+    )
+    assert filters
+    assert all(len(f.split(",")) == 4 for f in filters)  # n_probe=4
+    assert "dynamicpruning" not in plan
 
 
 def test_ivfpq_index_versioned_commit_is_atomic(spark, embeddings, tmp_path):
@@ -1155,3 +1157,147 @@ def test_pq_plan_shape(embeddings):
     # the codebook/distance-table sides are model-sized: they must reach
     # the corpus through broadcast hash joins, never a shuffle of codes
     assert "BroadcastHashJoin" in plan
+
+
+def _query_vec(embeddings, vec_id):
+    return [
+        float(x)
+        for x in embeddings.filter(F.col("vec_id") == vec_id).first()["embedding"]
+    ]
+
+
+def _served(spark, embeddings, path, **kw):
+    return [
+        tuple(r)
+        for r in similarity.ivfpq_topk_from_index(
+            spark, embeddings, path, k=10, **kw
+        ).collect()
+    ]
+
+
+def test_ivfpq_warm_request_jobs(spark, sf_dir, embeddings, tmp_path, jobs_started):
+    """With the model held on the driver, a warm request is one pruned
+    code scan: the service's literal-vector pq route starts at most 2
+    Spark jobs, and a stored-vector probe at most 3 (its point-read
+    collect is the third)."""
+    from admira_etl_project_prueba_spark.corpus_service import CorpusService
+
+    path = str(tmp_path / "pq_jobs")
+    similarity.write_ivfpq_index(embeddings, path, n_centroids=16)
+    svc = CorpusService(
+        spark,
+        documents=load_table(spark, sf_dir, "documents"),
+        embeddings=embeddings,
+        pq_index_path=path,
+    )
+    qv = _query_vec(embeddings, 11)
+    svc.similar_by_vector(qv, k=10, mode="pq")  # fills the model cache
+    out, jobs = jobs_started(
+        spark, lambda: svc.similar_by_vector(qv, k=10, mode="pq")
+    )
+    assert len(out["data"]) == 10
+    assert len(jobs) <= 2, jobs
+    rows, jobs = jobs_started(
+        spark, lambda: _served(spark, embeddings, path, query_vec_id=12)
+    )
+    assert len(rows) == 10
+    assert len(jobs) <= 3, jobs
+
+
+def test_ivfpq_model_cache_follows_store_rewrites(spark, embeddings, tmp_path):
+    """A flat re-write (new sidecar mtimes) and a versioned commit (new
+    resolved paths) both invalidate the cached model: the next query
+    equals a cold read of the new store, whose 8 lists replace 16."""
+    qv = _query_vec(embeddings, 3)
+    for versioned in (False, True):
+        path = str(tmp_path / f"pq_rewrite_{versioned}")
+        similarity.write_ivfpq_index(
+            embeddings, path, n_centroids=16, versioned=versioned
+        )
+        before = _served(spark, embeddings, path, query_vec=qv)
+        similarity.write_ivfpq_index(
+            embeddings, path, n_centroids=8, versioned=versioned
+        )
+        warm = _served(spark, embeddings, path, query_vec=qv)
+        # the probe ranked the new store's 8 centroids, not the cached 16
+        assert len(similarity._pq_model(spark, path).centroid_ids) == 8
+        similarity._PQ_MODELS.clear()
+        cold = _served(spark, embeddings, path, query_vec=qv)
+        assert warm == cold
+        assert warm != before
+        assert max(r[2] for r in warm) < 8  # centroid_id of the new lists
+
+
+def test_ivfpq_model_cache_concurrent_fill(spark, embeddings, tmp_path, monkeypatch):
+    """Six threads (more than the test session's cores) querying a cold
+    store load its model once and get identical rows, equal to a later
+    single-threaded query."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    path = str(tmp_path / "pq_threads")
+    similarity.write_ivfpq_index(embeddings, path, n_centroids=16)
+    loads = []
+    load = similarity._load_pq_model
+    monkeypatch.setattr(
+        similarity,
+        "_load_pq_model",
+        lambda *a: loads.append(a) or load(*a),
+    )
+    qv = _query_vec(embeddings, 5)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(6) as pool:
+            got = list(
+                pool.map(
+                    lambda _: _served(spark, embeddings, path, query_vec=qv),
+                    range(6),
+                    timeout=600,
+                )
+            )
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(loads) == 1
+    want = _served(spark, embeddings, path, query_vec=qv)
+    assert len(want) == 10
+    assert all(g == want for g in got)
+
+
+def test_ivfpq_distributed_probe_equals_driver_probe(
+    spark, embeddings, tmp_path, monkeypatch, jobs_started
+):
+    """DRIVER_ROWS_MAX = 0 moves the centroid ranking into Spark: on a
+    raw and on a normalized store, single (literal and stored-vector)
+    and batched probes return rows tuple-equal to the driver arm."""
+    from admira_etl_project_prueba_spark.operators import _driver
+
+    qv = _query_vec(embeddings, 9)
+
+    def probes(path):
+        return (
+            jobs_started(
+                spark, lambda: _served(spark, embeddings, path, query_vec=qv)
+            ),
+            _served(spark, embeddings, path, query_vec_id=4),
+            sorted(
+                tuple(r)
+                for r in similarity.ivfpq_topk_batch_from_index(
+                    spark, embeddings, path, n_queries=3, k=5
+                ).collect()
+            ),
+        )
+
+    for normalize in (False, True):
+        path = str(tmp_path / f"pq_arms_{normalize}")
+        similarity.write_ivfpq_index(
+            embeddings, path, n_centroids=16, normalize=normalize
+        )
+        _served(spark, embeddings, path, query_vec=qv)  # fills the model cache
+        (driver_rows, driver_jobs), *driver_rest = probes(path)
+        monkeypatch.setattr(_driver, "DRIVER_ROWS_MAX", 0)
+        (dist_rows, dist_jobs), *dist_rest = probes(path)
+        monkeypatch.undo()
+        assert driver_rows == dist_rows
+        assert driver_rest == dist_rest
+        assert len(dist_jobs) > len(driver_jobs)  # the probe ran in Spark

@@ -8,8 +8,6 @@ layout still read and migrated on the first write."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -210,21 +208,7 @@ def test_every_metrics_store_write_commits_one_version(spark, tmp_path):
     assert version() == len(writes)
 
 
-def _jobs_started(spark, fn):
-    """(result of ``fn()``, ids of the Spark jobs it started)."""
-    sc = spark.sparkContext
-    group = f"jobs-probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_metrics_store_read_starts_no_job(spark, tmp_path):
+def test_metrics_store_read_starts_no_job(spark, tmp_path, jobs_started):
     """read() scans with the declared fact schema: building the frame
     starts no Spark job, yet it returns the same rows and dtypes as a
     read that infers the schema from the parquet footers.  Checked on a
@@ -249,9 +233,9 @@ def test_metrics_store_read_starts_no_job(spark, tmp_path):
     assert fs.dir_nonempty(spark, f"{ver._root()}/{ver._LEDGER}")
 
     for store in (flat, ver):
-        df, jobs = _jobs_started(spark, store.read)
+        df, jobs = jobs_started(spark, store.read)
         assert jobs == []
-        inferred, inferred_jobs = _jobs_started(
+        inferred, inferred_jobs = jobs_started(
             spark,
             lambda: spark.read.parquet(store._root()).select(
                 *[
@@ -265,7 +249,9 @@ def test_metrics_store_read_starts_no_job(spark, tmp_path):
         assert _rows(df) == _rows(inferred)
 
 
-def test_stream_fold_ledger_read_starts_only_its_collect_job(spark, tmp_path):
+def test_stream_fold_ledger_read_starts_only_its_collect_job(
+    spark, tmp_path, jobs_started
+):
     """stream_fold_ledger scans with the declared superset of both
     ledger formats, so reading it starts exactly one Spark job (the
     collect) — for the bounded format and for a legacy one-``key``-per-
@@ -284,7 +270,7 @@ def test_stream_fold_ledger_read_starts_only_its_collect_job(spark, tmp_path):
         )
     assert store.fold_stream_log(log) == 3
 
-    ledger, jobs = _jobs_started(spark, store.stream_fold_ledger)
+    ledger, jobs = jobs_started(spark, store.stream_fold_ledger)
     assert ledger == {"s1": (1, frozenset({3}))}
     assert len(jobs) == 1
 
@@ -293,7 +279,7 @@ def test_stream_fold_ledger_read_starts_only_its_collect_job(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(
         f"{store._root()}/{store._LEDGER}"
     )
-    ledger, jobs = _jobs_started(spark, store.stream_fold_ledger)
+    ledger, jobs = jobs_started(spark, store.stream_fold_ledger)
     assert ledger == {"s1": (1, frozenset()), "s2": (0, frozenset())}
     assert len(jobs) == 1
 
