@@ -85,11 +85,12 @@ class CorpusService:
         # manifest a point-read — fine on the explicit monitoring route,
         # wrong to repeat on EVERY /corpus/similar (the hot path this
         # service exists to keep at n_probe pruned reads).  Keyed by the
-        # manifest directory's mtime (ONE metadata RPC per request):
-        # swap_into_place replaces the manifest by rename, so an
-        # OUT-OF-PROCESS retrain changes the mtime and invalidates both
-        # memos — without the key, a second worker would probe the
-        # retrained layout with the old centroid count forever.
+        # resolved manifest directory's mtime (ONE metadata RPC per
+        # request): every retrain commits a new version by rename, whose
+        # manifest is a new directory, so an OUT-OF-PROCESS retrain
+        # changes the mtime and invalidates both memos — without the
+        # key, a second worker would probe the retrained layout with the
+        # old centroid count forever.
         self._ivf_health_cache: dict | None = None
         self._ivf_n_centroids: int | None = None
         self._ivf_manifest_mtime: int | None = None
@@ -100,13 +101,14 @@ class CorpusService:
         # and merges commit a new manifest, changing the mtime.
         self._pq_rerank_depth: int | None = None
         self._pq_manifest_mtime: int | None = None
-        # rename-swap maintenance (retrain/compact) must not interleave
-        # with itself OR with a read path's crash-window recovery: a
-        # probe restoring __old between an in-flight swap's two renames
-        # would make the swap's second rename land inside an existing
-        # directory.  RLock because index_compact holds it while calling
-        # _ivf_index_ready, which may heal.  In-process serialization;
-        # cross-process deployments schedule maintenance from one place.
+        # maintenance (retrain/compact) must not interleave with itself
+        # OR with a read path's crash-window recovery of the text
+        # postings' rename swap: a probe restoring __old between an
+        # in-flight swap's two renames would make the swap's second
+        # rename land inside an existing directory.  An RLock, so a
+        # maintenance region may call a read-path helper that heals.
+        # In-process serialization; cross-process deployments schedule
+        # maintenance from one place.
         self._maintenance_lock = threading.RLock()
 
     # -- GET /corpus/dedup/pairs --------------------------------------------
@@ -243,14 +245,14 @@ class CorpusService:
             raise ValidationError("service has no embeddings corpus")
         if k is None or k <= 0:
             k = 10  # silent clamp, like limit/offset
-        if self.embeddings.filter(F.col("vec_id") == vec_id).limit(1).count() == 0:
-            raise NotFoundError(f"unknown vec_id: {vec_id}")
         if mode in ("pq", "pq_rerank"):
             if self.pq_index_path is None:
+                self._require_vec_id(vec_id)
                 raise ValidationError(
                     f"mode={mode} requires a configured pq_index_path"
                 )
             if not self._pq_index_ready():
+                self._require_vec_id(vec_id)
                 raise ValidationError(
                     f"pq index at {self.pq_index_path} is not written yet"
                 )
@@ -278,10 +280,15 @@ class CorpusService:
                     n_probe=similarity.SERVING_N_PROBE,
                 ).select("vec_id", "label", "adc_dist2", "cosine")
                 method = "ivfpq_rerank_index"
+            data = [r.asDict() for r in rows.collect()]
+            if not data:
+                # the operator point-reads the query row itself, so the
+                # existence check only runs when nothing came back
+                self._require_vec_id(vec_id)
             out = {
                 "query": vec_id,
                 "method": method,
-                "data": [r.asDict() for r in rows.collect()],
+                "data": data,
                 "request_id": new_request_id(request_id),
             }
             if mode == "pq_rerank":
@@ -290,6 +297,7 @@ class CorpusService:
                 # tests can pin behavior to the dashboard's number
                 out["rerank_depth"] = depth
             return out
+        self._require_vec_id(vec_id)
         index_ready = self.ivf_index_path is not None and self._ivf_index_ready()
         if index_ready:
             # a configured index IS the scale path: the probe prunes to
@@ -327,6 +335,12 @@ class CorpusService:
             else:
                 out["index"] = {"path": self.ivf_index_path, "absent": True}
         return out
+
+    def _require_vec_id(self, vec_id: int) -> None:
+        """404 unless ``vec_id`` is in the embeddings corpus (one
+        pushdown point-read)."""
+        if self.embeddings.filter(F.col("vec_id") == vec_id).limit(1).count() == 0:
+            raise NotFoundError(f"unknown vec_id: {vec_id}")
 
     def similar_by_vector(
         self,
@@ -499,28 +513,28 @@ class CorpusService:
             "request_id": new_request_id(request_id),
         }
 
-    def _heal_crashed_swap(self, path: str, lease_root: str | None = None) -> None:
-        """Crash-window recovery for the READ paths: cheap unlocked probe
-        (two exists RPCs), then the lease-guarded heal.  The in-process
-        maintenance lock serializes against THIS service's writers; the
-        filesystem lease inside ``fs.heal_if_crashed`` additionally
-        serializes against a swap in flight in a DIFFERENT process —
-        without it a probe could restore ``__old`` between that swap's
-        two renames and the swap's second rename would land inside the
-        restored directory.  A fresh foreign lease makes the heal a
-        no-op (the live writer will close the window itself); sidecar
-        paths pass their store's primary path as ``lease_root`` so
-        store and sidecar share one lease."""
+    def _heal_crashed_swap(self, path: str) -> None:
+        """Crash-window recovery for the READ paths of the stores that
+        still swap by rename (text postings, legacy flat histograms):
+        cheap unlocked probe (two exists RPCs), then the lease-guarded
+        heal.  The in-process maintenance lock serializes against THIS
+        service's writers; the filesystem lease inside
+        ``fs.heal_if_crashed`` additionally serializes against a swap in
+        flight in a DIFFERENT process — without it a probe could restore
+        ``__old`` between that swap's two renames and the swap's second
+        rename would land inside the restored directory.  A fresh
+        foreign lease makes the heal a no-op (the live writer will close
+        the window itself)."""
         if swap_window_open(self.spark, path):
             with self._maintenance_lock:
-                heal_if_crashed(self.spark, path, lease_root=lease_root)
+                heal_if_crashed(self.spark, path)
 
     def _pq_index_ready(self) -> bool:
-        """True when the configured IVF-PQ store is complete (codes +
-        manifest in the resolved layout).  No crash healing needed: the
-        store is written whole (flat overwrite or one-rename versioned
-        commit) and maintained by appends — there is no two-rename swap
-        window to recover."""
+        """True when the configured IVF-PQ store has a committed version
+        (codes + manifest).  No crash healing needed: every build,
+        compaction and retrain commits a version by one rename, and
+        merges append — there is no two-rename swap window to
+        recover."""
         codes, _, _, manifest = similarity.pq_resolved_paths(
             self.spark, self.pq_index_path
         )
@@ -594,22 +608,13 @@ class CorpusService:
         return self._pq_rerank_depth
 
     def _ivf_index_ready(self) -> bool:
-        """True when the configured IVF store and its manifest exist
-        (healing a crashed swap first), refreshing the memoized centroid
-        count whenever the manifest directory's mtime changed — i.e.
-        after ANY retrain, including one run by a different process
-        (``functions/fs.path_mtime``: a rename-swap installs a new
-        directory object).  One metadata RPC on the no-change path."""
-        # flat-layout crash healing first (no-ops for a versioned store,
-        # whose single-rename commits leave no swap window), THEN resolve
-        # the layout: for a versioned store the manifest lives inside the
-        # current version directory, and its mtime changes on every
-        # commit because the commit rename installs a new version dir
-        self._heal_crashed_swap(self.ivf_index_path)
-        self._heal_crashed_swap(
-            similarity._ivf_manifest_path(self.ivf_index_path),
-            lease_root=self.ivf_index_path,
-        )
+        """True when the configured IVF store has a committed version
+        (lists + manifest), refreshing the memoized centroid count
+        whenever the resolved manifest directory's mtime changed — i.e.
+        after ANY retrain, including one run by a different process:
+        the manifest lives inside the current version directory, and
+        each commit renames in a new one.  No crash healing needed:
+        commits are single renames, so there is no swap window."""
         data, manifest = similarity.ivf_resolved_paths(
             self.spark, self.ivf_index_path
         )
@@ -756,7 +761,7 @@ class CorpusService:
         next read reflects the new layout.  404 (LookupError) when no
         IVF store is configured: retraining nothing is an operator
         error, not an empty success.  Serialized against other
-        in-process maintenance (the rename swaps must not interleave)."""
+        in-process maintenance."""
         if self.ivf_index_path is None:
             raise LookupError("no IVF index configured on this service")
         if assign_mode not in ("auto", "exact", "coarse"):
@@ -768,9 +773,10 @@ class CorpusService:
                 self.spark, self.ivf_index_path, n_centroids, assign_mode=assign_mode
             )
             self._ivf_n_centroids = int(k)
-            self._ivf_manifest_mtime = path_mtime(
-                self.spark, similarity._ivf_manifest_path(self.ivf_index_path)
+            _, manifest = similarity.ivf_resolved_paths(
+                self.spark, self.ivf_index_path
             )
+            self._ivf_manifest_mtime = path_mtime(self.spark, manifest)
             self._ivf_health_cache = None
         return {
             "data": {"path": self.ivf_index_path, "n_centroids": int(k)},
@@ -789,7 +795,8 @@ class CorpusService:
         when NO store is configured (nothing to compact); stores
         configured but not yet written are skipped (compacting nothing
         is a no-op, not an error).  Serialized against other in-process
-        maintenance (the rename swaps must not interleave)."""
+        maintenance (the text postings' rename swap must not
+        interleave)."""
         if self.ivf_index_path is None and self.text_index_path is None:
             raise LookupError("no index stores configured on this service")
         compacted: list[str] = []

@@ -434,9 +434,7 @@ def commit_version(
 # let a slow taker delete a successor's fresh lease), then the winner
 # deletes the claim and everyone joins the exclusive-create race.
 #
-# Scope rule: ONE lease per store, keyed on the store's primary path —
-# sidecars (the IVF manifest) are covered by their store's lease, so a
-# retrain's two swaps are a single critical section.
+# Scope rule: ONE lease per store, keyed on the store's primary path.
 
 #: presume a lease holder dead after this long without finishing.  Sized
 #: for maintenance ops (index-sized rewrites), not corpus scans; pass a
@@ -816,10 +814,7 @@ def maintenance_lease(
 
 
 def heal_if_crashed(
-    spark: SparkSession,
-    dst: str,
-    lease_root: str | None = None,
-    stale_ms: int = LEASE_STALE_MS,
+    spark: SparkSession, dst: str, stale_ms: int = LEASE_STALE_MS
 ) -> bool:
     """Read-path healing that cannot race a LIVE writer.
 
@@ -828,20 +823,19 @@ def heal_if_crashed(
     process's swap in flight (do NOT touch — renaming ``__old`` back
     would make the writer's second rename land inside a restored
     directory).  The lease disambiguates: healing only proceeds under a
-    non-blocking lease grab on ``lease_root`` (the store's primary path;
-    defaults to ``dst``).  A fresh lease ⇒ live writer ⇒ no-op — the
-    reader treats the store as transiently unavailable, which is the
-    documented retry contract.  Returns True iff a recovery rename ran.
+    non-blocking grab of ``dst``'s lease.  A fresh lease ⇒ live writer ⇒
+    no-op — the reader treats the store as transiently unavailable,
+    which is the documented retry contract.  Returns True iff a recovery rename ran.
 
     NOT for use inside a :func:`maintenance_lease` region (the lease is
     not reentrant) — lease holders call :func:`recover_swap` directly.
     """
     if not swap_window_open(spark, dst):
         return False
-    token = try_acquire_lease(spark, lease_root or dst, stale_ms)
+    token = try_acquire_lease(spark, dst, stale_ms)
     if token is None:
         return False
     try:
         return recover_swap(spark, dst)
     finally:
-        release_lease(spark, lease_root or dst, token)
+        release_lease(spark, dst, token)

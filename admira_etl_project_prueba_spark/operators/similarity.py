@@ -33,13 +33,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from admira_etl_project_prueba_spark.functions.fs import (
+    clean_version_scratch,
     commit_version,
+    dir_nonempty,
     latest_version,
     maintenance_lease,
     path_exists,
     path_mtime,
-    recover_swap,
-    swap_into_place,
+    version_scratch,
 )
 from admira_etl_project_prueba_spark.operators import _driver
 
@@ -510,8 +511,7 @@ def _coarse_scored(embeddings: DataFrame, k: int, g: int, w: int) -> DataFrame:
 
 
 def write_ivf_index(
-    embeddings: DataFrame, path: str, n_centroids: int = 16,
-    versioned: bool = False,
+    embeddings: DataFrame, path: str, n_centroids: int = 16
 ) -> None:
     """Persist the IVF inverted lists: TRUE inverted lists carrying the
     vectors themselves — (vec_id, label, embedding) written
@@ -527,29 +527,20 @@ def write_ivf_index(
     merge with the wrong ``n_centroids`` would silently misread real
     vectors as centroids (see :func:`merge_ivf_index`).
 
-    ``versioned=True`` writes the VERSIONED layout (the production
-    recommendation for a store maintained while being read): the lists
-    and manifest live together inside an immutable ``path/vNNNNNNNN/``
-    version directory committed by one atomic rename
-    (:func:`functions.fs.commit_version`).  Readers resolve the newest
-    version at scan start and are snapshot-isolated from every later
-    compact/retrain — rename-pair swaps can unlink files under a scan
-    already in flight, which the flat layout tolerates only because its
-    swaps are rare; the versioned layout removes the window entirely,
-    and fuses the index+manifest flip into ONE commit (no degraded
-    inter-swap state).  Every maintenance/read entry point here resolves
-    both layouts transparently via :func:`ivf_data_path`."""
+    Every build commits a version: the lists and manifest are written
+    under the store lease to ``__building.*`` scratch and land together
+    as an immutable ``path/vNNNNNNNN/{data,manifest}`` directory by one
+    atomic rename (:func:`functions.fs.commit_version`).  Readers resolve
+    the newest version once at scan start (:func:`ivf_resolved_paths`)
+    and are snapshot-isolated from every later compact, retrain or
+    split; merges append into the current version's list partitions."""
     spark = embeddings.sparkSession
     assign = ivf_assign(embeddings, n_centroids).select("vec_id", "centroid_id")
     lists = embeddings.select("vec_id", "label", "embedding").join(assign, "vec_id")
     mrow = spark.createDataFrame([(int(n_centroids),)], "n_centroids int")
-    if not versioned:
-        lists.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-        mrow.coalesce(1).write.mode("overwrite").parquet(_ivf_manifest_path(path))
-        return
     with maintenance_lease(spark, path):
-        _ivf_clean_scratch(spark, path)
-        tmp = _ivf_version_tmp(path)
+        clean_version_scratch(spark, path)
+        tmp = version_scratch(path)
         lists.write.mode("overwrite").partitionBy("centroid_id").parquet(
             f"{tmp}/data"
         )
@@ -557,54 +548,43 @@ def write_ivf_index(
         commit_version(spark, path, tmp)
 
 
-def _ivf_manifest_path(path: str) -> str:
-    """FLAT-layout sidecar location: OUTSIDE the index directory so
-    Spark's partition discovery over the centroid_id layout never sees
-    it.  Versioned stores keep the manifest INSIDE the version directory
-    instead — resolve through :func:`ivf_manifest_path`."""
-    return path.rstrip("/") + "__manifest"
-
-
-def _ivf_version_tmp(path: str) -> str:
-    """Scratch location for the next version's payload — the shared
-    ``functions/fs.version_scratch`` recipe (same-directory rename,
-    invisible to readers)."""
-    from admira_etl_project_prueba_spark.functions.fs import version_scratch
-
-    return version_scratch(path)
-
-
-def _ivf_clean_scratch(spark, path: str) -> None:
-    """Sweep orphaned ``__building.*`` scratch (crashed writers) — the
-    shared ``functions/fs.clean_version_scratch``; caller holds the
-    store lease."""
-    from admira_etl_project_prueba_spark.functions.fs import (
-        clean_version_scratch,
-    )
-
-    clean_version_scratch(spark, path)
+def _index_version_dir(spark, path: str, rebuild: str) -> str:
+    """The current ``path/vNNNNNNNN`` of an IVF or IVF-PQ store.  An
+    absent store (or one whose first build has not committed yet: only
+    ``__building.*`` scratch) resolves to ``path`` itself, so every
+    child path is absent too and callers see the store as not written.
+    A root holding payload but no version is a flat store from the old
+    layout: index stores are derived data, so deleting it and calling
+    ``rebuild`` (the writer named in the error) is the whole
+    migration."""
+    root = path.rstrip("/")
+    v = latest_version(spark, root)
+    if v is not None:
+        return f"{root}/{v}"
+    if dir_nonempty(spark, root):
+        raise ValueError(
+            f"{root} holds no committed version: an index store in the "
+            f"old flat layout. Delete it and rebuild with "
+            f"{rebuild}(embeddings, {root!r}, ...)"
+        )
+    return root
 
 
 def ivf_resolved_paths(spark, path: str) -> tuple[str, str]:
-    """(data_path, manifest_path) for an IVF store in EITHER layout.
-
-    Versioned store (``path/vNNNNNNNN/`` children): the newest committed
-    version's ``data``/``manifest`` — resolving once at scan start is
-    what gives readers snapshot isolation, because version directories
-    are immutable after commit (appends via :func:`merge_ivf_index` add
-    files but never remove or rewrite, which a planned scan tolerates).
-    Flat store: the path itself + the ``__manifest`` sidecar."""
-    v = latest_version(spark, path)
-    if v is not None:
-        root = path.rstrip("/")
-        return f"{root}/{v}/data", f"{root}/{v}/manifest"
-    return path, _ivf_manifest_path(path)
+    """(data_path, manifest_path) of the IVF store's current version,
+    resolved once at scan start: version directories are immutable
+    after commit (appends via :func:`merge_ivf_index` add files but
+    never remove or rewrite, which a planned scan tolerates), so the
+    reader is snapshot-isolated.  Raises ``ValueError`` on a flat store
+    from the old layout (see :func:`_index_version_dir`)."""
+    root = _index_version_dir(spark, path, "write_ivf_index")
+    return f"{root}/data", f"{root}/manifest"
 
 
 def ivf_data_path(spark, path: str) -> str:
     """The parquet directory holding the store's CURRENT inverted lists
-    (layout-agnostic) — the seam consumers pass to ``spark.read.parquet``
-    for the ``assignments=`` fast path of :func:`ivf_topk` /
+    — the seam consumers pass to ``spark.read.parquet`` for the
+    ``assignments=`` fast path of :func:`ivf_topk` /
     :func:`semantic_dedup_pairs` / the service tier."""
     return ivf_resolved_paths(spark, path)[0]
 
@@ -951,24 +931,18 @@ def split_ivf_index(
     target_per_list: int = TARGET_VECTORS_PER_LIST,
     salt: str = "split1",
 ) -> int:
-    """Apply :func:`ivf_split_assign` to a persisted VERSIONED index:
-    commit a new version whose over-capacity lists are split in place —
-    the incremental leg of the maintenance cycle next to full
+    """Apply :func:`ivf_split_assign` to a persisted index: commit a new
+    version whose over-capacity lists are split in place — the
+    incremental leg of the maintenance cycle next to full
     ``retrain_ivf_index``.  The new version carries an explicit
     ``centroids`` table (old universe by convention or prior table, plus
     the new seeds' vectors), which every probe/merge path resolves via
     :func:`ivf_centroids_frame`; the manifest's n_centroids becomes the
-    grown k.  Returns the new centroid count.  Versioned stores only —
-    the flat layout's probes read centroids by the vec_id convention,
-    which a grown universe cannot satisfy (full retrain re-establishes
-    the convention and drops the table)."""
-    if latest_version(spark, path) is None:
-        raise ValueError(
-            f"split_ivf_index: {path} is not a versioned store — "
-            "write_ivf_index(versioned=True), or use retrain_ivf_index"
-        )
+    grown k.  Returns the new centroid count.  A full retrain
+    re-establishes the ``vec_id < n_centroids`` convention and drops
+    the table."""
     with maintenance_lease(spark, path):
-        _ivf_clean_scratch(spark, path)
+        clean_version_scratch(spark, path)
         data, manifest = ivf_resolved_paths(spark, path)
         old_k = int(spark.read.parquet(manifest).first()["n_centroids"])
         stored = spark.read.parquet(data)
@@ -1003,7 +977,7 @@ def split_ivf_index(
             .join(vectors.select("vec_id", "embedding"), "vec_id")
             .selectExpr("CAST(centroid_id AS INT) AS centroid_id", "embedding")
         )
-        tmp = _ivf_version_tmp(path)
+        tmp = version_scratch(path)
         (
             vectors.join(new_assign.select("vec_id", "centroid_id"), "vec_id")
             .repartition("centroid_id")
@@ -1066,8 +1040,8 @@ def write_semantic_pairs(
         "assignments_source": source,
     }
     with maintenance_lease(spark, path):
-        _ivf_clean_scratch(spark, path)
-        tmp = _ivf_version_tmp(path)
+        clean_version_scratch(spark, path)
+        tmp = version_scratch(path)
         pairs.write.mode("overwrite").parquet(f"{tmp}/data")
         (
             spark.createDataFrame(
@@ -1766,39 +1740,17 @@ def ivfpq_topk(
     )
 
 
-def _pq_codebooks_sidecar(path: str) -> str:
-    return path.rstrip("/") + "__codebooks"
-
-
-def _pq_centroids_sidecar(path: str) -> str:
-    return path.rstrip("/") + "__centroids"
-
-
-def _pq_manifest_sidecar(path: str) -> str:
-    return path.rstrip("/") + "__manifest"
-
-
 def pq_resolved_paths(spark, path: str) -> tuple[str, str, str, str]:
-    """(codes_path, codebooks_path, centroids_path, manifest_path) for an
-    IVF-PQ store in either layout — versioned (``path/vNNNNNNNN/{codes,
-    codebooks,centroids,manifest}``, resolved once at scan start for
-    snapshot isolation) or flat (codes at ``path``, model tables as
-    ``__codebooks``/``__centroids``/``__manifest`` sidecars outside the
-    partition-discovery root)."""
-    v = latest_version(spark, path)
-    if v is not None:
-        root = f"{path.rstrip('/')}/{v}"
-        return (
-            f"{root}/codes",
-            f"{root}/codebooks",
-            f"{root}/centroids",
-            f"{root}/manifest",
-        )
+    """(codes_path, codebooks_path, centroids_path, manifest_path) of the
+    IVF-PQ store's current ``path/vNNNNNNNN/``, resolved once at scan
+    start for snapshot isolation.  Raises ``ValueError`` on a flat store
+    from the old layout (see :func:`_index_version_dir`)."""
+    root = _index_version_dir(spark, path, "write_ivfpq_index")
     return (
-        path,
-        _pq_codebooks_sidecar(path),
-        _pq_centroids_sidecar(path),
-        _pq_manifest_sidecar(path),
+        f"{root}/codes",
+        f"{root}/codebooks",
+        f"{root}/centroids",
+        f"{root}/manifest",
     )
 
 
@@ -1864,7 +1816,6 @@ def write_ivfpq_index(
     m: int = PQ_M,
     ksub: int = PQ_KSUB,
     iters: int = 1,
-    versioned: bool = False,
     train_fraction: float | None = None,
     normalize: bool = False,
     assign_mode: str = "exact",
@@ -1886,13 +1837,11 @@ def write_ivfpq_index(
     the manifest — so incremental maintenance and serving touch the raw
     corpus only for per-query point-reads.
 
-    ``versioned=True`` commits codes+codebooks+centroids+manifest inside
-    ONE immutable ``path/vNNNNNNNN/`` directory via a single atomic
-    rename (:func:`functions.fs.commit_version`), under the store's
-    maintenance lease — a re-encode (codebook drift) can never present
-    readers a new-codes/old-codebooks torn state, which the flat
-    layout's separate sidecar swaps cannot rule out for in-flight
-    scans.
+    Every build commits codes+codebooks+centroids+manifest inside ONE
+    immutable ``path/vNNNNNNNN/`` directory via a single atomic rename
+    (:func:`functions.fs.commit_version`), under the store's maintenance
+    lease — a re-encode (codebook drift) can never present readers a
+    new-codes/old-codebooks torn state.
 
     ``assign_mode`` picks the list-assignment kernel (same contract as
     :func:`retrain_ivf_index`): ``"exact"`` (default — bit-stable, what
@@ -1948,17 +1897,9 @@ def write_ivfpq_index(
         "n_centroids int, m int, ksub int, iters int, train_bp int, "
         "normalized boolean",
     )
-    if not versioned:
-        codes.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-        codebooks.write.mode("overwrite").parquet(_pq_codebooks_sidecar(path))
-        cents.write.mode("overwrite").parquet(_pq_centroids_sidecar(path))
-        mrow.coalesce(1).write.mode("overwrite").parquet(
-            _pq_manifest_sidecar(path)
-        )
-        return
     with maintenance_lease(spark, path):
-        _ivf_clean_scratch(spark, path)
-        tmp = _ivf_version_tmp(path)
+        clean_version_scratch(spark, path)
+        tmp = version_scratch(path)
         codes.write.mode("overwrite").partitionBy("centroid_id").parquet(
             f"{tmp}/codes"
         )
@@ -1972,7 +1913,6 @@ def write_serving_ivfpq_index(
     embeddings: DataFrame,
     path: str,
     n_centroids: int | None = None,
-    versioned: bool = False,
     train_fraction: float | None = None,
     iters: int = 1,
 ) -> None:
@@ -1997,7 +1937,6 @@ def write_serving_ivfpq_index(
         m=SERVING_PQ_M,
         ksub=SERVING_PQ_KSUB,
         normalize=SERVING_NORMALIZE,
-        versioned=versioned,
         train_fraction=train_fraction,
         iters=iters,
         # production posture: under the provisioning rule k tracks n,
@@ -2096,10 +2035,10 @@ def _pq_model(spark, index_path: str) -> _PQModel:
 
     Keyed by the resolved (codes, codebooks, centroids, manifest) paths
     plus the three model directories' ``path_mtime``: a new
-    ``vNNNNNNNN`` changes the paths and a flat overwrite the mtimes, so
-    either misses.  The mtimes are read before the tables, so a fill
-    that races a flat rewrite is cached under the old key and the next
-    request reloads.  At most ``_PQ_MODELS_MAX`` stores stay cached."""
+    ``vNNNNNNNN`` changes the paths, and a store deleted and rebuilt
+    (its first version reuses the name ``v00000001``) changes the
+    mtimes, so either misses.  At most ``_PQ_MODELS_MAX`` stores stay
+    cached."""
     paths = pq_resolved_paths(spark, index_path)
     key = paths + tuple(path_mtime(spark, p) for p in paths[1:])
     with _PQ_MODELS_LOCK:
@@ -2717,40 +2656,31 @@ def recommended_rerank_depth(
 def compact_ivfpq_index(spark, path: str) -> None:
     """Compact the IVF-PQ code partitions back to ONE file per inverted
     list — reclaiming merge/fold append fan-out, results bit-identical.
-    Versioned stores get the full one-rename commit (codes rewritten,
-    model tables carried unchanged — a reader mid-scan never loses a
-    file); flat stores use the sibling-write + rename-pair swap."""
+    Commits a new version (codes rewritten, model tables carried
+    unchanged) by one rename, so a reader mid-scan never loses a file."""
     with maintenance_lease(spark, path):
         codes_path, cb_path, cent_path, man_path = pq_resolved_paths(
             spark, path
         )
-        compacted = spark.read.parquet(codes_path).repartition("centroid_id")
-        if codes_path != path:  # versioned layout
-            _ivf_clean_scratch(spark, path)
-            tmp = _ivf_version_tmp(path)
-            (
-                compacted.write.mode("overwrite")
-                .partitionBy("centroid_id")
-                .parquet(f"{tmp}/codes")
-            )
-            spark.read.parquet(cb_path).write.mode("overwrite").parquet(
-                f"{tmp}/codebooks"
-            )
-            spark.read.parquet(cent_path).write.mode("overwrite").parquet(
-                f"{tmp}/centroids"
-            )
-            spark.read.parquet(man_path).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{tmp}/manifest")
-            commit_version(spark, path, tmp)
-            return
-        tmp = path.rstrip("/") + "__compacting"
+        clean_version_scratch(spark, path)
+        tmp = version_scratch(path)
         (
-            compacted.write.mode("overwrite")
+            spark.read.parquet(codes_path)
+            .repartition("centroid_id")
+            .write.mode("overwrite")
             .partitionBy("centroid_id")
-            .parquet(tmp)
+            .parquet(f"{tmp}/codes")
         )
-        swap_into_place(spark, tmp, path)
+        spark.read.parquet(cb_path).write.mode("overwrite").parquet(
+            f"{tmp}/codebooks"
+        )
+        spark.read.parquet(cent_path).write.mode("overwrite").parquet(
+            f"{tmp}/centroids"
+        )
+        spark.read.parquet(man_path).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{tmp}/manifest")
+        commit_version(spark, path, tmp)
 
 
 def ivfpq_rerank_from_index(
@@ -2810,9 +2740,9 @@ def merge_ivfpq_index(spark, path: str, new_embeddings: DataFrame) -> None:
     silently diverging merge from rebuild semantics.
 
     Single-writer lease keyed on the store path, same as every other
-    swap/append-managed store; versioned stores additionally give
-    readers snapshot isolation during the append (appends only add
-    files, which a planned scan tolerates).
+    maintained store; readers keep snapshot isolation during the append
+    (appends only add files to the current version, which a planned
+    scan tolerates).
 
     Idempotent BY ANTI-JOIN, mirroring :func:`streaming.ingest.
     fold_encoded_codes`: batch rows whose vec_id already exists in the
@@ -3468,47 +3398,36 @@ def merge_ivf_index(
     a mismatch raises ``ValueError`` before any write, because merging
     with the wrong centroid count would misread real vectors as
     centroids and assign the batch against garbage.  The batch's vec_ids
-    are likewise checked to exceed the centroid id range.  Indexes
-    predating the manifest merge under the caller's value and gain a
-    manifest on the way out.
+    are likewise checked to exceed the centroid id range.  A store with
+    no manifest is no :func:`write_ivf_index` store (every committed
+    version holds one) and raises ``ValueError``.
 
     Cost is batch-sized: one scan of the new batch plus the k-row
     centroid read.  When drift accumulates (cluster occupancy skews —
     watch it via the per-partition row counts), retrain via the k-means
     trainer and rebuild; that is the IVF operational cycle.
     """
-    # single-writer lease (keyed on the index path, covering the manifest
-    # sidecar): an append-merge racing a compact/retrain in another
-    # process could land mid-swap or append into a directory the swap is
-    # about to delete
+    # single-writer lease (keyed on the index path): an append-merge
+    # racing a compact/retrain in another process would append into a
+    # version that commit has just superseded, losing the batch
     with maintenance_lease(spark, path):
         _merge_ivf_locked(spark, path, new_embeddings, n_centroids)
 
 
 def _merge_ivf_locked(spark, path, new_embeddings, n_centroids):
-    # heal a FLAT-layout compaction/retrain crash window before the
-    # exists-check and centroid read below: with only path__old present,
-    # the append would otherwise fail (availability) or, worse, create a
-    # batch-only store.  Versioned stores have no swap window (commits
-    # are single renames) — both recover calls are then no-ops, and the
-    # resolver below picks the newest committed version.
-    recover_swap(spark, path)
-    recover_swap(spark, _ivf_manifest_path(path))
     data, manifest = ivf_resolved_paths(spark, path)
-    # ONLY a confirmed-missing manifest is "legacy index"; a failing
-    # READ (permissions, transient IO, corrupt parquet) must propagate —
-    # swallowing it would skip the n_centroids validation in exactly the
-    # failure cases it exists for, then overwrite the manifest below
-    # with the caller's value, legitimizing a possible mismatch.
-    stored = None
-    if path_exists(spark, manifest):
-        stored = spark.read.parquet(manifest).first()["n_centroids"]
+    if not path_exists(spark, manifest):
+        raise ValueError(
+            f"merge_ivf_index: no manifest at {manifest} — not a "
+            "write_ivf_index store"
+        )
+    stored = int(spark.read.parquet(manifest).first()["n_centroids"])
     # n_centroids=None (default) adopts the manifest's value — the only
     # sound choice for split-grown stores, whose k the caller can't be
     # expected to track; an EXPLICIT caller value is still validated.
     if n_centroids is None:
-        n_centroids = int(stored) if stored is not None else 16
-    if stored is not None and int(stored) != int(n_centroids):
+        n_centroids = stored
+    if stored != int(n_centroids):
         raise ValueError(
             f"merge_ivf_index: index at {path} was built with "
             f"n_centroids={stored}, merge called with {n_centroids} — "
@@ -3566,13 +3485,6 @@ def _merge_ivf_locked(spark, path, new_embeddings, n_centroids):
         .partitionBy("centroid_id")
         .parquet(data)
     )
-    if stored is None:  # upgrade legacy indexes in passing
-        (
-            spark.createDataFrame([(int(n_centroids),)], "n_centroids int")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(manifest)
-        )
 
 
 def ivf_files_per_list(spark, path: str) -> DataFrame:
@@ -3679,58 +3591,40 @@ def compact_ivf_index(spark, path: str) -> None:
     ``compact_index_store`` (build → append-merge × N → compact):
     reclaiming merge fan-out without the corpus-scan rebuild that
     retraining requires.  Rows are repartitioned BY centroid_id (each
-    list lands in exactly one task ⇒ one file per directory), written to
-    a SIBLING temp directory, then swapped into place by rename
-    (functions/fs.swap_into_place) — the original index is never deleted
-    before the compacted copy is fully written, so an executor loss or
-    mid-write failure cannot destroy the only copy (an in-place
-    ``mode('overwrite')`` deletes the directory first).  The sidecar
-    manifest lives OUTSIDE the index directory and is untouched.
+    list lands in exactly one task ⇒ one file per directory) and written
+    with a copy of the manifest (and of a split-grown centroid table) as
+    the NEXT version, committed by one rename: in-flight readers keep
+    scanning the version they resolved (GC keeps current + previous),
+    and a failure before the commit leaves only invisible scratch.
     Results are bit-identical (pytest): compaction moves bytes, never
     assignments.  Cost is index-sized — one read + write of the lists,
     no corpus access, no re-assignment.
     """
     # single-writer lease on the store: a concurrent retrain/merge in
-    # another process must wait — interleaved renames corrupt the index
+    # another process must wait — its commit would race this one
     with maintenance_lease(spark, path):
-        if latest_version(spark, path) is not None:
-            # versioned layout: build the compacted lists + a manifest
-            # copy as the NEXT version and commit with one rename —
-            # in-flight readers keep scanning the version they resolved
-            # (GC keeps current + previous), no swap window at all
-            _ivf_clean_scratch(spark, path)
-            data, manifest = ivf_resolved_paths(spark, path)
-            tmp = _ivf_version_tmp(path)
-            (
-                spark.read.parquet(data)
-                .repartition("centroid_id")
-                .write.mode("overwrite")
-                .partitionBy("centroid_id")
-                .parquet(f"{tmp}/data")
-            )
-            (
-                spark.read.parquet(manifest)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{tmp}/manifest")
-            )
-            cents = ivf_centroids_frame(spark, path)
-            if cents is not None:  # split-grown universe rides along
-                cents.coalesce(1).write.mode("overwrite").parquet(
-                    f"{tmp}/centroids"
-                )
-            commit_version(spark, path, tmp)
-            return
-        tmp = path.rstrip("/") + "__compacting"
-        recover_swap(spark, path)  # heal a crashed prior swap (we hold the lease)
+        clean_version_scratch(spark, path)
+        data, manifest = ivf_resolved_paths(spark, path)
+        tmp = version_scratch(path)
         (
-            spark.read.parquet(path)
+            spark.read.parquet(data)
             .repartition("centroid_id")
             .write.mode("overwrite")
             .partitionBy("centroid_id")
-            .parquet(tmp)
+            .parquet(f"{tmp}/data")
         )
-        swap_into_place(spark, tmp, path)
+        (
+            spark.read.parquet(manifest)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{tmp}/manifest")
+        )
+        cents = ivf_centroids_frame(spark, path)
+        if cents is not None:  # split-grown universe rides along
+            cents.coalesce(1).write.mode("overwrite").parquet(
+                f"{tmp}/centroids"
+            )
+        commit_version(spark, path, tmp)
 
 
 def recommended_n_centroids(
@@ -3783,14 +3677,11 @@ def retrain_ivf_index(
     over the same vectors at the new count, row-for-row
     (pytest-pinned), and lands compacted (one file per list).
 
-    Crash safety: the new layout and manifest are both written to
-    SIBLING temp directories, then swapped in by rename — the original
-    index is never deleted before the retrained copy is complete.  The
-    one remaining window (between the index swap and the manifest swap)
-    leaves a new-k index under an old-k manifest — degraded probe
-    breadth, never corruption — and re-running retrain heals it: both
-    swaps recover first, then the rebuild re-derives everything from
-    the surviving index.
+    Crash safety: the new lists and manifest land together in ONE
+    version committed by one rename — the original version is never
+    touched, a crash before the commit leaves only invisible scratch
+    (swept by the next writer), and in-flight readers keep the version
+    they resolved.
 
     CPU-arm escape hatch (round 9): ``assign_mode`` picks the
     assignment kernel — ``"exact"`` is the n·k argmax, ``"coarse"`` the
@@ -3801,10 +3692,6 @@ def retrain_ivf_index(
     corpus-tracking provisioning rule) now caps itself instead of
     relying on the operator to notice.
     """
-    manifest = _ivf_manifest_path(path)
-    # ONE lease keyed on the index path covers the manifest sidecar too,
-    # so the back-to-back index+manifest swaps are a single critical
-    # section no concurrent compact/merge can interleave
     if assign_mode not in ("auto", "exact", "coarse"):
         raise ValueError(
             f"retrain_ivf_index: assign_mode must be auto|exact|coarse, "
@@ -3812,21 +3699,18 @@ def retrain_ivf_index(
         )
     with maintenance_lease(spark, path):
         return _retrain_ivf_locked(
-            spark, path, manifest, n_centroids, assign_mode, group_probe
+            spark, path, n_centroids, assign_mode, group_probe
         )
 
 
-def _retrain_ivf_locked(spark, path, manifest, n_centroids, assign_mode, group_probe):
-    recover_swap(spark, path)
-    recover_swap(spark, manifest)
-    versioned = latest_version(spark, path) is not None
+def _retrain_ivf_locked(spark, path, n_centroids, assign_mode, group_probe):
     data = ivf_data_path(spark, path)
     if n_centroids is None:
         n_centroids = recommended_n_centroids(spark, path)
     if int(n_centroids) < 1:
         # ivf_assign with an empty centroid set yields an EMPTY assignment,
-        # and the swap below would then replace the live index with an
-        # empty store (deleting the recovery copy) — validate before any IO
+        # and the commit below would then replace the live index with an
+        # empty version — validate before any IO
         raise ValueError(
             f"retrain_ivf_index: n_centroids must be >= 1, got {n_centroids}"
         )
@@ -3846,23 +3730,11 @@ def _retrain_ivf_locked(spark, path, manifest, n_centroids, assign_mode, group_p
     assign = assigner(vectors, int(n_centroids)).select("vec_id", "centroid_id")
     relabeled = vectors.join(assign, "vec_id").repartition("centroid_id")
     mrow = spark.createDataFrame([(int(n_centroids),)], "n_centroids int")
-    if versioned:
-        _ivf_clean_scratch(spark, path)
-        # versioned layout: lists + manifest land together in ONE
-        # atomically-committed version — the flat layout's inter-swap
-        # window (new-k index under an old-k manifest) cannot exist, and
-        # in-flight readers keep the version they resolved
-        vtmp = _ivf_version_tmp(path)
-        relabeled.write.mode("overwrite").partitionBy("centroid_id").parquet(
-            f"{vtmp}/data"
-        )
-        mrow.coalesce(1).write.mode("overwrite").parquet(f"{vtmp}/manifest")
-        commit_version(spark, path, vtmp)
-        return int(n_centroids)
-    tmp = path.rstrip("/") + "__retraining"
-    relabeled.write.mode("overwrite").partitionBy("centroid_id").parquet(tmp)
-    mtmp = manifest.rstrip("/") + "__retraining"
-    mrow.coalesce(1).write.mode("overwrite").parquet(mtmp)
-    swap_into_place(spark, tmp, path)
-    swap_into_place(spark, mtmp, manifest)
+    clean_version_scratch(spark, path)
+    tmp = version_scratch(path)
+    relabeled.write.mode("overwrite").partitionBy("centroid_id").parquet(
+        f"{tmp}/data"
+    )
+    mrow.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/manifest")
+    commit_version(spark, path, tmp)
     return int(n_centroids)

@@ -2686,23 +2686,28 @@ def _q_ivf_topk(spark, sf_dir):
     return _sim.ivf_topk(_t(spark, sf_dir, "embeddings"))
 
 
-def _ivf_index_path(spark, sf_dir) -> str:
-    """Build (once per input-content identity) and return the cached
-    write_ivf_index path for sf_dir's embeddings table.
+def _cached_index_path(spark, sf_dir, name: str, tag: str, write) -> str:
+    """Build (once per input-content identity) and return a cached index
+    store for sf_dir's embeddings table: ``write(embeddings, path)``
+    into ``<tmpdir>/<name>_index_<key>``.
 
-    The tag digests every data file's (relpath, size, mtime_ns): a
+    The cache key digests every data file's (relpath, size, mtime_ns): a
     Spark-written table is a DIRECTORY, whose own os.stat reflects the
     dirent (not the contents) with 1-second mtime granularity — an
-    in-place regeneration could be served a stale index if the tag came
-    from the directory stat.  The tag also carries the index FORMAT
-    version (v2 = inverted lists store the vectors) so a format change
-    can't probe a stale layout."""
+    in-place regeneration could be served a stale index if the key came
+    from the directory stat.  ``tag`` carries the store FORMAT version
+    so a format change can't probe a stale layout.
+
+    The store is built under a unique scratch dir, then renamed into
+    place: the build commits a version inside its own root, so the
+    atomic rename of that root is the completion signal — concurrent
+    runs can never probe a half-written index, and whichever rename
+    loses just uses the winner's identical index."""
     import hashlib
     import os
     import shutil
     import tempfile
 
-    e = _t(spark, sf_dir, "embeddings")
     src = os.path.join(sf_dir, "embeddings.parquet")
     files = [src]
     if os.path.isdir(src):
@@ -2712,34 +2717,39 @@ def _ivf_index_path(spark, sf_dir) -> str:
             for f in fs
             if not f.startswith((".", "_"))
         )
-    h = hashlib.sha256(b"ivf-format-v2\n")
+    h = hashlib.sha256(f"{tag}\n".encode())
     for p in files:
         st = os.stat(p)
-        h.update(f"{os.path.relpath(p, sf_dir)}|{st.st_size}|{st.st_mtime_ns}\n".encode())
-    path = os.path.join(tempfile.gettempdir(), f"ivf_index_{h.hexdigest()[:16]}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # build under a unique scratch dir, then atomically rename into
-        # place: concurrent runs can never probe a half-written index —
-        # whichever rename loses just uses the winner's identical index
-        scratch = tempfile.mkdtemp(prefix="ivf_build_")
+        h.update(
+            f"{os.path.relpath(p, sf_dir)}|{st.st_size}|{st.st_mtime_ns}\n".encode()
+        )
+    path = os.path.join(
+        tempfile.gettempdir(), f"{name}_index_{h.hexdigest()[:16]}"
+    )
+    if not os.path.exists(path):
+        scratch = tempfile.mkdtemp(prefix=f"{name}_build_")
         try:
             build = os.path.join(scratch, "index")
-            _sim.write_ivf_index(e, build, n_centroids=16)
+            write(_t(spark, sf_dir, "embeddings"), build)
             try:
                 os.rename(build, path)
             except OSError:
                 pass  # concurrent run won the rename
         finally:
             shutil.rmtree(scratch, ignore_errors=True)
-        # partitionOverwriteMode=dynamic suppresses Spark's _SUCCESS marker
-        # on partitionBy writes, so the sentinel this cache keys on never
-        # appeared and EVERY call re-built the index (measured: the rebuild
-        # was ~90% of each knn-family bench rep).  Stamp it explicitly once
-        # the index directory is in place; both racers build bit-identical
-        # artifacts, so stamping after a lost rename is equally correct.
-        if os.path.isdir(path):
-            open(os.path.join(path, "_SUCCESS"), "a").close()
     return path
+
+
+def _ivf_index_path(spark, sf_dir) -> str:
+    """The cached write_ivf_index store for sf_dir's embeddings (v3:
+    every build commits a ``vNNNNNNNN`` version)."""
+    return _cached_index_path(
+        spark,
+        sf_dir,
+        "ivf",
+        "ivf-format-v3",
+        lambda e, p: _sim.write_ivf_index(e, p, n_centroids=16),
+    )
 
 
 @_entry(
@@ -3064,66 +3074,16 @@ def _q_ivfpq_topk(spark, sf_dir):
 
 
 def _ivfpq_index_path(spark, sf_dir) -> str:
-    """Build (once per input-content identity) and return the cached
-    write_ivfpq_index path for sf_dir's embeddings table — same
-    content-hash + build-under-scratch-then-rename recipe as
-    ``_ivf_index_path``."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    e = _t(spark, sf_dir, "embeddings")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    files = [src]
-    if os.path.isdir(src):
-        files = sorted(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(src)
-            for f in fs
-            if not f.startswith((".", "_"))
-        )
-    h = hashlib.sha256(b"ivfpq-format-v2\n")  # v2: self-contained store (+centroids table)
-    for p in files:
-        st = os.stat(p)
-        h.update(
-            f"{os.path.relpath(p, sf_dir)}|{st.st_size}|{st.st_mtime_ns}\n".encode()
-        )
-    path = os.path.join(
-        tempfile.gettempdir(), f"ivfpq_index_{h.hexdigest()[:16]}"
+    """The cached write_ivfpq_index store for sf_dir's embeddings (v3:
+    every build commits one ``vNNNNNNNN`` holding codes, codebooks,
+    centroids and manifest)."""
+    return _cached_index_path(
+        spark,
+        sf_dir,
+        "ivfpq",
+        "ivfpq-format-v3",
+        lambda e, p: _sim.write_ivfpq_index(e, p, n_centroids=16),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        scratch = tempfile.mkdtemp(prefix="ivfpq_build_")
-        try:
-            build = os.path.join(scratch, "index")
-            _sim.write_ivfpq_index(e, build, n_centroids=16)
-            # sidecars first, codes last: the codes directory's presence
-            # then implies the sidecars are already in place, whatever
-            # interleaving a concurrent or crashed builder left behind.
-            # Each piece renames independently (skipped when the target
-            # exists) so a partial state converges instead of wedging —
-            # racers build bit-identical artifacts, so mixing is harmless.
-            for src_p, dst_p in (
-                (build + "__codebooks", path + "__codebooks"),
-                (build + "__centroids", path + "__centroids"),
-                (build + "__manifest", path + "__manifest"),
-                (build, path),
-            ):
-                if not os.path.exists(dst_p):
-                    try:
-                        os.rename(src_p, dst_p)
-                    except OSError:
-                        pass  # concurrent run won the rename
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
-        # partitionOverwriteMode=dynamic suppresses Spark's _SUCCESS marker
-        # on partitionBy writes — the sentinel never appeared, so every
-        # call re-built the whole index (measured as ~90% of each
-        # knn_join_bulk/rerank bench rep).  Stamp it explicitly once codes
-        # + sidecars are in place.
-        if os.path.isdir(path) and os.path.isdir(path + "__manifest"):
-            open(os.path.join(path, "_SUCCESS"), "a").close()
-    return path
 
 
 @_entry(
@@ -3146,9 +3106,10 @@ def _q_ivfpq_topk_indexed(spark, sf_dir):
     "Timed BUILD of the persisted IVF-PQ store into a FRESH scratch dir "
     "on every call (codebook train + corpus encode + list assignment + "
     "partitionBy(centroid_id) codes write + codebook/centroid/manifest "
-    "sidecars): the once-per-ingest batch cost that the serving family's "
-    "content-keyed cache deliberately hides from its own bench entries — "
-    "this entry keeps the build path measured.  Verified through the "
+    "tables, committed as one version): the once-per-ingest batch cost "
+    "that the serving family's content-keyed cache deliberately hides "
+    "from its own bench entries — this entry keeps the build path "
+    "measured.  Verified through the "
     "built store itself: per-list occupancy read back from the persisted "
     "code partitions (code rows / m).",
     f"""WITH {_DUCK_IVF_ASSIGN}
@@ -5577,7 +5538,7 @@ def _q_cohort_retention(spark, sf_dir):
 def _text_index_path(spark, sf_dir) -> str:
     """Build (once per input-content identity) and return the cached
     write_text_index path for sf_dir's documents table.  Same tag rules
-    as _ivf_index_path: digest every data file's (relpath, size,
+    as _cached_index_path: digest every data file's (relpath, size,
     mtime_ns) + a format version; build into a temp dir and atomically
     rename so concurrent runs can't observe a half-written index."""
     import hashlib
@@ -6665,7 +6626,7 @@ def _bpe_artifact_path(spark, sf_dir, n_merges: int = 64) -> str:
     — trained ONCE per corpus content at depth ``n_merges`` (frontier-
     checkpoint mode), then served frozen: the write_bpe_merges →
     bpe_encode_from_merges production split, with the same build-under-
-    scratch-then-rename recipe as ``_ivf_index_path``."""
+    scratch-then-rename recipe as ``_cached_index_path``."""
     import hashlib
     import os
     import shutil

@@ -182,25 +182,3 @@ def test_fact_store_upsert_heals_crash_window_before_merging(
     # every other day survived the window + upsert
     got = sorted(r["date"] for r in store.read().select("date").distinct().collect())
     assert got == dates
-
-
-def test_ivf_merge_heals_compaction_crash_window(spark, sf_dir, tmp_path):
-    """Same hazard for the IVF append-merge: with only path__old present
-    the merge must heal and proceed against the recovered index."""
-    import os
-    import shutil
-
-    from admira_etl_project_prueba_spark.operators.similarity import (
-        merge_ivf_index,
-        write_ivf_index,
-    )
-    from admira_etl_project_prueba_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb.filter("vec_id < 300"), path)
-    n_before = spark.read.parquet(path).count()
-    shutil.move(path, path + "__old")
-    merge_ivf_index(spark, path, emb.filter("vec_id >= 300"))
-    assert spark.read.parquet(path).count() > n_before
-    assert not os.path.exists(path + "__old")

@@ -124,19 +124,6 @@ def test_heal_if_crashed_noops_under_a_live_writer(spark, tmp_path):
     assert _marker(dst) == "mid-swap"
 
 
-def test_heal_if_crashed_sidecar_uses_store_lease_root(spark, tmp_path):
-    """Sidecars (the IVF manifest) share their store's lease: a live
-    lease on the STORE path must block healing of the sidecar too."""
-    store = str(tmp_path / "ivf")
-    manifest = store + "__manifest"
-    _mkstore(manifest + "__old", "old-k")
-    assert try_acquire_lease(spark, store)  # retrain in flight
-    assert heal_if_crashed(spark, manifest, lease_root=store) is False
-    release_lease(spark, store)
-    assert heal_if_crashed(spark, manifest, lease_root=store) is True
-    assert _marker(manifest) == "old-k"
-
-
 def test_heal_if_crashed_noop_when_no_window(spark, tmp_path):
     dst = str(tmp_path / "healthy")
     _mkstore(dst, "fine")
@@ -162,18 +149,24 @@ def _build_ivf(spark, sf_dir, path, n_centroids=8):
     return emb
 
 
+def _assert_no_debris(path):
+    """No uncommitted ``__building.*`` scratch inside the store and no
+    lease beside it."""
+    assert not [n for n in os.listdir(path) if n.startswith("__building.")]
+    assert not os.path.exists(path + "__lease")
+
+
 def test_concurrent_compact_and_retrain_cannot_interleave(spark, sf_dir, tmp_path):
     """Two writers (a compaction and a retrain, as two service instances
     would run them) race on one IVF store.  Under the lease the loser
     WAITS; both complete; the store ends valid — readable, full row
     count, manifest consistent with the surviving layout, and no
-    half-swap debris (__old / __compacting / __retraining) left behind.
-    Without the lease this interleaves swap_into_place's renames
-    (observed as rename IOErrors or a store replaced by a partial
-    layout)."""
+    uncommitted ``__building.*`` scratch or lease left behind.  Without
+    the lease both writers could commit the same next version name, or
+    one could sweep the other's live scratch."""
     from admira_etl_project_prueba_spark.operators.similarity import (
-        _ivf_manifest_path,
         compact_ivf_index,
+        ivf_resolved_paths,
         retrain_ivf_index,
     )
 
@@ -201,16 +194,15 @@ def test_concurrent_compact_and_retrain_cannot_interleave(spark, sf_dir, tmp_pat
 
     assert errors == []
     # store valid and complete
-    idx = spark.read.parquet(path)
+    data, manifest = ivf_resolved_paths(spark, path)
+    idx = spark.read.parquet(data)
     assert idx.count() == n_rows
-    stored_k = spark.read.parquet(_ivf_manifest_path(path)).first()["n_centroids"]
+    stored_k = spark.read.parquet(manifest).first()["n_centroids"]
     assert stored_k == 4  # retrain's manifest survived regardless of order
     # assignments consistent with the manifest: every list id < k
     assert idx.agg({"centroid_id": "max"}).first()[0] < 4
     # no debris from either op
-    for suffix in ("__old", "__compacting", "__retraining", "__lease"):
-        assert not os.path.exists(path + suffix), suffix
-    assert not os.path.exists(_ivf_manifest_path(path) + "__old")
+    _assert_no_debris(path)
 
 
 def test_recovery_race_reader_vs_live_swap_degrades_to_noop(spark, sf_dir, tmp_path):
@@ -218,34 +210,33 @@ def test_recovery_race_reader_vs_live_swap_degrades_to_noop(spark, sf_dir, tmp_p
     next-round #8): a reader healing in process A while process B swaps
     must degrade to a no-op.  Simulated at the exact hazard point — the
     window between B's two renames, with B's lease held — using the real
-    service read path."""
+    service read path on the text postings store, whose compaction
+    still swaps by rename."""
     from admira_etl_project_prueba_spark.corpus_service import CorpusService
-    from admira_etl_project_prueba_spark.operators.similarity import (
-        compact_ivf_index,
-    )
+    from admira_etl_project_prueba_spark.operators import textops
     from admira_etl_project_prueba_spark.sources.tables import load_table
 
-    path = str(tmp_path / "ivf")
-    _build_ivf(spark, sf_dir, path, n_centroids=8)
     docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    svc = CorpusService(spark, docs, embeddings=emb, ivf_index_path=path)
+    path = str(tmp_path / "text")
+    textops.write_text_index(docs, path)
+    postings = f"{path}/postings"
+    svc = CorpusService(spark, docs, text_index_path=path)
 
     # freeze B mid-swap: window open, B's lease held
-    os.rename(path, path + "__old")
-    assert try_acquire_lease(spark, path)
+    os.rename(postings, postings + "__old")
+    assert try_acquire_lease(spark, postings)
 
     # reader in "process A": must not restore __old under B's live lease
-    svc._heal_crashed_swap(path)
-    assert swap_window_open(spark, path)  # untouched
+    svc._heal_crashed_swap(postings)
+    assert swap_window_open(spark, postings)  # untouched
 
     # B "resumes": put the store back the way its second rename would,
     # release, and verify the reader now sees a healthy store
-    os.rename(path + "__old", path)
-    release_lease(spark, path)
-    assert svc._ivf_index_ready() is True
-    compact_ivf_index(spark, path)  # full maintenance still works after
-    assert spark.read.parquet(path).count() > 0
+    os.rename(postings + "__old", postings)
+    release_lease(spark, postings)
+    assert svc.index_health()["data"]["text"].get("absent") is None
+    textops.compact_index_store(spark, path)  # full maintenance still works
+    assert spark.read.parquet(postings).count() > 0
 
 
 def test_concurrent_upserts_do_not_lose_updates(spark, sf_dir, tmp_path):
@@ -492,16 +483,17 @@ def test_two_jvms_merge_vs_compact_one_store(spark, sf_dir, tmp_path):
     """THE deployment scenario the lease exists for, run literally: a
     SECOND SPARK JVM (own SparkSession, own process) compacts the IVF
     store in a loop while this session append-merges batches into it.
-    Without the lease the rename swaps interleave with the appends
-    (batch files written into a directory the swap is about to delete,
-    or a batch-only store created inside the swap window).  With it,
-    every vector from every batch survives and the store ends valid."""
+    Without the lease a batch could append into a version a compaction
+    has already copied and is about to supersede, and be lost.  With
+    it, every vector from every batch survives and the store ends
+    valid."""
     import subprocess
     import sys
 
     from pyspark.sql import functions as F
 
     from admira_etl_project_prueba_spark.operators.similarity import (
+        ivf_data_path,
         merge_ivf_index,
         write_ivf_index,
     )
@@ -551,12 +543,11 @@ print("COMPACTOR_DONE", flush=True)
         if proc.poll() is None:
             proc.kill()
 
-    idx = spark.read.parquet(path)
+    idx = spark.read.parquet(ivf_data_path(spark, path))
     assert idx.count() == 500  # every batch survived every compaction
     assert idx.select("vec_id").distinct().count() == 500
     assert idx.agg(F.max("centroid_id")).first()[0] < 8
-    for suffix in ("__old", "__compacting", "__lease"):
-        assert not os.path.exists(path + suffix), suffix
+    _assert_no_debris(path)
 
 
 # ---------------------------------------------------------------------------
@@ -719,8 +710,8 @@ def test_reader_completes_against_old_version_across_compaction(
 ):
     """The race the versioned layout exists to remove: a scan planned
     BEFORE a foreign compaction must complete against the version it
-    resolved — the flat layout's rename-pair swap can unlink files under
-    it mid-read.  Version dirs are immutable after commit and GC keeps
+    resolved — a rename-pair swap could unlink files under it
+    mid-read.  Version dirs are immutable after commit and GC keeps
     current + previous, so the reader's files survive the flip."""
     from admira_etl_project_prueba_spark.functions.fs import list_versions
     from admira_etl_project_prueba_spark.operators import similarity as sim
@@ -728,7 +719,7 @@ def test_reader_completes_against_old_version_across_compaction(
 
     e = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf_versioned")
-    sim.write_ivf_index(e, path, n_centroids=16, versioned=True)
+    sim.write_ivf_index(e, path, n_centroids=16)
     assert list_versions(spark, path) == ["v00000001"]
 
     # reader resolves the CURRENT version and plans its scan (the file
@@ -757,16 +748,15 @@ def test_reader_completes_against_old_version_across_compaction(
 
 
 def test_versioned_retrain_fuses_index_and_manifest_flip(spark, sf_dir, tmp_path):
-    """Flat-layout retrain has a crash window between its two swaps
-    (new-k index under an old-k manifest).  The versioned layout commits
-    lists + manifest in ONE rename, so every resolved (data, manifest)
-    pair is mutually consistent by construction."""
+    """Retrain commits lists + manifest in ONE rename, so every resolved
+    (data, manifest) pair is mutually consistent by construction — no
+    window with a new-k index under an old-k manifest."""
     from admira_etl_project_prueba_spark.operators import similarity as sim
     from admira_etl_project_prueba_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf_v_retrain")
-    sim.write_ivf_index(e, path, n_centroids=16, versioned=True)
+    sim.write_ivf_index(e, path, n_centroids=16)
     k = sim.retrain_ivf_index(spark, path, n_centroids=8)
     assert k == 8
     data, manifest = sim.ivf_resolved_paths(spark, path)
@@ -789,7 +779,7 @@ def test_versioned_writer_sweeps_crashed_scratch(spark, sf_dir, tmp_path):
 
     e = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf_v_scratch")
-    sim.write_ivf_index(e, path, n_centroids=16, versioned=True)
+    sim.write_ivf_index(e, path, n_centroids=16)
     orphan = _os.path.join(path, "__building.999")
     _os.makedirs(_os.path.join(orphan, "data"))
     # readers never resolve the scratch

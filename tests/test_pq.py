@@ -15,6 +15,24 @@ def embeddings(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
 
 
+@pytest.fixture(scope="module")
+def pq_store(embeddings, tmp_path_factory):
+    """One default IVF-PQ store (16 lists) over ``embeddings``, built once
+    for the tests that only serve from such a store; each serves a
+    private copy (see ``_copy_store``), so none sees another's state."""
+    path = str(tmp_path_factory.mktemp("pq_store") / "store")
+    similarity.write_ivfpq_index(embeddings, path, n_centroids=16)
+    return path
+
+
+def _copy_store(pq_store, path):
+    """Place a copy of the shared default store at ``path`` — the same
+    committed version ``write_ivfpq_index(embeddings, path)`` writes."""
+    import shutil
+
+    shutil.copytree(pq_store, path)
+
+
 def test_pq_codes_shape_and_range(embeddings):
     out = similarity.pq_codes(embeddings)
     n = embeddings.count()
@@ -115,7 +133,7 @@ def test_pq_frozen_codebook_encode_matches_inline(embeddings):
     assert inline == frozen
 
 
-def test_ivfpq_index_roundtrip_and_prunes(spark, embeddings, tmp_path):
+def test_ivfpq_index_roundtrip_and_prunes(spark, embeddings, pq_store, tmp_path):
     """A persisted write_ivfpq_index store serves the exact same top-k as
     the self-computing form, and the probe reaches the code scan as a
     static partition filter naming exactly the n_probe probed lists —
@@ -124,9 +142,10 @@ def test_ivfpq_index_roundtrip_and_prunes(spark, embeddings, tmp_path):
     import re
 
     path = str(tmp_path / "ivfpq_index")
-    similarity.write_ivfpq_index(embeddings, path, n_centroids=16)
+    _copy_store(pq_store, path)
+    codes_path = similarity.pq_resolved_paths(spark, path)[0]
     assert sorted(
-        d for d in os.listdir(path) if d.startswith("centroid_id=")
+        d for d in os.listdir(codes_path) if d.startswith("centroid_id=")
     ) == [f"centroid_id={i}" for i in sorted(range(16), key=str)]
     inline = similarity.ivfpq_topk(embeddings, k=10).collect()
     served_df = similarity.ivfpq_topk_from_index(spark, embeddings, path, k=10)
@@ -144,19 +163,19 @@ def test_ivfpq_index_roundtrip_and_prunes(spark, embeddings, tmp_path):
 
 
 def test_ivfpq_index_versioned_commit_is_atomic(spark, embeddings, tmp_path):
-    """The versioned layout commits codes+codebooks+manifest in ONE
-    immutable version directory: a reader resolving the store mid-rewrite
+    """Every build commits codes+codebooks+manifest in ONE immutable
+    version directory: a reader resolving the store mid-rewrite
     sees either the old complete triple or the new one, never a torn
     state; a second write supersedes the first version."""
     from admira_etl_project_prueba_spark.functions import fs as _fs
 
     path = str(tmp_path / "ivfpq_versioned")
-    similarity.write_ivfpq_index(embeddings, path, versioned=True)
+    similarity.write_ivfpq_index(embeddings, path)
     assert _fs.latest_version(spark, path) == "v00000001"
     codes1, cb1, cent1, man1 = similarity.pq_resolved_paths(spark, path)
     assert codes1.endswith("v00000001/codes")
     r1 = similarity.ivfpq_topk_from_index(spark, embeddings, path).collect()
-    similarity.write_ivfpq_index(embeddings, path, versioned=True)
+    similarity.write_ivfpq_index(embeddings, path)
     assert _fs.latest_version(spark, path) == "v00000002"
     r2 = similarity.ivfpq_topk_from_index(spark, embeddings, path).collect()
     assert [(r["vec_id"], r["adc_dist2"]) for r in r1] == [
@@ -187,7 +206,9 @@ def test_ivfpq_merge_equals_frozen_union_encode(spark, embeddings, tmp_path):
     similarity.merge_ivfpq_index(spark, path, batch)
     merged = {
         (r["vec_id"], r["subspace"]): (r["code"], r["centroid_id"])
-        for r in spark.read.parquet(path).collect()
+        for r in spark.read.parquet(
+            similarity.pq_resolved_paths(spark, path)[0]
+        ).collect()
     }
     cb = similarity.pq_codebooks_wide(base)
     cents = similarity._as_double(
@@ -302,7 +323,9 @@ def test_stream_pq_encode_fold_matches_direct_merge(spark, embeddings, tmp_path)
     def snapshot(path):
         return {
             (r["vec_id"], r["subspace"]): (r["code"], r["centroid_id"])
-            for r in spark.read.parquet(path).collect()
+            for r in spark.read.parquet(
+                similarity.pq_resolved_paths(spark, path)[0]
+            ).collect()
         }
 
     assert snapshot(streamed) == snapshot(direct)
@@ -352,7 +375,7 @@ def test_fold_model_stamp_guards_retrain(spark, embeddings, tmp_path):
 
     base, batch = _split_corpus_for_merge(embeddings)
     path = str(tmp_path / "pq_stamped")
-    similarity.write_ivfpq_index(base, path, versioned=True)
+    similarity.write_ivfpq_index(base, path)
     fp1 = similarity.pq_model_fingerprint(spark, path)
     rows = [
         (r["vec_id"], [float(x) for x in r["embedding"]], r["label"])
@@ -373,7 +396,7 @@ def test_fold_model_stamp_guards_retrain(spark, embeddings, tmp_path):
     # encode, then RETRAIN (iters=2 ⇒ different codebooks): the pending
     # log is stale — skip leaves it, discard deletes it, neither folds
     log2 = _stream_batch_to_log(spark, tmp_path, rows, path, "pre_retrain")
-    similarity.write_ivfpq_index(base, path, versioned=True, iters=2)
+    similarity.write_ivfpq_index(base, path, iters=2)
     fp2 = similarity.pq_model_fingerprint(spark, path)
     assert fp2 != fp1
     assert fold_encoded_codes(spark, path, log2) == 0
@@ -407,7 +430,7 @@ def test_fold_mixed_legacy_and_stamped_log(spark, embeddings, tmp_path):
 
     base, batch = _split_corpus_for_merge(embeddings)
     path = str(tmp_path / "pq_mixed")
-    similarity.write_ivfpq_index(base, path, versioned=True)
+    similarity.write_ivfpq_index(base, path)
     rows = [
         (r["vec_id"], [float(x) for x in r["embedding"]], r["label"])
         for r in batch.collect()
@@ -474,7 +497,7 @@ def test_stamp_pinned_to_encoded_snapshot(spark, embeddings, tmp_path):
     old version stays the old fingerprint after a retrain commits."""
     base, _ = _split_corpus_for_merge(embeddings)
     path = str(tmp_path / "pq_toctou")
-    similarity.write_ivfpq_index(base, path, versioned=True)
+    similarity.write_ivfpq_index(base, path)
     _, cb1, cent1, _ = similarity.pq_resolved_paths(spark, path)
     fp1 = similarity.pq_model_fingerprint(spark, path)
     assert (
@@ -482,7 +505,7 @@ def test_stamp_pinned_to_encoded_snapshot(spark, embeddings, tmp_path):
     )
     # retrain commits a NEW version: the store fingerprint moves, the
     # pinned-snapshot fingerprint (what the encode stamps) does not
-    similarity.write_ivfpq_index(base, path, versioned=True, iters=2)
+    similarity.write_ivfpq_index(base, path, iters=2)
     assert similarity.pq_model_fingerprint(spark, path) != fp1
     assert (
         similarity.pq_model_fingerprint_from_paths(spark, cb1, cent1) == fp1
@@ -545,7 +568,9 @@ def test_ivfpq_merge_retry_noops(spark, embeddings, tmp_path):
     def snapshot():
         return sorted(
             (r["vec_id"], r["subspace"], r["code"], r["centroid_id"])
-            for r in spark.read.parquet(path).collect()
+            for r in spark.read.parquet(
+                similarity.pq_resolved_paths(spark, path)[0]
+            ).collect()
         )
 
     once = snapshot()
@@ -568,7 +593,9 @@ def test_ivfpq_manifest_records_training_contract(spark, embeddings, tmp_path):
     similarity.write_ivfpq_index(
         embeddings, path, n_centroids=16, m=4, ksub=16, iters=1
     )
-    man = spark.read.parquet(path + "__manifest").first()
+    man = spark.read.parquet(
+        similarity.pq_resolved_paths(spark, path)[3]
+    ).first()
     assert (man["n_centroids"], man["m"], man["ksub"], man["iters"]) == (
         16, 4, 16, 1
     )
@@ -640,7 +667,7 @@ def test_pq_recall_report_invariants(embeddings):
     assert full["n_ivfpq_captured"] == full["n_adc_captured"]
 
 
-def test_similar_docs_pq_mode(spark, sf_dir, embeddings, tmp_path):
+def test_similar_docs_pq_mode(spark, sf_dir, embeddings, pq_store, tmp_path):
     """/corpus/similar?mode=pq serves ranked ADC results from the
     configured IVF-PQ store; asking for pq without a ready store is a
     400, never a silent downgrade to exact."""
@@ -663,7 +690,7 @@ def test_similar_docs_pq_mode(spark, sf_dir, embeddings, tmp_path):
     with pytest.raises(VE, match="invalid mode"):
         svc.similar_docs(vec_id=0, mode="hnsw")
 
-    similarity.write_ivfpq_index(embeddings, path)
+    _copy_store(pq_store, path)
     r = svc.similar_docs(vec_id=0, k=5, mode="pq")
     assert r["method"] == "ivfpq_index" and r["query"] == 0
     assert len(r["data"]) == 5
@@ -697,7 +724,7 @@ def test_similar_docs_pq_mode(spark, sf_dir, embeddings, tmp_path):
     ]
 
 
-def test_similar_by_vector_external_query(spark, sf_dir, embeddings, tmp_path):
+def test_similar_by_vector_external_query(spark, sf_dir, embeddings, pq_store, tmp_path):
     """The external-embedding serving path (POST /corpus/similar body):
     validation 400s, exact/pq/pq_rerank parity with the literal-query
     operators, and the planted-copy invariant — an external query equal
@@ -725,7 +752,7 @@ def test_similar_by_vector_external_query(spark, sf_dir, embeddings, tmp_path):
     assert r["data"][0]["cosine"] == pytest.approx(1.0, abs=1e-9)
 
     path = str(tmp_path / "svc_pq_qv")
-    similarity.write_ivfpq_index(embeddings, path)
+    _copy_store(pq_store, path)
     svc = CorpusService(
         spark, documents=docs, embeddings=embeddings, pq_index_path=path
     )
@@ -762,29 +789,43 @@ def test_ivfpq_batch_equals_per_query(spark, embeddings):
     every query in the batch (same training, probe, fold, ties); and an
     EXTERNAL batch (query_vecs) matches per-vector query_vec calls under
     the negative query_id convention."""
-    batch = {
-        (r["query_id"], r["rnk"]): (r["vec_id"], r["adc_dist2"])
-        for r in similarity.ivfpq_topk_batch(embeddings, n_queries=4, k=5).collect()
-    }
-    for qid in range(4):
-        single = similarity.ivfpq_topk(embeddings, query_vec_id=qid, k=5).collect()
-        for rnk, row in enumerate(single, start=1):
-            assert batch[(qid, rnk)] == (row["vec_id"], row["adc_dist2"]), (
-                qid, rnk
-            )
+    from concurrent.futures import ThreadPoolExecutor
 
     vecs = [
         [float(x) for x in r["embedding"]]
         for r in embeddings.filter(F.col("vec_id").isin([20, 21])).orderBy("vec_id").collect()
     ]
-    ext = {
-        (r["query_id"], r["rnk"]): r["vec_id"]
-        for r in similarity.ivfpq_topk_batch(
-            embeddings, k=3, query_vecs=vecs
-        ).collect()
+    # Every operator call below trains and probes independently of the
+    # others, so the eight job chains run from a thread pool; each result
+    # is collected whole and compared exactly as before.
+    calls = [
+        lambda: similarity.ivfpq_topk_batch(embeddings, n_queries=4, k=5),
+        lambda: similarity.ivfpq_topk_batch(embeddings, k=3, query_vecs=vecs),
+    ]
+    calls += [
+        lambda qid=qid: similarity.ivfpq_topk(embeddings, query_vec_id=qid, k=5)
+        for qid in range(4)
+    ]
+    calls += [
+        lambda v=v: similarity.ivfpq_topk(embeddings, k=3, query_vec=v)
+        for v in vecs
+    ]
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        rows = list(pool.map(lambda call: call().collect(), calls))
+    batch_rows, ext_rows, singles, ext_singles = rows[0], rows[1], rows[2:6], rows[6:]
+
+    batch = {
+        (r["query_id"], r["rnk"]): (r["vec_id"], r["adc_dist2"])
+        for r in batch_rows
     }
-    for i, v in enumerate(vecs):
-        single = similarity.ivfpq_topk(embeddings, k=3, query_vec=v).collect()
+    for qid, single in enumerate(singles):
+        for rnk, row in enumerate(single, start=1):
+            assert batch[(qid, rnk)] == (row["vec_id"], row["adc_dist2"]), (
+                qid, rnk
+            )
+
+    ext = {(r["query_id"], r["rnk"]): r["vec_id"] for r in ext_rows}
+    for i, single in enumerate(ext_singles):
         for rnk, row in enumerate(single, start=1):
             assert ext[(-(i + 1), rnk)] == row["vec_id"]
     # external queries exclude nothing: the stored copies of the batch
@@ -792,7 +833,7 @@ def test_ivfpq_batch_equals_per_query(spark, embeddings):
     assert ext[(-1, 1)] == 20 and ext[(-2, 1)] == 21
 
 
-def test_similar_by_vectors_batch_route(spark, sf_dir, embeddings, tmp_path):
+def test_similar_by_vectors_batch_route(spark, sf_dir, embeddings, pq_store, tmp_path):
     """The batched external-query service method: per-query results
     equal single-query calls, responses come back in request order, and
     the strict-validation contract holds (pq-only mode, 1-64 vectors,
@@ -812,7 +853,7 @@ def test_similar_by_vectors_batch_route(spark, sf_dir, embeddings, tmp_path):
     svc_nostore = CorpusService(spark, documents=docs, embeddings=embeddings)
     with pytest.raises(VE, match="pq_index_path"):
         svc_nostore.similar_by_vectors(vecs)
-    similarity.write_ivfpq_index(embeddings, path)
+    _copy_store(pq_store, path)
     svc = CorpusService(
         spark, documents=docs, embeddings=embeddings, pq_index_path=path
     )
@@ -861,7 +902,7 @@ def test_clustered_fixture_structure_and_recall(spark, embeddings):
     assert a == b
 
 
-def test_knn_join_equals_per_query_serving(spark, embeddings, tmp_path):
+def test_knn_join_equals_per_query_serving(spark, embeddings, pq_store, tmp_path):
     """The bulk k-NN join (arbitrary query DataFrame vs persisted store)
     returns per-query results IDENTICAL to the single-query server —
     same frozen models, probe rule, ADC fold, ties — and its plan never
@@ -869,7 +910,7 @@ def test_knn_join_equals_per_query_serving(spark, embeddings, tmp_path):
     tables), the property that makes it safe for unbounded curation
     frames."""
     path = str(tmp_path / "knn_join_store")
-    similarity.write_ivfpq_index(embeddings, path, n_centroids=16)
+    _copy_store(pq_store, path)
     qdf = embeddings.filter("vec_id % 41 = 2")
     got_df = similarity.knn_join(spark, qdf, path, k=5, n_probe=4)
     got = {
@@ -920,7 +961,7 @@ def test_knn_join_equals_per_query_serving(spark, embeddings, tmp_path):
     assert bcast_scans  # centroids/codebooks do broadcast
 
 
-def test_knn_join_rerank_tier(spark, embeddings, tmp_path):
+def test_knn_join_rerank_tier(spark, embeddings, pq_store, tmp_path):
     """The bulk rerank tier: knn_join(rerank_depth=D, corpus=) reranks
     each query's depth-D ADC shortlist by EXACT cosine — per-query
     results identical to the single-query rerank server at the same
@@ -929,7 +970,7 @@ def test_knn_join_rerank_tier(spark, embeddings, tmp_path):
     model-sized broadcasts; neither rerank join is a broadcast of a
     scaling side)."""
     path = str(tmp_path / "knn_rerank_store")
-    similarity.write_ivfpq_index(embeddings, path, n_centroids=16)
+    _copy_store(pq_store, path)
     qdf = embeddings.filter("vec_id % 41 = 2")
     depth = 20
     got_df = similarity.knn_join(
@@ -1086,8 +1127,8 @@ def test_ivfpq_rerank_exactness_and_bounds(embeddings):
 def test_ivfpq_health_and_compaction(spark, sf_dir, embeddings, tmp_path):
     """index_health gains a pq block (occupancy skew + file fan-out with
     the shared operator thresholds); merges add one file per touched
-    list; compact_ivfpq_index reclaims the fan-out bit-identically in
-    both layouts."""
+    list; compact_ivfpq_index reclaims the fan-out bit-identically and
+    commits the next version."""
     from admira_etl_project_prueba_spark.corpus_service import CorpusService
     from admira_etl_project_prueba_spark.functions import fs as _fs
     from admira_etl_project_prueba_spark.sources.tables import load_table
@@ -1095,37 +1136,33 @@ def test_ivfpq_health_and_compaction(spark, sf_dir, embeddings, tmp_path):
     docs = load_table(spark, sf_dir, "documents")
     base, batch = _split_corpus_for_merge(embeddings)
 
-    for name, versioned in (("flat", False), ("ver", True)):
-        path = str(tmp_path / f"pqh_{name}")
-        similarity.write_ivfpq_index(base, path, versioned=versioned)
-        similarity.merge_ivfpq_index(spark, path, batch)
-        occ = similarity.ivfpq_occupancy_report(spark, path)
-        assert occ.agg(F.sum("n_vectors")).first()[0] == embeddings.count()
-        assert occ.filter("n_files > 1").count() > 0  # merge fan-out
-        before = {
+    path = str(tmp_path / "pqh")
+    similarity.write_ivfpq_index(base, path)
+    similarity.merge_ivfpq_index(spark, path, batch)
+    occ = similarity.ivfpq_occupancy_report(spark, path)
+    assert occ.agg(F.sum("n_vectors")).first()[0] == embeddings.count()
+    assert occ.filter("n_files > 1").count() > 0  # merge fan-out
+
+    def codes():
+        return {
             (r["vec_id"], r["subspace"]): (r["code"], r["centroid_id"])
             for r in spark.read.parquet(
                 similarity.pq_resolved_paths(spark, path)[0]
             ).collect()
         }
-        similarity.compact_ivfpq_index(spark, path)
-        if versioned:
-            assert _fs.latest_version(spark, path) == "v00000002"
-        occ2 = similarity.ivfpq_occupancy_report(spark, path)
-        assert occ2.filter("n_files > 1").count() == 0
-        after = {
-            (r["vec_id"], r["subspace"]): (r["code"], r["centroid_id"])
-            for r in spark.read.parquet(
-                similarity.pq_resolved_paths(spark, path)[0]
-            ).collect()
-        }
-        assert after == before
+
+    before = codes()
+    similarity.compact_ivfpq_index(spark, path)
+    assert _fs.latest_version(spark, path) == "v00000002"
+    occ2 = similarity.ivfpq_occupancy_report(spark, path)
+    assert occ2.filter("n_files > 1").count() == 0
+    assert codes() == before
 
     svc = CorpusService(
         spark,
         documents=docs,
         embeddings=embeddings,
-        pq_index_path=str(tmp_path / "pqh_flat"),
+        pq_index_path=path,
     )
     h = svc.index_health()["data"]["pq"]
     assert h["n_vectors"] == embeddings.count()
@@ -1175,7 +1212,7 @@ def _served(spark, embeddings, path, **kw):
     ]
 
 
-def test_ivfpq_warm_request_jobs(spark, sf_dir, embeddings, tmp_path, jobs_started):
+def test_ivfpq_warm_request_jobs(spark, sf_dir, embeddings, pq_store, tmp_path, jobs_started):
     """With the model held on the driver, a warm request is one pruned
     code scan: the service's literal-vector pq route starts at most 2
     Spark jobs, and a stored-vector probe at most 3 (its point-read
@@ -1183,7 +1220,7 @@ def test_ivfpq_warm_request_jobs(spark, sf_dir, embeddings, tmp_path, jobs_start
     from admira_etl_project_prueba_spark.corpus_service import CorpusService
 
     path = str(tmp_path / "pq_jobs")
-    similarity.write_ivfpq_index(embeddings, path, n_centroids=16)
+    _copy_store(pq_store, path)
     svc = CorpusService(
         spark,
         documents=load_table(spark, sf_dir, "documents"),
@@ -1204,20 +1241,66 @@ def test_ivfpq_warm_request_jobs(spark, sf_dir, embeddings, tmp_path, jobs_start
     assert len(jobs) <= 3, jobs
 
 
+def test_similar_docs_pq_reads_the_query_row_once(
+    spark, sf_dir, embeddings, pq_store, tmp_path, jobs_started
+):
+    """A warm /corpus/similar?mode=pq request for a known vec_id starts
+    no more jobs than the operator alone (at most 3): the unknown-id
+    check runs only when the operator returns no rows.  Unknown ids
+    still 404; known ids return the operator's rows in both pq modes."""
+    from admira_etl_project_prueba_spark.corpus_service import (
+        CorpusService,
+        NotFoundError,
+    )
+
+    path = str(tmp_path / "pq_docs_jobs")
+    _copy_store(pq_store, path)
+    svc = CorpusService(
+        spark,
+        documents=load_table(spark, sf_dir, "documents"),
+        embeddings=embeddings,
+        pq_index_path=path,
+    )
+    svc.similar_docs(vec_id=11, k=10, mode="pq")  # fills the model cache
+    out, jobs = jobs_started(
+        spark, lambda: svc.similar_docs(vec_id=12, k=10, mode="pq")
+    )
+    assert len(jobs) <= 3, jobs
+    want = similarity.ivfpq_topk_from_index(
+        spark, embeddings, path, query_vec_id=12, k=10
+    ).select("vec_id", "label", "adc_dist2")
+    assert [tuple(r.values()) for r in out["data"]] == [
+        tuple(r) for r in want.collect()
+    ]
+    rr = svc.similar_docs(vec_id=12, k=5, mode="pq_rerank")
+    want_rr = similarity.ivfpq_rerank_from_index(
+        spark, embeddings, path, query_vec_id=12, k=5,
+        shortlist=rr["rerank_depth"], n_probe=similarity.SERVING_N_PROBE,
+    ).select("vec_id", "label", "adc_dist2", "cosine")
+    assert [tuple(r.values()) for r in rr["data"]] == [
+        tuple(r) for r in want_rr.collect()
+    ]
+    unknown = embeddings.agg(F.max("vec_id")).first()[0] + 1
+    for mode in ("pq", "pq_rerank"):
+        with pytest.raises(NotFoundError, match="unknown vec_id"):
+            svc.similar_docs(vec_id=unknown, mode=mode)
+
+
 def test_ivfpq_model_cache_follows_store_rewrites(spark, embeddings, tmp_path):
-    """A flat re-write (new sidecar mtimes) and a versioned commit (new
-    resolved paths) both invalidate the cached model: the next query
-    equals a cold read of the new store, whose 8 lists replace 16."""
+    """A re-write committing the next version (new resolved paths) and a
+    rebuild of a deleted store (same ``v00000001`` paths, new model
+    mtimes) both invalidate the cached model: the next query equals a
+    cold read of the new store, whose 8 lists replace 16."""
+    import shutil
+
     qv = _query_vec(embeddings, 3)
-    for versioned in (False, True):
-        path = str(tmp_path / f"pq_rewrite_{versioned}")
-        similarity.write_ivfpq_index(
-            embeddings, path, n_centroids=16, versioned=versioned
-        )
+    for rebuild in (False, True):
+        path = str(tmp_path / f"pq_rewrite_{rebuild}")
+        similarity.write_ivfpq_index(embeddings, path, n_centroids=16)
         before = _served(spark, embeddings, path, query_vec=qv)
-        similarity.write_ivfpq_index(
-            embeddings, path, n_centroids=8, versioned=versioned
-        )
+        if rebuild:
+            shutil.rmtree(path)
+        similarity.write_ivfpq_index(embeddings, path, n_centroids=8)
         warm = _served(spark, embeddings, path, query_vec=qv)
         # the probe ranked the new store's 8 centroids, not the cached 16
         assert len(similarity._pq_model(spark, path).centroid_ids) == 8
@@ -1228,7 +1311,7 @@ def test_ivfpq_model_cache_follows_store_rewrites(spark, embeddings, tmp_path):
         assert max(r[2] for r in warm) < 8  # centroid_id of the new lists
 
 
-def test_ivfpq_model_cache_concurrent_fill(spark, embeddings, tmp_path, monkeypatch):
+def test_ivfpq_model_cache_concurrent_fill(spark, embeddings, pq_store, tmp_path, monkeypatch):
     """Six threads (more than the test session's cores) querying a cold
     store load its model once and get identical rows, equal to a later
     single-threaded query."""
@@ -1236,7 +1319,7 @@ def test_ivfpq_model_cache_concurrent_fill(spark, embeddings, tmp_path, monkeypa
     from concurrent.futures import ThreadPoolExecutor
 
     path = str(tmp_path / "pq_threads")
-    similarity.write_ivfpq_index(embeddings, path, n_centroids=16)
+    _copy_store(pq_store, path)
     loads = []
     load = similarity._load_pq_model
     monkeypatch.setattr(

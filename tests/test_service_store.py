@@ -1174,13 +1174,11 @@ def test_index_retrain_and_compact_service_cycle(spark, sf_dir, tmp_path):
     want_k = -(-(emb.count() - 16) // 64)  # ceil(real vectors / target)
     assert r["data"] == {"path": ivf, "n_centroids": want_k}
     from admira_etl_project_prueba_spark.operators.similarity import (
-        _ivf_manifest_path,
+        ivf_resolved_paths,
     )
 
-    assert (
-        spark.read.parquet(_ivf_manifest_path(ivf)).first()["n_centroids"]
-        == want_k
-    )
+    manifest = ivf_resolved_paths(spark, ivf)[1]
+    assert spark.read.parquet(manifest).first()["n_centroids"] == want_k
     # the probe must use the NEW centroid count against the new layout
     after = svc.similar_docs(vec_id=5, k=3)
     assert after["method"] == "ivf_index" and len(after["data"]) == 3
@@ -1208,10 +1206,10 @@ def test_index_retrain_and_compact_service_cycle(spark, sf_dir, tmp_path):
 
 def test_similar_docs_sees_out_of_band_retrain(spark, sf_dir, tmp_path):
     """A retrain run OUTSIDE this service instance (batch job, second
-    worker) must invalidate the memoized centroid count: the manifest is
-    replaced by rename, so its directory mtime changes — probing the new
-    layout with the old count would silently read lists that no longer
-    exist."""
+    worker) must invalidate the memoized centroid count: the retrain
+    commits a new version, so the resolved manifest directory's mtime
+    changes — probing the new layout with the old count would silently
+    read lists that no longer exist."""
     from admira_etl_project_prueba_spark.corpus_service import CorpusService
     from admira_etl_project_prueba_spark.operators.similarity import (
         retrain_ivf_index,
@@ -1267,48 +1265,26 @@ def test_index_routes_pollable_before_stores_exist(spark, sf_dir, tmp_path):
     assert svc.index_compact()["data"]["compacted"] == []
 
 
-def test_similar_docs_heals_crashed_swap(spark, sf_dir, tmp_path):
-    """A probe arriving in a maintenance crash window (only index__old
-    present) must recover the store and serve the indexed path — the
-    lock-guarded heal, not the silent exact fallback."""
-    import os
-    import shutil
-
-    from admira_etl_project_prueba_spark.corpus_service import CorpusService
-    from admira_etl_project_prueba_spark.operators.similarity import write_ivf_index
-    from admira_etl_project_prueba_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    ivf = str(tmp_path / "ivf")
-    write_ivf_index(emb, ivf, n_centroids=16)
-    shutil.move(ivf, ivf + "__old")  # the crash window
-    svc = CorpusService(spark, documents=docs, embeddings=emb, ivf_index_path=ivf)
-    sim = svc.similar_docs(vec_id=5, k=3)
-    assert sim["method"] == "ivf_index" and len(sim["data"]) == 3
-    assert not os.path.exists(ivf + "__old")
-
-
 def test_read_path_recovery_takes_the_maintenance_lock(spark, sf_dir, tmp_path):
-    """The probe's crash-window recovery must serialize against
+    """The read path's crash-window recovery of the text postings (the
+    index store that still swaps by rename) must serialize against
     maintenance: an unlocked recover could restore __old between an
     in-flight swap's two renames.  Pin both halves of the contract:
     (a) _heal_crashed_swap acquires the maintenance lock around the
-    recovery rename; (b) the lock is REENTRANT — index_compact holds it
-    while _ivf_index_ready may heal, which deadlocks under a plain
-    Lock."""
+    recovery rename; (b) index_compact, which holds the lock, runs end
+    to end across a planted crash window without deadlocking."""
     import shutil
     import threading
 
     from admira_etl_project_prueba_spark.corpus_service import CorpusService
-    from admira_etl_project_prueba_spark.operators.similarity import write_ivf_index
+    from admira_etl_project_prueba_spark.operators.textops import write_text_index
     from admira_etl_project_prueba_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    ivf = str(tmp_path / "ivf")
-    write_ivf_index(emb, ivf, n_centroids=16)
-    svc = CorpusService(spark, documents=docs, embeddings=emb, ivf_index_path=ivf)
+    txt = str(tmp_path / "txt")
+    write_text_index(docs, txt, num_buckets=8)
+    postings = f"{txt}/postings"
+    svc = CorpusService(spark, documents=docs, text_index_path=txt)
 
     class _ProbeLock:
         """Delegates to an RLock, recording acquisitions."""
@@ -1327,17 +1303,15 @@ def test_read_path_recovery_takes_the_maintenance_lock(spark, sf_dir, tmp_path):
     probe = _ProbeLock()
     svc._maintenance_lock = probe
     # (a) healing a crash window goes through the lock
-    shutil.move(ivf, ivf + "__old")
-    assert svc.similar_docs(vec_id=5, k=3)["method"] == "ivf_index"
+    shutil.move(postings, postings + "__old")
+    assert "absent" not in svc.index_health()["data"]["text"]
     assert probe.acquisitions >= 1
-    # healthy-store probes do NOT touch the lock (hot path stays lock-free)
+    # healthy-store reads do NOT touch the lock (hot path stays lock-free)
     before = probe.acquisitions
-    svc.similar_docs(vec_id=5, k=3)
+    svc.index_health()
     assert probe.acquisitions == before
-    # (b) reentrancy: compact holds the lock while readiness may heal —
-    # plant another crash window and run compact end-to-end (a plain
-    # Lock here would deadlock)
-    shutil.move(ivf, ivf + "__old")
+    # (b) compact across another planted crash window
+    shutil.move(postings, postings + "__old")
     done = []
 
     def run():
@@ -1347,7 +1321,7 @@ def test_read_path_recovery_takes_the_maintenance_lock(spark, sf_dir, tmp_path):
     t.start()
     t.join(timeout=120)
     assert not t.is_alive(), "index_compact deadlocked on the maintenance lock"
-    assert done and done[0] == ["ivf"]
+    assert done and done[0] == ["text"]
 
 
 def test_near_dup_pairs_semantic_method(spark, sf_dir, tmp_path):
@@ -1358,6 +1332,7 @@ def test_near_dup_pairs_semantic_method(spark, sf_dir, tmp_path):
     threshold in (0, 1]."""
     from admira_etl_project_prueba_spark.corpus_service import CorpusService
     from admira_etl_project_prueba_spark.operators.similarity import (
+        ivf_data_path,
         semantic_dedup_pairs,
         write_ivf_index,
     )
@@ -1374,7 +1349,7 @@ def test_near_dup_pairs_semantic_method(spark, sf_dir, tmp_path):
     assert r["assignments_source"] == "ivf_index"
     # identical to the operator fed the persisted assignment directly
     want = semantic_dedup_pairs(
-        emb, 16, 0.2, assignments=spark.read.parquet(ivf)
+        emb, 16, 0.2, assignments=spark.read.parquet(ivf_data_path(spark, ivf))
     )
     # sf0.001 embeddings are near-orthogonal, so a production threshold
     # yields zero pairs; 0.2 exercises the full path with real output
@@ -1407,6 +1382,7 @@ def test_near_dup_pairs_served_from_persisted_pairs_table(spark, sf_dir, tmp_pat
     threshold falls back to compute instead of silently missing pairs."""
     from admira_etl_project_prueba_spark.corpus_service import CorpusService
     from admira_etl_project_prueba_spark.operators.similarity import (
+        ivf_data_path,
         read_semantic_pairs,
         semantic_dedup_pairs,
         write_ivf_index,
@@ -1434,7 +1410,7 @@ def test_near_dup_pairs_served_from_persisted_pairs_table(spark, sf_dir, tmp_pat
     r = svc.near_dup_pairs(method="semantic", threshold=0.2, limit=5)
     assert r["assignments_source"] == "pairs_table"
     want = semantic_dedup_pairs(
-        emb, 16, 0.2, assignments=spark.read.parquet(f"{ivf}")
+        emb, 16, 0.2, assignments=spark.read.parquet(ivf_data_path(spark, ivf))
     )
     n_want = want.count()
     assert r["pagination"]["total"] == n_want > 0

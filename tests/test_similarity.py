@@ -197,13 +197,14 @@ def test_ivf_precomputed_index_matches_inline_and_prunes(spark, sf_dir, tmp_path
     e = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf_index")
     similarity.write_ivf_index(e, path, n_centroids=16)
+    data = similarity.ivf_data_path(spark, path)
     # one directory per inverted list
     import os
-    assert sorted(d for d in os.listdir(path) if d.startswith("centroid_id=")) == [
+    assert sorted(d for d in os.listdir(data) if d.startswith("centroid_id=")) == [
         f"centroid_id={i}" for i in sorted(range(16), key=str)
     ]
 
-    stored = spark.read.parquet(path)
+    stored = spark.read.parquet(data)
     inline = similarity.ivf_topk(e, k=10, n_probe=4).collect()
     indexed_df = similarity.ivf_topk(e, k=10, n_probe=4, assignments=stored)
     indexed = indexed_df.collect()
@@ -455,6 +456,7 @@ def test_ivf_index_merge_equals_rebuild(spark, sf_dir, tmp_path):
     union (same centroid set, same deterministic argmax): identical index
     rows and identical indexed top-k answers."""
     from admira_etl_project_prueba_spark.operators.similarity import (
+        ivf_data_path,
         ivf_topk_from_index,
         merge_ivf_index,
         write_ivf_index,
@@ -472,7 +474,7 @@ def test_ivf_index_merge_equals_rebuild(spark, sf_dir, tmp_path):
     def rows(p):
         return sorted(
             (r["vec_id"], r["centroid_id"], r["label"])
-            for r in spark.read.parquet(p).collect()
+            for r in spark.read.parquet(ivf_data_path(spark, p)).collect()
         )
 
     assert rows(inc) == rows(full)
@@ -482,15 +484,17 @@ def test_ivf_index_merge_equals_rebuild(spark, sf_dir, tmp_path):
 
 
 def test_ivf_merge_validates_manifest_and_id_range(spark, sf_dir, tmp_path):
-    """The index sidecar manifest makes the centroid contract a CHECK,
-    not a convention: merging with the wrong n_centroids raises before
-    any write, as does a batch whose vec_ids collide with the centroid
-    id range; a legacy index (no manifest) merges under the caller's
-    value and gains a manifest."""
+    """The index manifest makes the centroid contract a CHECK, not a
+    convention: merging with the wrong n_centroids raises before any
+    write, as does a batch whose vec_ids collide with the centroid id
+    range.  (The legacy half — a manifest-less index merging under the
+    caller's value and gaining a manifest — is gone with the flat
+    layout: every committed version holds its manifest, and a merge
+    into a store without one raises.)"""
     import pytest as _pytest
 
     from admira_etl_project_prueba_spark.operators.similarity import (
-        _ivf_manifest_path,
+        ivf_resolved_paths,
         merge_ivf_index,
         write_ivf_index,
     )
@@ -501,32 +505,25 @@ def test_ivf_merge_validates_manifest_and_id_range(spark, sf_dir, tmp_path):
     new = emb.filter("vec_id >= 300")
     path = str(tmp_path / "idx")
     write_ivf_index(old, path, n_centroids=16)
-    assert (
-        spark.read.parquet(_ivf_manifest_path(path)).first()["n_centroids"] == 16
-    )
+    manifest = ivf_resolved_paths(spark, path)[1]
+    assert spark.read.parquet(manifest).first()["n_centroids"] == 16
     with _pytest.raises(ValueError, match="n_centroids=16"):
         merge_ivf_index(spark, path, new, n_centroids=8)
     with _pytest.raises(ValueError, match="centroid id range"):
         merge_ivf_index(spark, path, emb.filter("vec_id < 5"), n_centroids=16)
-    # legacy upgrade path: drop the manifest, merge, manifest reappears
-    import shutil
-
-    shutil.rmtree(_ivf_manifest_path(path))
-    merge_ivf_index(spark, path, new, n_centroids=16)
-    assert (
-        spark.read.parquet(_ivf_manifest_path(path)).first()["n_centroids"] == 16
-    )
+    with _pytest.raises(ValueError, match="manifest"):
+        merge_ivf_index(spark, str(tmp_path / "not_a_store"), new)
 
 
 def test_ivf_compaction_restores_one_file_per_list(spark, sf_dir, tmp_path):
     """build → merge × 2 → compact: merge fan-out (one file per touched
     list per batch) collapses back to ONE file per centroid partition,
-    probe results are bit-identical across the cycle, and the sidecar
-    manifest survives compaction."""
+    probe results are bit-identical across the cycle, and the manifest
+    is carried into the compacted version."""
     from admira_etl_project_prueba_spark.operators.similarity import (
-        _ivf_manifest_path,
         compact_ivf_index,
         ivf_files_per_list,
+        ivf_resolved_paths,
         ivf_topk_from_index,
         merge_ivf_index,
         write_ivf_index,
@@ -542,30 +539,31 @@ def test_ivf_compaction_restores_one_file_per_list(spark, sf_dir, tmp_path):
            for r in ivf_files_per_list(spark, path).collect()}
     assert max(fan.values()) >= 3
     before = [tuple(r) for r in ivf_topk_from_index(spark, emb, path).collect()]
-    rows_before = sorted(
-        (r["vec_id"], r["centroid_id"], r["label"])
-        for r in spark.read.parquet(path).collect()
-    )
+    def rows():
+        return sorted(
+            (r["vec_id"], r["centroid_id"], r["label"])
+            for r in spark.read.parquet(
+                ivf_resolved_paths(spark, path)[0]
+            ).collect()
+        )
+
+    rows_before = rows()
     compact_ivf_index(spark, path)
     after_fan = {r["centroid_id"]: r["n_files"]
                  for r in ivf_files_per_list(spark, path).collect()}
     assert set(after_fan.values()) == {1}
     after = [tuple(r) for r in ivf_topk_from_index(spark, emb, path).collect()]
-    rows_after = sorted(
-        (r["vec_id"], r["centroid_id"], r["label"])
-        for r in spark.read.parquet(path).collect()
-    )
     assert after == before and len(after) > 0
-    assert rows_after == rows_before
-    assert (
-        spark.read.parquet(_ivf_manifest_path(path)).first()["n_centroids"] == 16
-    )
+    assert rows() == rows_before
+    manifest = ivf_resolved_paths(spark, path)[1]
+    assert spark.read.parquet(manifest).first()["n_centroids"] == 16
 
 
 def test_ivf_occupancy_report_and_retrain_trigger(spark, tmp_path):
     """A deliberately skewed index (all real vectors in one list) reports
     skew = n_lists on the hot list and trips needs_ivf_retrain; a
     balanced index reports skew 1.0 everywhere and does not."""
+    from admira_etl_project_prueba_spark.functions.fs import commit_version
     from admira_etl_project_prueba_spark.operators.similarity import (
         ivf_occupancy_report,
         needs_ivf_compaction,
@@ -573,20 +571,25 @@ def test_ivf_occupancy_report_and_retrain_trigger(spark, tmp_path):
     )
 
     def write_fake_index(path, assignment):
-        # (vec_id, centroid_id) rows; centroid self-rows 0..3
+        # (vec_id, centroid_id) rows; centroid self-rows 0..3, committed
+        # as the store's first version
         rows = [(cid, [float(cid)], 0, cid) for cid in range(4)] + [
             (vid, [1.0], 0, cid) for vid, cid in assignment
         ]
         df = spark.createDataFrame(
             rows, "vec_id long, embedding array<float>, label int, centroid_id long"
         )
-        df.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+        tmp = path + "/__building.0"
+        df.write.mode("overwrite").partitionBy("centroid_id").parquet(
+            tmp + "/data"
+        )
         (
             spark.createDataFrame([(4,)], "n_centroids int")
             .coalesce(1)
             .write.mode("overwrite")
-            .parquet(path + "__manifest")
+            .parquet(tmp + "/manifest")
         )
+        commit_version(spark, path, tmp)
 
     hot = str(tmp_path / "hot")
     write_fake_index(hot, [(vid, 0) for vid in range(10, 30)])
@@ -622,8 +625,8 @@ def test_ivf_retrain_equals_fresh_rebuild(spark, sf_dir, tmp_path):
     derives everything from the index itself (no corpus access), updates
     the manifest, and lands compacted (one file per list)."""
     from admira_etl_project_prueba_spark.operators.similarity import (
-        _ivf_manifest_path,
         ivf_files_per_list,
+        ivf_resolved_paths,
         ivf_topk_from_index,
         retrain_ivf_index,
         write_ivf_index,
@@ -634,15 +637,16 @@ def test_ivf_retrain_equals_fresh_rebuild(spark, sf_dir, tmp_path):
     path, fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
     write_ivf_index(emb, path, n_centroids=8)
     assert retrain_ivf_index(spark, path, n_centroids=24) == 24
-    assert (
-        spark.read.parquet(_ivf_manifest_path(path)).first()["n_centroids"] == 24
-    )
+    manifest = ivf_resolved_paths(spark, path)[1]
+    assert spark.read.parquet(manifest).first()["n_centroids"] == 24
     write_ivf_index(emb, fresh, n_centroids=24)
 
     def rows(p):
         return sorted(
             (r["vec_id"], r["centroid_id"], r["label"])
-            for r in spark.read.parquet(p).collect()
+            for r in spark.read.parquet(
+                ivf_resolved_paths(spark, p)[0]
+            ).collect()
         )
 
     assert rows(path) == rows(fresh)
@@ -663,13 +667,13 @@ def test_ivf_retrain_equals_fresh_rebuild(spark, sf_dir, tmp_path):
 def test_ivf_retrain_recommended_count_and_crash_recovery(spark, sf_dir, tmp_path):
     """recommended_n_centroids sizes lists to the measured occupancy
     target (ceil of real vectors / target); retrain with n_centroids=None
-    adopts it, and a crashed prior swap (only path__old present) is
-    healed before the rebuild instead of failing or resetting."""
+    adopts it, and the scratch of a crashed prior writer (an uncommitted
+    ``__building.*`` directory) is swept by the retrain's commit instead
+    of failing it or becoming visible."""
     import os
-    import shutil
 
     from admira_etl_project_prueba_spark.operators.similarity import (
-        _ivf_manifest_path,
+        ivf_resolved_paths,
         recommended_n_centroids,
         retrain_ivf_index,
         write_ivf_index,
@@ -683,26 +687,26 @@ def test_ivf_retrain_recommended_count_and_crash_recovery(spark, sf_dir, tmp_pat
     assert recommended_n_centroids(spark, path, target_per_list=50) == 4  # ceil(196/50)
     assert recommended_n_centroids(spark, path, target_per_list=64) == 4  # ceil(196/64)=4
     assert recommended_n_centroids(spark, path, target_per_list=10) == 20
-    # simulate the crash window: index renamed to __old, dst absent
-    shutil.move(path, path + "__old")
+    # simulate a writer that crashed before its commit rename
+    os.makedirs(os.path.join(path, "__building.1", "data"))
     k = retrain_ivf_index(spark, path, n_centroids=10)
     assert k == 10
-    assert not os.path.exists(path + "__old")
-    assert (
-        spark.read.parquet(_ivf_manifest_path(path)).first()["n_centroids"] == 10
-    )
-    # all 200 vectors survived the recovery + retrain
-    assert spark.read.parquet(path).count() == 200
+    assert sorted(os.listdir(path)) == ["v00000001", "v00000002"]
+    data, manifest = ivf_resolved_paths(spark, path)
+    assert spark.read.parquet(manifest).first()["n_centroids"] == 10
+    # all 200 vectors survived the retrain
+    assert spark.read.parquet(data).count() == 200
 
 
 def test_ivf_retrain_rejects_nonpositive_centroid_count(spark, sf_dir, tmp_path):
     """retrain with n_centroids < 1 must raise BEFORE any IO: ivf_assign
-    over an empty centroid set yields an empty assignment, and the swap
-    would replace the live index with an empty store (destroying the
-    recovery copy)."""
+    over an empty centroid set yields an empty assignment, and the
+    commit would replace the live index with an empty version."""
     import pytest as _pytest
 
+    from admira_etl_project_prueba_spark.functions.fs import latest_version
     from admira_etl_project_prueba_spark.operators.similarity import (
+        ivf_data_path,
         retrain_ivf_index,
         write_ivf_index,
     )
@@ -715,7 +719,8 @@ def test_ivf_retrain_rejects_nonpositive_centroid_count(spark, sf_dir, tmp_path)
         with _pytest.raises(ValueError, match="n_centroids must be >= 1"):
             retrain_ivf_index(spark, path, n_centroids=bad)
     # the index is untouched
-    assert spark.read.parquet(path).count() == 100
+    assert latest_version(spark, path) == "v00000001"
+    assert spark.read.parquet(ivf_data_path(spark, path)).count() == 100
 
 
 def test_coarse_assign_parity_and_determinism(spark, sf_dir):
@@ -772,8 +777,8 @@ def test_retrain_coarse_mode_recall_parity_and_auto_switch(
     auto == coarse row-for-row (both kernels deterministic)."""
     from admira_etl_project_prueba_spark.operators import similarity
     from admira_etl_project_prueba_spark.operators.similarity import (
-        _ivf_manifest_path,
         cosine_topk,
+        ivf_resolved_paths,
         ivf_topk_from_index,
         retrain_ivf_index,
         write_ivf_index,
@@ -788,8 +793,9 @@ def test_retrain_coarse_mode_recall_parity_and_auto_switch(
         write_ivf_index(emb, path, n_centroids=8)
         got = retrain_ivf_index(spark, path, n_centroids=k, assign_mode=mode)
         assert got == k
-        assert spark.read.parquet(_ivf_manifest_path(path)).first()["n_centroids"] == k
-        idx = spark.read.parquet(path)
+        data, manifest = ivf_resolved_paths(spark, path)
+        assert spark.read.parquet(manifest).first()["n_centroids"] == k
+        idx = spark.read.parquet(data)
         assert idx.count() == n  # no vector lost to the approximate kernel
         assert idx.agg({"centroid_id": "max"}).first()[0] < k
         return path
@@ -812,7 +818,8 @@ def test_retrain_coarse_mode_recall_parity_and_auto_switch(
 
     def rows(p):
         return sorted(
-            (r["vec_id"], r["centroid_id"]) for r in spark.read.parquet(p).collect()
+            (r["vec_id"], r["centroid_id"])
+            for r in spark.read.parquet(ivf_resolved_paths(spark, p)[0]).collect()
         )
 
     # auto below the threshold == exact
@@ -842,6 +849,7 @@ def test_cluster_bounded_ops_accept_persisted_assignments(spark, sf_dir, tmp_pat
     COARSE-retrained index's lists are honored as-is (the op consumes
     whatever partitioning the index carries)."""
     from admira_etl_project_prueba_spark.operators.similarity import (
+        ivf_data_path,
         knn_label_accuracy,
         retrain_ivf_index,
         semantic_dedup_pairs,
@@ -853,7 +861,7 @@ def test_cluster_bounded_ops_accept_persisted_assignments(spark, sf_dir, tmp_pat
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "idx")
     write_ivf_index(emb, path, n_centroids=16)
-    persisted = spark.read.parquet(path)
+    persisted = spark.read.parquet(ivf_data_path(spark, path))
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
@@ -871,7 +879,7 @@ def test_cluster_bounded_ops_accept_persisted_assignments(spark, sf_dir, tmp_pat
     # a coarse-retrained index is a valid assignment source: the report
     # stays complete (every label scored) and sane (accuracy in [0,1])
     retrain_ivf_index(spark, path, n_centroids=31, assign_mode="coarse")
-    coarse = spark.read.parquet(path)
+    coarse = spark.read.parquet(ivf_data_path(spark, path))
     rep = knn_label_accuracy(emb, 31, assignments=coarse).collect()
     assert {r["label"] for r in rep} == {r["label"] for r in emb.select("label").distinct().collect()}
     assert all(0.0 <= r["accuracy"] <= 1.0 for r in rep)
@@ -904,7 +912,7 @@ def test_ivf_topk_plan_shape_pinned(spark, sf_dir, tmp_path, plan_operators):
     e = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf_shape_idx")
     similarity.write_ivf_index(e, path, n_centroids=16)
-    stored = spark.read.parquet(path)
+    stored = spark.read.parquet(similarity.ivf_data_path(spark, path))
 
     def shape(df):
         df.collect()  # finalize AQE before reading the plan
@@ -929,19 +937,19 @@ def test_ivf_topk_plan_shape_pinned(spark, sf_dir, tmp_path, plan_operators):
     ) == (0, 3, 4)
 
 
-def test_versioned_ivf_equals_flat_across_lifecycle(spark, sf_dir, tmp_path):
-    """The versioned layout is a STORAGE change only: build, probe,
-    append-merge, compact, and retrain all produce row-identical results
-    to the flat layout at every step."""
+def test_ivf_lifecycle_equals_fresh_rebuild(spark, sf_dir, tmp_path):
+    """build → append-merge → compact → retrain through committed
+    versions ends row-identical to one fresh build over the union at the
+    retrained count, probes included, with one file per list."""
     from admira_etl_project_prueba_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
-    old = e.filter("vec_id < 300")
-    new = e.filter("vec_id >= 300")
-    flat = str(tmp_path / "flat")
-    ver = str(tmp_path / "ver")
-    similarity.write_ivf_index(old, flat, n_centroids=16)
-    similarity.write_ivf_index(old, ver, n_centroids=16, versioned=True)
+    store, fresh = str(tmp_path / "store"), str(tmp_path / "fresh")
+    similarity.write_ivf_index(e.filter("vec_id < 300"), store, n_centroids=16)
+    similarity.merge_ivf_index(spark, store, e.filter("vec_id >= 300"))
+    similarity.compact_ivf_index(spark, store)
+    assert similarity.retrain_ivf_index(spark, store, n_centroids=8) == 8
+    similarity.write_ivf_index(e, fresh, n_centroids=8)
 
     def rows(path):
         return sorted(
@@ -951,20 +959,12 @@ def test_versioned_ivf_equals_flat_across_lifecycle(spark, sf_dir, tmp_path):
             ).collect()
         )
 
-    assert rows(ver) == rows(flat)
-    # probes resolve through the same seam
-    a = similarity.ivf_topk_from_index(spark, old, flat, k=5).collect()
-    b = similarity.ivf_topk_from_index(spark, old, ver, k=5).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # merge + compact + retrain, in both layouts
-    for p in (flat, ver):
-        similarity.merge_ivf_index(spark, p, new)
-        similarity.compact_ivf_index(spark, p)
-        assert similarity.retrain_ivf_index(spark, p, n_centroids=8) == 8
-    assert rows(ver) == rows(flat)
-    # one file per list after the compact-shaped retrain, both layouts
-    fan_v = similarity.ivf_files_per_list(spark, ver)
-    assert fan_v.filter("n_files > 1").count() == 0
+    assert rows(store) == rows(fresh)
+    a = similarity.ivf_topk_from_index(spark, e, store, k=5, n_centroids=8)
+    b = similarity.ivf_topk_from_index(spark, e, fresh, k=5, n_centroids=8)
+    assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
+    fan = similarity.ivf_files_per_list(spark, store)
+    assert fan.filter("n_files > 1").count() == 0
 
 
 def test_ivf_split_assign_invariants(spark, sf_dir):
@@ -1009,7 +1009,7 @@ def test_ivf_split_assign_invariants(spark, sf_dir):
 
 
 def test_split_ivf_index_store_cycle(spark, sf_dir, tmp_path):
-    """split_ivf_index on a versioned store: new version carries the
+    """split_ivf_index on a persisted store: new version carries the
     grown manifest + explicit centroid table; probes and merges resolve
     the explicit universe; compact preserves it; full retrain drops it
     (re-establishing the vec_id convention)."""
@@ -1018,7 +1018,7 @@ def test_split_ivf_index_store_cycle(spark, sf_dir, tmp_path):
 
     e = load_table(spark, sf_dir, "embeddings")
     p = str(tmp_path / "ivf")
-    similarity.write_ivf_index(e, p, n_centroids=16, versioned=True)
+    similarity.write_ivf_index(e, p, n_centroids=16)
     new_k = similarity.split_ivf_index(spark, p, target_per_list=30)
     assert new_k > 16
     data, manifest = similarity.ivf_resolved_paths(spark, p)
@@ -1049,8 +1049,3 @@ def test_split_ivf_index_store_cycle(spark, sf_dir, tmp_path):
     assert k2 == 8
     assert similarity.ivf_centroids_frame(spark, p) is None
     assert len(similarity.ivf_topk_from_index(spark, e, p, k=5).collect()) == 5
-    # flat stores refuse split with guidance
-    flat = str(tmp_path / "flat")
-    similarity.write_ivf_index(e, flat, n_centroids=16)
-    with pytest.raises(ValueError, match="versioned"):
-        similarity.split_ivf_index(spark, flat)

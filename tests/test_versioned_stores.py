@@ -1,6 +1,7 @@
 """The versioned layout of the whole-payload stores: the fact
 MetricsStore, the LSH signature store, and the histogram / LM-count
-model stores.  Each gets (a) lifecycle parity with a from-scratch
+model stores (plus the one-layout contract of the IVF and IVF-PQ index
+stores).  Each gets (a) lifecycle parity with a from-scratch
 rebuild or a plain-Python per-key sum, (b) the reader-vs-rewriter race
 pinned: a reader that resolved the previous version before a fold
 completes against its snapshot, byte-for-byte, and (c) the legacy flat
@@ -445,6 +446,85 @@ def test_lsh_store_versioned_merge_parity(spark, sf_dir, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+def test_index_store_builds_and_maintenance_commit_versions(
+    spark, sf_dir, tmp_path
+):
+    """The IVF and IVF-PQ stores have one layout: a default build,
+    compaction and retrain (a rebuild for IVF-PQ) each commit exactly
+    one new version, an append-merge adds to the current version, and
+    no ``path__*`` sibling (flat sidecar or swap debris) is left."""
+    import os
+
+    from admira_etl_project_prueba_spark.operators import similarity as sim
+    from admira_etl_project_prueba_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base, batch = emb.filter("vec_id < 200"), emb.filter(
+        "vec_id >= 200 AND vec_id < 260"
+    )
+    ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "pq")
+    chains = {
+        ivf: [
+            (1, lambda: sim.write_ivf_index(base, ivf, n_centroids=8)),
+            (1, lambda: sim.merge_ivf_index(spark, ivf, batch)),
+            (2, lambda: sim.compact_ivf_index(spark, ivf)),
+            (3, lambda: sim.retrain_ivf_index(spark, ivf, n_centroids=4)),
+        ],
+        pq: [
+            (1, lambda: sim.write_ivfpq_index(base, pq, n_centroids=8)),
+            (1, lambda: sim.merge_ivfpq_index(spark, pq, batch)),
+            (2, lambda: sim.compact_ivfpq_index(spark, pq)),
+            (3, lambda: sim.write_ivfpq_index(base, pq, n_centroids=4)),
+        ],
+    }
+
+    # The two stores are independent, so each chain runs on its own
+    # thread; the steps within a chain stay strictly ordered.
+    def run_chain(path):
+        for want, step in chains[path]:
+            step()
+            assert fs.latest_version(spark, path) == f"v{want:08d}", (path, want)
+
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        list(pool.map(run_chain, chains))
+    assert sim.ivf_data_path(spark, ivf).endswith("v00000003/data")
+    n_ivf = spark.read.parquet(sim.ivf_data_path(spark, ivf)).count()
+    assert n_ivf == 260
+    assert sorted(os.listdir(tmp_path)) == ["ivf", "pq"]
+
+
+def test_flat_index_store_raises_rebuild_error(spark, tmp_path):
+    """A root holding payload but no committed version is an index store
+    in the old flat layout: both resolvers refuse it with a ValueError
+    naming the rebuild call.  An absent root, or one holding only a
+    crashed first build's scratch, still reads as not written."""
+    import os
+
+    from admira_etl_project_prueba_spark.corpus_service import CorpusService
+    from admira_etl_project_prueba_spark.operators import similarity as sim
+
+    flat = str(tmp_path / "flat")
+    spark.createDataFrame([(1, 0)], "vec_id long, centroid_id long").write.partitionBy(
+        "centroid_id"
+    ).parquet(flat)
+    with pytest.raises(ValueError, match="rebuild with write_ivf_index"):
+        sim.ivf_resolved_paths(spark, flat)
+    with pytest.raises(ValueError, match="rebuild with write_ivfpq_index"):
+        sim.pq_resolved_paths(spark, flat)
+
+    docs = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    for root in (str(tmp_path / "absent"), str(tmp_path / "scratch_only")):
+        if root.endswith("scratch_only"):
+            os.makedirs(os.path.join(root, "__building.1", "data"))
+        data, manifest = sim.ivf_resolved_paths(spark, root)
+        assert not fs.path_exists(spark, manifest), root
+        svc = CorpusService(spark, docs, ivf_index_path=root, pq_index_path=root)
+        assert svc._ivf_index_ready() is False, root
+        assert svc._pq_index_ready() is False, root
+
+
 def test_every_versioned_store_gc_and_resolve_sweep(spark, sf_dir, tmp_path):
     """The invariant the last three rounds built piecemeal, pinned once
     for EVERY store: after three versioned commits (a) the root holds at
@@ -472,10 +552,10 @@ def test_every_versioned_store_gc_and_resolve_sweep(spark, sf_dir, tmp_path):
         tx.write_lsh_store(docs.filter(f"doc_id % 3 = {i % 3}"), path)
 
     def ivf(path, i):
-        sim.write_ivf_index(emb, path, n_centroids=8, versioned=True)
+        sim.write_ivf_index(emb, path, n_centroids=8)
 
     def ivfpq(path, i):
-        sim.write_ivfpq_index(emb, path, n_centroids=8, versioned=True, iters=1 + i % 2)
+        sim.write_ivfpq_index(emb, path, n_centroids=8, iters=1 + i % 2)
 
     def text_index(path, i):
         tx.write_text_index(_docs(spark, 20 + i), path, versioned=True)

@@ -9,8 +9,8 @@ so the same oracle SQL yields ``1`` via ``fetchall()`` but ``1.0`` via
 collects the DuckDB side through pandas hash-mismatches *only* queries with
 a HUGEINT (or similarly lossy) output column.
 
-This tool runs every catalog oracle twice — native ``fetchall()`` and
-pandas ``.df()`` — canonicalizes both result sets exactly like
+This tool runs every catalog oracle once and fetches its result twice —
+native ``fetchall()`` and pandas ``.df()`` — canonicalizes both result sets exactly like
 ``tools/oracle_check.py`` does, and reports any query whose canonical
 fingerprint depends on the fetch path.  A clean report means the hashed
 surface of every oracle is representation-stable no matter how the driver
@@ -61,17 +61,23 @@ def audit(sf_dir: str) -> list[str]:
             f"FROM read_parquet('{sf_dir}/{name}.parquet')"
         )
     problems = []
-    # each oracle runs twice (native + pandas fetch) on its own cursor —
-    # DuckDB releases the GIL during execution, so a thread pool overlaps
-    # the per-oracle latency; assertions per oracle are unchanged and the
-    # report order is kept deterministic by collecting in input order
+    # each oracle runs ONCE on its own cursor, into a temp table that keeps
+    # the result's DuckDB types (HUGEINT stays HUGEINT), and that one
+    # result is fetched twice (native + pandas).  The fetch path is what
+    # is audited, so executing the query a second time only doubled the
+    # cost (the slowest oracle takes ~36 s at sf0.001).  Temp tables are
+    # cursor-local.  DuckDB releases the GIL during execution, so a thread
+    # pool overlaps the per-oracle latency; the report order is kept
+    # deterministic by collecting in input order
     def run_one(item):
         name, sql = item
         cur = con.cursor()
-        res = cur.execute(sql)
+        cur.execute(f"CREATE TEMP TABLE oracle_result AS {sql}")
+        res = cur.execute("SELECT * FROM oracle_result")
         cols = [d[0] for d in res.description]
         native = res.fetchall()
-        pdf = cur.execute(sql).df()
+        pdf = cur.execute("SELECT * FROM oracle_result").df()
+        cur.close()
         return name, sql, cols, native, pdf
 
     with ThreadPoolExecutor(max_workers=8) as pool:

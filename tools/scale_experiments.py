@@ -1453,8 +1453,8 @@ def _growth_law_r10_split_experiment(spark) -> dict:
         split_path = tempfile.mkdtemp() + "/ivf_split"
         full_path = tempfile.mkdtemp() + "/ivf_full"
         v = vectors(n)
-        sim.write_ivf_index(v, split_path, n_centroids=16, versioned=True)
-        sim.write_ivf_index(v, full_path, n_centroids=16, versioned=True)
+        sim.write_ivf_index(v, split_path, n_centroids=16)
+        sim.write_ivf_index(v, full_path, n_centroids=16)
         # analytic scored-row bills from the pre-split occupancy
         occ = (
             sim.ivf_assign(v, 16)
