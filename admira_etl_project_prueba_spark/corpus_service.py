@@ -102,10 +102,8 @@ class CorpusService:
         self._pq_rerank_depth: int | None = None
         self._pq_manifest_mtime: int | None = None
         # maintenance (retrain/compact) must not interleave with itself
-        # OR with a read path's crash-window recovery of the text
-        # postings' rename swap: a probe restoring __old between an
-        # in-flight swap's two renames would make the swap's second
-        # rename land inside an existing directory.  An RLock, so a
+        # OR with a read path's crash-window recovery of a legacy flat
+        # histogram store (``_heal_crashed_swap``).  An RLock, so a
         # maintenance region may call a read-path helper that heals.
         # In-process serialization; cross-process deployments schedule
         # maintenance from one place.
@@ -514,11 +512,11 @@ class CorpusService:
         }
 
     def _heal_crashed_swap(self, path: str) -> None:
-        """Crash-window recovery for the READ paths of the stores that
-        still swap by rename (text postings, legacy flat histograms):
-        cheap unlocked probe (two exists RPCs), then the lease-guarded
-        heal.  The in-process maintenance lock serializes against THIS
-        service's writers; the filesystem lease inside
+        """Crash-window recovery for the READ path of a legacy flat
+        histogram store, which an older build replaced by a two-rename
+        swap: cheap unlocked probe (two exists RPCs), then the
+        lease-guarded heal.  The in-process maintenance lock serializes
+        against THIS service's writers; the filesystem lease inside
         ``fs.heal_if_crashed`` additionally serializes against a swap in
         flight in a DIFFERENT process — without it a probe could restore
         ``__old`` between that swap's two renames and the swap's second
@@ -661,6 +659,12 @@ class CorpusService:
             ),
         }
 
+    def _text_index_ready(self) -> bool:
+        """True when the configured text index has a committed version
+        (resolved the same way the query paths resolve it)."""
+        root = textops.text_index_root(self.spark, self.text_index_path)
+        return path_exists(self.spark, f"{root}/postings")
+
     def _text_index_health(self) -> dict:
         """Maintenance state of the persisted text index: posting-file
         fan-out per term bucket and the compaction trigger."""
@@ -709,22 +713,14 @@ class CorpusService:
         else:
             out["data"]["ivf"] = None
         if self.text_index_path is not None:
-            postings = f"{self.text_index_path}/postings"
-            self._heal_crashed_swap(postings)
-            # resolve the layout (flat or versioned) the same way the
-            # query paths do, so a versioned store reads as present
-            current = (
-                f"{textops.text_index_root(self.spark, self.text_index_path)}"
-                "/postings"
-            )
             out["data"]["text"] = (
                 self._text_index_health()
-                if path_exists(self.spark, current)
+                if self._text_index_ready()
                 else {"path": self.text_index_path, "absent": True}
             )
             out["data"]["text"] = dict(
                 out["data"]["text"],
-                lease_held=lease_held(self.spark, postings),
+                lease_held=lease_held(self.spark, self.text_index_path),
             )
         else:
             out["data"]["text"] = None
@@ -795,8 +791,7 @@ class CorpusService:
         when NO store is configured (nothing to compact); stores
         configured but not yet written are skipped (compacting nothing
         is a no-op, not an error).  Serialized against other in-process
-        maintenance (the text postings' rename swap must not
-        interleave)."""
+        maintenance."""
         if self.ivf_index_path is None and self.text_index_path is None:
             raise LookupError("no index stores configured on this service")
         compacted: list[str] = []
@@ -805,12 +800,9 @@ class CorpusService:
                 similarity.compact_ivf_index(self.spark, self.ivf_index_path)
                 self._ivf_health_cache = None
                 compacted.append("ivf")
-            if self.text_index_path is not None:
-                postings = f"{self.text_index_path}/postings"
-                heal_if_crashed(self.spark, postings)
-                if path_exists(self.spark, postings):
-                    textops.compact_index_store(self.spark, self.text_index_path)
-                    compacted.append("text")
+            if self.text_index_path is not None and self._text_index_ready():
+                textops.compact_index_store(self.spark, self.text_index_path)
+                compacted.append("text")
         return {
             "data": {"compacted": compacted},
             "request_id": new_request_id(request_id),

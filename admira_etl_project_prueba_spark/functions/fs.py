@@ -38,11 +38,12 @@ def path_mtime(spark: SparkSession, path: str) -> int:
     """Modification time (ms since epoch) of ``path``, or -1 when absent —
     ONE metadata RPC, no data read.
 
-    Used as a cache-invalidation key for sidecar stores that are replaced
-    by RENAME (``swap_into_place``): the renamed-in directory is a new
-    filesystem object carrying its own mtime, so a changed value means
-    the store was swapped since the cache was filled — including by a
-    DIFFERENT process, which in-process invalidation can never see."""
+    Used as a cache-invalidation key for store directories that are
+    replaced by RENAME (:func:`commit_version`): the renamed-in version
+    directory is a new filesystem object carrying its own mtime, so a
+    changed value means a new version was committed since the cache was
+    filled — including by a DIFFERENT process, which in-process
+    invalidation can never see."""
     fs, jpath, _ = _fs_and_path(spark, path)
     if not fs.exists(jpath):
         return -1
@@ -125,16 +126,18 @@ def read_text(spark: SparkSession, path: str) -> str:
 
 
 def recover_swap(spark: SparkSession, dst: str) -> bool:
-    """Heal the one crash window :func:`swap_into_place` leaves open.
+    """Heal the crash window an older build's two-rename swap can have
+    left in a legacy flat store.
 
-    A crash between the swap's two renames leaves the only copy of the
-    store at ``dst__old`` with ``dst`` absent.  Callers that treat
-    "store absent" as "first run" (streaming folds, legacy-index
-    branches) MUST call this before the existence check — otherwise the
-    post-crash restart silently resets the store to the current batch
-    and the NEXT successful swap deletes the ``__old`` recovery copy,
-    turning a recoverable crash into permanent, error-free data loss.
-    Returns True when a recovery rename was performed.
+    That swap renamed ``dst`` to ``dst__old``, renamed the rewritten
+    copy to ``dst``, then deleted ``dst__old``; a crash between the
+    renames leaves the only copy at ``dst__old`` with ``dst`` absent.
+    Writers that treat "store absent" as "first write" (legacy flat
+    fact, whole-payload and streaming delta stores) call this under the
+    store's lease before the existence check: otherwise the restart
+    resets the store to the current batch and the old copy is never
+    seen again.  Versioned stores never open this window.  Returns True
+    when a recovery rename was performed.
     """
     fs, jdst, jvm = _fs_and_path(spark, dst)
     jold = jvm.org.apache.hadoop.fs.Path(_old_path(dst))
@@ -146,57 +149,29 @@ def recover_swap(spark: SparkSession, dst: str) -> bool:
 
 
 def _old_path(dst: str) -> str:
-    """The recovery-copy location :func:`swap_into_place` uses — the
-    naming rule lives HERE, next to the swap, so probes can't drift."""
+    """The recovery-copy location of the legacy two-rename swap."""
     return dst.rstrip("/") + "__old"
 
 
 def swap_window_open(spark: SparkSession, dst: str) -> bool:
-    """True when a crashed :func:`swap_into_place` left only the
-    recovery copy (``dst`` absent, ``dst__old`` present) — the cheap
-    unlocked probe callers use to decide whether to take a lock and
+    """True when a legacy flat store is in the swap crash window
+    (``dst`` absent, ``dst__old`` present) — the cheap unlocked probe
+    read paths use to decide whether to take a lock and
     :func:`recover_swap`.  Two metadata RPCs, no data read."""
     fs, jdst, jvm = _fs_and_path(spark, dst)
     jold = jvm.org.apache.hadoop.fs.Path(_old_path(dst))
     return (not fs.exists(jdst)) and bool(fs.exists(jold))
 
 
-def swap_into_place(spark: SparkSession, tmp: str, dst: str) -> None:
-    """Replace ``dst`` with ``tmp`` via two directory renames.
-
-    The crash-safety contract for compaction-style rewrites: the new
-    layout is FULLY WRITTEN at ``tmp`` before the original is touched,
-    so no failure window destroys the only copy (``mode('overwrite')``
-    on the source path deletes the directory FIRST — an executor loss
-    mid-write then loses the store).  Sequence: ``dst`` → ``dst__old``
-    (rename, atomic per-directory on HDFS and local FS), ``tmp`` →
-    ``dst`` (rename), delete ``dst__old``.  A crash between the renames
-    leaves ``dst__old`` intact for manual recovery; a stale
-    ``dst__old`` from such a crash is cleared on the next swap.
-    """
-    fs, jdst, jvm = _fs_and_path(spark, dst)
-    jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    jold = jvm.org.apache.hadoop.fs.Path(dst.rstrip("/") + "__old")
-    if fs.exists(jold):
-        fs.delete(jold, True)
-    if not fs.rename(jdst, jold):
-        raise IOError(f"swap_into_place: rename {dst} -> {jold} failed")
-    if not fs.rename(jtmp, jdst):
-        # put the original back rather than leaving no store at dst
-        fs.rename(jold, jdst)
-        raise IOError(f"swap_into_place: rename {tmp} -> {dst} failed")
-    fs.delete(jold, True)
-
-
 # ---------------------------------------------------------------------------
 # Versioned store layout (reader-side snapshot isolation)
 # ---------------------------------------------------------------------------
 #
-# `swap_into_place` replaces a store by a rename PAIR — atomic for new
-# readers, but a scan that LISTED files before the swap can lose them
-# mid-read (FileNotFound on the renamed-away originals).  The versioned
-# layout removes that window entirely: the store root holds immutable
-# version directories
+# Every store rewrite commits a version.  Replacing a store in place (or
+# by a rename pair) is atomic at best for NEW readers: a scan that LISTED
+# files before the replacement can lose them mid-read (FileNotFound on
+# the removed originals).  The versioned layout removes that window: the
+# store root holds immutable version directories
 #
 #   root/
 #     v00000001/   <- complete, never modified after commit
@@ -300,12 +275,34 @@ def resolve_store_root(spark: SparkSession, path: str) -> str:
     """The directory holding a store's CURRENT payload, in either
     layout: versioned (``path/vNNNNNNNN`` — newest committed version,
     resolved ONCE at scan start so the reader is snapshot-isolated from
-    every later rewrite) or flat (``path`` itself).  The generic twin of
-    ``textops.text_index_root`` / ``similarity.pq_resolved_paths`` for
-    single-payload stores (LM counts, histograms, LSH signatures, the
-    fact store)."""
+    every later rewrite) or flat (``path`` itself).  The resolver of
+    the stores that still read a legacy flat layout (LM counts,
+    histograms, LSH signatures, the fact store, the streaming sketch and
+    delta stores); index stores resolve through
+    :func:`index_version_dir`, which refuses a flat root."""
     v = latest_version(spark, path)
     return f"{path.rstrip('/')}/{v}" if v is not None else path
+
+
+def index_version_dir(spark: SparkSession, path: str, rebuild: str) -> str:
+    """The current ``path/vNNNNNNNN`` of an index store (IVF, IVF-PQ,
+    text and positional).  An absent store (or one whose first build has
+    not committed yet: only ``__building.*`` scratch) resolves to
+    ``path`` itself, so every child path is absent too and callers see
+    the store as not written.  A root holding payload but no version is
+    a flat store from the old layout: index stores are derived data, so
+    deleting it and calling ``rebuild`` (the writer named in the error)
+    is the whole migration."""
+    root = path.rstrip("/")
+    v = latest_version(spark, root)
+    if v is not None:
+        return f"{root}/{v}"
+    if dir_nonempty(spark, root):
+        raise ValueError(
+            f"{root} holds no committed version: an index store in the "
+            f"old flat layout. Delete it and rebuild with {rebuild}"
+        )
+    return root
 
 
 def sweep_flat_remnants(spark: SparkSession, path: str) -> None:
@@ -344,6 +341,7 @@ def fold_whole_store(
     store (payload directly under ``path``) is read as the fold's input
     and migrated: its remnants are swept once v1 is committed."""
     with maintenance_lease(spark, path):
+        # legacy flat store: heal an older build's swap crash window
         recover_swap(spark, path)
         root = resolve_store_root(spark, path)
         prev = spark.read.parquet(root) if dir_nonempty(spark, root) else None
@@ -419,8 +417,8 @@ def commit_version(
 # ---------------------------------------------------------------------------
 #
 # Two PROCESSES running compact/retrain/merge-folds on the same store can
-# interleave `swap_into_place`'s renames (A renames dst -> dst__old; B's
-# rename of dst fails or, worse, B deletes the __old A still needs) — the
+# both compute the same next version name, sweep each other's live
+# ``__building.*`` scratch, or lose one side of a read-modify-write — the
 # in-process service lock cannot see a second worker.  The lease is a
 # filesystem-native mutex: an ATOMIC exclusive file create on a sidecar
 # `<store>__lease` path — ``os.open(O_CREAT|O_EXCL)`` for local paths
@@ -686,9 +684,9 @@ def release_lease(
 def lease_owned(spark: SparkSession, dst: str, token: str) -> bool:
     """True iff ``dst``'s lease file exists AND its content is ``token``
     — the holder-side ownership probe.  A holder that overran
-    ``stale_ms`` and was taken over sees False here; swap-heavy
-    operations can call this immediately before a :func:`swap_into_place`
-    to abort rather than interleave renames with the successor."""
+    ``stale_ms`` and was taken over sees False here; a rewrite can call
+    this immediately before its :func:`commit_version` to abort rather
+    than interleave commits with the successor."""
     import os
 
     local = _local_lease_file(dst)
@@ -708,7 +706,7 @@ def touch_lease(spark: SparkSession, dst: str, token: str) -> bool:
     """Heartbeat: refresh the lease file's mtime iff we still own it
     (content == ``token``).  Returns True on a successful touch, False
     when the lease was taken over (or vanished) — the holder should then
-    treat itself as fenced and abort before its next swap.  Called
+    treat itself as fenced and abort before its next commit.  Called
     periodically by :func:`maintenance_lease`'s heartbeat thread so a
     legitimate holder whose rewrite runs past ``stale_ms`` is never
     presumed dead while it is demonstrably alive."""
@@ -757,7 +755,7 @@ def maintenance_lease(
     stale_ms: int = LEASE_STALE_MS,
 ):
     """Hold ``dst``'s single-writer lease for the duration of a
-    swap-managed rewrite (compact / retrain / merge-fold).  Blocks up to
+    store rewrite (build / compact / retrain / merge-fold).  Blocks up to
     ``timeout_s`` for a competing writer to finish — the "loser waits"
     contract — then raises TimeoutError rather than proceeding unlocked.
     Release is token-verified (see :func:`release_lease`), so a holder
@@ -767,10 +765,10 @@ def maintenance_lease(
     While held, a daemon HEARTBEAT thread refreshes the lease's mtime
     every ``stale_ms/4`` (token-verified :func:`touch_lease`), so a
     legitimate holder whose rewrite outruns ``stale_ms`` keeps looking
-    alive to staleness pollers and is never taken over mid-swap — the
+    alive to staleness pollers and is never taken over mid-rewrite — the
     interleaving the lease exists to prevent.  The yielded handle's
-    ``.owned()`` lets swap-heavy bodies re-verify ownership immediately
-    before a rename (defense against the narrow steal window).
+    ``.owned()`` lets a body re-verify ownership immediately before its
+    commit rename (defense against the narrow steal window).
     """
     import threading
 
@@ -816,7 +814,8 @@ def maintenance_lease(
 def heal_if_crashed(
     spark: SparkSession, dst: str, stale_ms: int = LEASE_STALE_MS
 ) -> bool:
-    """Read-path healing that cannot race a LIVE writer.
+    """Read-path healing of a legacy flat store that cannot race a LIVE
+    writer.
 
     An open swap window (``dst`` absent, ``dst__old`` present) is
     ambiguous from a reader: a crashed swap (heal it) or another

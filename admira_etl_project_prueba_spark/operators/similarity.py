@@ -35,7 +35,7 @@ from pyspark.sql.types import StructType
 from admira_etl_project_prueba_spark.functions.fs import (
     clean_version_scratch,
     commit_version,
-    dir_nonempty,
+    index_version_dir,
     latest_version,
     maintenance_lease,
     path_exists,
@@ -548,36 +548,16 @@ def write_ivf_index(
         commit_version(spark, path, tmp)
 
 
-def _index_version_dir(spark, path: str, rebuild: str) -> str:
-    """The current ``path/vNNNNNNNN`` of an IVF or IVF-PQ store.  An
-    absent store (or one whose first build has not committed yet: only
-    ``__building.*`` scratch) resolves to ``path`` itself, so every
-    child path is absent too and callers see the store as not written.
-    A root holding payload but no version is a flat store from the old
-    layout: index stores are derived data, so deleting it and calling
-    ``rebuild`` (the writer named in the error) is the whole
-    migration."""
-    root = path.rstrip("/")
-    v = latest_version(spark, root)
-    if v is not None:
-        return f"{root}/{v}"
-    if dir_nonempty(spark, root):
-        raise ValueError(
-            f"{root} holds no committed version: an index store in the "
-            f"old flat layout. Delete it and rebuild with "
-            f"{rebuild}(embeddings, {root!r}, ...)"
-        )
-    return root
-
-
 def ivf_resolved_paths(spark, path: str) -> tuple[str, str]:
     """(data_path, manifest_path) of the IVF store's current version,
     resolved once at scan start: version directories are immutable
     after commit (appends via :func:`merge_ivf_index` add files but
     never remove or rewrite, which a planned scan tolerates), so the
     reader is snapshot-isolated.  Raises ``ValueError`` on a flat store
-    from the old layout (see :func:`_index_version_dir`)."""
-    root = _index_version_dir(spark, path, "write_ivf_index")
+    from the old layout (see :func:`functions.fs.index_version_dir`)."""
+    root = index_version_dir(
+        spark, path, f"write_ivf_index(embeddings, {path.rstrip('/')!r}, ...)"
+    )
     return f"{root}/data", f"{root}/manifest"
 
 
@@ -1744,8 +1724,10 @@ def pq_resolved_paths(spark, path: str) -> tuple[str, str, str, str]:
     """(codes_path, codebooks_path, centroids_path, manifest_path) of the
     IVF-PQ store's current ``path/vNNNNNNNN/``, resolved once at scan
     start for snapshot isolation.  Raises ``ValueError`` on a flat store
-    from the old layout (see :func:`_index_version_dir`)."""
-    root = _index_version_dir(spark, path, "write_ivfpq_index")
+    from the old layout (see :func:`functions.fs.index_version_dir`)."""
+    root = index_version_dir(
+        spark, path, f"write_ivfpq_index(embeddings, {path.rstrip('/')!r}, ...)"
+    )
     return (
         f"{root}/codes",
         f"{root}/codebooks",

@@ -28,11 +28,9 @@ from admira_etl_project_prueba_spark.functions.fs import (
     clean_version_scratch,
     commit_version,
     copy_tree,
-    latest_version,
+    index_version_dir,
     maintenance_lease,
     path_exists,
-    recover_swap,
-    swap_into_place,
     version_scratch,
 )
 from admira_etl_project_prueba_spark.operators._driver import collect_if_small
@@ -2329,21 +2327,70 @@ def pps_sample(
 
 
 def text_index_root(spark, path: str) -> str:
-    """The directory holding the index's CURRENT ``postings``/``stats``
-    children, in either layout: versioned (``path/vNNNNNNNN/`` — the
-    newest committed version, resolved ONCE at scan start so a reader is
-    snapshot-isolated from every later compaction) or flat (``path``
-    itself).  All read and maintenance entry points resolve through
-    here, so the two layouts are interchangeable per store."""
-    v = latest_version(spark, path)
-    return f"{path.rstrip('/')}/{v}" if v is not None else path
+    """The index's CURRENT version directory ``path/vNNNNNNNN`` holding
+    its ``postings`` (and, for the BM25 index, ``stats``) children,
+    resolved ONCE at scan start so a reader is snapshot-isolated from
+    every later merge or compaction.  All read and maintenance entry
+    points resolve through here.  An absent store resolves to ``path``
+    (its ``postings`` child is then absent too); a flat store from the
+    old layout raises ``ValueError`` (see
+    :func:`functions.fs.index_version_dir`): delete it and rebuild."""
+    root = path.rstrip("/")
+    return index_version_dir(
+        spark,
+        path,
+        f"write_text_index(documents, {root!r}, ...) or "
+        f"write_positional_index(documents, {root!r}, ...)",
+    )
+
+
+def _commit_index(spark, path: str, write) -> None:
+    """Commit the next version of the index store at ``path``: under the
+    store's lease, ``write(scratch)`` fills a ``__building.*`` dir and
+    one rename publishes it, so readers see the postings (and stats)
+    flip together and a failed write leaves only invisible scratch."""
+    with maintenance_lease(spark, path):
+        clean_version_scratch(spark, path)
+        tmp = version_scratch(path)
+        write(tmp)
+        commit_version(spark, path, tmp)
+
+
+def _write_postings(postings: DataFrame, dst: str, mode: str) -> None:
+    """Bucket-aligned shuffle before the partitioned write: each bucket
+    lands in exactly one task => ONE file per bucket directory.  The
+    default layout (every write task touching every bucket) explodes
+    into tasks x buckets small files, and query-time file listing then
+    swamps the pruning win."""
+    (
+        postings.repartition("term_bucket")
+        .write.mode(mode)
+        .partitionBy("term_bucket")
+        .parquet(dst)
+    )
+
+
+def _text_postings(documents: DataFrame, num_buckets: int):
+    """(dl, postings) of a BM25 build or merge batch: per-doc lengths
+    and the (doc_id, dl, term, tf, term_bucket) postings."""
+    dl = documents.selectExpr("doc_id", f"{TOKENS} AS toks").selectExpr(
+        "doc_id", "toks", "CAST(size(toks) AS BIGINT) AS dl"
+    )
+    postings = (
+        dl.selectExpr("doc_id", "dl", "explode(toks) AS term")
+        .groupBy("doc_id", "dl", "term")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+        .withColumn(
+            "term_bucket", F.expr(f"{hex60('term')} % {num_buckets}").cast("int")
+        )
+    )
+    return dl, postings
 
 
 def write_text_index(
     documents: DataFrame,
     path: str,
     num_buckets: int = 64,
-    versioned: bool = False,
 ) -> None:
     """Persist an inverted text index for BM25 retrieval: postings
     (term, doc_id, tf, dl) written ``partitionBy(term_bucket)`` with
@@ -2358,24 +2405,12 @@ def write_text_index(
     time, which keeps the index append-mergeable (posting frames from
     new shards union in; stats re-aggregate) without a global rebuild.
 
-    ``versioned=True`` writes the versioned layout (production
-    recommendation for a store compacted while being read): postings AND
-    stats live together inside an immutable ``path/vNNNNNNNN/`` version
-    committed by one atomic rename, so a compaction can never unlink
-    posting files under an in-flight scan and the postings+stats pair
-    always flips together.  Readers and maintenance resolve both layouts
-    via :func:`text_index_root`."""
-    dl = documents.selectExpr("doc_id", f"{TOKENS} AS toks").selectExpr(
-        "doc_id", "toks", "CAST(size(toks) AS BIGINT) AS dl"
-    )
-    postings = (
-        dl.selectExpr("doc_id", "dl", "explode(toks) AS term")
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .withColumn(
-            "term_bucket", F.expr(f"{hex60('term')} % {num_buckets}").cast("int")
-        )
-    )
+    Every build commits the next version: postings AND stats live
+    together inside an immutable ``path/vNNNNNNNN/`` committed by one
+    atomic rename, so a later merge or compaction never unlinks posting
+    files under an in-flight scan and the postings+stats pair always
+    flips together.  Readers resolve it via :func:`text_index_root`."""
+    dl, postings = _text_postings(documents, num_buckets)
     # dl_sum (exact decimal) rides along so merge_text_index can fold new
     # batches into avgdl EXACTLY instead of reconstructing it from the
     # rounded double mean
@@ -2386,32 +2421,12 @@ def write_text_index(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.col("dl").cast(_DEC)).alias("dl_sum"),
     )
-    # bucket-aligned shuffle before the partitioned write: each bucket
-    # lands in exactly one task => ONE file per bucket directory.  The
-    # default layout (every write task touching every bucket) explodes
-    # into tasks x buckets small files, and query-time file listing
-    # then swamps the pruning win.
-    if not versioned:
-        (
-            postings.repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{path}/postings")
-        )
-        stats.write.mode("overwrite").parquet(f"{path}/stats")
-        return
-    spark = documents.sparkSession
-    with maintenance_lease(spark, f"{path}/postings"):
-        clean_version_scratch(spark, path)
-        tmp = version_scratch(path)
-        (
-            postings.repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{tmp}/postings")
-        )
+
+    def write(tmp):
+        _write_postings(postings, f"{tmp}/postings", "overwrite")
         stats.write.mode("overwrite").parquet(f"{tmp}/stats")
-        commit_version(spark, path, tmp)
+
+    _commit_index(documents.sparkSession, path, write)
 
 
 def bm25_from_index(
@@ -3041,11 +3056,25 @@ def phrase_search(documents: DataFrame, phrase: list[str]) -> DataFrame:
     return _phrase_occurrences(toks, phrase)
 
 
+def _positional_postings(documents: DataFrame, num_buckets: int) -> DataFrame:
+    """(doc_id, term, positions, term_bucket) postings of a positional
+    build or merge batch."""
+    toks = documents.selectExpr(
+        "doc_id", f"posexplode_outer({TOKENS}) AS (pos, token)"
+    ).filter("token IS NOT NULL AND token != ''")
+    return (
+        toks.groupBy("doc_id", F.col("token").alias("term"))
+        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
+        .withColumn(
+            "term_bucket", F.expr(f"{hex60('term')} % {num_buckets}").cast("int")
+        )
+    )
+
+
 def write_positional_index(
     documents: DataFrame,
     path: str,
     num_buckets: int = 64,
-    versioned: bool = False,
 ) -> None:
     """Persist a POSITIONAL inverted index: postings (term, doc_id,
     positions sorted-array) written ``partitionBy(term_bucket)`` with the
@@ -3054,37 +3083,14 @@ def write_positional_index(
     (~|terms|/num_buckets of the index), never the corpus.  Positions
     make the index strictly stronger than the BM25 one: tf = size
     (positions), so ranked retrieval could share it; kept separate so
-    each artifact stays append-mergeable on its own.  ``versioned=True``
-    writes the snapshot-isolated layout (see :func:`write_text_index`)."""
-    toks = documents.selectExpr(
-        "doc_id", f"posexplode_outer({TOKENS}) AS (pos, token)"
-    ).filter("token IS NOT NULL AND token != ''")
-    postings = (
-        toks.groupBy("doc_id", F.col("token").alias("term"))
-        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-        .withColumn(
-            "term_bucket", F.expr(f"{hex60('term')} % {num_buckets}").cast("int")
-        )
+    each artifact stays append-mergeable on its own.  Every build
+    commits the next version (see :func:`write_text_index`)."""
+    postings = _positional_postings(documents, num_buckets)
+    _commit_index(
+        documents.sparkSession,
+        path,
+        lambda tmp: _write_postings(postings, f"{tmp}/postings", "overwrite"),
     )
-    if not versioned:
-        (
-            postings.repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{path}/postings")
-        )
-        return
-    spark = documents.sparkSession
-    with maintenance_lease(spark, f"{path}/postings"):
-        clean_version_scratch(spark, path)
-        tmp = version_scratch(path)
-        (
-            postings.repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{tmp}/postings")
-        )
-        commit_version(spark, path, tmp)
 
 
 def phrase_search_from_index(
@@ -4141,136 +4147,76 @@ def merge_text_index(
 ) -> None:
     """Append-merge a NEW document batch into the persisted BM25 index —
     the incremental maintenance the index layout was designed for, now
-    as an operation: the batch's postings APPEND into the existing
-    bucket directories (no old posting is read or rewritten — one extra
-    file per touched bucket per batch, compacted by a rebuild when file
-    counts warrant), and the corpus stats fold EXACTLY via the stored
-    decimal dl_sum, so the merged index is bit-identical to a
-    from-scratch rebuild over the union (pytest-pinned).  Contract: new
-    doc_ids must be new — re-ingesting an id duplicates its postings
-    (use the rebuild path for corrections, like the LSH store's
-    new-wins merge).
+    as an operation: the batch's postings APPEND to the existing bucket
+    directories' files (no old posting is decoded or rewritten — one
+    extra file per touched bucket per batch, compacted by
+    :func:`compact_index_store` when file counts warrant), and the
+    corpus stats fold EXACTLY via the stored decimal dl_sum, so the
+    merged index is bit-identical to a from-scratch rebuild over the
+    union (pytest-pinned).  Contract: new doc_ids must be new —
+    re-ingesting an id duplicates its postings (use the rebuild path for
+    corrections, like the LSH store's new-wins merge).
+
+    Committed versions are immutable, so the merge lands as the NEXT
+    version: the current postings are byte-copied into the scratch dir
+    (:func:`functions.fs.copy_tree` — no decode, file layout and fan-out
+    preserved), the batch postings append there, the folded stats are
+    written beside them, and one rename commits the whole payload.
+    Readers of the old version keep a consistent postings+stats
+    snapshot.
 
     Scale shape: indexing cost is one scan of the NEW batch only; the
     repartition-before-partitionBy discipline keeps the append at one
-    file per bucket; stats are a 1-row read + 1-row write.
-
-    Crash safety: heals a :func:`compact_index_store` crash window
-    (``recover_swap``) before appending — see the comment at the write.
-
-    VERSIONED stores: committed versions are immutable, so the merge
-    does NOT append inside the live ``vNNNNNNNN`` — it byte-copies the
-    current version's postings into a scratch dir
-    (:func:`functions.fs.copy_tree` — no decode, file layout and
-    fan-out preserved), appends the batch postings there, writes the
-    folded stats beside them, and commits the whole payload as the NEXT
-    version in one rename.  Readers of the old version keep a
-    consistent postings+stats snapshot; the flat layout keeps the
-    cheaper in-place append (its readers have no snapshot to protect).
+    file per bucket; stats are a 1-row read + 1-row write.  The copy
+    forward is index-sized I/O, so a merge costs O(index) bytes moved.
     """
-    # single-writer lease on the postings: an append racing another
-    # process's compaction could land mid-swap (or inside a directory the
-    # swap is about to delete); the stats fold below is read-modify-write
-    with maintenance_lease(spark, f"{path}/postings"):
-        # heal a compaction crash window FIRST: without this, an append
-        # that lands while only postings__old exists silently CREATES a
-        # postings store holding just this batch, and the next
-        # compaction's swap then deletes the recovery copy — permanent
-        # loss of every older posting.  (Versioned stores: recover is a
-        # no-op; resolve the current version INSIDE the lease so the
-        # copy and the stats fold read the same snapshot.)
-        recover_swap(spark, f"{path}/postings")
+    dl, postings = _text_postings(new_documents, num_buckets)
+    batch = dl.agg(
+        F.count(F.lit(1)).cast("long").alias("b_docs"),
+        F.sum(F.col("dl").cast(_DEC)).alias("b_sum"),
+    )
+
+    def write(tmp):
+        # resolved under the lease: the copy and the stats fold read
+        # the same version
         root = text_index_root(spark, path)
-        versioned = root != path
-        if versioned:
-            clean_version_scratch(spark, path)
-            vtmp = version_scratch(path)
-            copy_tree(spark, f"{root}/postings", f"{vtmp}/postings")
-            dst = vtmp
-        else:
-            dst = root
-        dl = new_documents.selectExpr("doc_id", f"{TOKENS} AS toks").selectExpr(
-            "doc_id", "toks", "CAST(size(toks) AS BIGINT) AS dl"
-        )
-        postings = (
-            dl.selectExpr("doc_id", "dl", "explode(toks) AS term")
-            .groupBy("doc_id", "dl", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-            .withColumn(
-                "term_bucket", F.expr(f"{hex60('term')} % {num_buckets}").cast("int")
-            )
-        )
+        copy_tree(spark, f"{root}/postings", f"{tmp}/postings")
+        _write_postings(postings, f"{tmp}/postings", "append")
         (
-            postings.repartition("term_bucket")
-            .write.mode("append")
-            .partitionBy("term_bucket")
-            .parquet(f"{dst}/postings")
-        )
-        old = spark.read.parquet(f"{root}/stats")
-        batch = dl.agg(
-            F.count(F.lit(1)).cast("long").alias("b_docs"),
-            F.sum(F.col("dl").cast(_DEC)).alias("b_sum"),
-        )
-        merged = (
-            old.crossJoin(F.broadcast(batch))
+            spark.read.parquet(f"{root}/stats")
+            .crossJoin(F.broadcast(batch))
             .selectExpr(
                 "CAST(dl_sum + b_sum AS DOUBLE) / (n_docs + b_docs) AS avgdl",
                 "n_docs + b_docs AS n_docs",
                 f"CAST(dl_sum + b_sum AS {_DEC}) AS dl_sum",
             )
-            .localCheckpoint()
+            .write.mode("overwrite")
+            .parquet(f"{tmp}/stats")
         )
-        merged.write.mode("overwrite").parquet(f"{dst}/stats")
-        if versioned:
-            commit_version(spark, path, vtmp)
+
+    _commit_index(spark, path, write)
 
 
 def merge_positional_index(
     documents: DataFrame, path: str, num_buckets: int = 64
 ) -> None:
     """Append-merge a NEW document batch into the positional index —
-    even simpler than :func:`merge_text_index` because positions are
-    strictly per-document state: the batch's postings append into the
-    existing bucket directories and there is no global statistic to
-    fold.  Same contract: new doc_ids only (rebuild for corrections);
+    simpler than :func:`merge_text_index` because positions are
+    strictly per-document state: the batch's postings append to the
+    copied-forward bucket directories and there is no global statistic
+    to fold.  Same contract: new doc_ids only (rebuild for corrections);
     one extra file per touched bucket per batch; indexing cost is one
-    scan of the new batch.  Versioned stores: same copy-forward + commit
-    shape as :func:`merge_text_index` — committed versions stay
-    immutable, the merge lands as the NEXT version.
+    scan of the new batch; the merge commits the NEXT version.
     """
-    # same lease + compaction-crash-window healing as merge_text_index:
-    # never append-create a store whose only surviving copy is at __old,
-    # never append during another process's swap
     spark = documents.sparkSession
-    with maintenance_lease(spark, f"{path}/postings"):
-        recover_swap(spark, f"{path}/postings")
+    postings = _positional_postings(documents, num_buckets)
+
+    def write(tmp):
         root = text_index_root(spark, path)
-        versioned = root != path
-        if versioned:
-            clean_version_scratch(spark, path)
-            vtmp = version_scratch(path)
-            copy_tree(spark, f"{root}/postings", f"{vtmp}/postings")
-            dst = vtmp
-        else:
-            dst = root
-        toks = documents.selectExpr(
-            "doc_id", f"posexplode_outer({TOKENS}) AS (pos, token)"
-        ).filter("token IS NOT NULL AND token != ''")
-        postings = (
-            toks.groupBy("doc_id", F.col("token").alias("term"))
-            .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-            .withColumn(
-                "term_bucket", F.expr(f"{hex60('term')} % {num_buckets}").cast("int")
-            )
-        )
-        (
-            postings.repartition("term_bucket")
-            .write.mode("append")
-            .partitionBy("term_bucket")
-            .parquet(f"{dst}/postings")
-        )
-        if versioned:
-            commit_version(spark, path, vtmp)
+        copy_tree(spark, f"{root}/postings", f"{tmp}/postings")
+        _write_postings(postings, f"{tmp}/postings", "append")
+
+    _commit_index(spark, path, write)
 
 
 def index_files_per_bucket(spark, path: str) -> DataFrame:
@@ -4312,55 +4258,28 @@ def needs_compaction(
 
 def compact_index_store(spark, path: str) -> None:
     """Compact an incremental text/positional index back to ONE posting
-    file per bucket — the missing third leg of the index lifecycle
-    (build → append-merge × N → compact), so reclaiming the merge
-    fan-out no longer requires a full corpus-scan rebuild.
+    file per bucket — the third leg of the index lifecycle (build →
+    append-merge × N → compact), so reclaiming the merge fan-out needs
+    no corpus-scan rebuild.
 
     The postings are repartitioned BY the bucket column (each bucket
-    lands in exactly one task ⇒ exactly one file per directory), written
-    to a SIBLING temp directory, then swapped into place by rename
-    (functions/fs.swap_into_place) — the original postings are never
-    deleted before the compacted copy is fully written, so a mid-write
-    failure cannot destroy the only copy.  Query results are
+    lands in exactly one task ⇒ exactly one file per directory) and
+    written, with a byte copy of the 1-row stats table (text index),
+    as the NEXT version, committed by one rename: an in-flight scan of
+    the current version never loses a file, and a failure before the
+    commit leaves only invisible scratch.  Query results are
     bit-identical before and after (pytest-pinned): compaction moves
     bytes, never values.  Cost is INDEX-sized, not corpus-sized — the
     postings frame is read and written once, with no tokenization and
-    no touch of the documents table; stats sidecars (text index) are
-    already 1-row and are left alone.
+    no touch of the documents table.
     """
-    src = f"{path}/postings"
-    tmp = f"{path}/postings__compacting"
-    # single-writer lease on the postings (the store's swap-managed
-    # component): a concurrent append-merge or second compactor waits
-    with maintenance_lease(spark, src):
-        recover_swap(spark, src)  # heal a crashed prior swap before reading
+
+    def write(tmp):
         root = text_index_root(spark, path)
-        if root != path:
-            # VERSIONED layout: build the compacted postings (and carry
-            # the stats sidecar unchanged) as the NEXT version, commit
-            # with one rename — an in-flight scan of the current version
-            # never loses a file; flat-layout swaps tolerate this only
-            # because they are rare
-            clean_version_scratch(spark, path)
-            vtmp = version_scratch(path)
-            (
-                spark.read.parquet(f"{root}/postings")
-                .repartition("term_bucket")
-                .write.mode("overwrite")
-                .partitionBy("term_bucket")
-                .parquet(f"{vtmp}/postings")
-            )
-            if path_exists(spark, f"{root}/stats"):
-                spark.read.parquet(f"{root}/stats").coalesce(
-                    1
-                ).write.mode("overwrite").parquet(f"{vtmp}/stats")
-            commit_version(spark, path, vtmp)
-            return
-        (
-            spark.read.parquet(src)
-            .repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(tmp)
+        _write_postings(
+            spark.read.parquet(f"{root}/postings"), f"{tmp}/postings", "overwrite"
         )
-        swap_into_place(spark, tmp, src)
+        if path_exists(spark, f"{root}/stats"):
+            copy_tree(spark, f"{root}/stats", f"{tmp}/stats")
+
+    _commit_index(spark, path, write)

@@ -2686,10 +2686,12 @@ def _q_ivf_topk(spark, sf_dir):
     return _sim.ivf_topk(_t(spark, sf_dir, "embeddings"))
 
 
-def _cached_index_path(spark, sf_dir, name: str, tag: str, write) -> str:
+def _cached_index_path(
+    spark, sf_dir, name: str, tag: str, write, table: str = "embeddings"
+) -> str:
     """Build (once per input-content identity) and return a cached index
-    store for sf_dir's embeddings table: ``write(embeddings, path)``
-    into ``<tmpdir>/<name>_index_<key>``.
+    store for sf_dir's ``table``: ``write(frame, path)`` into
+    ``<tmpdir>/<name>_index_<tag>_<key>``.
 
     The cache key digests every data file's (relpath, size, mtime_ns): a
     Spark-written table is a DIRECTORY, whose own os.stat reflects the
@@ -2702,13 +2704,18 @@ def _cached_index_path(spark, sf_dir, name: str, tag: str, write) -> str:
     place: the build commits a version inside its own root, so the
     atomic rename of that root is the completion signal — concurrent
     runs can never probe a half-written index, and whichever rename
-    loses just uses the winner's identical index."""
+    loses just uses the winner's identical index.  After a build, the
+    same-``name`` caches of every other tag (and the untagged names of
+    earlier builds) are deleted, so a format bump does not leave the old
+    stores behind; caches of this tag under another key (another
+    ``sf_dir``) stay."""
     import hashlib
     import os
+    import re
     import shutil
     import tempfile
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
+    src = os.path.join(sf_dir, f"{table}.parquet")
     files = [src]
     if os.path.isdir(src):
         files = sorted(
@@ -2723,20 +2730,26 @@ def _cached_index_path(spark, sf_dir, name: str, tag: str, write) -> str:
         h.update(
             f"{os.path.relpath(p, sf_dir)}|{st.st_size}|{st.st_mtime_ns}\n".encode()
         )
-    path = os.path.join(
-        tempfile.gettempdir(), f"{name}_index_{h.hexdigest()[:16]}"
-    )
+    tmp = tempfile.gettempdir()
+    path = os.path.join(tmp, f"{name}_index_{tag}_{h.hexdigest()[:16]}")
     if not os.path.exists(path):
         scratch = tempfile.mkdtemp(prefix=f"{name}_build_")
         try:
             build = os.path.join(scratch, "index")
-            write(_t(spark, sf_dir, "embeddings"), build)
+            write(_t(spark, sf_dir, table), build)
             try:
                 os.rename(build, path)
             except OSError:
                 pass  # concurrent run won the rename
         finally:
             shutil.rmtree(scratch, ignore_errors=True)
+        stale = re.compile(
+            rf"{re.escape(name)}_index_(?:(?P<tag>.+)_)?[0-9a-f]{{16}}"
+        )
+        for d in os.listdir(tmp):
+            m = stale.fullmatch(d)
+            if m and m["tag"] != tag:
+                shutil.rmtree(os.path.join(tmp, d), ignore_errors=True)
     return path
 
 
@@ -5536,38 +5549,16 @@ def _q_cohort_retention(spark, sf_dir):
 
 
 def _text_index_path(spark, sf_dir) -> str:
-    """Build (once per input-content identity) and return the cached
-    write_text_index path for sf_dir's documents table.  Same tag rules
-    as _cached_index_path: digest every data file's (relpath, size,
-    mtime_ns) + a format version; build into a temp dir and atomically
-    rename so concurrent runs can't observe a half-written index."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    files = [src]
-    if os.path.isdir(src):
-        files = sorted(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(src)
-            for f in fs
-            if not f.startswith((".", "_"))
-        )
-    h = hashlib.sha256(b"textidx-format-v2\n")
-    for p in files:
-        st = os.stat(p)
-        h.update(f"{os.path.relpath(p, sf_dir)}|{st.st_size}|{st.st_mtime_ns}\n".encode())
-    path = os.path.join(tempfile.gettempdir(), f"text_index_{h.hexdigest()[:16]}")
-    if not os.path.isdir(path):
-        tmp = tempfile.mkdtemp(prefix="text_index_build_")
-        _tx.write_text_index(_t(spark, sf_dir, "documents"), tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race: reuse winner
-    return path
+    """The cached write_text_index store for sf_dir's documents (v3:
+    every build commits a ``vNNNNNNNN`` version)."""
+    return _cached_index_path(
+        spark,
+        sf_dir,
+        "text",
+        "textidx-format-v3",
+        _tx.write_text_index,
+        table="documents",
+    )
 
 
 @_entry(

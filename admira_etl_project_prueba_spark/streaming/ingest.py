@@ -30,13 +30,17 @@ from pyspark.sql.streaming import StreamingQuery
 
 from admira_etl_project_prueba_spark.functions.dates import parse_flexible_timestamp
 from admira_etl_project_prueba_spark.functions.fs import (
-    heal_if_crashed,
+    clean_version_scratch,
+    commit_version,
+    dir_nonempty,
+    fold_whole_store,
     is_file_not_found,
     maintenance_lease,
     path_exists,
     recover_swap,
-    swap_into_place,
-    swap_window_open,
+    resolve_store_root,
+    sweep_flat_remnants,
+    version_scratch,
 )
 from admira_etl_project_prueba_spark.operators.transform import transform
 from admira_etl_project_prueba_spark.schemas import (
@@ -490,74 +494,6 @@ def stream_near_dup_matches(
     )
 
 
-def _store_exists(spark: SparkSession, path: str) -> bool:
-    """True iff the store exists, healing a crashed swap first — the
-    READ-PATH probe (folds decide existence inside :func:`_fold_swapped`'s
-    lease instead; this is for monitors/read paths outside a lease).
-
-    Stateful streams use this to distinguish FIRST BATCH (store genuinely
-    absent → start from the delta) from a FAILING READ (permissions,
-    corrupt footer, concurrent writer).  A bare ``except Exception``
-    around the read conflated the two, and the subsequent overwrite then
-    silently discarded all accumulated state on any transient failure —
-    now only a confirmed-missing path falls back; every other error
-    propagates so the micro-batch retries instead of destroying history.
-
-    A window that stays open after the heal (a LIVE writer mid-swap in
-    another process) RAISES rather than answers: "False" would read a
-    real store as absent, exactly the silent-reset hazard this probe
-    exists to prevent.
-
-    Healing runs first: a crash between ``swap_into_place``'s two
-    renames leaves the only copy at ``path__old`` — without the
-    recovery, the restarted stream would read "absent", take the
-    first-batch path, and the next successful swap would delete the
-    recovery copy (silent total state loss).  The heal is the
-    lease-guarded :func:`heal_if_crashed` (round 9): from a bare read
-    path an open window is ambiguous — crashed swap (heal) vs another
-    process's swap in flight (hands off; renaming ``__old`` back would
-    corrupt the live writer's second rename) — and only the lease can
-    tell them apart.  Existence itself is ``functions/fs.path_exists``
-    (one implementation of the exists-vs-failing-read seam, not two to
-    keep in sync).
-    """
-    heal_if_crashed(spark, path)
-    if swap_window_open(spark, path):
-        raise IOError(
-            f"store at {path} is mid-swap by another process "
-            "(maintenance in progress) — retry"
-        )
-    return path_exists(spark, path)
-
-
-def _fold_swapped(spark: SparkSession, store_path: str, merge_fn) -> None:
-    """Crash-safe, SINGLE-WRITER store fold: the whole read-modify-write
-    cycle — exists-check, merge-plan build, write, rename swap — runs
-    under the store's filesystem maintenance lease
-    (``functions/fs.maintenance_lease``), so a fold in one process and a
-    compaction/retrain in another can never interleave renames, and the
-    first-batch decision can never be made against a store another
-    writer is mid-swap on (deciding OUTSIDE the lease could read
-    "absent" during a live swap and silently reset state to the batch).
-
-    ``merge_fn(prev_or_none) -> DataFrame`` receives the current store
-    frame (None on confirmed first batch) and returns the merged frame.
-    When the store exists it is the fold's INPUT: the merge is written
-    to a sibling directory and swapped in by rename — an in-place
-    ``mode('overwrite')`` deletes the only copy before the write job
-    finishes, so a mid-write failure (executor loss, OOM) would destroy
-    all accumulated state.  First batch writes directly."""
-    with maintenance_lease(spark, store_path):
-        recover_swap(spark, store_path)  # we hold the lease: safe to heal
-        if path_exists(spark, store_path):
-            merged = merge_fn(spark.read.parquet(store_path))
-            tmp = store_path.rstrip("/") + "__merging"
-            merged.write.mode("overwrite").parquet(tmp)
-            swap_into_place(spark, tmp, store_path)
-        else:
-            merge_fn(None).write.mode("overwrite").parquet(store_path)
-
-
 def _interval_us(interval: str) -> int:
     """'2 hours' → microseconds (the units Structured Streaming uses)."""
     n, unit = interval.split()
@@ -750,10 +686,11 @@ def stream_token_sketch(
     Correctness rests on sketch LINEARITY (sketch(A ∪ B) = sketch(A) +
     sketch(B), pinned by the batch test): the end state equals a one-shot
     batch sketch over all inputs regardless of micro-batch boundaries.
-    The merged frame is staged to a sibling directory and swapped into
-    place by rename — the store is both input and output of the merge,
-    and an in-place overwrite would delete its own source before the
-    write finishes.  foreachBatch is
+    Each fold commits the merged sketch as the store's next version
+    (``functions/fs.fold_whole_store``): the store is both input and
+    output of the merge, so the fold never writes the version it reads,
+    and readers of the previous version keep their snapshot.  Read the
+    store through ``fs.resolve_store_root``.  foreachBatch is
     at-least-once on failure/retry: a replayed batch double-counts; an
     exactly-once deployment keys writes by batch_id in a transactional
     sink (same caveat as every additive foreachBatch merge).
@@ -769,14 +706,15 @@ def stream_token_sketch(
         def merge(prev):
             if prev is None:
                 return delta  # confirmed first batch (checked UNDER the lease)
-            # read errors propagate → micro-batch retries (see _fold_swapped)
+            # read errors propagate → micro-batch retries; falling back to
+            # delta here would overwrite (lose) every earlier count
             return (
                 prev.unionByName(delta)
                 .groupBy("r", "bucket")
                 .agg(F.sum("cnt").cast("long").alias("cnt"))
             )
 
-        _fold_swapped(spark, store_path, merge)
+        fold_whole_store(spark, store_path, merge)
 
     return (
         doc_stream.writeStream.foreachBatch(process)
@@ -802,10 +740,10 @@ def stream_user_hll(
     state equals a one-shot batch sketch over all inputs regardless of
     micro-batch boundaries, and — unlike the additive count-min merge —
     a replayed at-least-once batch is HARMLESS (max is idempotent), so
-    this needs no transactional sink for exactly-once counts.  The
-    merged frame is staged to a sibling directory and rename-swapped
-    over its own source (crash-safe fold).  Estimates come from reading
-    the store through sketches.hll_estimate.
+    this needs no transactional sink for exactly-once counts.  Each fold
+    commits the merged registers as the store's next version
+    (``functions/fs.fold_whole_store``).  Estimates come from reading
+    the store (``fs.resolve_store_root``) through sketches.hll_estimate.
     """
     from admira_etl_project_prueba_spark.operators.sketches import (
         hll_merge,
@@ -827,7 +765,7 @@ def stream_user_hll(
             # delta here would overwrite (lose) all accumulated registers
             return hll_merge(prev.unionByName(delta), g)
 
-        _fold_swapped(spark, store_path, merge)
+        fold_whole_store(spark, store_path, merge)
 
     return (
         event_stream.writeStream.foreachBatch(process)
@@ -872,6 +810,39 @@ def windowed_user_hll(
     )
 
 
+def _write_batch_delta(
+    spark: SparkSession, store_path: str, delta: DataFrame
+) -> None:
+    """Land one micro-batch's ``batch_id``-keyed delta in a delta store,
+    under the store's lease (a delta must not interleave with a
+    compaction's read-and-commit).  The current root is resolved under
+    the lease: an absent store gets the delta as its first version (v1,
+    written to scratch and committed by one rename); otherwise the delta
+    dynamic-overwrites its own ``batch_id`` partition inside the current
+    version, so a replay replaces its earlier write — the way IVF merges
+    append into their current version.  A legacy flat delta store takes
+    the delta in place, keeping its payload visible until
+    :func:`compact_sketch_store` migrates it."""
+    with maintenance_lease(spark, store_path):
+        # legacy flat store: heal an older build's compaction-swap crash
+        # window first, or the delta would create a batch-only store
+        # beside the orphaned recovery copy
+        recover_swap(spark, store_path)
+        root = resolve_store_root(spark, store_path)
+        if root == store_path and not dir_nonempty(spark, store_path):
+            clean_version_scratch(spark, store_path)
+            tmp = version_scratch(store_path)
+            delta.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
+            commit_version(spark, store_path, tmp)
+            return
+        (
+            delta.write.mode("overwrite")
+            .partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(root)
+        )
+
+
 def stream_token_sketch_idempotent(
     doc_stream: DataFrame,
     store_path: str,
@@ -898,19 +869,7 @@ def stream_token_sketch_idempotent(
         delta = cms_sketch(batch_df, depth, width).withColumn(
             "batch_id", F.lit(batch_id).cast("long")
         )
-        # lease + heal: a delta landing in a compact_sketch_store crash
-        # window (only store__old present) would CREATE a batch-only
-        # store whose next swap deletes the recovery copy; and a delta
-        # written during another process's live swap could land mid-
-        # rename.  The lease serializes against both.
-        with maintenance_lease(batch_df.sparkSession, store_path):
-            recover_swap(batch_df.sparkSession, store_path)
-            (
-                delta.write.mode("overwrite")
-                .partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(store_path)
-            )
+        _write_batch_delta(batch_df.sparkSession, store_path, delta)
 
     return (
         doc_stream.writeStream.foreachBatch(process)
@@ -945,15 +904,7 @@ def stream_source_token_counts(
         delta = source_bucket_counts(batch_df, n_buckets).withColumn(
             "batch_id", F.lit(batch_id).cast("long")
         )
-        # same lease + heal rationale as the idempotent CMS delta writer
-        with maintenance_lease(batch_df.sparkSession, store_path):
-            recover_swap(batch_df.sparkSession, store_path)
-            (
-                delta.write.mode("overwrite")
-                .partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(store_path)
-            )
+        _write_batch_delta(batch_df.sparkSession, store_path, delta)
 
     return (
         doc_stream.writeStream.foreachBatch(process)
@@ -975,7 +926,7 @@ def source_kl_from_store(
     )
 
     per = (
-        spark.read.parquet(store_path)
+        spark.read.parquet(resolve_store_root(spark, store_path))
         .groupBy("source", "b")
         .agg(F.sum("c").alias("c"))
     )
@@ -986,7 +937,7 @@ def read_sketch_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Materialize the current sketch from a batch-partitioned store:
     additive fold over all batch deltas (linearity)."""
     return (
-        spark.read.parquet(store_path)
+        spark.read.parquet(resolve_store_root(spark, store_path))
         .groupBy("r", "bucket")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
@@ -1027,12 +978,20 @@ def compact_sketch_store(
     batch_id ≤ the last COMMITTED batch id (plus prior compactions),
     leaving in-doubt deltas as-is.  Without a checkpoint_dir, the caller
     must guarantee the stream is stopped with its last batch committed.
+
+    The folded store is committed as the NEXT version (one rename), so
+    a reader that resolved the previous version completes against it.
+    A legacy flat delta store is migrated here: its folded payload
+    becomes v1 and the flat remnants are swept.
     """
     # single-writer lease: a concurrent delta writer or second compactor
-    # must wait — interleaved renames on one store corrupt it
+    # must wait — a delta landing between the read and the commit would
+    # be lost from the next version
     with maintenance_lease(spark, store_path):
-        recover_swap(spark, store_path)  # heal a crashed prior swap first
-        store = spark.read.parquet(store_path)
+        # legacy flat store: heal an older build's swap crash window
+        recover_swap(spark, store_path)
+        root = resolve_store_root(spark, store_path)
+        store = spark.read.parquet(root)
         if checkpoint_dir is not None:
             last = last_committed_batch_id(spark, checkpoint_dir)
             committed = F.col("batch_id") <= F.lit(-1 if last is None else last)
@@ -1047,13 +1006,12 @@ def compact_sketch_store(
         )
         if leftover is not None:
             merged = merged.unionByName(leftover.select(*merged.columns))
-        # store is input AND output of the fold: stage the folded layout in
-        # a sibling directory and swap it in by rename — an in-place static
-        # overwrite deletes every partition before the write job finishes,
-        # so a mid-write failure would destroy the only copy of the store
-        tmp = store_path.rstrip("/") + "__compacting"
+        clean_version_scratch(spark, store_path)
+        tmp = version_scratch(store_path)
         merged.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-        swap_into_place(spark, tmp, store_path)
+        commit_version(spark, store_path, tmp)
+        if root == store_path:
+            sweep_flat_remnants(spark, store_path)
 
 
 def stream_scd2(
@@ -1101,7 +1059,6 @@ def stream_scd2(
         # — is one leased critical section: a second writer's concurrent
         # bucket rewrite would interleave partition replacements
         with maintenance_lease(spark, store_path):
-            recover_swap(spark, store_path)
             if path_exists(spark, store_path):
                 # read errors propagate → micro-batch retries; falling back
                 # to the bare batch would rewrite touched buckets WITHOUT
@@ -1212,15 +1169,7 @@ def stream_value_histogram(
         delta = value_histogram(batch_df, lo, hi, n_bins).withColumn(
             "batch_id", F.lit(batch_id).cast("long")
         )
-        # same lease + heal rationale as the idempotent CMS delta writer
-        with maintenance_lease(batch_df.sparkSession, store_path):
-            recover_swap(batch_df.sparkSession, store_path)
-            (
-                delta.write.mode("overwrite")
-                .partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(store_path)
-            )
+        _write_batch_delta(batch_df.sparkSession, store_path, delta)
 
     return (
         event_stream.writeStream.foreachBatch(process)
@@ -1234,7 +1183,7 @@ def read_histogram_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Materialize the current histogram from a batch-partitioned store:
     additive fold over all batch deltas (linearity of counts)."""
     return (
-        spark.read.parquet(store_path)
+        spark.read.parquet(resolve_store_root(spark, store_path))
         .groupBy("event_type", "bin")
         .agg(F.sum("n").cast("long").alias("n"))
     )

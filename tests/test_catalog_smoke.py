@@ -78,3 +78,50 @@ def test_oracles_fetch_path_stable(sf_dir):
     from tools.fetch_path_audit import audit
 
     assert audit(sf_dir) == []
+
+
+def test_index_cache_reclaims_other_format_tags(spark, sf_dir, tmp_path, monkeypatch):
+    """A cached index store is named ``<name>_index_<tag>_<key>``.  A
+    build deletes the same-name caches of every other tag and the
+    untagged names of earlier builds; caches of the current tag under
+    another key (as from another sf_dir), other names' caches and build
+    scratch stay.  The text-index cache goes through the same helper: a
+    fresh build holds exactly one committed version."""
+    import os
+    import tempfile
+
+    from admira_etl_project_prueba_spark.plans import catalog
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    planted = {
+        "ivf_index_0123456789abcdef": False,  # untagged, earlier naming
+        "ivf_index_ivf-format-v2_0123456789abcdef": False,  # another tag
+        "ivf_index_ivf-format-v3_fedcba9876543210": True,  # this tag, another key
+        "ivfpq_index_ivfpq-format-v2_0123456789abcdef": True,  # another name
+        "ivf_build_x1y2z3": True,  # a build's scratch
+        "text_index_0123456789abcdef": False,  # the untagged v2 text cache
+    }
+    for d in planted:
+        os.makedirs(tmp_path / d)
+    built = []
+
+    def write(frame, path):
+        built.append(path)
+        os.makedirs(os.path.join(path, "v00000001"))
+
+    path = catalog._cached_index_path(spark, sf_dir, "ivf", "ivf-format-v3", write)
+    assert os.path.basename(path).startswith("ivf_index_ivf-format-v3_")
+    assert len(built) == 1 and os.listdir(path) == ["v00000001"]
+    left = {d for d in planted if os.path.exists(tmp_path / d)}
+    assert left == {d for d, keep in planted.items() if keep} | {
+        "text_index_0123456789abcdef"
+    }
+    # a second call serves the cache: no build
+    again = catalog._cached_index_path(spark, sf_dir, "ivf", "ivf-format-v3", write)
+    assert again == path and len(built) == 1
+
+    text = catalog._text_index_path(spark, sf_dir)
+    assert os.path.basename(text).startswith("text_index_textidx-format-v3_")
+    assert os.listdir(text) == ["v00000001"]
+    assert not os.path.exists(tmp_path / "text_index_0123456789abcdef")
+    assert os.path.exists(path)

@@ -1166,6 +1166,7 @@ def test_bm25_index_matches_scan_and_prunes_partitions(spark, sf_dir, tmp_path):
     from admira_etl_project_prueba_spark.operators.textops import (
         bm25_from_index,
         bm25_rank,
+        text_index_root,
         write_text_index,
     )
     from admira_etl_project_prueba_spark.sources.tables import load_table
@@ -1173,6 +1174,7 @@ def test_bm25_index_matches_scan_and_prunes_partitions(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents")
     idx = str(tmp_path / "tix")
     write_text_index(docs, idx)
+    postings = f"{text_index_root(spark, idx)}/postings"
     terms = ["spark", "join"]
     want = [tuple(r) for r in bm25_rank(docs, terms).collect()]
     got_df = bm25_from_index(spark, idx, terms)
@@ -1182,22 +1184,21 @@ def test_bm25_index_matches_scan_and_prunes_partitions(spark, sf_dir, tmp_path):
     assert "term_bucket" in plan  # partition filter reached the scan
     # pruned read: only the buckets the two terms hash into
     import hashlib
+    import os
 
     buckets = {int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % 64 for t in terms}
     read_dirs = {
-        d.name
-        for d in (tmp_path / "tix" / "postings").iterdir()
-        if d.name.startswith("term_bucket=")
+        d for d in os.listdir(postings) if d.startswith("term_bucket=")
     }
     assert {f"term_bucket={b}" for b in buckets} <= read_dirs
     scanned = (
-        spark.read.parquet(f"{idx}/postings")
+        spark.read.parquet(postings)
         .filter(
             f"term_bucket IN ({', '.join(map(str, buckets))})"
         )
         .count()
     )
-    total = spark.read.parquet(f"{idx}/postings").count()
+    total = spark.read.parquet(postings).count()
     assert scanned < total  # the pruned slice is a strict subset
 
 
@@ -1672,6 +1673,7 @@ def test_text_index_merge_equals_rebuild(spark, sf_dir, tmp_path):
     from admira_etl_project_prueba_spark.operators.textops import (
         bm25_from_index,
         merge_text_index,
+        text_index_root,
         write_text_index,
     )
     from admira_etl_project_prueba_spark.sources.tables import load_table
@@ -1686,12 +1688,17 @@ def test_text_index_merge_equals_rebuild(spark, sf_dir, tmp_path):
 
     def postings(p):
         return sorted(
-            map(tuple, spark.read.parquet(f"{p}/postings").collect())
+            map(
+                tuple,
+                spark.read.parquet(f"{text_index_root(spark, p)}/postings").collect(),
+            )
         )
 
+    def stats(p):
+        return spark.read.parquet(f"{text_index_root(spark, p)}/stats").collect()[0]
+
     assert postings(inc) == postings(full)
-    s_inc = spark.read.parquet(f"{inc}/stats").collect()[0]
-    s_full = spark.read.parquet(f"{full}/stats").collect()[0]
+    s_inc, s_full = stats(inc), stats(full)
     assert (s_inc["n_docs"], s_inc["avgdl"], s_inc["dl_sum"]) == (
         s_full["n_docs"], s_full["avgdl"], s_full["dl_sum"]
     )
@@ -1787,15 +1794,17 @@ def test_index_compaction_restores_one_file_per_bucket(spark, sf_dir, tmp_path):
 
 
 def test_versioned_text_index_lifecycle(spark, sf_dir, tmp_path):
-    """The versioned text-index layout is interchangeable with flat
-    through every lifecycle step — build, append-merge, fan-out monitor,
-    compaction — with identical BM25 results; compaction commits a NEW
-    version, and a reader that resolved the previous version before the
-    commit still completes against its snapshot."""
+    """Every text-index lifecycle step — build, append-merge, fan-out
+    monitor, compaction — commits the NEXT version and answers BM25
+    queries exactly as a scan over the documents indexed so far; a
+    reader that resolved the previous version before a commit still
+    completes against its snapshot."""
     from admira_etl_project_prueba_spark.functions import fs as _fs
     from admira_etl_project_prueba_spark.operators.textops import (
         bm25_from_index,
+        bm25_rank,
         compact_index_store,
+        index_files_per_bucket,
         merge_text_index,
         needs_compaction,
         text_index_root,
@@ -1806,15 +1815,14 @@ def test_versioned_text_index_lifecycle(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents")
     a = docs.filter("doc_id % 2 = 0")
     b = docs.filter("doc_id % 2 = 1")
-    flat, ver = str(tmp_path / "flat"), str(tmp_path / "ver")
-    write_text_index(a, flat)
-    write_text_index(a, ver, versioned=True)
+    ver = str(tmp_path / "ver")
+    write_text_index(a, ver)
     assert _fs.latest_version(spark, ver) == "v00000001"
     assert text_index_root(spark, ver).endswith("v00000001")
 
     q = ["spark", "query"]
     assert [tuple(r) for r in bm25_from_index(spark, ver, q).collect()] == [
-        tuple(r) for r in bm25_from_index(spark, flat, q).collect()
+        tuple(r) for r in bm25_rank(a, q).collect()
     ]
 
     # append-merge commits the NEXT version (committed versions are
@@ -1823,30 +1831,24 @@ def test_versioned_text_index_lifecycle(spark, sf_dir, tmp_path):
     v1_root = text_index_root(spark, ver)
     n_v1_postings = spark.read.parquet(f"{v1_root}/postings").count()
     v1_stats = spark.read.parquet(f"{v1_root}/stats").collect()
-    merge_text_index(spark, flat, b)
     merge_text_index(spark, ver, b)
     assert _fs.latest_version(spark, ver) == "v00000002"
     assert spark.read.parquet(f"{v1_root}/postings").count() == n_v1_postings
     assert spark.read.parquet(f"{v1_root}/stats").collect() == v1_stats
-    assert [tuple(r) for r in bm25_from_index(spark, ver, q).collect()] == [
-        tuple(r) for r in bm25_from_index(spark, flat, q).collect()
-    ]
+    want = [tuple(r) for r in bm25_rank(docs, q).collect()]
+    assert [tuple(r) for r in bm25_from_index(spark, ver, q).collect()] == want
+    assert len(want) > 0
     assert isinstance(needs_compaction(spark, ver), bool)
 
     # compaction commits the NEXT version; a reader that resolved v2
     # before the commit still completes against its snapshot
-    v1_postings = f"{text_index_root(spark, ver)}/postings"
-    n_v1 = spark.read.parquet(v1_postings).count()
-    want = [tuple(r) for r in bm25_from_index(spark, ver, q).collect()]
+    v2_postings = f"{text_index_root(spark, ver)}/postings"
+    n_v2 = spark.read.parquet(v2_postings).count()
     compact_index_store(spark, ver)
     assert _fs.latest_version(spark, ver) == "v00000003"
-    assert spark.read.parquet(v1_postings).count() == n_v1  # old snapshot intact
+    assert spark.read.parquet(v2_postings).count() == n_v2  # old snapshot intact
     assert [tuple(r) for r in bm25_from_index(spark, ver, q).collect()] == want
     # compacted: one file per bucket again
-    from admira_etl_project_prueba_spark.operators.textops import (
-        index_files_per_bucket,
-    )
-
     assert (
         index_files_per_bucket(spark, ver)
         .filter("n_files > 1")
@@ -1856,12 +1858,14 @@ def test_versioned_text_index_lifecycle(spark, sf_dir, tmp_path):
 
 
 def test_versioned_positional_index_lifecycle(spark, tmp_path):
-    """Positional index: versioned build + merge + compaction keep
-    phrase results identical to the flat store's."""
+    """Positional index: build, merge and compaction each commit the
+    next version and keep phrase results identical to a direct phrase
+    scan over the documents."""
     from admira_etl_project_prueba_spark.functions import fs as _fs
     from admira_etl_project_prueba_spark.operators.textops import (
         compact_index_store,
         merge_positional_index,
+        phrase_search,
         phrase_search_from_index,
         write_positional_index,
     )
@@ -1872,10 +1876,9 @@ def test_versioned_positional_index_lifecycle(spark, tmp_path):
     )
     a = docs.filter("doc_id < 25")
     b = docs.filter("doc_id >= 25")
-    flat, ver = str(tmp_path / "pflat"), str(tmp_path / "pver")
-    write_positional_index(a, flat)
-    write_positional_index(a, ver, versioned=True)
-    merge_positional_index(b, flat)
+    ver = str(tmp_path / "pver")
+    write_positional_index(a, ver)
+    assert _fs.latest_version(spark, ver) == "v00000001"
     merge_positional_index(b, ver)
     assert _fs.latest_version(spark, ver) == "v00000002"  # merge = new version
     compact_index_store(spark, ver)
@@ -1884,9 +1887,7 @@ def test_versioned_positional_index_lifecycle(spark, tmp_path):
     got = sorted(
         map(tuple, phrase_search_from_index(spark, ver, phrase).collect())
     )
-    want = sorted(
-        map(tuple, phrase_search_from_index(spark, flat, phrase).collect())
-    )
+    want = sorted(map(tuple, phrase_search(docs, phrase).collect()))
     assert got == want and len(got) == 40
 
 

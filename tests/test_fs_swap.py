@@ -1,12 +1,14 @@
-"""functions/fs: existence checks + the rename-based compaction swap."""
+"""functions/fs: existence checks and the crash-window recovery of legacy
+flat stores that an older build replaced by a two-rename swap."""
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import functions as F
 
-from admira_etl_project_prueba_spark.functions.fs import path_exists, swap_into_place
+from admira_etl_project_prueba_spark.functions.fs import path_exists
 
 
 def _mkstore(path: str, marker: str) -> None:
@@ -27,36 +29,17 @@ def test_path_exists(spark, tmp_path):
     assert path_exists(spark, p)
 
 
-def test_swap_replaces_dst_and_cleans_up(spark, tmp_path):
-    dst, tmp = str(tmp_path / "store"), str(tmp_path / "store__compacting")
-    _mkstore(dst, "old")
-    _mkstore(tmp, "new")
-    swap_into_place(spark, tmp, dst)
-    assert _marker(dst) == "new"
-    assert not os.path.exists(tmp)
-    assert not os.path.exists(dst + "__old")
-
-
-def test_swap_clears_stale_old_from_prior_crash(spark, tmp_path):
-    dst, tmp = str(tmp_path / "store"), str(tmp_path / "store__compacting")
-    _mkstore(dst, "old")
-    _mkstore(tmp, "new")
-    _mkstore(dst + "__old", "stale-crash-leftover")
-    swap_into_place(spark, tmp, dst)
-    assert _marker(dst) == "new"
-    assert not os.path.exists(dst + "__old")
-
-
 def test_recover_swap_heals_crashed_rename_window(spark, tmp_path):
-    """Crash between swap_into_place's two renames leaves only dst__old;
+    """A legacy flat store replaced by an older build's two-rename swap
+    can be left with only dst__old (a crash between the renames);
     recover_swap must restore it so a restarted fold does NOT mistake
-    the store for absent (which would reset state and later delete the
-    recovery copy)."""
+    the store for absent (which would reset state)."""
     from admira_etl_project_prueba_spark.functions.fs import recover_swap
 
     dst = str(tmp_path / "store")
-    # simulate the crash window: dst missing, __old holds the only copy
-    _mkstore(dst + "__old", "survivor")
+    # plant the crash window: dst missing, __old holds the only copy
+    _mkstore(dst, "survivor")
+    os.rename(dst, dst + "__old")
     assert recover_swap(spark, dst) is True
     assert _marker(dst) == "survivor"
     assert not os.path.exists(dst + "__old")
@@ -66,49 +49,63 @@ def test_recover_swap_heals_crashed_rename_window(spark, tmp_path):
     assert recover_swap(spark, str(tmp_path / "nothing")) is False
 
 
-def test_streaming_store_exists_recovers_crashed_swap(spark, tmp_path):
-    """The streaming fold's first-batch check must heal the crashed-swap
-    window instead of reporting 'absent' (the silent-reset hazard)."""
-    from admira_etl_project_prueba_spark.streaming.ingest import _store_exists
-
-    dst = str(tmp_path / "sketch_store")
-    _mkstore(dst + "__old", "counts")
-    assert _store_exists(spark, dst) is True   # recovered, not "first batch"
-    assert _marker(dst) == "counts"
-
-
-def test_append_merge_heals_compaction_crash_window(spark, sf_dir, tmp_path):
-    """An append-merge landing while only postings__old exists (a
-    compaction crashed between its two renames) must RECOVER the store
-    first — otherwise mode('append') silently creates a batch-only store
-    and the next compaction deletes the recovery copy (total index loss,
-    no error)."""
-    import shutil
-
-    from admira_etl_project_prueba_spark.operators.textops import (
-        bm25_from_index,
-        compact_index_store,
-        merge_text_index,
-        write_text_index,
+def test_append_merge_heals_compaction_crash_window(spark, tmp_path):
+    """A streaming delta landing in a legacy flat delta store while only
+    store__old exists (an older build's compaction crashed between its
+    two renames) must RECOVER the store first — otherwise the delta
+    silently creates a batch-only store beside the orphaned recovery
+    copy (total loss of the earlier batches, no error).  The recovered
+    flat payload then stays readable through the next compaction,
+    which migrates it to v1."""
+    from admira_etl_project_prueba_spark.functions.fs import list_versions
+    from admira_etl_project_prueba_spark.operators.textops import cms_sketch
+    from admira_etl_project_prueba_spark.streaming.ingest import (
+        compact_sketch_store,
+        read_sketch_store,
+        stream_token_sketch_idempotent,
     )
-    from admira_etl_project_prueba_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "txt")
-    write_text_index(docs.filter("doc_id < 300"), path, num_buckets=8)
-    n_before = spark.read.parquet(f"{path}/postings").count()
-    # simulate the compaction crash window: only __old survives
-    shutil.move(f"{path}/postings", f"{path}/postings__old")
-    merge_text_index(spark, path, docs.filter("doc_id >= 300"), num_buckets=8)
-    n_after = spark.read.parquet(f"{path}/postings").count()
-    assert n_after > n_before  # old postings survived + batch appended
-    import os
+    def docs(rows):
+        return spark.createDataFrame(
+            [(d, t, "en") for d, t in rows], "doc_id long, text string, lang string"
+        )
 
-    assert not os.path.exists(f"{path}/postings__old")
-    # the full cycle stays healthy: compact and query
-    compact_index_store(spark, path)
-    assert spark.read.parquet(f"{path}/postings").count() == n_after
-    assert bm25_from_index(spark, path, ["the"]).count() >= 0
+    old_rows = [(1, "alpha beta"), (2, "beta gamma")]
+    new_rows = [(3, "gamma delta")]
+    store = str(tmp_path / "icms_store")
+    # a legacy flat delta store: batch_id=* directly under the root
+    cms_sketch(docs(old_rows), depth=2, width=64).withColumn(
+        "batch_id", F.lit(7).cast("long")
+    ).write.partitionBy("batch_id").parquet(store)
+    os.rename(store, store + "__old")  # the compaction crash window
+
+    src = tmp_path / "icms_in"
+    src.mkdir()
+    with open(src / "a.json", "w") as fh:
+        for did, text in new_rows:
+            fh.write(json.dumps({"doc_id": did, "text": text}) + "\n")
+    stream = spark.readStream.schema("doc_id long, text string").json(str(src))
+    stream_token_sketch_idempotent(
+        stream, store, str(tmp_path / "icms_ckpt"), depth=2, width=64
+    ).awaitTermination(120)
+
+    assert not os.path.exists(store + "__old")
+    want = {
+        (r["r"], r["bucket"]): r["cnt"]
+        for r in cms_sketch(docs(old_rows + new_rows), depth=2, width=64).collect()
+    }
+
+    def snap():
+        return {
+            (r["r"], r["bucket"]): r["cnt"]
+            for r in read_sketch_store(spark, store).collect()
+        }
+
+    assert snap() == want  # old batches survived + the delta landed
+    compact_sketch_store(spark, store)
+    assert list_versions(spark, store) == ["v00000001"]
+    assert sorted(os.listdir(store)) == ["v00000001"]  # flat remnants swept
+    assert snap() == want
 
 
 def test_fact_store_exists_and_read_heal_compaction_crash_window(

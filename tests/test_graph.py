@@ -274,6 +274,26 @@ def test_no_conf_set_in_operators():
     assert offenders == []
 
 
+def test_no_two_rename_swap_or_flat_index_option_in_package():
+    """Every store rewrite commits a version (functions/fs.commit_version):
+    no package module brings back the two-rename swap, its ``__compacting``
+    / ``__merging`` staging siblings, or a ``versioned: bool = False``
+    flat-layout option."""
+    import pathlib
+
+    import admira_etl_project_prueba_spark as pkg
+
+    banned = ("swap_into_place(", "versioned: bool = False", "__compacting", "__merging")
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        (str(p.relative_to(root)), b)
+        for p in sorted(root.rglob("*.py"))
+        for b in banned
+        if b in p.read_text()
+    ]
+    assert offenders == []
+
+
 def test_label_propagation_separates_planted_cliques(spark):
     """Two 4-cliques joined by one bridge edge: after 3 synchronous
     rounds each clique converges to its minimum node id and the bridge

@@ -210,33 +210,34 @@ def test_recovery_race_reader_vs_live_swap_degrades_to_noop(spark, sf_dir, tmp_p
     next-round #8): a reader healing in process A while process B swaps
     must degrade to a no-op.  Simulated at the exact hazard point — the
     window between B's two renames, with B's lease held — using the real
-    service read path on the text postings store, whose compaction
-    still swaps by rename."""
+    service read path of a legacy flat histogram store, the one store
+    read that still heals a swap window."""
     from admira_etl_project_prueba_spark.corpus_service import CorpusService
-    from admira_etl_project_prueba_spark.operators import textops
-    from admira_etl_project_prueba_spark.sources.tables import load_table
+    from admira_etl_project_prueba_spark.operators.sketches import value_histogram
+    from admira_etl_project_prueba_spark.sources.tables import load_events, load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "text")
-    textops.write_text_index(docs, path)
-    postings = f"{path}/postings"
-    svc = CorpusService(spark, docs, text_index_path=path)
+    path = str(tmp_path / "hist")
+    # a legacy flat histogram store (payload directly under the root)
+    value_histogram(load_events(spark, sf_dir)).write.parquet(path)
+    svc = CorpusService(spark, docs)
 
     # freeze B mid-swap: window open, B's lease held
-    os.rename(postings, postings + "__old")
-    assert try_acquire_lease(spark, postings)
+    os.rename(path, path + "__old")
+    token = try_acquire_lease(spark, path)
+    assert token
 
     # reader in "process A": must not restore __old under B's live lease
-    svc._heal_crashed_swap(postings)
-    assert swap_window_open(spark, postings)  # untouched
+    svc._heal_crashed_swap(path)
+    assert swap_window_open(spark, path)  # untouched
 
     # B "resumes": put the store back the way its second rename would,
     # release, and verify the reader now sees a healthy store
-    os.rename(postings + "__old", postings)
-    release_lease(spark, postings)
-    assert svc.index_health()["data"]["text"].get("absent") is None
-    textops.compact_index_store(spark, path)  # full maintenance still works
-    assert spark.read.parquet(postings).count() > 0
+    os.rename(path + "__old", path)
+    release_lease(spark, path, token)
+    out = svc.drift_report(base=path, current=path)
+    assert out["mode"] == "psi" and out["data"]
+    assert all(d["psi"] == 0.0 for d in out["data"])
 
 
 def test_concurrent_upserts_do_not_lose_updates(spark, sf_dir, tmp_path):

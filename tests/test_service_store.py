@@ -1266,25 +1266,26 @@ def test_index_routes_pollable_before_stores_exist(spark, sf_dir, tmp_path):
 
 
 def test_read_path_recovery_takes_the_maintenance_lock(spark, sf_dir, tmp_path):
-    """The read path's crash-window recovery of the text postings (the
-    index store that still swaps by rename) must serialize against
-    maintenance: an unlocked recover could restore __old between an
-    in-flight swap's two renames.  Pin both halves of the contract:
-    (a) _heal_crashed_swap acquires the maintenance lock around the
-    recovery rename; (b) index_compact, which holds the lock, runs end
-    to end across a planted crash window without deadlocking."""
+    """The read path's crash-window recovery of a legacy flat histogram
+    store (the one store read that still heals an older build's
+    two-rename swap) must serialize against maintenance: an unlocked
+    recover could restore __old between an in-flight swap's two renames.
+    Pin both halves of the contract: (a) _heal_crashed_swap acquires the
+    maintenance lock around the recovery rename; (b) a heal called from
+    inside a maintenance region (the lock is held) runs end to end
+    without deadlocking."""
     import shutil
     import threading
 
     from admira_etl_project_prueba_spark.corpus_service import CorpusService
-    from admira_etl_project_prueba_spark.operators.textops import write_text_index
-    from admira_etl_project_prueba_spark.sources.tables import load_table
+    from admira_etl_project_prueba_spark.operators.sketches import value_histogram
+    from admira_etl_project_prueba_spark.sources.tables import load_events, load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    txt = str(tmp_path / "txt")
-    write_text_index(docs, txt, num_buckets=8)
-    postings = f"{txt}/postings"
-    svc = CorpusService(spark, documents=docs, text_index_path=txt)
+    hist = str(tmp_path / "hist")
+    # a legacy flat histogram store (payload directly under the root)
+    value_histogram(load_events(spark, sf_dir)).write.parquet(hist)
+    svc = CorpusService(spark, documents=docs)
 
     class _ProbeLock:
         """Delegates to an RLock, recording acquisitions."""
@@ -1300,28 +1301,33 @@ def test_read_path_recovery_takes_the_maintenance_lock(spark, sf_dir, tmp_path):
         def __exit__(self, *exc):
             return self.inner.__exit__(*exc)
 
+    def drift():
+        return svc.drift_report(base=hist, current=hist)["n_types"]
+
     probe = _ProbeLock()
     svc._maintenance_lock = probe
     # (a) healing a crash window goes through the lock
-    shutil.move(postings, postings + "__old")
-    assert "absent" not in svc.index_health()["data"]["text"]
+    shutil.move(hist, hist + "__old")
+    n_types = drift()
+    assert n_types > 0
     assert probe.acquisitions >= 1
     # healthy-store reads do NOT touch the lock (hot path stays lock-free)
     before = probe.acquisitions
-    svc.index_health()
+    assert drift() == n_types
     assert probe.acquisitions == before
-    # (b) compact across another planted crash window
-    shutil.move(postings, postings + "__old")
+    # (b) heal from inside a maintenance region, across another window
+    shutil.move(hist, hist + "__old")
     done = []
 
     def run():
-        done.append(svc.index_compact()["data"]["compacted"])
+        with svc._maintenance_lock:
+            done.append(drift())
 
     t = threading.Thread(target=run, daemon=True)
     t.start()
     t.join(timeout=120)
-    assert not t.is_alive(), "index_compact deadlocked on the maintenance lock"
-    assert done and done[0] == ["text"]
+    assert not t.is_alive(), "the read-path heal deadlocked on the maintenance lock"
+    assert done == [n_types]
 
 
 def test_near_dup_pairs_semantic_method(spark, sf_dir, tmp_path):

@@ -715,8 +715,10 @@ def test_stream_token_sketch_equals_batch_sketch(spark, tmp_path):
     )
     q.awaitTermination(120)
 
+    from admira_etl_project_prueba_spark.functions.fs import resolve_store_root
+
     got = {(r["r"], r["bucket"]): r["cnt"]
-           for r in spark.read.parquet(store).collect()}
+           for r in spark.read.parquet(resolve_store_root(spark, store)).collect()}
     corpus = spark.createDataFrame(
         [(d, t, "en") for d, t in rows], "doc_id long, text string, lang string"
     )
@@ -755,10 +757,13 @@ def test_stream_user_hll_equals_batch_registers(spark, tmp_path):
     q = stream_user_hll(stream, store, str(tmp_path / "hll_ckpt"))
     q.awaitTermination(120)
 
+    from admira_etl_project_prueba_spark.functions.fs import resolve_store_root
+
     def regs(df):
         return {(r["event_type"], r["bucket"]): r["register"] for r in df.collect()}
 
-    got = regs(spark.read.parquet(store))
+    stored = spark.read.parquet(resolve_store_root(spark, store))
+    got = regs(stored)
     corpus = spark.createDataFrame(
         rows, "event_id long, event_type string, user_id long"
     )
@@ -767,7 +772,7 @@ def test_stream_user_hll_equals_batch_registers(spark, tmp_path):
     # replay: merging the full corpus sketch in again is a no-op
     replayed = regs(
         hll_merge(
-            spark.read.parquet(store).unionByName(
+            stored.unionByName(
                 hll_registers(corpus, "user_id", ["event_type"])
             ),
             ["event_type"],
@@ -912,8 +917,11 @@ def test_idempotent_sketch_store_survives_replay_and_compaction(spark, tmp_path)
     got = snap()
     assert got == want and len(got) > 0
 
-    # replay batch 0 (first file's docs) by hand: same partition, no drift
+    # replay batch 0 (first file's docs) by hand into the current
+    # version, as the delta writer does: same partition, no drift
     from pyspark.sql import functions as F
+
+    from admira_etl_project_prueba_spark.functions.fs import resolve_store_root
 
     replay = cms_sketch(
         spark.createDataFrame(
@@ -924,7 +932,8 @@ def test_idempotent_sketch_store_survives_replay_and_compaction(spark, tmp_path)
     ).withColumn("batch_id", F.lit(0).cast("long"))
     (
         replay.write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic").parquet(store)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(resolve_store_root(spark, store))
     )
     assert snap() == want
 
@@ -932,7 +941,10 @@ def test_idempotent_sketch_store_survives_replay_and_compaction(spark, tmp_path)
     assert snap() == want
     # compaction folded everything into the single batch_id=-1 partition
     import os
-    parts = [d for d in os.listdir(store) if d.startswith("batch_id=")]
+    parts = [
+        d for d in os.listdir(resolve_store_root(spark, store))
+        if d.startswith("batch_id=")
+    ]
     assert parts == ["batch_id=-1"]
 
 
@@ -944,6 +956,7 @@ def test_checkpoint_aware_compaction_skips_uncommitted_delta(spark, tmp_path):
     committed batches; the replay then leaves the read view exact."""
     from pyspark.sql import functions as F
 
+    from admira_etl_project_prueba_spark.functions.fs import resolve_store_root
     from admira_etl_project_prueba_spark.operators.textops import cms_sketch
     from admira_etl_project_prueba_spark.streaming.ingest import (
         compact_sketch_store,
@@ -975,11 +988,17 @@ def test_checkpoint_aware_compaction_skips_uncommitted_delta(spark, tmp_path):
             depth=2, width=64,
         ).withColumn("batch_id", F.lit(batch_id).cast("long"))
 
+    def land(delta):
+        """Write a delta the way the delta writer does: dynamic-overwrite
+        of its batch_id partition inside the current version."""
+        (
+            delta.write.mode("overwrite").partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(resolve_store_root(spark, store))
+        )
+
     # simulate: batch 1's delta hit the store but its commit marker didn't
-    (
-        mk(doubt_rows, 1).write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic").parquet(store)
-    )
+    land(mk(doubt_rows, 1))
 
     def snap():
         return {(r["r"], r["bucket"]): r["cnt"]
@@ -988,15 +1007,15 @@ def test_checkpoint_aware_compaction_skips_uncommitted_delta(spark, tmp_path):
     want = snap()  # written deltas: exact view before AND after replay
     compact_sketch_store(spark, store, checkpoint_dir=ckpt)
     import os
-    parts = sorted(d for d in os.listdir(store) if d.startswith("batch_id="))
+    parts = sorted(
+        d for d in os.listdir(resolve_store_root(spark, store))
+        if d.startswith("batch_id=")
+    )
     assert parts == ["batch_id=-1", "batch_id=1"]  # in-doubt delta survives
     assert snap() == want
 
     # the stream replays batch 1: rewrite of its own partition, no drift
-    (
-        mk(doubt_rows, 1).write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic").parquet(store)
-    )
+    land(mk(doubt_rows, 1))
     assert snap() == want
 
 
@@ -1343,6 +1362,8 @@ def test_stream_source_counts_store_matches_batch_kl(spark, tmp_path):
     first_batch = spark.createDataFrame(rows[:7], "doc_id long, text string, source string")
     from pyspark.sql import functions as F
 
+    from admira_etl_project_prueba_spark.functions.fs import resolve_store_root
+
     delta = source_bucket_counts(first_batch).withColumn(
         "batch_id", F.lit(0).cast("long")
     )
@@ -1350,7 +1371,7 @@ def test_stream_source_counts_store_matches_batch_kl(spark, tmp_path):
         delta.write.mode("overwrite")
         .partitionBy("batch_id")
         .option("partitionOverwriteMode", "dynamic")
-        .parquet(store)
+        .parquet(resolve_store_root(spark, store))
     )
     replayed = {tuple(r) for r in source_kl_from_store(spark, store).collect()}
     assert replayed == want

@@ -1,7 +1,7 @@
 """The versioned layout of the whole-payload stores: the fact
 MetricsStore, the LSH signature store, and the histogram / LM-count
-model stores (plus the one-layout contract of the IVF and IVF-PQ index
-stores).  Each gets (a) lifecycle parity with a from-scratch
+model stores (plus the one-layout contract of the index stores and the
+streaming sketch stores).  Each gets (a) lifecycle parity with a from-scratch
 rebuild or a plain-Python per-key sum, (b) the reader-vs-rewriter race
 pinned: a reader that resolved the previous version before a fold
 completes against its snapshot, byte-for-byte, and (c) the legacy flat
@@ -441,6 +441,84 @@ def test_lsh_store_versioned_merge_parity(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# Streaming sketch stores
+# ---------------------------------------------------------------------------
+
+
+def test_stream_sketch_folds_and_compaction_commit_versions(spark, tmp_path):
+    """Each stream_token_sketch fold commits the store's next version,
+    the replay-safe delta store's first batch commits v1 (later deltas
+    land inside it), and compact_sketch_store commits the next version.
+    A reader that resolved the previous version before a commit
+    completes against it."""
+    import json
+    import os
+
+    from admira_etl_project_prueba_spark.streaming.ingest import (
+        compact_sketch_store,
+        last_committed_batch_id,
+        read_sketch_store,
+        stream_token_sketch,
+        stream_token_sketch_idempotent,
+    )
+
+    rows = [(1, "alpha beta gamma"), (2, "beta gamma delta"), (3, "gamma zeta")]
+    src = tmp_path / "cms_in"
+    src.mkdir()
+
+    def add_file(i):
+        with open(src / f"{i}.json", "w") as fh:
+            fh.write(json.dumps({"doc_id": rows[i][0], "text": rows[i][1]}) + "\n")
+
+    def stream():
+        return (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+
+    def sketch(n):
+        docs = spark.createDataFrame(
+            [(d, t, "en") for d, t in rows[:n]],
+            "doc_id long, text string, lang string",
+        )
+        return _rows(tx.cms_sketch(docs, depth=2, width=64))
+
+    def version_no(path):
+        return int(fs.latest_version(spark, path)[1:])
+
+    add_file(0)
+    add_file(1)
+    fold, ckpt = str(tmp_path / "fold"), str(tmp_path / "fold_ckpt")
+    stream_token_sketch(stream(), fold, ckpt, depth=2, width=64).awaitTermination(120)
+    n_batches = last_committed_batch_id(spark, ckpt) + 1
+    assert version_no(fold) == n_batches  # one version per fold
+    prev = spark.read.parquet(fs.resolve_store_root(spark, fold))
+    assert _rows(prev) == sketch(2)
+    add_file(2)
+    stream_token_sketch(stream(), fold, ckpt, depth=2, width=64).awaitTermination(120)
+    assert version_no(fold) == n_batches + 1
+    assert _rows(prev) == sketch(2)  # the previous version's reader completes
+    assert _rows(spark.read.parquet(fs.resolve_store_root(spark, fold))) == sketch(3)
+
+    deltas = str(tmp_path / "deltas")
+    stream_token_sketch_idempotent(
+        stream(), deltas, str(tmp_path / "delta_ckpt"), depth=2, width=64
+    ).awaitTermination(120)
+    assert fs.list_versions(spark, deltas) == ["v00000001"]
+    prev = spark.read.parquet(fs.resolve_store_root(spark, deltas))
+    n_prev = prev.count()
+    compact_sketch_store(spark, deltas)
+    assert fs.list_versions(spark, deltas) == ["v00000001", "v00000002"]
+    assert prev.count() == n_prev  # the previous version's reader completes
+    assert _rows(read_sketch_store(spark, deltas)) == sketch(3)
+    root = fs.resolve_store_root(spark, deltas)
+    assert [d for d in os.listdir(root) if d.startswith("batch_id=")] == [
+        "batch_id=-1"
+    ]
+
+
+# ---------------------------------------------------------------------------
 # Cross-store invariant sweep (round 12): every versioned-capable writer
 # round-trips under resolve_store_root and GC keeps at most 2 versions
 # ---------------------------------------------------------------------------
@@ -449,10 +527,13 @@ def test_lsh_store_versioned_merge_parity(spark, sf_dir, tmp_path):
 def test_index_store_builds_and_maintenance_commit_versions(
     spark, sf_dir, tmp_path
 ):
-    """The IVF and IVF-PQ stores have one layout: a default build,
-    compaction and retrain (a rebuild for IVF-PQ) each commit exactly
-    one new version, an append-merge adds to the current version, and
-    no ``path__*`` sibling (flat sidecar or swap debris) is left."""
+    """Every index store has one layout.  IVF and IVF-PQ: a default
+    build, compaction and retrain (a rebuild for IVF-PQ) each commit
+    exactly one new version and an append-merge adds to the current
+    version.  Text and positional: a default build commits v1, and a
+    merge and a compaction each commit the next version.  No
+    ``path__*`` sibling (flat sidecar, lease or swap debris) and no
+    ``postings__*`` child is left."""
     import os
 
     from admira_etl_project_prueba_spark.operators import similarity as sim
@@ -462,7 +543,10 @@ def test_index_store_builds_and_maintenance_commit_versions(
     base, batch = emb.filter("vec_id < 200"), emb.filter(
         "vec_id >= 200 AND vec_id < 260"
     )
+    docs = _docs(spark, 30)
+    d_base, d_batch = docs.filter("doc_id < 20"), docs.filter("doc_id >= 20")
     ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "pq")
+    txt, pos = str(tmp_path / "txt"), str(tmp_path / "pos")
     chains = {
         ivf: [
             (1, lambda: sim.write_ivf_index(base, ivf, n_centroids=8)),
@@ -476,10 +560,20 @@ def test_index_store_builds_and_maintenance_commit_versions(
             (2, lambda: sim.compact_ivfpq_index(spark, pq)),
             (3, lambda: sim.write_ivfpq_index(base, pq, n_centroids=4)),
         ],
+        txt: [
+            (1, lambda: tx.write_text_index(d_base, txt, num_buckets=8)),
+            (2, lambda: tx.merge_text_index(spark, txt, d_batch, num_buckets=8)),
+            (3, lambda: tx.compact_index_store(spark, txt)),
+        ],
+        pos: [
+            (1, lambda: tx.write_positional_index(d_base, pos, num_buckets=8)),
+            (2, lambda: tx.merge_positional_index(d_batch, pos, num_buckets=8)),
+            (3, lambda: tx.compact_index_store(spark, pos)),
+        ],
     }
 
-    # The two stores are independent, so each chain runs on its own
-    # thread; the steps within a chain stay strictly ordered.
+    # The stores are independent, so each chain runs on its own thread;
+    # the steps within a chain stay strictly ordered.
     def run_chain(path):
         for want, step in chains[path]:
             step()
@@ -487,12 +581,19 @@ def test_index_store_builds_and_maintenance_commit_versions(
 
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with ThreadPoolExecutor(max_workers=4) as pool:
         list(pool.map(run_chain, chains))
     assert sim.ivf_data_path(spark, ivf).endswith("v00000003/data")
     n_ivf = spark.read.parquet(sim.ivf_data_path(spark, ivf)).count()
     assert n_ivf == 260
-    assert sorted(os.listdir(tmp_path)) == ["ivf", "pq"]
+    assert sorted(os.listdir(tmp_path)) == ["ivf", "pos", "pq", "txt"]
+    for path, children in ((txt, ["postings", "stats"]), (pos, ["postings"])):
+        assert sorted(fs.list_child_names(spark, path)) == ["v00000002", "v00000003"]
+        root = tx.text_index_root(spark, path)
+        assert sorted(os.listdir(root)) == children
+    got = tx.bm25_from_index(spark, txt, ["doc3", "alpha"], num_buckets=8)
+    want = tx.bm25_rank(docs, ["doc3", "alpha"])
+    assert _rows(got) == _rows(want) and got.count() > 0
 
 
 def test_flat_index_store_raises_rebuild_error(spark, tmp_path):
@@ -513,6 +614,17 @@ def test_flat_index_store_raises_rebuild_error(spark, tmp_path):
         sim.ivf_resolved_paths(spark, flat)
     with pytest.raises(ValueError, match="rebuild with write_ivfpq_index"):
         sim.pq_resolved_paths(spark, flat)
+
+    # a text or positional index root in the old flat layout
+    flat_txt = str(tmp_path / "flat_txt")
+    spark.createDataFrame(
+        [("alpha", 1, [0], 3)], "term string, doc_id long, positions array<int>, "
+        "term_bucket int"
+    ).write.partitionBy("term_bucket").parquet(f"{flat_txt}/postings")
+    with pytest.raises(ValueError, match="rebuild with write_text_index"):
+        tx.text_index_root(spark, flat_txt)
+    with pytest.raises(ValueError, match="write_positional_index"):
+        tx.phrase_search_from_index(spark, flat_txt, ["alpha"])
 
     docs = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     for root in (str(tmp_path / "absent"), str(tmp_path / "scratch_only")):
@@ -558,10 +670,10 @@ def test_every_versioned_store_gc_and_resolve_sweep(spark, sf_dir, tmp_path):
         sim.write_ivfpq_index(emb, path, n_centroids=8, iters=1 + i % 2)
 
     def text_index(path, i):
-        tx.write_text_index(_docs(spark, 20 + i), path, versioned=True)
+        tx.write_text_index(_docs(spark, 20 + i), path)
 
     def positional(path, i):
-        tx.write_positional_index(_docs(spark, 20 + i), path, versioned=True)
+        tx.write_positional_index(_docs(spark, 20 + i), path)
 
     readers = {
         "metrics": lambda p: MetricsStore(spark, p).read(),
