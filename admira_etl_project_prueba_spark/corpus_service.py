@@ -28,11 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from admira_etl_project_prueba_spark.functions.fs import (
-    heal_if_crashed,
     lease_held,
     path_exists,
     path_mtime,
-    swap_window_open,
+    resolve_store_root,
 )
 from admira_etl_project_prueba_spark.operators import similarity, textops
 from admira_etl_project_prueba_spark.operators.queries import page_info, paginate
@@ -101,13 +100,11 @@ class CorpusService:
         # and merges commit a new manifest, changing the mtime.
         self._pq_rerank_depth: int | None = None
         self._pq_manifest_mtime: int | None = None
-        # maintenance (retrain/compact) must not interleave with itself
-        # OR with a read path's crash-window recovery of a legacy flat
-        # histogram store (``_heal_crashed_swap``).  An RLock, so a
-        # maintenance region may call a read-path helper that heals.
-        # In-process serialization; cross-process deployments schedule
-        # maintenance from one place.
-        self._maintenance_lock = threading.RLock()
+        # in-process maintenance POSTs (retrain/compact) must not
+        # interleave with each other; cheaper than contending on the
+        # stores' filesystem leases, which serialize writers across
+        # processes.  Read paths never take it.
+        self._maintenance_lock = threading.Lock()
 
     # -- GET /corpus/dedup/pairs --------------------------------------------
     def near_dup_pairs(
@@ -510,22 +507,6 @@ class CorpusService:
             "data": [by_query.get(-(i + 1), []) for i in range(len(query_vecs))],
             "request_id": new_request_id(request_id),
         }
-
-    def _heal_crashed_swap(self, path: str) -> None:
-        """Crash-window recovery for the READ path of a legacy flat
-        histogram store, which an older build replaced by a two-rename
-        swap: cheap unlocked probe (two exists RPCs), then the
-        lease-guarded heal.  The in-process maintenance lock serializes
-        against THIS service's writers; the filesystem lease inside
-        ``fs.heal_if_crashed`` additionally serializes against a swap in
-        flight in a DIFFERENT process — without it a probe could restore
-        ``__old`` between that swap's two renames and the swap's second
-        rename would land inside the restored directory.  A fresh
-        foreign lease makes the heal a no-op (the live writer will close
-        the window itself)."""
-        if swap_window_open(self.spark, path):
-            with self._maintenance_lock:
-                heal_if_crashed(self.spark, path)
 
     def _pq_index_ready(self) -> bool:
         """True when the configured IVF-PQ store has a committed version
@@ -983,20 +964,13 @@ class CorpusService:
             )
 
             def _read(path: str) -> DataFrame:
-                # a legacy flat histogram store may hold a crashed
-                # two-rename swap — heal it before deciding the snapshot
-                # is "not readable" (it is recoverable).  Versioned
-                # stores have no window; resolve their current vNNNNNNNN
-                # once so the diff reads a consistent snapshot
-                self._heal_crashed_swap(path)
-                from admira_etl_project_prueba_spark.functions.fs import (
-                    resolve_store_root,
-                )
-
+                # resolve the current vNNNNNNNN once so the diff reads a
+                # consistent snapshot; outside the try, so a flat root
+                # from the old layout surfaces its migration ValueError
+                # instead of a 404
+                root = resolve_store_root(self.spark, path)
                 try:
-                    return self.spark.read.parquet(
-                        resolve_store_root(self.spark, path)
-                    )
+                    return self.spark.read.parquet(root)
                 except Exception as exc:
                     raise NotFoundError(
                         f"histogram snapshot not readable: {path}"

@@ -125,44 +125,6 @@ def read_text(spark: SparkSession, path: str) -> str:
         stream.close()
 
 
-def recover_swap(spark: SparkSession, dst: str) -> bool:
-    """Heal the crash window an older build's two-rename swap can have
-    left in a legacy flat store.
-
-    That swap renamed ``dst`` to ``dst__old``, renamed the rewritten
-    copy to ``dst``, then deleted ``dst__old``; a crash between the
-    renames leaves the only copy at ``dst__old`` with ``dst`` absent.
-    Writers that treat "store absent" as "first write" (legacy flat
-    fact, whole-payload and streaming delta stores) call this under the
-    store's lease before the existence check: otherwise the restart
-    resets the store to the current batch and the old copy is never
-    seen again.  Versioned stores never open this window.  Returns True
-    when a recovery rename was performed.
-    """
-    fs, jdst, jvm = _fs_and_path(spark, dst)
-    jold = jvm.org.apache.hadoop.fs.Path(_old_path(dst))
-    if not fs.exists(jdst) and fs.exists(jold):
-        if not fs.rename(jold, jdst):
-            raise IOError(f"recover_swap: rename {jold} -> {dst} failed")
-        return True
-    return False
-
-
-def _old_path(dst: str) -> str:
-    """The recovery-copy location of the legacy two-rename swap."""
-    return dst.rstrip("/") + "__old"
-
-
-def swap_window_open(spark: SparkSession, dst: str) -> bool:
-    """True when a legacy flat store is in the swap crash window
-    (``dst`` absent, ``dst__old`` present) — the cheap unlocked probe
-    read paths use to decide whether to take a lock and
-    :func:`recover_swap`.  Two metadata RPCs, no data read."""
-    fs, jdst, jvm = _fs_and_path(spark, dst)
-    jold = jvm.org.apache.hadoop.fs.Path(_old_path(dst))
-    return (not fs.exists(jdst)) and bool(fs.exists(jold))
-
-
 # ---------------------------------------------------------------------------
 # Versioned store layout (reader-side snapshot isolation)
 # ---------------------------------------------------------------------------
@@ -235,7 +197,7 @@ def _is_version_name(name: str) -> bool:
 
 def list_versions(spark: SparkSession, root: str) -> list[str]:
     """Committed version names under ``root``, oldest first ([] when the
-    root is absent or holds no versions — e.g. a legacy flat store)."""
+    root is absent or holds no versions yet)."""
     return sorted(
         n for n in list_child_names(spark, root) if _is_version_name(n)
     )
@@ -271,54 +233,39 @@ def clean_version_scratch(spark: SparkSession, root: str) -> None:
             )
 
 
-def resolve_store_root(spark: SparkSession, path: str) -> str:
-    """The directory holding a store's CURRENT payload, in either
-    layout: versioned (``path/vNNNNNNNN`` — newest committed version,
-    resolved ONCE at scan start so the reader is snapshot-isolated from
-    every later rewrite) or flat (``path`` itself).  The resolver of
-    the stores that still read a legacy flat layout (LM counts,
-    histograms, LSH signatures, the fact store, the streaming sketch and
-    delta stores); index stores resolve through
-    :func:`index_version_dir`, which refuses a flat root."""
-    v = latest_version(spark, path)
-    return f"{path.rstrip('/')}/{v}" if v is not None else path
+def resolve_store_root(
+    spark: SparkSession, path: str, rebuild: str | None = None
+) -> str:
+    """The directory holding a store's CURRENT payload: the newest
+    committed ``path/vNNNNNNNN``, resolved ONCE at scan start so the
+    reader is snapshot-isolated from every later rewrite.  Every store
+    reader and writer resolves through here.
 
-
-def index_version_dir(spark: SparkSession, path: str, rebuild: str) -> str:
-    """The current ``path/vNNNNNNNN`` of an index store (IVF, IVF-PQ,
-    text and positional).  An absent store (or one whose first build has
-    not committed yet: only ``__building.*`` scratch) resolves to
-    ``path`` itself, so every child path is absent too and callers see
-    the store as not written.  A root holding payload but no version is
-    a flat store from the old layout: index stores are derived data, so
-    deleting it and calling ``rebuild`` (the writer named in the error)
-    is the whole migration."""
+    An absent store (or one whose first write has not committed yet:
+    only ``__building.*`` scratch) resolves to ``path`` itself, so the
+    store reads as not written.  A root holding payload but no version
+    is a flat store from the old layout and raises ``ValueError``.  The
+    fact, whole-payload and delta stores keep the flat layout byte for
+    byte inside each version, so the error names that migration: move
+    the root's children into ``path/v00000001``.  Index stores are
+    derived data whose flat layout differed; they pass ``rebuild`` (the
+    writer call), and the error says to delete the root and rebuild."""
     root = path.rstrip("/")
     v = latest_version(spark, root)
     if v is not None:
         return f"{root}/{v}"
     if dir_nonempty(spark, root):
+        fix = (
+            f"Delete it and rebuild with {rebuild}"
+            if rebuild is not None
+            else f"Migrate it by moving every child of {root} into "
+            f"{root}/v{1:0{_VERSION_WIDTH}d}"
+        )
         raise ValueError(
-            f"{root} holds no committed version: an index store in the "
-            f"old flat layout. Delete it and rebuild with {rebuild}"
+            f"{root} holds no committed version: a store in the old flat "
+            f"layout. {fix}"
         )
     return root
-
-
-def sweep_flat_remnants(spark: SparkSession, path: str) -> None:
-    """Delete a legacy flat store's pre-version children (``date=*``,
-    part files, ``_SUCCESS``) once its payload is committed as v1 — the
-    one-time flat→versioned migration.  Without it a reader of the bare
-    path sees stale data forever and the space is never reclaimed.
-    Version dirs and live ``__building.*`` scratch are not touched.
-    CALLER HOLDS the store lease."""
-    fs, _, jvm = _fs_and_path(spark, path)
-    for name in list_child_names(spark, path):
-        if _is_version_name(name) or name.startswith("__building."):
-            continue
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{name}"), True
-        )
 
 
 def fold_whole_store(
@@ -337,12 +284,10 @@ def fold_whole_store(
     under ``__building.*`` scratch and commits it as the next
     ``vNNNNNNNN`` with ONE rename: readers that resolved the previous
     version keep a complete snapshot, at no extra cost for this store
-    class since the fold rewrites the payload anyway.  A legacy flat
-    store (payload directly under ``path``) is read as the fold's input
-    and migrated: its remnants are swept once v1 is committed."""
+    class since the fold rewrites the payload anyway.  A flat root from
+    the old layout raises :func:`resolve_store_root`'s ``ValueError``
+    before anything is written."""
     with maintenance_lease(spark, path):
-        # legacy flat store: heal an older build's swap crash window
-        recover_swap(spark, path)
         root = resolve_store_root(spark, path)
         prev = spark.read.parquet(root) if dir_nonempty(spark, root) else None
         merged = build_merged(prev)
@@ -351,8 +296,6 @@ def fold_whole_store(
         tmp = version_scratch(path)
         out.write.mode("overwrite").parquet(tmp)
         commit_version(spark, path, tmp)
-        if root == path and prev is not None:
-            sweep_flat_remnants(spark, path)
 
 
 def copy_tree(spark: SparkSession, src: str, dst: str) -> None:
@@ -808,33 +751,4 @@ def maintenance_lease(
     finally:
         stop.set()
         beater.join(timeout=5.0)
-        release_lease(spark, dst, token)
-
-
-def heal_if_crashed(
-    spark: SparkSession, dst: str, stale_ms: int = LEASE_STALE_MS
-) -> bool:
-    """Read-path healing of a legacy flat store that cannot race a LIVE
-    writer.
-
-    An open swap window (``dst`` absent, ``dst__old`` present) is
-    ambiguous from a reader: a crashed swap (heal it) or another
-    process's swap in flight (do NOT touch — renaming ``__old`` back
-    would make the writer's second rename land inside a restored
-    directory).  The lease disambiguates: healing only proceeds under a
-    non-blocking grab of ``dst``'s lease.  A fresh lease ⇒ live writer ⇒
-    no-op — the reader treats the store as transiently unavailable,
-    which is the documented retry contract.  Returns True iff a recovery rename ran.
-
-    NOT for use inside a :func:`maintenance_lease` region (the lease is
-    not reentrant) — lease holders call :func:`recover_swap` directly.
-    """
-    if not swap_window_open(spark, dst):
-        return False
-    token = try_acquire_lease(spark, dst, stale_ms)
-    if token is None:
-        return False
-    try:
-        return recover_swap(spark, dst)
-    finally:
         release_lease(spark, dst, token)

@@ -35,11 +35,11 @@ from pyspark.sql.types import StructType
 from admira_etl_project_prueba_spark.functions.fs import (
     clean_version_scratch,
     commit_version,
-    index_version_dir,
     latest_version,
     maintenance_lease,
     path_exists,
     path_mtime,
+    resolve_store_root,
     version_scratch,
 )
 from admira_etl_project_prueba_spark.operators import _driver
@@ -554,8 +554,8 @@ def ivf_resolved_paths(spark, path: str) -> tuple[str, str]:
     after commit (appends via :func:`merge_ivf_index` add files but
     never remove or rewrite, which a planned scan tolerates), so the
     reader is snapshot-isolated.  Raises ``ValueError`` on a flat store
-    from the old layout (see :func:`functions.fs.index_version_dir`)."""
-    root = index_version_dir(
+    from the old layout (see :func:`functions.fs.resolve_store_root`)."""
+    root = resolve_store_root(
         spark, path, f"write_ivf_index(embeddings, {path.rstrip('/')!r}, ...)"
     )
     return f"{root}/data", f"{root}/manifest"
@@ -1724,8 +1724,8 @@ def pq_resolved_paths(spark, path: str) -> tuple[str, str, str, str]:
     """(codes_path, codebooks_path, centroids_path, manifest_path) of the
     IVF-PQ store's current ``path/vNNNNNNNN/``, resolved once at scan
     start for snapshot isolation.  Raises ``ValueError`` on a flat store
-    from the old layout (see :func:`functions.fs.index_version_dir`)."""
-    root = index_version_dir(
+    from the old layout (see :func:`functions.fs.resolve_store_root`)."""
+    root = resolve_store_root(
         spark, path, f"write_ivfpq_index(embeddings, {path.rstrip('/')!r}, ...)"
     )
     return (

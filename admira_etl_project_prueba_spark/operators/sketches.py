@@ -404,7 +404,7 @@ def quantiles_from_store(
 ) -> DataFrame:
     """Quantile estimates straight off the persisted histogram — the
     read side never touches the event corpus (resolves the current
-    version once at scan start on versioned stores)."""
+    version once at scan start)."""
     from admira_etl_project_prueba_spark.functions.fs import resolve_store_root
 
     return histogram_quantiles(

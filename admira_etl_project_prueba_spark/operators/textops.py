@@ -28,9 +28,9 @@ from admira_etl_project_prueba_spark.functions.fs import (
     clean_version_scratch,
     commit_version,
     copy_tree,
-    index_version_dir,
     maintenance_lease,
     path_exists,
+    resolve_store_root,
     version_scratch,
 )
 from admira_etl_project_prueba_spark.operators._driver import collect_if_small
@@ -1489,10 +1489,8 @@ def merge_lsh_store(
 
 def read_lsh_store(spark, path: str) -> DataFrame:
     """The current signature-store snapshot (version resolved once at
-    scan start on versioned stores) — feed to
+    scan start) — feed to
     :func:`lsh_incremental_pairs`."""
-    from admira_etl_project_prueba_spark.functions.fs import resolve_store_root
-
     return spark.read.parquet(resolve_store_root(spark, path))
 
 
@@ -2334,9 +2332,9 @@ def text_index_root(spark, path: str) -> str:
     points resolve through here.  An absent store resolves to ``path``
     (its ``postings`` child is then absent too); a flat store from the
     old layout raises ``ValueError`` (see
-    :func:`functions.fs.index_version_dir`): delete it and rebuild."""
+    :func:`functions.fs.resolve_store_root`): delete it and rebuild."""
     root = path.rstrip("/")
-    return index_version_dir(
+    return resolve_store_root(
         spark,
         path,
         f"write_text_index(documents, {root!r}, ...) or "
@@ -2730,9 +2728,7 @@ def lm_scores_from_counts(
 ) -> DataFrame:
     """Score documents against the INCREMENTAL count store — the
     always-current sibling of the frozen :func:`lm_scores_from_dists`
-    path.  Resolves the current version once on versioned stores."""
-    from admira_etl_project_prueba_spark.functions.fs import resolve_store_root
-
+    path.  Resolves the current version once."""
     return lm_scores_from_frame(
         documents,
         lm_dists_from_counts(

@@ -2690,8 +2690,8 @@ def _cached_index_path(
     spark, sf_dir, name: str, tag: str, write, table: str = "embeddings"
 ) -> str:
     """Build (once per input-content identity) and return a cached index
-    store for sf_dir's ``table``: ``write(frame, path)`` into
-    ``<tmpdir>/<name>_index_<tag>_<key>``.
+    store (or the BPE merge artifact) for sf_dir's ``table``:
+    ``write(frame, path)`` into ``<tmpdir>/<name>_index_<tag>_<key>``.
 
     The cache key digests every data file's (relpath, size, mtime_ns): a
     Spark-written table is a DIRECTORY, whose own os.stat reflects the
@@ -2701,14 +2701,13 @@ def _cached_index_path(
     so a format change can't probe a stale layout.
 
     The store is built under a unique scratch dir, then renamed into
-    place: the build commits a version inside its own root, so the
-    atomic rename of that root is the completion signal — concurrent
-    runs can never probe a half-written index, and whichever rename
-    loses just uses the winner's identical index.  After a build, the
-    same-``name`` caches of every other tag (and the untagged names of
-    earlier builds) are deleted, so a format bump does not leave the old
-    stores behind; caches of this tag under another key (another
-    ``sf_dir``) stay."""
+    place: the atomic rename of the finished build is the completion
+    signal — concurrent runs can never probe a half-written index, and
+    whichever rename loses just uses the winner's identical index.
+    After a build, the same-``name`` caches of every other tag (and the
+    untagged names of earlier builds) are deleted, so a format bump does
+    not leave the old stores behind; caches of this tag under another
+    key (another ``sf_dir``) stay."""
     import hashlib
     import os
     import re
@@ -6616,48 +6615,18 @@ def _bpe_artifact_path(spark, sf_dir, n_merges: int = 64) -> str:
     """Content-keyed cached BPE merge artifact for ``sf_dir``'s documents
     — trained ONCE per corpus content at depth ``n_merges`` (frontier-
     checkpoint mode), then served frozen: the write_bpe_merges →
-    bpe_encode_from_merges production split, with the same build-under-
-    scratch-then-rename recipe as ``_cached_index_path``."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    files = [src]
-    if os.path.isdir(src):
-        files = sorted(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(src)
-            for f in fs
-            if not f.startswith((".", "_"))
-        )
-    h = hashlib.sha256(f"bpe-merges-v1-{n_merges}\n".encode())
-    for p in files:
-        st = os.stat(p)
-        h.update(
-            f"{os.path.relpath(p, sf_dir)}|{st.st_size}|{st.st_mtime_ns}\n".encode()
-        )
-    path = os.path.join(
-        tempfile.gettempdir(), f"bpe_merges_{h.hexdigest()[:16]}"
+    bpe_encode_from_merges production split, cached by
+    ``_cached_index_path``."""
+    return _cached_index_path(
+        spark,
+        sf_dir,
+        "bpe",
+        f"bpe-merges-v1-n{n_merges}",
+        lambda d, p: _tx.write_bpe_merges(
+            d, p, n_merges=n_merges, checkpoint_every=8
+        ),
+        table="documents",
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        scratch = tempfile.mkdtemp(prefix="bpe_build_")
-        try:
-            build = os.path.join(scratch, "merges")
-            _tx.write_bpe_merges(
-                _t(spark, sf_dir, "documents"),
-                build,
-                n_merges=n_merges,
-                checkpoint_every=8,
-            )
-            try:
-                os.rename(build, path)
-            except OSError:
-                pass  # concurrent run won the rename
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
-    return path
 
 
 @_entry(

@@ -29,8 +29,6 @@ Scale design:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -112,8 +110,9 @@ class MetricsStore:
     scan start, so a report mid-read never loses partitions to a
     concurrent upsert.
 
-    A store written before versions existed (``date=*`` directly under
-    ``path``) stays readable, and its first write migrates it to v1.
+    A root holding ``date=*`` directly (the layout before versions
+    existed) is refused by every read and write with a ``ValueError``
+    naming the migration: move its children into ``path/v00000001``.
 
     ``versioned`` accepts only ``True``: it remains so existing
     ``MetricsStore(..., versioned=True)`` calls keep working."""
@@ -128,19 +127,12 @@ class MetricsStore:
         self.path = path
 
     def _root(self) -> str:
-        """Current payload dir: newest committed version, or the legacy
-        flat path (resolved per call — readers pin a snapshot by
-        resolving once at scan start, which ``read`` does implicitly)."""
+        """Current payload dir: the newest committed version, or ``path``
+        when nothing is committed yet (resolved per call — a reader pins
+        its snapshot by resolving once at scan start, as ``read`` does).
+        A flat root from the old layout raises ``ValueError``
+        (``fs.resolve_store_root``)."""
         return fs.resolve_store_root(self.spark, self.path)
-
-    @contextmanager
-    def _leased(self):
-        """The store's single-writer lease, with a legacy flat store's
-        crashed compaction swap healed first — every write is a
-        read-modify-write, and "absent" must not read as "empty"."""
-        with fs.maintenance_lease(self.spark, self.path):
-            fs.recover_swap(self.spark, self.path)
-            yield
 
     # -- read ---------------------------------------------------------------
     def exists(self) -> bool:
@@ -149,29 +141,8 @@ class MetricsStore:
         Goes through the session's Hadoop FS (functions/fs), NOT
         ``os.path`` — on an HDFS/S3A URI the local-FS form silently
         returns False for a populated store, so every read path would
-        treat real facts as "nothing stored yet".  On a legacy flat
-        store, heals a crashed compaction swap first: in the swap's one
-        crash window the only copy sits at ``path__old``, and "absent ⇒
-        empty frame" would read an existing store as empty (same
-        silent-loss mode the index stores guard, docs/OPERATIONS.md).
-
-        If the window is open but healing declined (a LIVE writer in
-        another process is mid-swap), this raises rather than answer:
-        False here would make ``read()`` fabricate an EMPTY facts frame
-        for a store that exists — callers must see a retryable error,
-        not zero rows.
-        """
-        if fs.latest_version(self.spark, self.path) is not None:
-            # versioned layout: committed versions are immutable and
-            # complete by construction — no swap window to heal or dodge
-            return fs.dir_nonempty(self.spark, self._root())
-        fs.heal_if_crashed(self.spark, self.path)
-        if fs.swap_window_open(self.spark, self.path):
-            raise IOError(
-                f"store at {self.path} is mid-swap by another process "
-                "(maintenance in progress) — retry"
-            )
-        return fs.dir_nonempty(self.spark, self.path)
+        treat real facts as "nothing stored yet"."""
+        return fs.dir_nonempty(self.spark, self._root())
 
     def read(self) -> DataFrame:
         """All stored facts; empty frame when nothing stored yet.
@@ -179,9 +150,10 @@ class MetricsStore:
         whole downstream plan reads that version even if a writer
         commits mid-scan.  The scan takes the declared fact schema, so no
         Spark job runs here to infer it from parquet footers."""
-        if not self.exists():
+        root = self._root()
+        if not fs.dir_nonempty(self.spark, root):
             return self.spark.createDataFrame([], METRICS_SCHEMA)
-        df = self.spark.read.schema(METRICS_SCHEMA).parquet(self._root())
+        df = self.spark.read.schema(METRICS_SCHEMA).parquet(root)
         # the partition column lands last; restore the fact column order
         return df.select(*METRICS_SCHEMA.fieldNames())
 
@@ -249,9 +221,7 @@ class MetricsStore:
         ledger: dict[str, tuple[int, frozenset[int]]] | None = None,
     ) -> None:
         """Write ``full`` (the COMPLETE next payload) as the next
-        immutable version.  Caller holds the store lease.  A legacy flat
-        store migrates here: its payload lands in v1 and the flat
-        remnants are swept after the commit.
+        immutable version.  Caller holds the store lease.
 
         The stream-fold ledger rides along: ``ledger`` (when given)
         replaces it, otherwise the current version's ledger is carried
@@ -260,10 +230,6 @@ class MetricsStore:
         the already-folded increments."""
         if ledger is None:
             ledger = self.stream_fold_ledger()
-        was_flat = (
-            fs.latest_version(self.spark, self.path) is None
-            and fs.dir_nonempty(self.spark, self.path)
-        )
         fs.clean_version_scratch(self.spark, self.path)
         tmp = fs.version_scratch(self.path)
         full.write.partitionBy("date").mode("overwrite").parquet(tmp)
@@ -281,8 +247,6 @@ class MetricsStore:
                 .parquet(f"{tmp}/{self._LEDGER}")
             )
         fs.commit_version(self.spark, self.path, tmp)
-        if was_flat:
-            fs.sweep_flat_remnants(self.spark, self.path)
 
     def _stored_days(self, batch: DataFrame):
         """``(touched, untouched)``: the stored rows on the days ``batch``
@@ -314,7 +278,7 @@ class MetricsStore:
         """
         if mode not in ("upsert", "append"):
             raise ValueError(f"unknown store mode: {mode}")
-        with self._leased():
+        with fs.maintenance_lease(self.spark, self.path):
             if mode == "append":
                 existing = self.read()
                 full = existing.unionByName(
@@ -371,7 +335,7 @@ class MetricsStore:
         instead of failing.  Returns the number of batches folded."""
         if not fs.path_exists(self.spark, log_path):
             return 0
-        with self._leased():
+        with fs.maintenance_lease(self.spark, self.path):
             last_exc: Exception | None = None
             for attempt in range(3):
                 try:
@@ -494,7 +458,7 @@ class MetricsStore:
         single-writer maintenance lease, same as the index compactions.
         Returns (files_before, files_after).
         """
-        with self._leased():
+        with fs.maintenance_lease(self.spark, self.path):
             root = self._root()
             if not fs.dir_nonempty(self.spark, root):
                 return (0, 0)
@@ -508,7 +472,7 @@ class MetricsStore:
         The right mode when re-ingesting a corrected full day from sources
         (vs. `upsert`, which treats the batch as an increment).
         """
-        with self._leased():
+        with fs.maintenance_lease(self.spark, self.path):
             _, untouched = self._stored_days(batch)
             full = batch
             if untouched is not None:
@@ -534,13 +498,11 @@ def backfill_missing_dates(
     retry blast-radius all stay per-group).  Returns
     {requested, already_present, processed, groups}.
     """
-    have = set()
-    if store.exists():
-        have = {
-            d.split("=", 1)[1]
-            for d in fs.list_child_names(store.spark, store._root())
-            if d.startswith("date=")
-        }
+    have = {
+        d.split("=", 1)[1]
+        for d in fs.list_child_names(store.spark, store._root())
+        if d.startswith("date=")
+    }
     missing = sorted(set(source_dates) - have)
     groups = [
         missing[i : i + batch_days] for i in range(0, len(missing), batch_days)

@@ -37,9 +37,7 @@ from admira_etl_project_prueba_spark.functions.fs import (
     is_file_not_found,
     maintenance_lease,
     path_exists,
-    recover_swap,
     resolve_store_root,
-    sweep_flat_remnants,
     version_scratch,
 )
 from admira_etl_project_prueba_spark.operators.transform import transform
@@ -816,20 +814,16 @@ def _write_batch_delta(
     """Land one micro-batch's ``batch_id``-keyed delta in a delta store,
     under the store's lease (a delta must not interleave with a
     compaction's read-and-commit).  The current root is resolved under
-    the lease: an absent store gets the delta as its first version (v1,
-    written to scratch and committed by one rename); otherwise the delta
-    dynamic-overwrites its own ``batch_id`` partition inside the current
-    version, so a replay replaces its earlier write — the way IVF merges
-    append into their current version.  A legacy flat delta store takes
-    the delta in place, keeping its payload visible until
-    :func:`compact_sketch_store` migrates it."""
+    the lease: a store with no payload yet gets the delta as its next
+    version (v1 when absent; written to scratch and committed by one
+    rename); otherwise the delta dynamic-overwrites its own ``batch_id``
+    partition inside the current version, so a replay replaces its
+    earlier write — the way IVF merges append into their current
+    version.  A flat root from the old layout
+    raises ``fs.resolve_store_root``'s ``ValueError``."""
     with maintenance_lease(spark, store_path):
-        # legacy flat store: heal an older build's compaction-swap crash
-        # window first, or the delta would create a batch-only store
-        # beside the orphaned recovery copy
-        recover_swap(spark, store_path)
         root = resolve_store_root(spark, store_path)
-        if root == store_path and not dir_nonempty(spark, store_path):
+        if not dir_nonempty(spark, root):
             clean_version_scratch(spark, store_path)
             tmp = version_scratch(store_path)
             delta.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
@@ -981,15 +975,13 @@ def compact_sketch_store(
 
     The folded store is committed as the NEXT version (one rename), so
     a reader that resolved the previous version completes against it.
-    A legacy flat delta store is migrated here: its folded payload
-    becomes v1 and the flat remnants are swept.
+    A flat root from the old layout raises ``fs.resolve_store_root``'s
+    ``ValueError``.
     """
     # single-writer lease: a concurrent delta writer or second compactor
     # must wait — a delta landing between the read and the commit would
     # be lost from the next version
     with maintenance_lease(spark, store_path):
-        # legacy flat store: heal an older build's swap crash window
-        recover_swap(spark, store_path)
         root = resolve_store_root(spark, store_path)
         store = spark.read.parquet(root)
         if checkpoint_dir is not None:
@@ -1010,8 +1002,6 @@ def compact_sketch_store(
         tmp = version_scratch(store_path)
         merged.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
         commit_version(spark, store_path, tmp)
-        if root == store_path:
-            sweep_flat_remnants(spark, store_path)
 
 
 def stream_scd2(

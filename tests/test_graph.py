@@ -275,15 +275,28 @@ def test_no_conf_set_in_operators():
 
 
 def test_no_two_rename_swap_or_flat_index_option_in_package():
-    """Every store rewrite commits a version (functions/fs.commit_version):
-    no package module brings back the two-rename swap, its ``__compacting``
-    / ``__merging`` staging siblings, or a ``versioned: bool = False``
+    """Every store rewrite commits a version (functions/fs.commit_version)
+    and every reader refuses a flat root: no package module brings back
+    the two-rename swap, its ``__compacting`` / ``__merging`` staging
+    siblings or ``__old`` recovery copy, its crash heal, the flat-store
+    migration sweep, a second resolver, or a ``versioned: bool = False``
     flat-layout option."""
     import pathlib
 
     import admira_etl_project_prueba_spark as pkg
 
-    banned = ("swap_into_place(", "versioned: bool = False", "__compacting", "__merging")
+    banned = (
+        "swap_into_place(",
+        "versioned: bool = False",
+        "__compacting",
+        "__merging",
+        "recover_swap(",
+        "heal_if_crashed(",
+        "swap_window_open(",
+        "sweep_flat_remnants(",
+        "index_version_dir(",
+        '__old"',
+    )
     root = pathlib.Path(pkg.__file__).parent
     offenders = [
         (str(p.relative_to(root)), b)

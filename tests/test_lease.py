@@ -1,7 +1,7 @@
 """functions/fs single-writer maintenance lease: atomic acquire, stale
-takeover, loser-waits blocking, lease-guarded read-path healing, and the
-two-service-instance concurrency contract (concurrent compact + retrain
-on one store cannot interleave renames)."""
+takeover, loser-waits blocking, and the two-service-instance concurrency
+contract (concurrent compact + retrain on one store cannot interleave
+renames)."""
 
 from __future__ import annotations
 
@@ -12,24 +12,10 @@ import time
 import pytest
 
 from admira_etl_project_prueba_spark.functions.fs import (
-    heal_if_crashed,
     maintenance_lease,
-    path_exists,
     release_lease,
-    swap_window_open,
     try_acquire_lease,
 )
-
-
-def _mkstore(path: str, marker: str) -> None:
-    os.makedirs(path)
-    with open(os.path.join(path, "part-0"), "w") as f:
-        f.write(marker)
-
-
-def _marker(path: str) -> str:
-    with open(os.path.join(path, "part-0")) as f:
-        return f.read()
 
 
 # ---------------------------------------------------------------------------
@@ -89,46 +75,6 @@ def test_maintenance_lease_times_out_rather_than_running_unlocked(spark, tmp_pat
         with maintenance_lease(spark, dst, timeout_s=0.3):
             pass
     release_lease(spark, dst)
-
-
-# ---------------------------------------------------------------------------
-# lease-guarded read-path healing
-# ---------------------------------------------------------------------------
-
-
-def test_heal_if_crashed_heals_a_genuinely_crashed_swap(spark, tmp_path):
-    dst = str(tmp_path / "store")
-    _mkstore(dst + "__old", "survivor")
-    assert heal_if_crashed(spark, dst) is True
-    assert _marker(dst) == "survivor"
-    # lease released on the way out: a writer can acquire immediately
-    assert try_acquire_lease(spark, dst)
-    release_lease(spark, dst)
-
-
-def test_heal_if_crashed_noops_under_a_live_writer(spark, tmp_path):
-    """The window-open state is ambiguous from a reader: with a FRESH
-    lease present it is another process's swap IN FLIGHT, and healing
-    (renaming __old back) would corrupt that writer's second rename —
-    the reader must hands-off and treat the store as transiently
-    unavailable."""
-    dst = str(tmp_path / "store")
-    _mkstore(dst + "__old", "mid-swap")
-    assert try_acquire_lease(spark, dst)  # the live writer
-    assert heal_if_crashed(spark, dst) is False  # reader declines
-    assert swap_window_open(spark, dst)  # window untouched
-    assert not path_exists(spark, dst)
-    release_lease(spark, dst)
-    # writer gone (released = finished or crashed-and-stale): heal works
-    assert heal_if_crashed(spark, dst) is True
-    assert _marker(dst) == "mid-swap"
-
-
-def test_heal_if_crashed_noop_when_no_window(spark, tmp_path):
-    dst = str(tmp_path / "healthy")
-    _mkstore(dst, "fine")
-    assert heal_if_crashed(spark, dst) is False
-    assert _marker(dst) == "fine"
 
 
 # ---------------------------------------------------------------------------
@@ -203,41 +149,6 @@ def test_concurrent_compact_and_retrain_cannot_interleave(spark, sf_dir, tmp_pat
     assert idx.agg({"centroid_id": "max"}).first()[0] < 4
     # no debris from either op
     _assert_no_debris(path)
-
-
-def test_recovery_race_reader_vs_live_swap_degrades_to_noop(spark, sf_dir, tmp_path):
-    """Round-8 recovery contract re-verified UNDER the lease (VERDICT r8
-    next-round #8): a reader healing in process A while process B swaps
-    must degrade to a no-op.  Simulated at the exact hazard point — the
-    window between B's two renames, with B's lease held — using the real
-    service read path of a legacy flat histogram store, the one store
-    read that still heals a swap window."""
-    from admira_etl_project_prueba_spark.corpus_service import CorpusService
-    from admira_etl_project_prueba_spark.operators.sketches import value_histogram
-    from admira_etl_project_prueba_spark.sources.tables import load_events, load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "hist")
-    # a legacy flat histogram store (payload directly under the root)
-    value_histogram(load_events(spark, sf_dir)).write.parquet(path)
-    svc = CorpusService(spark, docs)
-
-    # freeze B mid-swap: window open, B's lease held
-    os.rename(path, path + "__old")
-    token = try_acquire_lease(spark, path)
-    assert token
-
-    # reader in "process A": must not restore __old under B's live lease
-    svc._heal_crashed_swap(path)
-    assert swap_window_open(spark, path)  # untouched
-
-    # B "resumes": put the store back the way its second rename would,
-    # release, and verify the reader now sees a healthy store
-    os.rename(path + "__old", path)
-    release_lease(spark, path, token)
-    out = svc.drift_report(base=path, current=path)
-    assert out["mode"] == "psi" and out["data"]
-    assert all(d["psi"] == 0.0 for d in out["data"])
 
 
 def test_concurrent_upserts_do_not_lose_updates(spark, sf_dir, tmp_path):
@@ -388,55 +299,18 @@ def test_fact_store_append_waits_out_live_compaction_swap(spark, sf_dir, tmp_pat
     assert got.agg(F.sum("clicks")).first()[0] == 2 * batch.agg(F.sum("clicks")).first()[0]
 
 
-def test_fact_store_read_raises_during_foreign_swap(spark, sf_dir, tmp_path):
-    """exists()/read() must not fabricate an EMPTY facts frame while
-    another process is mid-swap (window open + live foreign lease):
-    callers need a retryable error, not zero rows."""
-    import os as _os
-
-    from admira_etl_project_prueba_spark.operators.transform import transform
-    from admira_etl_project_prueba_spark.sources.synthetic import (
-        synthetic_ads,
-        synthetic_crm,
-    )
-    from admira_etl_project_prueba_spark.sources.tables import load_events
-    from admira_etl_project_prueba_spark.store import MetricsStore
-
-    ev = load_events(spark, sf_dir)
-    batch = transform(synthetic_ads(ev), synthetic_crm(ev))
-    path = str(tmp_path / "facts")
-    store = MetricsStore(spark, path)
-    # a store in the legacy flat layout, the only one with a swap window
-    batch.write.partitionBy("date").parquet(path)
-
-    # freeze a foreign compaction mid-swap: window open, lease held
-    _os.rename(path, path + "__old")
-    foreign = try_acquire_lease(spark, path)
-    assert foreign
-    with pytest.raises(IOError, match="mid-swap"):
-        store.exists()
-    with pytest.raises(IOError, match="mid-swap"):
-        store.read()
-    # writer finishes: restore + release — reads work again
-    _os.rename(path + "__old", path)
-    release_lease(spark, path, foreign)
-    assert store.exists() is True
-    assert store.read().count() > 0
-
-
 def test_lease_excludes_across_real_processes(spark, tmp_path):
     """The lease's whole point is CROSS-PROCESS exclusion (in-process
     writers already share the service lock), so prove it with a real
     second PROCESS: a subprocess acquires the store's lease through the
     same os-level primitive the local scheme uses, holds it, and the
-    parent session must fail non-blocking acquire, wait-and-timeout in
-    maintenance_lease, decline read-path healing — then succeed the
-    moment the process exits cleanly."""
+    parent session must fail non-blocking acquire and wait-and-timeout
+    in maintenance_lease — then succeed the moment the process exits
+    cleanly."""
     import subprocess
     import sys
 
     dst = str(tmp_path / "store")
-    _mkstore(dst + "__old", "mid-swap")  # give the reader a window too
 
     holder = subprocess.Popen(
         [
@@ -461,7 +335,6 @@ def test_lease_excludes_across_real_processes(spark, tmp_path):
         assert holder.stdout.readline().strip() == "held"
         # parent: every acquire path must refuse while the process holds
         assert try_acquire_lease(spark, dst) is None
-        assert heal_if_crashed(spark, dst) is False
         with pytest.raises(TimeoutError):
             with maintenance_lease(spark, dst, timeout_s=0.4):
                 pass
@@ -472,9 +345,6 @@ def test_lease_excludes_across_real_processes(spark, tmp_path):
         token = try_acquire_lease(spark, dst)
         assert token
         release_lease(spark, dst, token)
-        # and the reader can now heal the crashed window
-        assert heal_if_crashed(spark, dst) is True
-        assert _marker(dst) == "mid-swap"
     finally:
         if holder.poll() is None:
             holder.kill()

@@ -1265,71 +1265,6 @@ def test_index_routes_pollable_before_stores_exist(spark, sf_dir, tmp_path):
     assert svc.index_compact()["data"]["compacted"] == []
 
 
-def test_read_path_recovery_takes_the_maintenance_lock(spark, sf_dir, tmp_path):
-    """The read path's crash-window recovery of a legacy flat histogram
-    store (the one store read that still heals an older build's
-    two-rename swap) must serialize against maintenance: an unlocked
-    recover could restore __old between an in-flight swap's two renames.
-    Pin both halves of the contract: (a) _heal_crashed_swap acquires the
-    maintenance lock around the recovery rename; (b) a heal called from
-    inside a maintenance region (the lock is held) runs end to end
-    without deadlocking."""
-    import shutil
-    import threading
-
-    from admira_etl_project_prueba_spark.corpus_service import CorpusService
-    from admira_etl_project_prueba_spark.operators.sketches import value_histogram
-    from admira_etl_project_prueba_spark.sources.tables import load_events, load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    hist = str(tmp_path / "hist")
-    # a legacy flat histogram store (payload directly under the root)
-    value_histogram(load_events(spark, sf_dir)).write.parquet(hist)
-    svc = CorpusService(spark, documents=docs)
-
-    class _ProbeLock:
-        """Delegates to an RLock, recording acquisitions."""
-
-        def __init__(self):
-            self.inner = threading.RLock()
-            self.acquisitions = 0
-
-        def __enter__(self):
-            self.acquisitions += 1
-            return self.inner.__enter__()
-
-        def __exit__(self, *exc):
-            return self.inner.__exit__(*exc)
-
-    def drift():
-        return svc.drift_report(base=hist, current=hist)["n_types"]
-
-    probe = _ProbeLock()
-    svc._maintenance_lock = probe
-    # (a) healing a crash window goes through the lock
-    shutil.move(hist, hist + "__old")
-    n_types = drift()
-    assert n_types > 0
-    assert probe.acquisitions >= 1
-    # healthy-store reads do NOT touch the lock (hot path stays lock-free)
-    before = probe.acquisitions
-    assert drift() == n_types
-    assert probe.acquisitions == before
-    # (b) heal from inside a maintenance region, across another window
-    shutil.move(hist, hist + "__old")
-    done = []
-
-    def run():
-        with svc._maintenance_lock:
-            done.append(drift())
-
-    t = threading.Thread(target=run, daemon=True)
-    t.start()
-    t.join(timeout=120)
-    assert not t.is_alive(), "the read-path heal deadlocked on the maintenance lock"
-    assert done == [n_types]
-
-
 def test_near_dup_pairs_semantic_method(spark, sf_dir, tmp_path):
     """method=semantic on /corpus/dedup/pairs: SemDeDup pairs served from
     the CONFIGURED persisted IVF index's assignments when ready (the

@@ -4,8 +4,9 @@ model stores (plus the one-layout contract of the index stores and the
 streaming sketch stores).  Each gets (a) lifecycle parity with a from-scratch
 rebuild or a plain-Python per-key sum, (b) the reader-vs-rewriter race
 pinned: a reader that resolved the previous version before a fold
-completes against its snapshot, byte-for-byte, and (c) the legacy flat
-layout still read and migrated on the first write."""
+completes against its snapshot, byte-for-byte, and (c) a root in the old
+flat layout refused by every reader and writer, readable again once its
+children are moved into ``v00000001``."""
 
 from __future__ import annotations
 
@@ -80,6 +81,33 @@ def _legacy_flat_write(df, path):
     df.write.partitionBy("date").parquet(path)
 
 
+#: the refusal every non-index store reader and writer raises on a flat root
+_MIGRATE = r"old flat layout\. Migrate it by moving every child of .+ into .+/v00000001"
+
+
+def _move_into_v1(path):
+    """The migration the refusal names: every child of the flat root
+    moved into ``v00000001``."""
+    import os
+
+    children = os.listdir(path)
+    os.makedirs(os.path.join(path, "v00000001"))
+    for n in children:
+        os.rename(os.path.join(path, n), os.path.join(path, "v00000001", n))
+
+
+def _tree(path):
+    """Every file under ``path`` with its bytes, keyed by relative path."""
+    import os
+
+    out = {}
+    for r, _, files in os.walk(path):
+        for f in files:
+            with open(os.path.join(r, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(r, f), path)] = fh.read()
+    return out
+
+
 def test_metrics_store_versioned_lifecycle_parity(spark, tmp_path):
     """upsert / replace / compact produce the facts a plain-Python
     per-key sum predicts, each write commits a new immutable version,
@@ -116,35 +144,26 @@ def test_metrics_store_versioned_lifecycle_parity(spark, tmp_path):
 
 
 def test_metrics_store_flat_migrates_on_first_versioned_write(spark, tmp_path):
-    """A store in the legacy flat layout: the first write commits the
-    full payload as v1 (prior facts preserved), sweeps the flat
-    remnants, and later instances keep writing versions."""
+    """A store in the old flat layout is refused by a write, which
+    commits nothing.  Once its children are moved into ``v00000001`` by
+    hand, the next write commits v2 over the prior facts and the root
+    holds only version dirs."""
     path = str(tmp_path / "mig")
     legacy = _batch(spark, ["2024-02-01"])
     _legacy_flat_write(legacy, path)
-    flat = MetricsStore(spark, path)
-    want_before = _rows(legacy)
-    assert _rows(flat.read()) == want_before  # the flat payload reads
+    store = MetricsStore(spark, path)
+    with pytest.raises(ValueError, match=_MIGRATE):
+        store.store(_batch(spark, ["2024-02-02"]))
+    assert fs.latest_version(spark, path) is None
 
-    ver = MetricsStore(spark, path, versioned=True)
-    ver.store(_batch(spark, ["2024-02-02"]))
-    assert fs.latest_version(spark, path) == "v00000001"
-    # flat remnants swept: only version dirs remain under the root
-    leftover = [
-        n for n in fs.list_child_names(spark, path)
-        if not fs._is_version_name(n)
-    ]
-    assert leftover == []
-    assert {r["date"] for r in ver.read().select("date").distinct().collect()} == {
+    _move_into_v1(path)
+    store.store(_batch(spark, ["2024-02-02"]))
+    assert fs.latest_version(spark, path) == "v00000002"
+    assert all(fs._is_version_name(n) for n in fs.list_child_names(spark, path))
+    assert {r["date"] for r in store.read().select("date").distinct().collect()} == {
         "2024-02-01", "2024-02-02"
     }
-    assert _rows(ver.read().filter("date = '2024-02-01'")) == want_before
-
-    # a second instance on the now-versioned store still versions
-    plain = MetricsStore(spark, path)
-    plain.store(_batch(spark, ["2024-02-03"]))
-    assert fs.latest_version(spark, path) == "v00000002"
-    assert plain.read().count() == ver.read().count() == 3
+    assert _rows(store.read().filter("date = '2024-02-01'")) == _rows(legacy)
 
 
 def test_metrics_store_rejects_unversioned_flag(spark, tmp_path):
@@ -213,12 +232,9 @@ def test_metrics_store_read_starts_no_job(spark, tmp_path, jobs_started):
     """read() scans with the declared fact schema: building the frame
     starts no Spark job, yet it returns the same rows and dtypes as a
     read that infers the schema from the parquet footers.  Checked on a
-    legacy flat store and on a versioned store whose current version
-    carries the hidden stream-fold ledger."""
+    store whose current version carries the hidden stream-fold
+    ledger."""
     from admira_etl_project_prueba_spark.schemas import METRICS_SCHEMA
-
-    flat = MetricsStore(spark, str(tmp_path / "flat"))
-    _legacy_flat_write(_batch(spark, ["2024-01-01", "2024-01-02"]), flat.path)
 
     ver = MetricsStore(spark, str(tmp_path / "ver"))
     ver.store(_batch(spark, ["2024-01-02", "2024-01-03"]))
@@ -233,21 +249,42 @@ def test_metrics_store_read_starts_no_job(spark, tmp_path, jobs_started):
     assert ver.fold_stream_log(log) == 1
     assert fs.dir_nonempty(spark, f"{ver._root()}/{ver._LEDGER}")
 
-    for store in (flat, ver):
-        df, jobs = jobs_started(spark, store.read)
-        assert jobs == []
-        inferred, inferred_jobs = jobs_started(
-            spark,
-            lambda: spark.read.parquet(store._root()).select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in METRICS_SCHEMA.fields
-                ]
-            ),
-        )
-        assert inferred_jobs  # the probe does see a schema-inference job
-        assert df.dtypes == inferred.dtypes
-        assert _rows(df) == _rows(inferred)
+    df, jobs = jobs_started(spark, ver.read)
+    assert jobs == []
+    inferred, inferred_jobs = jobs_started(
+        spark,
+        lambda: spark.read.parquet(ver._root()).select(
+            *[
+                F.col(f.name).cast(f.dataType).alias(f.name)
+                for f in METRICS_SCHEMA.fields
+            ]
+        ),
+    )
+    assert inferred_jobs  # the probe does see a schema-inference job
+    assert df.dtypes == inferred.dtypes
+    assert _rows(df) == _rows(inferred)
+
+
+def test_metrics_store_read_resolves_the_root_once(spark, tmp_path, monkeypatch):
+    """read() and exists() resolve the current version exactly once per
+    call (one ``fs.latest_version`` listing), on an absent store and on a
+    written one."""
+    calls = []
+    latest = fs.latest_version
+
+    def counting(spark_, root):
+        calls.append(root)
+        return latest(spark_, root)
+
+    monkeypatch.setattr(fs, "latest_version", counting)
+    store = MetricsStore(spark, str(tmp_path / "facts"))
+    for written in (False, True):
+        if written:
+            store.store(_batch(spark, ["2024-01-01"]))
+        for probe in (store.read, store.exists):
+            calls.clear()
+            probe()
+            assert len(calls) == 1, (written, probe.__name__, calls)
 
 
 def test_stream_fold_ledger_read_starts_only_its_collect_job(
@@ -298,18 +335,17 @@ def _events(spark, n, shift=0):
 
 
 def test_fold_whole_store_flat_migration_sweeps_remnants(spark, tmp_path):
-    """fold_whole_store on an EXISTING legacy flat payload (the
-    migration) must sweep the old flat parquet files after committing
-    v1 — mirroring MetricsStore._commit_full — or a legacy reader of the
-    bare path sees stale data forever and the space is never reclaimed.
-    The merged payload must still have SEEN the flat rows (migration
-    folds, it does not replace)."""
+    """fold_whole_store on a legacy flat payload refuses before it
+    builds or writes anything: the flat files stay byte-identical and no
+    version appears.  After the hand migration into ``v00000001`` the
+    fold consumes those rows, commits v2, and the root holds only
+    version dirs, with the content a from-scratch build gives."""
     path = str(tmp_path / "mig_fold")
     a, b = _events(spark, 50), _events(spark, 30, shift=13)
     # the legacy flat layout: the payload directly under the path
     sk.value_histogram(a).coalesce(1).write.parquet(path)
-    assert fs.latest_version(spark, path) is None
     flat_rows = _rows(spark.read.parquet(path))
+    flat_files = _tree(path)
 
     seen = {}
     def build(prev):
@@ -321,14 +357,16 @@ def test_fold_whole_store_flat_migration_sweeps_remnants(spark, tmp_path):
             .agg(F.sum("n").cast("long").alias("n"))
         )
 
+    with pytest.raises(ValueError, match=_MIGRATE):
+        fs.fold_whole_store(spark, path, build)
+    assert seen == {}
+    assert _tree(path) == flat_files
+    assert fs.latest_version(spark, path) is None
+
+    _move_into_v1(path)
     fs.fold_whole_store(spark, path, build)
-    assert seen["prev"] == flat_rows  # the fold consumed the flat payload
-    assert fs.latest_version(spark, path) == "v00000001"
-    leftover = [
-        n for n in fs.list_child_names(spark, path)
-        if not fs._is_version_name(n)
-    ]
-    assert leftover == []  # flat remnants swept
+    assert seen["prev"] == flat_rows  # the fold consumed the migrated payload
+    assert sorted(fs.list_child_names(spark, path)) == ["v00000001", "v00000002"]
     # merged content == from-scratch over the union
     rebuilt = str(tmp_path / "mig_rebuilt")
     sk.write_histogram_store(
@@ -337,8 +375,7 @@ def test_fold_whole_store_flat_migration_sweeps_remnants(spark, tmp_path):
     assert _rows(sk.quantiles_from_store(spark, path)) == _rows(
         sk.quantiles_from_store(spark, rebuilt)
     )
-    # a FIRST write (no flat payload) has nothing to sweep and commits
-    # v1 directly
+    # a FIRST write commits v1 directly
     fresh = str(tmp_path / "mig_fresh")
     sk.write_histogram_store(a, fresh)
     assert fs.latest_version(spark, fresh) == "v00000001"
@@ -597,11 +634,19 @@ def test_index_store_builds_and_maintenance_commit_versions(
 
 
 def test_flat_index_store_raises_rebuild_error(spark, tmp_path):
-    """A root holding payload but no committed version is an index store
-    in the old flat layout: both resolvers refuse it with a ValueError
+    """A root holding payload but no committed version is a store in the
+    old flat layout.  The index resolvers refuse it with a ValueError
     naming the rebuild call.  An absent root, or one holding only a
-    crashed first build's scratch, still reads as not written."""
+    crashed first build's scratch, still reads as not written.
+
+    The fact, histogram and CMS delta stores keep the flat layout inside
+    each version: every read and write of a flat root raises the
+    ValueError naming the migration, leaves the payload byte-identical
+    and commits no version; once the children are moved into
+    ``v00000001`` the store reads the same rows as the flat payload."""
     import os
+
+    from admira_etl_project_prueba_spark.streaming import ingest
 
     from admira_etl_project_prueba_spark.corpus_service import CorpusService
     from admira_etl_project_prueba_spark.operators import similarity as sim
@@ -635,6 +680,72 @@ def test_flat_index_store_raises_rebuild_error(spark, tmp_path):
         svc = CorpusService(spark, docs, ivf_index_path=root, pq_index_path=root)
         assert svc._ivf_index_ready() is False, root
         assert svc._pq_index_ready() is False, root
+
+    legacy = _batch(spark, ["2024-05-01", "2024-05-02"])
+    facts = str(tmp_path / "flat_facts")
+    _legacy_flat_write(legacy, facts)
+    store = MetricsStore(spark, facts)
+    log = str(tmp_path / "flat_facts_log")
+    (
+        _batch(spark, ["2024-05-02"], base=7)
+        .withColumn("stream_id", F.lit("s1"))
+        .withColumn("batch_id", F.lit(0).cast("long"))
+        .write.partitionBy("stream_id", "batch_id")
+        .parquet(log)
+    )
+    hist = str(tmp_path / "flat_hist")
+    sk.value_histogram(_events(spark, 40)).coalesce(1).write.parquet(hist)
+    cms = str(tmp_path / "flat_cms")
+    sketch = tx.cms_sketch(
+        spark.createDataFrame(
+            [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
+        ),
+        depth=2,
+        width=64,
+    )
+    sketch.withColumn("batch_id", F.lit(7).cast("long")).write.partitionBy(
+        "batch_id"
+    ).parquet(cms)
+    svc = CorpusService(spark, docs)
+    calls = {
+        facts: [
+            store.read,
+            store.exists,
+            lambda: store.store(_batch(spark, ["2024-05-03"])),
+            lambda: store.store(_batch(spark, ["2024-05-03"]), mode="append"),
+            lambda: store.store_idempotent_replace(_batch(spark, ["2024-05-01"])),
+            store.compact,
+            lambda: store.fold_stream_log(log),
+        ],
+        hist: [
+            lambda: sk.quantiles_from_store(spark, hist),
+            lambda: svc.drift_report(base=hist, current=hist),
+            lambda: sk.write_histogram_store(_events(spark, 10), hist),
+            lambda: sk.merge_histogram_store(spark, hist, _events(spark, 10)),
+        ],
+        cms: [
+            lambda: ingest.read_sketch_store(spark, cms),
+            lambda: ingest._write_batch_delta(
+                spark, cms, sketch.withColumn("batch_id", F.lit(8).cast("long"))
+            ),
+            lambda: ingest.compact_sketch_store(spark, cms),
+        ],
+    }
+    for root, refused in calls.items():
+        files, want = _tree(root), _rows(spark.read.parquet(root))
+        for call in refused:
+            with pytest.raises(ValueError, match=_MIGRATE):
+                call()
+        assert _tree(root) == files, root
+        assert "v00000001" not in os.listdir(root), root
+        _move_into_v1(root)
+        assert _rows(spark.read.parquet(fs.resolve_store_root(spark, root))) == want
+    assert fs.path_exists(spark, f"{log}/stream_id=s1/batch_id=0")  # not folded
+    assert _rows(store.read()) == _rows(legacy)
+    assert _rows(ingest.read_sketch_store(spark, cms)) == _rows(
+        sketch.groupBy("r", "bucket").agg(F.sum("cnt").cast("long").alias("cnt"))
+    )
+    assert svc.drift_report(base=hist, current=hist)["n_types"] == 2
 
 
 def test_every_versioned_store_gc_and_resolve_sweep(spark, sf_dir, tmp_path):
