@@ -24,8 +24,9 @@ from pyspark.sql import SparkSession
 RUNTIME_CONFS: dict[str, str] = {
     # Day-grain date strings must not depend on the host timezone.
     "spark.sql.session.timeZone": "UTC",
-    # The testdata `events` table stores parquet TIMESTAMP(NANOS) which
-    # vanilla Spark refuses to read; read it as raw nanos and convert.
+    # A parquet TIMESTAMP(NANOS) column, which vanilla Spark refuses to
+    # read, arrives as raw nanos (LongType) instead of failing the scan.
+    # The testdata tables store microseconds (sources/tables.py).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Runtime re-planning: coalesce small shuffle partitions, split skewed
     # ones. Safe at every scale; critical at large SF.
@@ -45,7 +46,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             # A conf may be static on some builds; engine code degrades
-            # gracefully (tables.py falls back for nanos timestamps).
+            # gracefully.
             pass
     return spark
 

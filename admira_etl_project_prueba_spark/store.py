@@ -150,7 +150,12 @@ class MetricsStore:
         whole downstream plan reads that version even if a writer
         commits mid-scan.  The scan takes the declared fact schema, so no
         Spark job runs here to infer it from parquet footers."""
-        root = self._root()
+        return self._read(self._root())
+
+    def _read(self, root: str) -> DataFrame:
+        """:meth:`read` of the payload dir ``root``, resolved by the
+        caller — a writer resolves once under its lease and reads,
+        carries the ledger forward and commits against that one root."""
         if not fs.dir_nonempty(self.spark, root):
             return self.spark.createDataFrame([], METRICS_SCHEMA)
         df = self.spark.read.schema(METRICS_SCHEMA).parquet(root)
@@ -200,7 +205,11 @@ class MetricsStore:
         ``stream_id:batch_id``) are parsed and compacted on read.  The
         scan declares the superset of both formats' columns, so the
         collect is the only Spark job."""
-        p = f"{self._root()}/{self._LEDGER}"
+        return self._ledger(self._root())
+
+    def _ledger(self, root: str) -> dict[str, tuple[int, frozenset[int]]]:
+        """:meth:`stream_fold_ledger` of the payload dir ``root``."""
+        p = f"{root}/{self._LEDGER}"
         if not fs.dir_nonempty(self.spark, p):
             return {}
         folded: dict[str, tuple[int, set[int]]] = {}
@@ -218,10 +227,12 @@ class MetricsStore:
     def _commit_full(
         self,
         full: DataFrame,
+        root: str,
         ledger: dict[str, tuple[int, frozenset[int]]] | None = None,
     ) -> None:
         """Write ``full`` (the COMPLETE next payload) as the next
-        immutable version.  Caller holds the store lease.
+        immutable version.  Caller holds the store lease and resolved
+        the current payload dir ``root`` under it.
 
         The stream-fold ledger rides along: ``ledger`` (when given)
         replaces it, otherwise the current version's ledger is carried
@@ -229,7 +240,7 @@ class MetricsStore:
         not lose the folded-batch memory, or a fold replay would double
         the already-folded increments."""
         if ledger is None:
-            ledger = self.stream_fold_ledger()
+            ledger = self._ledger(root)
         fs.clean_version_scratch(self.spark, self.path)
         tmp = fs.version_scratch(self.path)
         full.write.partitionBy("date").mode("overwrite").parquet(tmp)
@@ -248,13 +259,14 @@ class MetricsStore:
             )
         fs.commit_version(self.spark, self.path, tmp)
 
-    def _stored_days(self, batch: DataFrame):
-        """``(touched, untouched)``: the stored rows on the days ``batch``
-        holds, and on every other day — ``(None, None)`` when nothing is
-        stored.  Caller HOLDS the store lease."""
-        if not fs.dir_nonempty(self.spark, self._root()):
+    def _stored_days(self, batch: DataFrame, root: str):
+        """``(touched, untouched)``: the stored rows of payload dir
+        ``root`` on the days ``batch`` holds, and on every other day —
+        ``(None, None)`` when nothing is stored.  Caller HOLDS the store
+        lease."""
+        if not fs.dir_nonempty(self.spark, root):
             return None, None
-        existing = self.read()
+        existing = self._read(root)
         days = F.broadcast(batch.select("date").distinct())
         return (
             existing.join(days, "date", "left_semi"),
@@ -279,20 +291,22 @@ class MetricsStore:
         if mode not in ("upsert", "append"):
             raise ValueError(f"unknown store mode: {mode}")
         with fs.maintenance_lease(self.spark, self.path):
+            root = self._root()
             if mode == "append":
-                existing = self.read()
+                existing = self._read(root)
                 full = existing.unionByName(
                     _rebalanced(batch).select(existing.columns)
                 )
             else:
-                full = self._upsert_frames(batch)
-            self._commit_full(full)
+                full = self._upsert_frames(batch, root)
+            self._commit_full(full, root)
 
-    def _upsert_frames(self, batch: DataFrame) -> DataFrame:
-        """The full next payload for an upsert of ``batch``: the batch's
-        days re-summed with the stored rows for those days, plus the
-        untouched days.  Caller HOLDS the store lease."""
-        touched, untouched = self._stored_days(batch)
+    def _upsert_frames(self, batch: DataFrame, root: str) -> DataFrame:
+        """The full next payload for an upsert of ``batch`` into payload
+        dir ``root``: the batch's days re-summed with the stored rows for
+        those days, plus the untouched days.  Caller HOLDS the store
+        lease."""
+        touched, untouched = self._stored_days(batch, root)
         if touched is None:
             return _rebalanced(batch)
         # Only days present in the batch can change; the merge input is
@@ -360,7 +374,8 @@ class MetricsStore:
         }
         if not pairs:
             return 0
-        ledger = self.stream_fold_ledger()
+        root = self._root()
+        ledger = self._ledger(root)
 
         def covered(s: str, b: int) -> bool:
             hwm, tail = ledger.get(s, (-1, frozenset()))
@@ -382,11 +397,11 @@ class MetricsStore:
                     for f in METRICS_SCHEMA.fields
                 ]
             )
-            full = self._upsert_frames(batch)
+            full = self._upsert_frames(batch, root)
             nxt = {s: (hwm, set(tail)) for s, (hwm, tail) in ledger.items()}
             for s, b in todo:
                 nxt.setdefault(s, (-1, set()))[1].add(b)
-            self._commit_full(full, ledger=self._compact_ledger(nxt))
+            self._commit_full(full, root, ledger=self._compact_ledger(nxt))
         # every batch this fold saw is now in the current ledger —
         # a crash between commit and cleanup re-runs as cleanup-only
         jfs, _, jvm = fs._fs_and_path(self.spark, log_path)
@@ -463,7 +478,7 @@ class MetricsStore:
             if not fs.dir_nonempty(self.spark, root):
                 return (0, 0)
             before = fs.count_files(self.spark, root)
-            self._commit_full(self.read().repartition("date"))
+            self._commit_full(self._read(root).repartition("date"), root)
             return (before, fs.count_files(self.spark, self._root()))
 
     def store_idempotent_replace(self, batch: DataFrame) -> None:
@@ -473,11 +488,12 @@ class MetricsStore:
         (vs. `upsert`, which treats the batch as an increment).
         """
         with fs.maintenance_lease(self.spark, self.path):
-            _, untouched = self._stored_days(batch)
+            root = self._root()
+            _, untouched = self._stored_days(batch, root)
             full = batch
             if untouched is not None:
                 full = untouched.select(batch.columns).unionByName(batch)
-            self._commit_full(full)
+            self._commit_full(full, root)
 
 
 def backfill_missing_dates(

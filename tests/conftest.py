@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import os
 import sys
-import uuid
 from collections import Counter
 
 import pytest
@@ -71,20 +70,10 @@ def plan_operators():
     return _plan_operators
 
 
-def _jobs_started(spark, fn):
-    """(result of ``fn()``, ids of the Spark jobs it started)."""
-    sc = spark.sparkContext
-    group = f"jobs-probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.fixture(scope="session")
 def jobs_started():
-    return _jobs_started
+    """``jobs_started(spark, fn)`` → (result of ``fn()``, ids of the
+    Spark jobs it started)."""
+    from tools.construct_audit import jobs_started
+
+    return jobs_started

@@ -287,6 +287,27 @@ def test_metrics_store_read_resolves_the_root_once(spark, tmp_path, monkeypatch)
             assert len(calls) == 1, (written, probe.__name__, calls)
 
 
+def test_metrics_store_upsert_resolves_the_root_once(spark, tmp_path, monkeypatch):
+    """An upsert into a written store resolves the current version once
+    under its lease — the stored-days read and the carried-forward
+    ledger use that root — and ``commit_version`` lists once more to
+    name the next version: two ``fs.latest_version`` listings."""
+    calls = []
+    latest = fs.latest_version
+
+    def counting(spark_, root):
+        calls.append(root)
+        return latest(spark_, root)
+
+    store = MetricsStore(spark, str(tmp_path / "facts"))
+    b1, b2 = _batch(spark, ["2024-01-01"]), _batch(spark, ["2024-01-01", "2024-01-02"])
+    store.store(b1)
+    monkeypatch.setattr(fs, "latest_version", counting)
+    store.store(b2)
+    assert len(calls) == 2, calls
+    assert _stored_sums(store) == _sums(b1, b2)
+
+
 def test_stream_fold_ledger_read_starts_only_its_collect_job(
     spark, tmp_path, jobs_started
 ):
