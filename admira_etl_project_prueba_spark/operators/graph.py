@@ -22,10 +22,16 @@ this module keeps the engine dependency-free.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from admira_etl_project_prueba_spark.operators._driver import collect_if_small
+from admira_etl_project_prueba_spark.operators._driver import (
+    collect_if_small,
+    local_frame,
+)
 
 
 def connected_components_star(
@@ -106,18 +112,14 @@ def connected_components_star(
                     if rv < ru:
                         ru, rv = rv, ru
                     parent[rv] = ru
-        spark = edges.sparkSession
-        from pyspark.sql import types as _T
-
         node_t = canon.schema["u"].dataType
-        schema = _T.StructType(
-            [
-                _T.StructField("node", node_t),
-                _T.StructField("component", node_t),
-            ]
-        )
-        return spark.createDataFrame(
-            [(n, find(n)) for n in sorted(seen)], schema
+        nodes = sorted(seen)
+        return local_frame(
+            edges.sparkSession,
+            [nodes, [find(n) for n in nodes]],
+            T.StructType(
+                [T.StructField("node", node_t), T.StructField("component", node_t)]
+            ),
         )
     # nodes BEFORE the self-loop filter: a node appearing only as (x, x)
     # must still be labeled (as its own center)
@@ -269,12 +271,16 @@ def pagerank(
     DECIMAL(25,6) — order-independent across partitionings and engines —
     and converted to double only at the per-round rank update.
 
-    Scale shape: each round is ONE shuffle of (dst, contribution) pairs
-    plus a 1-row dangling aggregate and two broadcast scalars.  Edges and
-    out-degrees are computed once and localCheckpoint-ed (iterative-loop
-    invariant rule, docs/SCALE.md); the rank frame is ALSO checkpointed
-    per round — it has three consumers (contributions, dangling mass,
-    next update), so a lazy chain would replay round k-1 three times per
+    Scale shape: when the deduplicated edge set fits under
+    ``_driver.DRIVER_ROWS_MAX`` it is collected once and the rounds run
+    on the driver (:func:`_pagerank_on_driver`, same arithmetic, same
+    doubles); the result comes back as a local frame.  Above the bound
+    each round is ONE shuffle of (dst, contribution) pairs plus a 1-row
+    dangling aggregate and two broadcast scalars.  Edges and out-degrees
+    are computed once and localCheckpoint-ed (iterative-loop invariant
+    rule, docs/SCALE.md); the rank frame is ALSO checkpointed per round
+    — it has three consumers (contributions, dangling mass, next
+    update), so a lazy chain would replay round k-1 three times per
     round, ~3^k jobs total.  The checkpointed frame is node-sized
     (node, rank) — KBs per million nodes.  At sf0.1 (~600k edges) the
     wall clock is dominated by one-time graph construction (join +
@@ -290,22 +296,36 @@ def pagerank(
     # 5.1 s): the deserialized-cache scan + extra setup repartition cost
     # more than the three tiny exchanges they remove at this scale
     # (docs/SCALE.md rule 9).
-    # LAZY checkpoints: a checkpointed frame is one shared RDD, so its
-    # consumers reuse a single computation either way — but eager=True
-    # forces a separate job per checkpoint (3 setup + 1 per round), while
-    # lazy ones all materialize inside the caller's single action
-    # (measured −6–9% end-to-end at sf0.1, bit-identical).
+    # LAZY checkpoints are not free to build under AQE: building one
+    # plans its adaptive query and runs every shuffle and broadcast
+    # stage in it at once, one job each; only the final stage waits for
+    # the first consumer.  So the round loop starts nearly all its jobs
+    # while the frame is built (trade_pagerank's loop forced at sf0.01:
+    # 49 construction jobs, 2 of them the bound probe's count, then 1
+    # for the caller's action).  eager=True would add a job per
+    # checkpoint on top (lazy measured −6–9% end-to-end at sf0.1,
+    # bit-identical).
     e = (
         edges.selectExpr(f"{src} AS src", f"{dst} AS dst")
         .distinct()
         .localCheckpoint(eager=False)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+    nodes = e.select(F.col("src").alias("node")).unionByName(
+        e.select(F.col("dst").alias("node"))
     )
+    rows = collect_if_small(e)
+    if rows is not None:
+        return local_frame(
+            e.sparkSession,
+            _pagerank_on_driver(rows, iters, damping),
+            T.StructType(
+                [
+                    T.StructField("node", nodes.schema["node"].dataType),
+                    T.StructField("rank", T.DoubleType()),
+                ]
+            ),
+        )
+    nodes = nodes.distinct().localCheckpoint(eager=False)
     outdeg = (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))
@@ -350,6 +370,47 @@ def pagerank(
             .localCheckpoint(eager=False)
         )
     return ranks
+
+
+def _dec6(x: float) -> int:
+    """Unscaled value of Spark's ``CAST(x AS DECIMAL(25,6))`` for a
+    double: the JVM parses ``Double.toString(x)`` and rounds it half-up
+    to 6 places.  ``repr`` stands in for ``Double.toString`` (pinned
+    against Spark by tests/test_graph.py)."""
+    return int(Decimal(repr(x)).scaleb(6).to_integral_value(ROUND_HALF_UP))
+
+
+def _pagerank_on_driver(rows, iters: int, damping: float) -> list[list]:
+    """:func:`pagerank`'s rounds over collected distinct (src, dst) rows,
+    as [nodes, ranks] columns.  Every value is the double the Spark loop
+    computes: the per-edge contribution is the same double cast the same
+    way, the decimal sums are exact integers of micro-units, and the rank
+    update is the same left-to-right double expression.  A null id joins
+    nothing, as in the loop: it receives nothing, sends nothing and
+    counts as dangling."""
+    out: dict = {}  # src -> its dsts; the list length is the out-degree
+    nodes: dict = {}  # insertion-ordered node set
+    for s, d in rows:
+        nodes[s] = nodes[d] = None
+        if s is not None:
+            out.setdefault(s, []).append(d)
+    dangling = [n for n in nodes if n not in out]
+    nn = len(nodes)
+    tele = 1.0 - damping
+    ranks = {n: 1.0 / nn for n in nodes}
+    for _ in range(iters):
+        sums: dict = {}
+        for s, dsts in out.items():
+            c = _dec6(damping * ranks[s] / len(dsts))
+            for d in dsts:
+                sums[d] = sums.get(d, 0) + c
+        sums.pop(None, None)
+        dm = sum(_dec6(ranks[n]) for n in dangling)
+        ranks = {
+            n: tele / nn + sums.get(n, 0) / 10**6 + damping * (dm / 10**6) / nn
+            for n in nodes
+        }
+    return [list(ranks), list(ranks.values())]
 
 
 def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

@@ -4995,9 +4995,11 @@ r{i} AS (
 @_entry(
     "trade_pagerank",
     "Fixed-iteration PageRank over the supplier->customer shipment graph "
-    "(lineitem x orders): per round ONE (dst, contribution) shuffle + a "
-    "1-row dangling aggregate; decimal-exact sums make every iteration "
-    "bit-reproducible across engines and partitionings.",
+    "(lineitem x orders): an edge set within the driver bound is collected "
+    "once and iterated on the driver with the loop's arithmetic; above it, "
+    "per round ONE (dst, contribution) shuffle + a 1-row dangling "
+    "aggregate; decimal-exact sums make every iteration bit-reproducible "
+    "across engines and partitionings.",
     _duck_pagerank_sql(),
 )
 def _q_pagerank(spark, sf_dir):

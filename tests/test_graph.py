@@ -10,6 +10,7 @@ from admira_etl_project_prueba_spark.operators import _driver
 from admira_etl_project_prueba_spark.operators.graph import (
     connected_components_star,
     dedup_clusters,
+    pagerank,
 )
 
 
@@ -210,32 +211,121 @@ def test_star_components_match_union_find(spark, monkeypatch):
         list(pool.map(check, shapes))
 
 
-def test_pagerank_mass_conservation_and_structure(spark):
-    from admira_etl_project_prueba_spark.operators.graph import pagerank
+def pagerank_arms(monkeypatch, e, **kw):
+    """pagerank(e) collected as {node: rank} twice: at the default bound
+    (the driver rounds, for these small graphs) and at bound 0 (the
+    distributed checkpointed loop)."""
+    out = []
+    for bound in (_driver.DRIVER_ROWS_MAX, 0):
+        with monkeypatch.context() as m:
+            m.setattr(_driver, "DRIVER_ROWS_MAX", bound)
+            out.append(
+                {r["node"]: r["rank"] for r in pagerank(e, **kw).collect()}
+            )
+    return out
 
+
+def test_pagerank_mass_conservation_and_structure(spark, monkeypatch):
     # star: a -> b, a -> c; b and c are dangling
-    r = {row["node"]: row["rank"]
-         for row in pagerank(edges(spark, [(0, 1), (0, 2)]), iters=3).collect()}
-    assert set(r) == {0, 1, 2}
-    # symmetric sinks tie exactly; sinks outrank the source (they receive
-    # contributions, the source only teleport + dangling share)
-    assert r[1] == r[2]
-    assert r[1] > r[0]
-    # rank mass conserved up to the decimal(25,6) contribution quantization
-    assert abs(sum(r.values()) - 1.0) < 1e-3
-    # all ranks at least the teleport floor
-    assert all(v > 0.15 / 3 - 1e-9 for v in r.values())
+    for r in pagerank_arms(monkeypatch, edges(spark, [(0, 1), (0, 2)]), iters=3):
+        assert set(r) == {0, 1, 2}
+        # symmetric sinks tie exactly; sinks outrank the source (they
+        # receive contributions, the source only teleport + dangling share)
+        assert r[1] == r[2]
+        assert r[1] > r[0]
+        # rank mass conserved up to the decimal(25,6) contribution
+        # quantization
+        assert abs(sum(r.values()) - 1.0) < 1e-3
+        # all ranks at least the teleport floor
+        assert all(v > 0.15 / 3 - 1e-9 for v in r.values())
 
 
-def test_pagerank_is_partitioning_invariant(spark):
-    from admira_etl_project_prueba_spark.operators.graph import pagerank
-
+def test_pagerank_is_partitioning_invariant(spark, monkeypatch):
     e = [(i, (i * 7) % 23) for i in range(60)] + [(3, 5), (5, 3), (11, 3)]
-    one = {r["node"]: r["rank"]
-           for r in pagerank(edges(spark, e), iters=3).collect()}
-    many = {r["node"]: r["rank"]
-            for r in pagerank(edges(spark, e).repartition(13), iters=3).collect()}
-    assert one == many  # decimal sums: bit-identical at any partitioning
+    one = pagerank_arms(monkeypatch, edges(spark, e), iters=3)
+    many = pagerank_arms(monkeypatch, edges(spark, e).repartition(13), iters=3)
+    # decimal sums: bit-identical at any partitioning, on either arm
+    assert one[0] == one[1] == many[0] == many[1]
+
+
+def test_pagerank_driver_arm_equals_distributed(spark, monkeypatch):
+    """The driver rounds return exactly the distributed loop's rows —
+    same nodes, repr-identical doubles, same column types — on graphs
+    with dangling nodes, duplicate edges, self-loops, a node that is only
+    ever a dst, null ids, and an INT src beside a BIGINT dst."""
+    import random
+
+    rng = random.Random(11)
+    graphs = [
+        [(0, 1), (0, 2)],                                   # two dangling sinks
+        [(1, 2), (1, 2), (2, 1), (2, 3), (3, 3)],           # dup edge, self-loop
+        [(5, 5), (6, 6), (5, 6)],                           # self-loops only
+        [(i, 99) for i in range(8)] + [(0, 1), (1, 0)],     # 99: only a dst
+        [(1, None), (None, 2), (2, 1), (3, 2)],             # null ids
+        [(rng.randrange(60), rng.randrange(60)) for _ in range(400)],
+    ]
+    for rows in graphs:
+        e = spark.createDataFrame(rows, "src int, dst long")
+        arms = []
+        for bound in (_driver.DRIVER_ROWS_MAX, 0):
+            with monkeypatch.context() as m:
+                m.setattr(_driver, "DRIVER_ROWS_MAX", bound)
+                df = pagerank(e, iters=3)
+                got = [(r["node"], repr(r["rank"])) for r in df.collect()]
+                arms.append((df.schema, sorted(got, key=repr)))
+        assert arms[0] == arms[1], rows
+        assert arms[0][0].simpleString() == "struct<node:bigint,rank:double>"
+
+
+def test_pagerank_driver_decimal_cast_matches_spark(
+    spark, sf_dir, monkeypatch
+):
+    """The driver's double -> DECIMAL(25,6) rounding is Spark's, checked
+    in one job over random doubles, both neighbours of (k + 0.5)e-6 ties,
+    tiny values and every value the fixture's trade_pagerank casts.  The
+    JVM rounds its Double.toString digits, which need not be the
+    shortest form Python's repr gives, so the stand-in is proven here."""
+    import math
+    import random
+
+    from admira_etl_project_prueba_spark.operators import graph
+    from admira_etl_project_prueba_spark.plans.catalog import CATALOG
+
+    cast = graph._dec6
+    fixture = []
+    monkeypatch.setattr(graph, "_dec6", lambda x: fixture.append(x) or cast(x))
+    CATALOG["trade_pagerank"].fn(spark, sf_dir)
+    assert fixture
+
+    rng = random.Random(5)
+    vals = fixture + [rng.random() * 10 ** rng.uniform(-9, 0) for _ in range(3000)]
+    for _ in range(3000):
+        tie = (rng.randrange(2_000_000) + 0.5) * 1e-6
+        vals += [math.nextafter(tie, 0.0), tie, math.nextafter(tie, 1.0)]
+    vals += [0.0, 5e-324, 1e-300, 4.999999999999999e-07, 5e-07, 1.5e-06, 1.0]
+    got = (
+        spark.createDataFrame([(v,) for v in vals], "x double")
+        .selectExpr("x", "CAST(x AS DECIMAL(25,6)) AS d")
+        .collect()
+    )
+    bad = [(r.x, r.d) for r in got if int(r.d.scaleb(6)) != cast(r.x)]
+    assert not bad, bad[:5]
+
+
+def test_trade_pagerank_job_counts_pinned(spark, sf_dir, jobs_started):
+    """Building trade_pagerank on the fixture starts only the edge set's
+    checkpoint stages plus its count and collect (the driver rounds start
+    none; the distributed loop started 47), and its noop action one job."""
+    from admira_etl_project_prueba_spark.plans.catalog import CATALOG
+
+    df, built = jobs_started(
+        spark, lambda: CATALOG["trade_pagerank"].fn(spark, sf_dir)
+    )
+    assert len(built) <= 5, built
+    _, acted = jobs_started(
+        spark, lambda: df.write.format("noop").mode("overwrite").save()
+    )
+    assert len(acted) <= 1, acted
 
 
 def test_triangle_counts_planted_graph(spark):

@@ -367,16 +367,23 @@ edge_lists = st.lists(
                                  HealthCheck.too_slow])
 @given(e=edge_lists)
 def test_pagerank_mass_and_floor_on_random_graphs(spark, e):
+    """On both arms: the driver rounds (default bound) and the
+    distributed loop (bound 0)."""
+    from admira_etl_project_prueba_spark.operators import _driver
     from admira_etl_project_prueba_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(e, "src long, dst long")
-    ranks = [r["rank"] for r in pagerank(edges, iters=2).collect()]
     n = len({x for pair in e for x in pair})
-    assert len(ranks) == n
-    # conservation up to decimal(25,6) quantization of per-edge contributions
-    assert abs(sum(ranks) - 1.0) < max(1e-3, 2e-6 * len(e))
-    # every node keeps at least the teleport share
-    assert all(r >= 0.15 / n - 1e-9 for r in ranks)
+    for bound in (_driver.DRIVER_ROWS_MAX, 0):
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(_driver, "DRIVER_ROWS_MAX", bound)
+            ranks = [r["rank"] for r in pagerank(edges, iters=2).collect()]
+        assert len(ranks) == n
+        # conservation up to decimal(25,6) quantization of per-edge
+        # contributions
+        assert abs(sum(ranks) - 1.0) < max(1e-3, 2e-6 * len(e))
+        # every node keeps at least the teleport share
+        assert all(r >= 0.15 / n - 1e-9 for r in ranks)
 
 
 @given(

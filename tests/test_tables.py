@@ -11,7 +11,9 @@ from admira_etl_project_prueba_spark.plans.catalog import CATALOG
 from admira_etl_project_prueba_spark.sources.tables import TABLE_NAMES, load_table
 
 #: the catalog_mix entries whose construction is table loads only
-#: (trade_pagerank checkpoints its iterations, so it runs jobs to build)
+#: (trade_pagerank counts and collects its edge set to build, or above
+#: the driver bound checkpoints its rounds; its job counts are pinned in
+#: tests/test_graph.py)
 _LOAD_ONLY_ENTRIES = [
     "ingest_consolidate",
     "metrics_by_channel_page1",
